@@ -89,18 +89,21 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"reps":$reps,"errors":$errs,"sf":"$sfDir"}"""
-    println(line)
-    // self-persist the complete JSON: the round artifact captured from
-    // stdout has been observed truncated (BENCH_r07.json "parsed": null with
-    // a ~2 KB tail), so the full medians+spread also land in a repo file the
-    // judge can always read. Path overridable for ad-hoc runs.
-    try {
-      val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_selfdump.json")
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] selfdump write failed: $e") }
-    // loud on stderr, but still exit 0: the driver parses the JSON line
+    // the full dump goes to a file named per CPU count, so a c8 run does
+    // not overwrite the c32 one; stdout only gets a compact line, because
+    // the full line (~19 KB at 249 gates) reaches the caller truncated
+    // (BENCH_r07/PERF_r10/PERF_r11 lost their per-query figures that way).
+    // Path overridable for ad-hoc runs.
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_selfdump_c$cpus.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(out), (line + "\n").getBytes("UTF-8"))
+    catch { case e: Throwable => System.err.println(s"[bench] selfdump write failed: $e") }
+    val medianMs = results.map { case (k, v, _, _, _) => s"${jstr(k)}:${math.round(v * 1e3)}" }
+      .mkString("{", ",", "}")
+    val failed = results.collect { case (k, _, _, _, Some(_)) => jstr(k) }.mkString("[", ",", "]")
+    // loud on stderr, but still exit 0: the caller parses the last line
     results.foreach { case (k, _, _, _, e) => e.foreach(m => System.err.println(s"[bench] $k FAILED: $m")) }
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
+      s""""errors":$failed,"median_ms":$medianMs,"dump":${jstr(out)}}""")
     spark.stop()
   }
 }

@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   * a/b* = a/b+ ∪ a and a* / b = a+/b ∪ b — so no identity-domain guess is ever
   * needed where it matters. A TOP-LEVEL (or alternation-branch) `*`/`?`
   * takes its zero-hop pairs over the nodes of its own sub-path's edge set,
-  * the same contract as `QueryApi.pathClosure` (SPARQL evaluates zero-hop
-  * over all graph terms; over a claims TABLE the sub-path's node set is the
-  * meaningful universe, and the sequence rewrite covers the composed case
-  * users actually ask).
+  * which is how `QueryApi.pathClosure` (`p*` of one property) is defined
+  * (SPARQL evaluates zero-hop over all graph terms; over a claims TABLE the
+  * sub-path's node set is the meaningful universe, and the sequence rewrite
+  * covers the composed case users actually ask).
   *
   * Scale shape: every operator is a set-operation over (src, dst) pair
   * frames keyed on node ids — sequence shuffles edge volume on the join
@@ -34,7 +34,10 @@ import org.apache.spark.sql.functions._
   * ever materializes per-path rows (a path algebra that tracked the paths
   * themselves would be exponential). Filter-to-property happens at the
   * leaves, so the doubling always runs on ontology-sized subgraphs, never
-  * the full 100 TB claim set.
+  * the full 100 TB claim set. Both `p+` and `p*` go through one closure of
+  * `p` (the `Plus` key of eval's `closures` hook): QueryApi memoizes it per
+  * instance, so `P279*`, `P31/P279*` and `pathClosure(P279)` compute the
+  * P279 closure once and reuse it.
   */
 object PathAlgebra {
 
@@ -152,16 +155,30 @@ object PathAlgebra {
     e
   }
 
+  /** What a materialized `p+` closure depends on besides its edges: the
+    * `Plus` sub-expression (as passed to eval, so in the caller's id
+    * space) and the doubling's settings. */
+  final case class ClosureKey(expr: PathExpr, maxRounds: Int, reliable: Boolean)
+
   /** Evaluate to the (src, dst) pair frame. `edgesOf(pid)` supplies one
     * property's edges — first two columns are used as (src, dst); QueryApi
     * wires it to the claims entity table filtered by property_id.
     * `allEdges` supplies the FULL (pid, src, dst) claim frame, needed only
     * by negated property sets (the one leaf that can't filter to a
-    * property); the filter `pid ∉ set` still reaches the scan. */
+    * property); the filter `pid ∉ set` still reaches the scan.
+    * `closures(key, build)` returns the checkpointed closure of every
+    * `+`/`*` sub-expression; the default builds it each time, and a caller
+    * whose edges never change (QueryApi) memoizes it by key, so a closure
+    * is computed once and reused by every later expression containing it. */
   def eval(expr: PathExpr, edgesOf: Long => DataFrame,
       maxRounds: Int = 20, reliable: Boolean = false,
       allEdges: () => DataFrame = () => throw new IllegalArgumentException(
-        "negated property sets need eval's allEdges — pass the (pid, src, dst) claim frame")): DataFrame = {
+        "negated property sets need eval's allEdges — pass the (pid, src, dst) claim frame"),
+      closures: (ClosureKey, () => DataFrame) => DataFrame = (_, build) => build())
+      : DataFrame = {
+    def plus(p: PathExpr, base: => DataFrame): DataFrame =
+      closures(ClosureKey(Plus(p), maxRounds, reliable),
+        () => PropertyPath.closure(base, maxRounds, reliable))
     def pairs(e: PathExpr): DataFrame = e match {
       case NegatedSet(fwd, invd) =>
         val df = allEdges()
@@ -195,11 +212,10 @@ object PathAlgebra {
         pairs(a).as("x").join(pairs(b).as("y"), col("x.dst") === col("y.src"))
           .select(col("x.src").as("src"), col("y.dst").as("dst"))
           .distinct()
-      case Plus(p) => PropertyPath.closure(pairs(p), maxRounds, reliable)
+      case Plus(p) => plus(p, pairs(p))
       case Star(p) =>
         val base = pairs(p)
-        PropertyPath.closure(base, maxRounds, reliable)
-          .unionByName(identityOver(base)).distinct()
+        plus(p, base).unionByName(identityOver(base)).distinct()
       case Optional(p) =>
         val base = pairs(p)
         base.unionByName(identityOver(base)).distinct()

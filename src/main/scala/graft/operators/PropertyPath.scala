@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   * the entity table to the property FIRST, as `QueryApi.pathClosure` does).
   * For one-off single-root questions over huge diameters a frontier loop
   * ships fewer total bytes; the closure is the reusable artifact (every
-  * "instance of, transitively" filter downstream is then one semi-join).
+  * "instance of, transitively" filter downstream is then one semi-join),
+  * and QueryApi does reuse it: each instance computes the closure of a
+  * path step once (through [[PathAlgebra.eval]]'s `closures` hook) and
+  * every later `path`/`pathClosure` query over that step reads it.
   *
   * `reliable = true` swaps `localCheckpoint` for reliable `checkpoint`
   * (requires `sparkContext.setCheckpointDir`) — executor-loss-safe rounds

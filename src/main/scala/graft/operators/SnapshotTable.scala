@@ -306,11 +306,15 @@ object SnapshotTable {
     // of ESTIMATED bytes, so a wildly-wrong estimate degrades to fewer,
     // larger files, not to a single-task stage for a corpus-sized frame
     // unless the estimate itself said "sub-target".
+    // The ceil-division runs in BigInt: Long.MaxValue is Spark's marker
+    // for a plan without size stats (no usable estimate), and a huge valid
+    // estimate can need more partitions than an Int holds. Either way the
+    // frame stays as it is.
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est.isValidLong && est > 0) {
-      val parts = ((est.toLong + targetBytes - 1) / targetBytes).toInt.max(1)
-      df.coalesce(parts) // no-op when current partitions <= parts
-    } else df
+    val parts = (est + targetBytes - 1) / targetBytes
+    if (est > 0 && est < Long.MaxValue && parts.isValidInt)
+      df.coalesce(parts.toInt) // no-op when current partitions <= parts
+    else df
   }
 
   def commit(spark: SparkSession, table: String, df: DataFrame,

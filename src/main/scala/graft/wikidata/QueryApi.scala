@@ -2,6 +2,7 @@ package graft.wikidata
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The query surface the reference's SQLite database gives its users
   * (reference: README.md:103-156), as composable DataFrame operators.
@@ -9,8 +10,40 @@ import org.apache.spark.sql.functions._
   * Everything returns a plan, not results — Catalyst fuses the filters into
   * scans and broadcasts the small claim sets, so a conjunctive search over
   * 100 TB of claims is N semi-joins against one fact scan, not N passes.
+  *
+  * The tables never change under an instance, so the frames that depend on
+  * them alone are built once per instance and reused by every later query:
+  * the checkpointed closure of every `+`/`*` path sub-expression, the
+  * deletion-variant indexes of the two fuzzy lookups, the [[anyNames]]
+  * universe and the sourced claim-id set of [[conjunctiveSourcedSearch]].
+  * The memo lives as long as the instance; a new instance (say, over a new
+  * snapshot version) starts empty. Persisted entries are owned by
+  * [[graft.operators.Caches]]: `Caches.releaseAll()` unpersists them and
+  * the next query that needs one persists it again. Closures are local
+  * checkpoints that frames already handed to callers keep reading, so
+  * they are never released early; Spark's ContextCleaner frees them once
+  * the instance and those frames are gone. `equals`/`hashCode` are
+  * identity: two instances over the same tables keep separate memos.
   */
-final case class QueryApi(tables: WikidataTables) {
+final class QueryApi(val tables: WikidataTables) {
+
+  private val frames = scala.collection.mutable.HashMap.empty[Any, DataFrame]
+
+  /** The frame under `key`, built on first use. `persist` entries are
+    * Caches-owned, and owned again if a `releaseAll` freed them (handing
+    * out the unpersisted frame would re-run its lineage per consumer). */
+  private def memo(key: Any, persist: Boolean)(build: => DataFrame): DataFrame =
+    synchronized {
+      frames.get(key) match {
+        case Some(f) if persist && f.storageLevel == StorageLevel.NONE =>
+          graft.operators.Caches.owned(f)
+        case Some(f) => f
+        case None =>
+          val f = if (persist) graft.operators.Caches.owned(build) else build
+          frames(key) = f
+          f
+      }
+    }
 
   /** `SELECT * FROM meta WHERE label = ?` (README.md:108). */
   def byLabel(label: String): DataFrame =
@@ -34,13 +67,13 @@ final case class QueryApi(tables: WikidataTables) {
 
   /** `wdt:P279*` transitive closure over ONE property's entity edges:
     * every (id, ancestor_id) pair reachable through chained claims of
-    * `propertyId` — the SPARQL `*` path the reference's single-step
-    * conjunctive search (README.md:129-156) naturally grows into. The
-    * entity table is filtered to the property FIRST, so the doubling runs
-    * on the ontology-sized subgraph, never the full claim set; compose with
-    * [[conjunctiveEntitySearch]] by semi-joining against the closure
-    * (e.g. "instance of any subclass of Q"). O(log diameter) rounds —
-    * see [[graft.operators.PropertyPath]].
+    * `propertyId` (the stored, encoded id) — the SPARQL `*` path the
+    * reference's single-step conjunctive search (README.md:129-156)
+    * naturally grows into. This is [[path]] over `Prop(propertyId).star`,
+    * so it shares its closure with every path expression that contains the
+    * same step: the entity table is filtered to the property FIRST, the
+    * doubling runs on the ontology-sized subgraph in O(log diameter) rounds
+    * (see [[graft.operators.PropertyPath]]), once per instance.
     *
     * `reflexive = true` (default) is the SPARQL `*` semantics: zero-hop
     * (id, id) pairs for every node in the subgraph are included, so
@@ -48,15 +81,8 @@ final case class QueryApi(tables: WikidataTables) {
     * false for strict `+` (>= 1 hop) reachability. */
   def pathClosure(propertyId: Long, reliable: Boolean = false,
       reflexive: Boolean = true): DataFrame = {
-    val edges = tables.entity.filter(col("property_id") === propertyId)
-      .select(col("id"), col("entity_id"))
-    val plus = graft.operators.PropertyPath.closure(edges, reliable = reliable)
-    if (!reflexive) plus
-    else plus.unionByName(
-      edges.select(col("id").cast("long").as("src"))
-        .unionByName(edges.select(col("entity_id").cast("long").as("src")))
-        .filter(col("src").isNotNull).distinct()
-        .select(col("src"), col("src").as("dst")))
+    val step = graft.operators.PathAlgebra.Prop(propertyId)
+    evalPath(if (reflexive) step.star else step.plus, reliable)
   }
 
   /** Composed property-path query (SPARQL 1.1 paths over the claim table):
@@ -67,23 +93,29 @@ final case class QueryApi(tables: WikidataTables) {
     * claims to ONE property before any join or closure runs, so path
     * evaluation touches ontology-sized subgraphs, never the full claim set.
     * Returns (src, dst) pairs; see [[graft.operators.PathAlgebra]] for
-    * zero-hop semantics. [[pathClosure]] remains the single-property
-    * fast path (`path("P279*")` ≡ `pathClosure(279)`). */
+    * zero-hop semantics. `path("P279*")` ≡ `pathClosure(pId(279))`, and
+    * both read one memoized closure. */
   def path(expr: String, reliable: Boolean = false): DataFrame =
-    graft.operators.PathAlgebra.eval(
-      // the expression's human numbers (P279) address the STORED encoded
-      // ids (1000000279) — mapPids covers Prop and NegatedSet both, where
-      // encoding only inside edgesOf would leave negated-set filters
-      // comparing raw numbers against encoded columns and match nothing
-      graft.operators.PathAlgebra.mapPids(
-        graft.operators.PathAlgebra.parse(expr), IdCodec.pId),
+    // the expression's human numbers (P279) address the STORED encoded
+    // ids (1000000279) — mapPids covers Prop and NegatedSet both, where
+    // encoding only inside edgesOf would leave negated-set filters
+    // comparing raw numbers against encoded columns and match nothing
+    evalPath(graft.operators.PathAlgebra.mapPids(
+      graft.operators.PathAlgebra.parse(expr), IdCodec.pId), reliable)
+
+  /** An encoded path expression over the entity claims, its closures
+    * memoized by (sub-expression, maxRounds, reliable). */
+  private def evalPath(expr: graft.operators.PathAlgebra.PathExpr,
+      reliable: Boolean): DataFrame =
+    graft.operators.PathAlgebra.eval(expr,
       pid => tables.entity.filter(col("property_id") === pid)
         .select(col("id"), col("entity_id")),
       reliable = reliable,
       // negated sets (`!(P31|^P279)`, W30) read the full claim frame with
       // the pid ∉ set filter pushed to the scan
       allEdges = () => tables.entity
-        .select(col("property_id"), col("id"), col("entity_id")))
+        .select(col("property_id"), col("id"), col("entity_id")),
+      closures = (key, build) => memo(key, persist = false)(build()))
 
   /** Entities whose textual id matches, e.g. byId("Q42"). */
   def byId(textId: String): DataFrame = {
@@ -120,7 +152,8 @@ final case class QueryApi(tables: WikidataTables) {
   def byLabelFuzzy(term: String): DataFrame = {
     val labels = tables.meta.filter(col("label").isNotNull)
     graft.operators.EditJoin.fuzzyLookup(
-      graft.operators.EditJoin.variantIndex(labels, "id", "label"),
+      memo("labelIndex", persist = true)(
+        graft.operators.EditJoin.variantIndex(labels, "id", "label")),
       labels, "id", "label", term)
   }
 
@@ -128,30 +161,16 @@ final case class QueryApi(tables: WikidataTables) {
     * ONE (id, name) frame — the lookup surface users actually mean by
     * "the entity called X" ("Douglas Noël Adams", "DNA" and the label all
     * resolve). Needs the links surface ([[WikidataEtl.runFull]] /
-    * [[DumpReader.readFull]]); throws loudly otherwise. */
-  private var anyNamesMemo: Option[DataFrame] = None
-
-  def anyNames: DataFrame = synchronized {
+    * [[DumpReader.readFull]]); throws loudly otherwise. Persisted once per
+    * instance: it typically feeds several actions (probe-term agg, index
+    * save, lookup verify), and its lineage is the full-surface parse,
+    * which unpinned re-ran per consumer (the w56/w57 gates evaluated it
+    * 3-6x). */
+  def anyNames: DataFrame = {
     val aliases = tables.aliases.getOrElse(throw new IllegalArgumentException(
       "any-name lookup needs the links surface: parse with DumpReader.readFull/" +
         "readLinks and run WikidataEtl.runFull (W52 aliases)"))
-    // Caches-owned: one QueryApi instance typically feeds the name universe
-    // to several actions (probe-term agg, index save, lookup verify) — the
-    // (id, name) frame is rows-of-names small, while its lineage is the
-    // full-surface parse; unpinned, that parse re-ran per consumer
-    // (measured: the w56/w57 gates evaluated it 3-6x). Released by
-    // Caches.releaseAll between gates/specs like every operator cache —
-    // and RE-OWNED on the next access if this instance outlives a release
-    // cycle (a lazy val would silently hand the unpersisted frame to every
-    // later consumer, re-running the full-surface parse per action again).
-    anyNamesMemo
-      .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .getOrElse {
-        val f = graft.operators.Caches.owned(
-          QueryApi.anyNamesOf(tables.meta, aliases))
-        anyNamesMemo = Some(f)
-        f
-      }
+    memo("anyNames", persist = true)(QueryApi.anyNamesOf(tables.meta, aliases))
   }
 
   /** W56: typo-tolerant ANY-name lookup — [[byLabelFuzzy]] over the
@@ -162,7 +181,8 @@ final case class QueryApi(tables: WikidataTables) {
   def byAnyNameFuzzy(term: String): DataFrame = {
     val names = anyNames
     graft.operators.EditJoin.fuzzyLookup(
-      graft.operators.EditJoin.variantIndex(names, "id", "name"),
+      memo("anyNameIndex", persist = true)(
+        graft.operators.EditJoin.variantIndex(names, "id", "name")),
       names, "id", "name", term)
   }
 
@@ -192,7 +212,7 @@ final case class QueryApi(tables: WikidataTables) {
       "sourced search needs the claim spine: run WikidataEtl.runQualified/runFull"))
     val refs = tables.references.getOrElse(throw new IllegalArgumentException(
       "sourced search needs the references surface: run WikidataEtl.runFull (W59)"))
-    val sourcedIds = refs.select("claim_id").distinct()
+    val sourcedIds = memo("sourcedClaims", persist = true)(refs.select("claim_id").distinct())
     conjuncts.foldLeft(tables.meta) { case (acc, (pid, qid)) =>
       val sourcedClaim = spine
         .filter(col("property_id") === pid && col("entity_id") === qid)
@@ -209,6 +229,8 @@ final case class QueryApi(tables: WikidataTables) {
 }
 
 object QueryApi {
+  def apply(tables: WikidataTables): QueryApi = new QueryApi(tables)
+
   /** The W53/W56 name universe from bare frames — callers holding
     * published tables (snapshot reads, X30's streaming maintenance)
     * rather than a [[WikidataTables]]. */

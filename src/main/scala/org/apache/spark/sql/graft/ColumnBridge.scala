@@ -62,9 +62,24 @@ object ColumnBridge {
     * both identical. Requires UnsafeRow-producing plans (every aggregate/
     * shuffle/codegen operator; loud error otherwise, it must never
     * silently mis-fingerprint). Distinct row sets only: XOR cancels
-    * duplicate rows pairwise. */
+    * duplicate rows pairwise. Supported schemas: columns whose equal values
+    * have equal bytes. Float, double and map columns (at any depth) are
+    * rejected: -0.0 vs 0.0, NaN bit patterns and map key order are
+    * SQL-equal but byte-different, so a fixpoint loop over them would
+    * never see convergence. */
   def localCheckpointFingerprinted(df: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Long, Long) = {
+    import org.apache.spark.sql.types._
+    def unstable(t: DataType): Boolean = t match {
+      case FloatType | DoubleType | _: MapType => true
+      case s: StructType => s.fields.exists(f => unstable(f.dataType))
+      case a: ArrayType => unstable(a.elementType)
+      case _ => false
+    }
+    val bad = df.schema.fields.filter(f => unstable(f.dataType))
+    require(bad.isEmpty, "localCheckpointFingerprinted needs byte-stable columns; " +
+      bad.map(f => s"${f.name}: ${f.dataType}").mkString("rejected ", ", ", "") +
+      " (float, double and map values can be equal with different bytes)")
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val spark = ds.sparkSession
     val internal = ds.queryExecution.executedPlan.execute().map(_.copy())

@@ -59,4 +59,17 @@ class ConnectedComponentsSpec extends SparkSpec {
     got shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L, 5L -> 4L, 6L -> 6L, 7L -> 7L)
   }
 
+
+  test("the checkpoint fingerprint rejects float, double and map columns; CC still converges") {
+    import org.apache.spark.sql.graft.ColumnBridge
+    val doubles = Seq((1L, 0.5), (2L, -0.0)).toDF("id", "w")
+    val e = intercept[IllegalArgumentException](ColumnBridge.localCheckpointFingerprinted(doubles))
+    e.getMessage should include ("w")
+    e.getMessage should include ("DoubleType")
+    intercept[IllegalArgumentException](ColumnBridge.localCheckpointFingerprinted(
+      Seq((1L, 1.5f)).toDF("id", "f")))
+    intercept[IllegalArgumentException](ColumnBridge.localCheckpointFingerprinted(
+      Seq((1L, Map("a" -> 1L))).toDF("id", "m")))
+    runAndCompare(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
+  }
 }

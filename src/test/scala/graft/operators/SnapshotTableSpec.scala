@@ -136,4 +136,24 @@ class SnapshotTableSpec extends SparkSpec {
     vacuum(t, keepFrom = 3L)
     history(spark, t).select("version").as[Long].collect().toSeq shouldBe Seq(3L)
   }
+
+  test("rightSized leaves stats-less and overflowing estimates untouched") {
+    // an RDD-backed frame has no size stats: its estimate is Spark's
+    // Long.MaxValue marker, which must not wrap the ceil-division
+    val rdd = spark.sparkContext.parallelize((1L to 64L).map(org.apache.spark.sql.Row(_)), 8)
+    val statsLess = spark.createDataFrame(rdd,
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT"))
+    statsLess.queryExecution.optimizedPlan.stats.sizeInBytes shouldBe BigInt(Long.MaxValue)
+    rightSized(statsLess) should be theSameInstanceAs statsLess
+    rightSized(statsLess).rdd.getNumPartitions shouldBe 8
+    // a valid estimate whose partition count is no Int (2^43 bytes at
+    // 1-byte targets); the range is only planned, never run
+    val huge = spark.range(0L, 1L << 40, 1L, 4).toDF()
+    huge.queryExecution.optimizedPlan.stats.sizeInBytes.isValidLong shouldBe true
+    rightSized(huge, targetBytes = 1L) should be theSameInstanceAs huge
+    rightSized(huge, targetBytes = 1L).rdd.getNumPartitions shouldBe 4
+    // a small estimate still coalesces
+    val small = spark.range(0L, 100L, 1L, 4).toDF()
+    rightSized(small).rdd.getNumPartitions shouldBe 1
+  }
 }
