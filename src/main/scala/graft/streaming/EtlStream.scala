@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.wikidata.{DumpReader, WikidataEtl}
+import graft.wikidata.{DumpReader, Surface, WikidataEtl}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -40,51 +40,47 @@ object EtlStream {
     * is skipped — per-table, so a crash that published only some tables is
     * repaired by the replay committing exactly the missing ones.
     * At-least-once delivery + idempotent tagged publication = exactly-once
-    * table state, X8's discipline at the table-format layer. */
+    * table state, X8's discipline at the table-format layer.
+    *
+    * X28 (`surface = Surface.Full`): the same exactly-once publication over
+    * the COMPLETE 13-table surface — every table the W54 one-pass run
+    * produces, off one cached batch parse, and the per-table tag law covers
+    * all 13: a crash that published only some of them is repaired by the
+    * replay committing exactly the missing ones. The scale shape is
+    * unchanged — the extra tables are explodes of the SAME cached batch
+    * parse, so the full surface costs five more appends per batch, never a
+    * second dump scan. */
   def startSnapshot(spark: SparkSession, inDir: String, tableRoot: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 0,
       trigger: Trigger = Trigger.AvailableNow(),
-      full: Boolean = false): StreamingQuery = {
+      surface: Surface = Surface.Core): StreamingQuery = {
     val reader = spark.readStream
     if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
     val ns = BatchTags.namespace(checkpointDir)
-    val schema = if (full) DumpReader.entitySchemaFull else DumpReader.entitySchema
-    val entities = DumpReader.entities(reader.text(inDir), schema)
+    val entities = DumpReader.entities(reader.text(inDir), surface)
     entities.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        commitBatch(spark, batch.toDF(), tableRoot, batchId, ns, full)
+        commitBatch(spark, batch.toDF(), tableRoot, batchId, ns)
       }
       .start()
   }
 
-  /** One micro-batch of [[startSnapshot]], exposed for direct replay tests.
-    *
-    * X28 (`full = true`): the same exactly-once publication over the
-    * COMPLETE 13-table surface — the batch must be parsed with
-    * [[DumpReader.entitySchemaFull]], runs through [[WikidataEtl.runFull]]
-    * (one cached parse, every table the W54 one-pass run produces), and the
-    * per-table tag law covers all 13: a crash that published only some of
-    * them is repaired by the replay committing exactly the missing ones.
-    * The scale shape is unchanged — the extra tables are explodes of the
-    * SAME cached batch parse, so the full surface costs five more appends
-    * per batch, never a second dump scan. */
+  /** One micro-batch of [[startSnapshot]], exposed for direct replay tests:
+    * publishes every table of the batch's parsed [[Surface]]. */
   def commitBatch(spark: SparkSession, parsedBatch: org.apache.spark.sql.DataFrame,
-      tableRoot: String, batchId: Long, namespace: String = "",
-      full: Boolean = false): Unit = {
+      tableRoot: String, batchId: Long, namespace: String = ""): Unit = {
     import graft.operators.SnapshotTable
     val tag = BatchTags.tag(namespace, batchId.toString)
     // tag check FIRST (cheap manifest reads — table names are static): a
     // fully-replayed batch must not pay the batch ETL for a guaranteed no-op
-    val allNames = if (full) graft.wikidata.IncrementalEtl.tableNamesFull
-      else graft.wikidata.IncrementalEtl.tableNames
-    val pendingNames = allNames.filter { name =>
+    val pendingNames = Surface.of(parsedBatch).tableNames.filter { name =>
       !SnapshotTable.tagOf(s"$tableRoot/$name").contains(tag)
     }
     if (pendingNames.isEmpty) return
-    val tables = if (full) WikidataEtl.runFull(parsedBatch) else WikidataEtl.run(parsedBatch)
+    val tables = WikidataEtl.run(parsedBatch)
     try {
       tables.core.foreach(_.count()) // materialize before the fan-out race
       SnapshotTable.commitAll(spark,

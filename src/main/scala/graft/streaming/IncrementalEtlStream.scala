@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.SnapshotTable
-import graft.wikidata.{IncrementalEtl, WikidataTables}
+import graft.wikidata.{IncrementalEtl, Surface, WikidataTables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -38,10 +38,10 @@ object IncrementalEtlStream {
 
   /** Publish initial full-ETL tables as version 1 of each snapshot table,
     * plus an empty `revisions` mark (full-dump entities carry rev 0: any
-    * changeset revision outranks them). Works unchanged for the 8-table,
-    * 10-table and 13-table surfaces — `byName` carries whatever the
-    * bootstrap run produced (X29 streams the full surface by
-    * bootstrapping with [[graft.wikidata.WikidataEtl.runFull]]). */
+    * changeset revision outranks them). Works unchanged for every
+    * [[Surface]] — `byName` carries whatever the bootstrap run produced
+    * (X29 streams the full surface by bootstrapping with a run over a
+    * [[Surface.Full]] parse). */
   def bootstrap(spark: SparkSession, tableRoot: String, tables: WikidataTables): Unit = {
     tables.core.foreach(_.count()) // materialize the shared cache once
     val empty = spark.createDataFrame(
@@ -59,13 +59,13 @@ object IncrementalEtlStream {
     * Empty or fully-stale batches commit nothing (version alignment across
     * tables is preserved because NO table commits).
     *
-    * X29 (`full = true`): the same loop over the COMPLETE 13-table surface —
-    * the changeset parses with the full schema (links + qualifiers carried
-    * through), and W55's law makes the merge identical in shape: sitelinks
-    * and aliases are id-keyed, so the broadcast anti-join covers them with
-    * zero extra shuffles of base data.
+    * X29 (`surface = Surface.Full`): the same loop over the COMPLETE
+    * 13-table surface — the changeset parses with the full schema (links +
+    * qualifiers carried through), and W55's law makes the merge identical
+    * in shape: sitelinks and aliases are id-keyed, so the broadcast
+    * anti-join covers them with zero extra shuffles of base data.
     *
-    * X30 (`anyNameIndex = Some(path)`, requires `full`): the W56 fuzzy
+    * X30 (`anyNameIndex = Some(path)`, requires `Surface.Full`): the W56 fuzzy
     * ANY-name index maintained IN the refresh loop — after the data tables
     * commit, ONE batch-tagged Append of the touched entities' current
     * names' variant rows lands on the index (W57's law: stale variants
@@ -75,15 +75,13 @@ object IncrementalEtlStream {
     * index append is then skipped by ITS OWN tag, and the mark-guarded
     * tables by theirs — so every surface converges exactly once. */
   def applyBatch(spark: SparkSession, lines: DataFrame, tableRoot: String,
-      full: Boolean = false, anyNameIndex: Option[String] = None,
+      surface: Surface = Surface.Core, anyNameIndex: Option[String] = None,
       batchTag: Option[String] = None): Unit = {
-    require(anyNameIndex.isEmpty || full,
-      "anyNameIndex maintenance needs the full surface (aliases): pass full = true")
-    val names = if (full) IncrementalEtl.tableNamesFull else IncrementalEtl.tableNames
-    val schema = if (full) IncrementalEtl.changeSchemaFull else IncrementalEtl.changeSchema
+    require(anyNameIndex.isEmpty || surface == Surface.Full,
+      "anyNameIndex maintenance needs the full surface (aliases): pass Surface.Full")
     // cached: the winners frame feeds the stale probe, the admitted set,
     // the touched-id anti-joins and the revision marks
-    val win = IncrementalEtl.winners(IncrementalEtl.changesFrom(lines, schema)).cache()
+    val win = IncrementalEtl.winners(IncrementalEtl.changesFrom(lines, surface)).cache()
     val revPath = s"$tableRoot/revisions"
     val current = SnapshotTable.read(spark, revPath)
     // map-only guard, formulated so the broadcast side is always the inner
@@ -99,8 +97,9 @@ object IncrementalEtlStream {
     val guarded = win.join(broadcast(stale), Seq("id"), "left_anti").cache()
     try {
       if (!guarded.isEmpty) {
-        val base = names.map(n => n -> SnapshotTable.read(spark, s"$tableRoot/$n")).toMap
-        val next = IncrementalEtl.applyWinners(base, guarded, full = full)
+        val base = surface.tableNames.map(n =>
+          n -> SnapshotTable.read(spark, s"$tableRoot/$n")).toMap
+        val next = IncrementalEtl.applyWinners(base, guarded)
         val marks = current
           .join(broadcast(guarded.select("id")), Seq("id"), "left_anti")
           .unionByName(guarded.select(col("id"),
@@ -148,7 +147,7 @@ object IncrementalEtlStream {
   def start(spark: SparkSession, inDir: String, tableRoot: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 0,
       trigger: Trigger = Trigger.AvailableNow(),
-      full: Boolean = false,
+      surface: Surface = Surface.Core,
       anyNameIndex: Option[String] = None): StreamingQuery = {
     val reader = spark.readStream
     if (maxFilesPerTrigger > 0)
@@ -158,7 +157,7 @@ object IncrementalEtlStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), tableRoot, full, anyNameIndex,
+        applyBatch(spark, batch.toDF(), tableRoot, surface, anyNameIndex,
           Some(BatchTags.tag(ns, batchId.toString)))
       }
       .start()

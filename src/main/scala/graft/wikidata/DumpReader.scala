@@ -2,7 +2,7 @@ package graft.wikidata
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 /** Wikidata JSON dump framing, distributed.
   *
@@ -11,155 +11,49 @@ import org.apache.spark.sql.types._
   * tolerating malformed lines (reference: src/main.rs:174-215). Here the same
   * framing is a `spark.read.text` scan — splittable, so a 100 TB dump fans
   * out across every executor — followed by codegen'd string cleanup and ONE
-  * `from_json` parse into a PRUNED typed struct: only the fields the 8
-  * output tables consume (id, English label/description, claims) are
-  * materialized, and everything else a real dump carries — aliases,
-  * sitelinks, the other ~300 languages of labels, references, qualifiers —
-  * is tokenized past without building values. That pruning is the
-  * single-node throughput lever: a full-variant parse (`try_parse_json`)
-  * pays to encode the whole entity. Only the polymorphic
-  * `datavalue.value` (string OR one of five object shapes) stays a nested
-  * VariantType, cast once per claim downstream. Malformed lines yield null
-  * `id` (PERMISSIVE parse) and are filtered, never fatal, matching the
-  * reference's per-line error tolerance.
+  * `from_json` parse into the [[Surface]]'s PRUNED typed struct: only the
+  * fields its tables consume are materialized, everything else is tokenized
+  * past without building values. That pruning is the single-node throughput
+  * lever: a full-variant parse (`try_parse_json`) pays to encode the whole
+  * entity. Malformed lines yield null `id` (PERMISSIVE parse) and are
+  * filtered, never fatal, matching the reference's per-line error tolerance.
   */
 object DumpReader {
 
-  /** One snak, pruned: snaktype for value routing, the polymorphic value as
-    * variant. Shape shared by mainsnaks and qualifier snaks (a qualifier IS
-    * a snak hung off a statement — its property lives on the enclosing map
-    * key, exactly like the claims map). */
-  val snakType: StructType = StructType(Seq(
-    StructField("snaktype", StringType),
-    StructField("datavalue", StructType(Seq(
-      StructField("type", StringType),
-      StructField("value", VariantType))))))
-
-  /** One claim statement, pruned: rank for the deprecated-drop, snaktype for
-    * value routing, and the polymorphic value as variant. */
-  val statementType: StructType = StructType(Seq(
-    StructField("rank", StringType),
-    StructField("mainsnak", snakType)))
-
-  /** Statement with its stable statement id and qualifier snaks retained —
-    * the W34 superset parse. The reference drops qualifiers entirely
-    * (src/value.rs keeps only the mainsnak); the qualified schema is opt-in
-    * so the 8-table fast path keeps the minimal parse, and the 9-table
-    * qualifier-aware run pays only for what it routes. */
-  val statementTypeQualified: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("rank", StringType),
-    StructField("mainsnak", snakType),
-    StructField("qualifiers", MapType(StringType, ArrayType(snakType)))))
-
-  /** Pruned entity schema — the wd2sql-relevant subset of a dump entity. */
-  val entitySchema: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("labels", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("descriptions", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("claims", MapType(StringType, ArrayType(statementType)))))
-
-  /** The qualifier-aware entity schema (W34). */
-  val entitySchemaQualified: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("labels", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("descriptions", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("claims", MapType(StringType, ArrayType(statementTypeQualified)))))
-
-  /** W59: statement with REFERENCES retained as well — the last piece of
-    * Wikidata's statement anatomy (mainsnak → the reference's 7 tables,
-    * qualifiers → W34, references → this): a list of reference records
-    * (one per cited source), each holding a snak map shaped exactly like
-    * the qualifiers map. Opt-in like every superset rung. */
-  val statementTypeReferenced: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("rank", StringType),
-    StructField("mainsnak", snakType),
-    StructField("qualifiers", MapType(StringType, ArrayType(snakType))),
-    StructField("references", ArrayType(StructType(Seq(
-      StructField("snaks", MapType(StringType, ArrayType(snakType)))))))))
-
-  /** The reference-aware entity schema (W59). */
-  val entitySchemaReferenced: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("labels", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("descriptions", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("claims", MapType(StringType, ArrayType(statementTypeReferenced)))))
-
-  /** W51/W52: the name-and-link surface the reference drops entirely —
-    * sitelinks ("which enwiki article is this entity") and aliases (every
-    * language's alternate names, not just the one English label `meta`
-    * keeps). Opt-in like the qualified schema: the 8-table fast path keeps
-    * the minimal parse, the links run pays only for what it routes. */
-  val entitySchemaLinks: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("aliases", MapType(StringType, ArrayType(StructType(Seq(
-      StructField("value", StringType)))))),
-    StructField("sitelinks", MapType(StringType, StructType(Seq(
-      StructField("title", StringType)))))))
-
-  /** W54: the complete superset parse — statements with qualifiers AND
-    * references (W59) PLUS sitelinks and aliases, still pruned (no
-    * non-English labels/descriptions): everything the 13-table full run
-    * consumes from ONE `from_json` pass. */
-  val entitySchemaFull: StructType = StructType(Seq(
-    StructField("id", StringType),
-    StructField("labels", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("descriptions", StructType(Seq(
-      StructField("en", StructType(Seq(StructField("value", StringType))))))),
-    StructField("claims", MapType(StringType, ArrayType(statementTypeReferenced))),
-    StructField("aliases", MapType(StringType, ArrayType(StructType(Seq(
-      StructField("value", StringType)))))),
-    StructField("sitelinks", MapType(StringType, StructType(Seq(
-      StructField("title", StringType)))))))
-
   /** Raw dump lines → one pruned-struct column `entity`, malformed lines
     * (null id — the reference can't emit anything without one) dropped. */
-  def entities(lines: DataFrame, schema: StructType = entitySchema): DataFrame = {
+  def entities(lines: DataFrame, surface: Surface = Surface.Core): DataFrame =
+    parse(lines, surface.entitySchema, "entity")
+
+  /** The line framing shared by dumps and changesets
+    * ([[IncrementalEtl.changesFrom]]): skip blank and `[`/`]` lines, strip
+    * a trailing comma, parse into `schema` as column `as`, drop lines
+    * without an id. */
+  private[wikidata] def parse(lines: DataFrame, schema: StructType, as: String): DataFrame = {
     val trimmed = trim(col("value"))
     lines
       .filter(trimmed =!= "" && trimmed =!= "[" && trimmed =!= "]")
-      .select(from_json(regexp_replace(trimmed, ",$", ""), schema).as("entity"))
-      .filter(col("entity").isNotNull && col("entity.id").isNotNull)
+      .select(from_json(regexp_replace(trimmed, ",$", ""), schema).as(as))
+      .filter(col(as).isNotNull && col(s"$as.id").isNotNull)
   }
 
-  /** Read a dump file (or directory of shards) into entity variants. */
-  /** `path` may be one file, a shard directory, or a glob; compressed
-    * shards (`.gz`, `.bz2` — the official Wikidata dump shipping formats)
-    * decode transparently through the Hadoop codecs, and bz2 is
-    * SPLITTABLE, so one multi-GB `.bz2` dump file parallelizes across
-    * executors without pre-decompression (gz is not — shard gz inputs).
-    * Gate `w50_compressed_dump` certifies mixed-codec shard ingestion. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    entities(spark.read.text(path))
+  /** Read a dump into entity structs of `surface`. `path` may be one file, a
+    * shard directory, or a glob; compressed shards (`.gz`, `.bz2` — the
+    * official Wikidata dump shipping formats) decode transparently through
+    * the Hadoop codecs, and bz2 is SPLITTABLE, so one multi-GB `.bz2` dump
+    * file parallelizes across executors without pre-decompression (gz is
+    * not — shard gz inputs). Gate `w50_compressed_dump` certifies
+    * mixed-codec shard ingestion. */
+  def read(spark: SparkSession, path: String, surface: Surface = Surface.Core): DataFrame =
+    entities(spark.read.text(path), surface)
 
-  /** Read with statement ids + qualifiers retained (the W34 superset). */
-  def readQualified(spark: SparkSession, path: String): DataFrame =
-    entities(spark.read.text(path), entitySchemaQualified)
-
-  /** Read the sitelinks + aliases slice (the W51/W52 superset). */
-  def readLinks(spark: SparkSession, path: String): DataFrame =
-    entities(spark.read.text(path), entitySchemaLinks)
-
-  /** Read with statement references retained too (the W59 superset). */
-  def readReferenced(spark: SparkSession, path: String): DataFrame =
-    entities(spark.read.text(path), entitySchemaReferenced)
-
-  /** Read the complete superset slice (the W54 13-table run). */
-  def readFull(spark: SparkSession, path: String): DataFrame =
-    entities(spark.read.text(path), entitySchemaFull)
+  /** `read` at [[Surface.Full]]; the benchmark calls it. */
+  def readFull(spark: SparkSession, path: String): DataFrame = read(spark, path, Surface.Full)
 
   /** Parse an in-memory dataset of dump lines (tests, streaming sources). */
   def fromLines(spark: SparkSession, lines: Seq[String],
-                schema: StructType = entitySchema): DataFrame = {
+                surface: Surface = Surface.Core): DataFrame = {
     import spark.implicits._
-    entities(lines.toDF("value"), schema)
+    entities(lines.toDF("value"), surface)
   }
 }

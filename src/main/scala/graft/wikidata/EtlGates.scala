@@ -39,6 +39,18 @@ object EtlGates {
   private def tables(s: SparkSession): WikidataTables =
     WikidataEtl.run(DumpReader.read(s, dumpPath), cache = false)
 
+  /** Split the lines of `path` into two shard files in `dir` (the stream
+    * gates drain one per micro-batch); returns the lines. */
+  private def shardInTwo(path: String, dir: String): Seq[String] = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val lines = Files.readAllLines(Paths.get(path)).asScala.toSeq
+    lines.grouped((lines.size + 1) / 2).zipWithIndex.foreach { case (chunk, i) =>
+      Files.write(Paths.get(dir, f"shard-$i%05d.jsonl"), chunk.mkString("\n").getBytes("UTF-8"))
+    }
+    lines
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // W13: the JDBC sink round-trip, driver-visible — ETL the mini-dump,
     // write all 8 tables + reference-style indices into an embedded Derby
@@ -75,9 +87,7 @@ object EtlGates {
     // without failing the hash.
     "w12_parquet_sink"    -> { (s, _) =>
       val out = graft.Scratch.fresh("w12_sink")
-      val t = WikidataEtl.run(DumpReader.read(s, dumpPath), cache = true)
-      t.writeParquet(out, partitions = 4)
-      t.unpersist()
+      WikidataEtl.runFile(s, dumpPath, out, partitions = 4)
       s.read.parquet(s"$out/string")
     },
     // W17: CSV sink round-trip — the interchange format users actually hand
@@ -144,10 +154,8 @@ object EtlGates {
     // qualifier grain either.
     "w40_incremental_qualifiers" -> { (s, _) =>
       val base = graft.Scratch.fresh("w40_base")
-      val t = WikidataEtl.runQualified(DumpReader.readQualified(s, dumpPath))
-      t.writeParquet(base, partitions = 4)
-      t.unpersist()
-      val next = IncrementalEtl.applyFile(s, base, changesetPath, qualified = true)
+      WikidataEtl.runFile(s, dumpPath, base, partitions = 4, surface = Surface.Qualified)
+      val next = IncrementalEtl.applyFile(s, base, changesetPath, Surface.Qualified)
       next.unpersist()
       next.qualifiers.get
     },
@@ -158,7 +166,7 @@ object EtlGates {
     "w43_jdbc_qualified" -> { (s, _) =>
       val db  = s"memory:graftq${java.util.UUID.randomUUID().toString.take(8)}"
       val url = s"jdbc:derby:$db;create=true"
-      val t = WikidataEtl.runQualified(DumpReader.readQualified(s, dumpPath), cache = false)
+      val t = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Qualified), cache = false)
       JdbcSink.writeTables(t, url)
       s.read.jdbc(url, "\"qualifiers\"", new java.util.Properties())
         .select("id", "property_id", "claim_id", "qual_property_id", "kind",
@@ -174,20 +182,13 @@ object EtlGates {
     // the guard; the 4-shard convergence sweep is the spec's. Gate cost is
     // per-commit scheduling — 9 snapshot commits per batch — not data.)
     "x12_stream_incremental" -> { (s, _) =>
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val in   = graft.Scratch.fresh("x12_in")
       val root = graft.Scratch.fresh("x12_tables")
       val ckpt = graft.Scratch.fresh("x12_ckpt")
       val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath), cache = true)
       graft.streaming.IncrementalEtlStream.bootstrap(s, root, v1)
       v1.unpersist()
-      val lines = Files.readAllLines(Paths.get(changesetPath)).asScala.toSeq
-      val half = (lines.size + 1) / 2
-      lines.grouped(half).zipWithIndex.foreach { case (chunk, i) =>
-        Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-          chunk.mkString("\n").getBytes("UTF-8"))
-      }
+      shardInTwo(changesetPath, in)
       val q = graft.streaming.IncrementalEtlStream.start(s, in, root, ckpt,
         maxFilesPerTrigger = 1)
       q.awaitTermination()
@@ -201,22 +202,15 @@ object EtlGates {
     // never reads — incremental, streaming and from-scratch cannot drift
     // at the links grain, whatever batch boundaries the source picked.
     "x29_stream_incremental_full" -> { (s, _) =>
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val in   = graft.Scratch.fresh("x29_in")
       val root = graft.Scratch.fresh("x29_tables")
       val ckpt = graft.Scratch.fresh("x29_ckpt")
-      val v1 = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath), cache = true)
+      val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = true)
       graft.streaming.IncrementalEtlStream.bootstrap(s, root, v1)
       v1.unpersist()
-      val lines = Files.readAllLines(Paths.get(changesetPath)).asScala.toSeq
-      val half = (lines.size + 1) / 2
-      lines.grouped(half).zipWithIndex.foreach { case (chunk, i) =>
-        Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-          chunk.mkString("\n").getBytes("UTF-8"))
-      }
+      shardInTwo(changesetPath, in)
       val q = graft.streaming.IncrementalEtlStream.start(s, in, root, ckpt,
-        maxFilesPerTrigger = 1, full = true)
+        maxFilesPerTrigger = 1, surface = Surface.Full)
       q.awaitTermination()
       graft.operators.SnapshotTable.read(s, s"$root/aliases")
     },
@@ -229,33 +223,27 @@ object EtlGates {
     // oracle: batch boundaries, the guard, tags and the appends are all
     // invisible to the answer.
     "x30_stream_any_name_index" -> { (s, _) =>
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.functions.min
       val in   = graft.Scratch.fresh("x30_in")
       val root = graft.Scratch.fresh("x30_tables")
       val ckpt = graft.Scratch.fresh("x30_ckpt")
       val idx  = graft.Scratch.fresh("x30_index")
-      val v1 = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath), cache = true)
+      val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = true)
       graft.streaming.IncrementalEtlStream.bootstrap(s, root, v1)
       graft.operators.EditJoin.saveIndex(s, idx, QueryApi(v1).anyNames,
         "id", "name", files = 32)
       v1.unpersist()
-      val lines = Files.readAllLines(Paths.get(changesetPath)).asScala.toSeq
+      val lines = shardInTwo(changesetPath, in)
       val half = (lines.size + 1) / 2
-      lines.grouped(half).zipWithIndex.foreach { case (chunk, i) =>
-        Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-          chunk.mkString("\n").getBytes("UTF-8"))
-      }
       val q = graft.streaming.IncrementalEtlStream.start(s, in, root, ckpt,
-        maxFilesPerTrigger = 1, full = true, anyNameIndex = Some(idx))
+        maxFilesPerTrigger = 1, surface = Surface.Full, anyNameIndex = Some(idx))
       q.awaitTermination()
       // replaying a consumed batch moves neither the tables nor the index
       val vIdx = graft.operators.SnapshotTable.latestVersion(idx)
       val vMeta = graft.operators.SnapshotTable.latestVersion(s"$root/meta")
       import s.implicits._
       graft.streaming.IncrementalEtlStream.applyBatch(s,
-        lines.take(half).toDF("value"), root, full = true, Some(idx),
+        lines.take(half).toDF("value"), root, Surface.Full, Some(idx),
         Some(graft.streaming.BatchTags.tag(
           graft.streaming.BatchTags.namespace(ckpt), "0")))
       require(graft.operators.SnapshotTable.latestVersion(idx) == vIdx &&
@@ -278,17 +266,10 @@ object EtlGates {
     // oracle as x3's bare-append path. Replay idempotency and partial-crash
     // repair are EtlSnapshotStreamSpec's.
     "x13_stream_snapshot" -> { (s, _) =>
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val in   = graft.Scratch.fresh("x13_in")
       val root = graft.Scratch.fresh("x13_tables")
       val ckpt = graft.Scratch.fresh("x13_ckpt")
-      val lines = Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq
-      val half = (lines.size + 1) / 2
-      lines.grouped(half).zipWithIndex.foreach { case (chunk, i) =>
-        Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-          chunk.mkString("\n").getBytes("UTF-8"))
-      }
+      shardInTwo(dumpPath, in)
       val q = graft.streaming.EtlStream.startSnapshot(s, in, root, ckpt,
         maxFilesPerTrigger = 1)
       q.awaitTermination()
@@ -305,22 +286,15 @@ object EtlGates {
     // idempotency and partial-crash repair over the 13-table surface are
     // EtlSnapshotStreamSpec's.
     "x28_stream_full" -> { (s, _) =>
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val in   = graft.Scratch.fresh("x28_in")
       val root = graft.Scratch.fresh("x28_tables")
       val ckpt = graft.Scratch.fresh("x28_ckpt")
-      val lines = Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq
-      val half = (lines.size + 1) / 2
-      lines.grouped(half).zipWithIndex.foreach { case (chunk, i) =>
-        Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-          chunk.mkString("\n").getBytes("UTF-8"))
-      }
+      shardInTwo(dumpPath, in)
       val q = graft.streaming.EtlStream.startSnapshot(s, in, root, ckpt,
-        maxFilesPerTrigger = 1, full = true)
+        maxFilesPerTrigger = 1, surface = Surface.Full)
       q.awaitTermination()
       // all 13 surfaces must have been published and batch-tagged
-      IncrementalEtl.tableNamesFull.foreach { n =>
+      Surface.Full.tableNames.foreach { n =>
         require(graft.operators.SnapshotTable.tagOf(s"$root/$n").isDefined,
           s"full streaming run must publish and tag $n")
       }
@@ -333,7 +307,7 @@ object EtlGates {
     // discriminator; gated against a full DuckDB re-derivation from the
     // same dump.
     "w34_etl_qualifiers"  -> { (s, _) =>
-      WikidataEtl.qualifiersTable(DumpReader.readQualified(s, dumpPath))
+      WikidataEtl.qualifiersTable(DumpReader.read(s, dumpPath, Surface.Qualified))
     },
     // W59: statement REFERENCES — the provenance surface the reference
     // throws away with the qualifiers (its ClaimValueData keeps only the
@@ -343,11 +317,11 @@ object EtlGates {
     // full DuckDB re-derivation from the raw dump (references unnested
     // with a 0-based record index, snak maps walked like the claims map).
     "w59_etl_references" -> { (s, _) =>
-      WikidataEtl.referencesTable(DumpReader.readReferenced(s, dumpPath))
+      WikidataEtl.referencesTable(DumpReader.read(s, dumpPath, Surface.Full))
     },
     // W60: the provenance grain under the 13-table incremental apply —
     // base = the W54 full run of v1 on disk, the changeset applied with
-    // full = true (revised entities carry fresh references in the
+    // Surface.Full (revised entities carry fresh references in the
     // regenerated fixtures), and the resulting REFERENCES table gated
     // against a DuckDB full re-derivation from the v2 dump the Spark side
     // never reads: incremental and from-scratch cannot drift at the
@@ -355,7 +329,7 @@ object EtlGates {
     // W61: the provenance-coverage rollup — per property: statements,
     // statements carrying at least one citation, citation records.
     "w61_reference_coverage" -> { (s, _) =>
-      WikidataEtl.referenceCoverage(DumpReader.readReferenced(s, dumpPath))
+      WikidataEtl.referenceCoverage(DumpReader.read(s, dumpPath, Surface.Full))
     },
     // W62: the reference README's own conjunctive pattern (W15) under a
     // PROVENANCE requirement — every conjunct satisfied by a SOURCED claim
@@ -366,7 +340,7 @@ object EtlGates {
     // load-bearing in the derivation itself.
     "w62_sourced_conjunctive" -> { (s, _) =>
       import org.apache.spark.sql.functions.{col, countDistinct, min, struct}
-      val t = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath))
+      val t = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full))
       val sourced = t.statements.get
         .join(t.references.get.select("claim_id").distinct(), Seq("claim_id"), "left_semi")
       val probe = sourced.groupBy("id")
@@ -384,10 +358,8 @@ object EtlGates {
     },
     "w60_incremental_references" -> { (s, _) =>
       val base = graft.Scratch.fresh("w60_base")
-      val t = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath))
-      t.writeParquet(base, partitions = 4)
-      t.unpersist()
-      val next = IncrementalEtl.applyFile(s, base, changesetPath, full = true)
+      WikidataEtl.runFile(s, dumpPath, base, partitions = 4, surface = Surface.Full)
+      val next = IncrementalEtl.applyFile(s, base, changesetPath, Surface.Full)
       next.unpersist()
       next.references.get
     },
@@ -400,9 +372,7 @@ object EtlGates {
     // discipline as the reference's 8.
     "w38_qualified_sink"  -> { (s, _) =>
       val out = graft.Scratch.fresh("w38_sink")
-      val t = WikidataEtl.runQualified(DumpReader.readQualified(s, dumpPath))
-      t.writeParquet(out, partitions = 4)
-      t.unpersist()
+      WikidataEtl.runFile(s, dumpPath, out, partitions = 4, surface = Surface.Qualified)
       s.read.parquet(s"$out/qualifiers")
     },
     // W35: temporal claim validity — the query qualifiers exist for, and
@@ -412,7 +382,7 @@ object EtlGates {
     // from the raw dump.
     "w35_valid_at"        -> { (s, _) =>
       import org.apache.spark.sql.functions.{lit, col}
-      val ents = DumpReader.readQualified(s, dumpPath)
+      val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.validAt(
         WikidataEtl.entityStatements(ents),
         WikidataEtl.qualifiersTable(ents),
@@ -428,7 +398,7 @@ object EtlGates {
     // statements): the flag must aggregate over the whole group, so a
     // per-value-family flag diverges here (the round-9 advisor's case).
     "w46_truthy" -> { (s, _) =>
-      WikidataEtl.truthyStatements(DumpReader.readQualified(s, dumpPath))
+      WikidataEtl.truthyStatements(DumpReader.read(s, dumpPath, Surface.Qualified))
     },
     // W47: TRUTHY over the TYPED value tables — the BestRank cut composed
     // with the 7-way routing, i.e. the reference README's own query
@@ -438,11 +408,11 @@ object EtlGates {
     // time groups so the cut removes real rows from both tables.
     "w47_truthy_quantity" -> { (s, _) =>
       WikidataEtl.quantityTable(
-        WikidataEtl.truthyCore(DumpReader.readQualified(s, dumpPath)))
+        WikidataEtl.truthyCore(DumpReader.read(s, dumpPath, Surface.Qualified)))
     },
     "w47_truthy_time" -> { (s, _) =>
       WikidataEtl.timeTable(
-        WikidataEtl.truthyCore(DumpReader.readQualified(s, dumpPath)))
+        WikidataEtl.truthyCore(DumpReader.read(s, dumpPath, Surface.Qualified)))
     },
     // W48: truthy × validAt — "what was the PREFERRED value at T": the
     // BestRank cut picks the statement the editors endorse, the temporal
@@ -453,7 +423,7 @@ object EtlGates {
     // filters on the spine — they compose as two cheap joins.
     "w48_truthy_at" -> { (s, _) =>
       import org.apache.spark.sql.functions.{col, lit}
-      val ents = DumpReader.readQualified(s, dumpPath)
+      val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.validAt(
         WikidataEtl.truthyStatements(ents),
         WikidataEtl.qualifiersTable(ents),
@@ -466,7 +436,7 @@ object EtlGates {
     // validAt over a corpus.
     "w44_temporal_coverage" -> { (s, _) =>
       import org.apache.spark.sql.functions.col
-      val ents = DumpReader.readQualified(s, dumpPath)
+      val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.temporalCoverage(
         WikidataEtl.entityStatements(ents),
         WikidataEtl.qualifiersTable(ents))
@@ -478,7 +448,7 @@ object EtlGates {
     // construction (claims alive or dead at both times never survive).
     "w42_temporal_diff" -> { (s, _) =>
       import org.apache.spark.sql.functions.{lit, col}
-      val ents = DumpReader.readQualified(s, dumpPath)
+      val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.changedBetween(
         WikidataEtl.entityStatements(ents),
         WikidataEtl.qualifiersTable(ents),
@@ -492,7 +462,7 @@ object EtlGates {
     // the reference's users cannot ask at all (no qualifiers, no time).
     "w37_temporal_labels" -> { (s, _) =>
       import org.apache.spark.sql.functions.lit
-      val ents = DumpReader.readQualified(s, dumpPath)
+      val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.labeledAt(
         WikidataEtl.entityStatements(ents),
         WikidataEtl.qualifiersTable(ents),
@@ -530,13 +500,13 @@ object EtlGates {
     // W51/W52: the name-and-link surface the reference drops — sitelinks
     // ("which enwiki article is this entity", the join every wiki-corpus
     // pipeline starts from) and EVERY language's aliases (meta keeps one
-    // English label). Both are shuffle-free explodes of an opt-in pruned
-    // parse; both re-derived in DuckDB from the raw dump.
+    // English label). Both are shuffle-free explodes of the Surface.Full
+    // pruned parse; both re-derived in DuckDB from the raw dump.
     "w51_sitelinks" -> { (s, _) =>
-      WikidataEtl.sitelinksTable(DumpReader.readLinks(s, dumpPath))
+      WikidataEtl.sitelinksTable(DumpReader.read(s, dumpPath, Surface.Full))
     },
     "w52_aliases" -> { (s, _) =>
-      WikidataEtl.aliasesTable(DumpReader.readLinks(s, dumpPath))
+      WikidataEtl.aliasesTable(DumpReader.read(s, dumpPath, Surface.Full))
     },
     // W55: the 13-table INCREMENTAL apply — W22's LWW law over the full
     // surface: base = the W54 full run of v1 written to parquet, the
@@ -547,10 +517,8 @@ object EtlGates {
     // from-scratch cannot drift at the links grain either.
     "w55_incremental_full" -> { (s, _) =>
       val base = graft.Scratch.fresh("w55_base")
-      val t = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath))
-      t.writeParquet(base, partitions = 4)
-      t.unpersist()
-      val next = IncrementalEtl.applyFile(s, base, changesetPath, full = true)
+      WikidataEtl.runFile(s, dumpPath, base, partitions = 4, surface = Surface.Full)
+      val next = IncrementalEtl.applyFile(s, base, changesetPath, Surface.Full)
       next.unpersist()
       next.aliases.get
     },
@@ -563,9 +531,7 @@ object EtlGates {
     // corrupt a surface without failing a hash.
     "w54_full_sink" -> { (s, _) =>
       val out = graft.Scratch.fresh("w54_sink")
-      val t = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath))
-      t.writeParquet(out, partitions = 4)
-      t.unpersist()
+      WikidataEtl.runFile(s, dumpPath, out, partitions = 4, surface = Surface.Full)
       s.read.parquet(s"$out/aliases")
     },
     // W53: any-name lookup — W14's question asked the way users ask it:
@@ -574,7 +540,7 @@ object EtlGates {
     // nothing hard-coded.
     "w53_any_name_lookup" -> { (s, _) =>
       import org.apache.spark.sql.functions.{col, min}
-      val aliases = WikidataEtl.aliasesTable(DumpReader.readLinks(s, dumpPath))
+      val aliases = WikidataEtl.aliasesTable(DumpReader.read(s, dumpPath, Surface.Full))
       val meta = WikidataEtl.meta(DumpReader.read(s, dumpPath))
       val term = aliases.agg(min(col("alias"))).head().getString(0)
       meta.filter(col("label") === term).select("id")
@@ -590,7 +556,7 @@ object EtlGates {
     // footer-stats pruning (asserted in-gate) and the store are invisible.
     "w56_fuzzy_any_name" -> { (s, _) =>
       import org.apache.spark.sql.functions.{col, min}
-      val api = QueryApi(WikidataEtl.runFull(DumpReader.readFull(s, dumpPath), cache = false))
+      val api = QueryApi(WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = false))
       // drop the min name's LAST character: every sibling name one
       // insertion away (the whole alphaN family) is an ed-1 hit, so the
       // gate discriminates across many ids, not one
@@ -619,12 +585,12 @@ object EtlGates {
     // require proves maintained ≡ fold-and-rebuild, row-exact.
     "w57_fuzzy_index_refresh" -> { (s, _) =>
       import org.apache.spark.sql.functions.{broadcast, col, min}
-      val v1 = WikidataEtl.runFull(DumpReader.readFull(s, dumpPath), cache = true)
+      val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = true)
       val t = graft.Scratch.fresh("w57_index")
       graft.operators.EditJoin.saveIndex(s, t,
         QueryApi(v1).anyNames, "id", "name", files = 32)
-      val changes = IncrementalEtl.readChangeset(s, changesetPath, full = true)
-      val next = IncrementalEtl.applyChangeset(v1.byName, changes, full = true)
+      val changes = IncrementalEtl.readChangeset(s, changesetPath, Surface.Full)
+      val next = IncrementalEtl.applyChangeset(v1.byName, changes)
       val touched = IncrementalEtl.winners(changes).select("id")
       val current = QueryApi(next).anyNames
       graft.operators.EditJoin.appendIndexDelta(s, t,

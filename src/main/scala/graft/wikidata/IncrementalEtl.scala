@@ -2,11 +2,10 @@ package graft.wikidata
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Incremental Wikidata ingestion (SURVEY.md §2.1 W22): apply an
-  * entity-revision changeset to the 8 published tables instead of rebuilding
-  * them from a full dump.
+  * entity-revision changeset to the published tables of its [[Surface]]
+  * instead of rebuilding them from a full dump.
   *
   * The reference refuses to update an existing output file and rebuilds from
   * scratch every run (reference: src/main.rs:98-104). At 100 TB a full
@@ -26,69 +25,30 @@ import org.apache.spark.sql.types._
   * re-fetch can resurrect, a leaked row cannot un-ship).
   *
   * Scale shape: the winners frame is changeset-bounded, so every per-table
-  * anti-join broadcasts the touched-id set — eight map-only passes over the
-  * base tables, zero shuffles of base data. Pair with
+  * anti-join broadcasts the touched-id set — one map-only pass per base
+  * table, zero shuffles of base data. Pair with
   * [[graft.operators.SnapshotTable]] (see [[applyCommit]]) for atomic
   * publication: readers see the old tables until the new version's manifest
   * lands, and a crashed apply leaves the old version current.
   */
 object IncrementalEtl {
 
-  /** The 8 published table names, in [[WikidataTables.byName]] key order
-    * contract. */
-  val tableNames: Seq[String] = Seq("meta", "string", "entity", "coordinates",
-    "quantity", "time", "none", "unknown")
+  /** The 8 core table names; the benchmark calls it. */
+  val tableNames: Seq[String] = Surface.Core.tableNames
 
-  /** W40: the 10-table surface — the qualified run's extra tables merge by
-    * the identical delete-then-append law (both are id-keyed like every
-    * claim table). */
-  val tableNamesQualified: Seq[String] = tableNames ++ Seq("qualifiers", "statements")
+  /** The 13 full-surface table names; the benchmark calls it. */
+  val tableNamesFull: Seq[String] = Surface.Full.tableNames
 
-  /** W55: the complete 13-table surface (W54's run) — sitelinks, aliases
-    * and the W59 reference table are id-keyed too, so the same law covers
-    * them. */
-  val tableNamesFull: Seq[String] =
-    tableNamesQualified ++ Seq("sitelinks", "aliases", "references")
-
-  /** Changeset entity schema: the pruned dump entity plus revision metadata.
-    * A deletion marker carries only (id, lastrevid, deleted). */
-  val changeSchema: StructType = StructType(
-    DumpReader.entitySchema.fields ++ Seq(
-      StructField("lastrevid", LongType),
-      StructField("deleted", BooleanType)))
-
-  /** W40: the qualified changeset schema (statement ids + qualifier snaks
-    * retained on every revision's claims). */
-  val changeSchemaQualified: StructType = StructType(
-    DumpReader.entitySchemaQualified.fields ++ Seq(
-      StructField("lastrevid", LongType),
-      StructField("deleted", BooleanType)))
-
-  /** W55: the full changeset schema (qualified + sitelinks + aliases). */
-  val changeSchemaFull: StructType = StructType(
-    DumpReader.entitySchemaFull.fields ++ Seq(
-      StructField("lastrevid", LongType),
-      StructField("deleted", BooleanType)))
-
-  /** Changeset lines → one struct column `c`, with the dump framing rules of
-    * [[DumpReader.entities]] (skip brackets/blank/junk, strip trailing
-    * commas, malformed → dropped). */
-  def changesFrom(lines: DataFrame,
-      schema: StructType = changeSchema): DataFrame = {
-    val trimmed = trim(col("value"))
-    lines
-      .filter(trimmed =!= "" && trimmed =!= "[" && trimmed =!= "]")
-      .select(from_json(regexp_replace(trimmed, ",$", ""), schema).as("c"))
-      .filter(col("c").isNotNull && col("c.id").isNotNull)
-  }
+  /** Changeset lines → one struct column `c` of `surface`'s changeset
+    * schema, framed exactly like a dump ([[DumpReader.entities]]: skip
+    * brackets/blank/junk, strip trailing commas, malformed → dropped). */
+  def changesFrom(lines: DataFrame, surface: Surface = Surface.Core): DataFrame =
+    DumpReader.parse(lines, surface.changeSchema, "c")
 
   /** Read a changeset file (or directory of shards). */
   def readChangeset(spark: SparkSession, path: String,
-      qualified: Boolean = false, full: Boolean = false): DataFrame =
-    changesFrom(spark.read.text(path),
-      if (full) changeSchemaFull
-      else if (qualified) changeSchemaQualified
-      else changeSchema)
+      surface: Surface = Surface.Core): DataFrame =
+    changesFrom(spark.read.text(path), surface)
 
   /** LWW winners: one row per encoded entity id — the max-`lastrevid`
     * revision, deletes outranking puts on a tie. One partial-agg `max_by`
@@ -104,76 +64,54 @@ object IncrementalEtl {
         coalesce(col("c.deleted"), lit(false)).cast("int").as("del"))).as("c"))
 
   /** Apply a changeset to base tables (keyed by [[WikidataTables.byName]]
-    * names). Returns the next version of all 8 frames; call `unpersist()`
-    * on the result once sinks are done (the delta core is cached, as in the
-    * full ETL). */
-  def applyChangeset(base: Map[String, DataFrame], changes: DataFrame,
-      qualified: Boolean = false, full: Boolean = false): WikidataTables =
-    applyWinners(base, winners(changes), qualified, full)
+    * names). The changeset's [[Surface]] decides the tables: `base` must
+    * hold exactly that surface's tables. Returns the next version of every
+    * one; call `unpersist()` on the result once sinks are done (the delta
+    * core is cached, as in the full ETL). */
+  def applyChangeset(base: Map[String, DataFrame], changes: DataFrame): WikidataTables =
+    applyWinners(base, winners(changes))
 
   /** Apply an already-resolved winners frame (`id`, `c`) — one row per
     * entity — to base tables. Split out so the streaming path
     * ([[graft.streaming.IncrementalEtlStream]]) can interpose its
     * cross-batch revision guard between [[winners]] and the merge. */
-  def applyWinners(base: Map[String, DataFrame], win: DataFrame,
-      qualified: Boolean = false, full: Boolean = false): WikidataTables = {
+  def applyWinners(base: Map[String, DataFrame], win: DataFrame): WikidataTables = {
+    val surface = Surface.of(win)
+    val missing = surface.tableNames.filterNot(base.contains)
+    val extra = base.keys.filterNot(surface.tableNames.contains).toSeq.sorted
+    require(missing.isEmpty && extra.isEmpty,
+      s"a $surface changeset applies to exactly its ${surface.tableNames.size} tables; " +
+        s"base is missing [${missing.mkString(", ")}], has extra [${extra.mkString(", ")}]")
     // surviving revisions, reshaped to DumpReader's pruned entity struct so
     // the delta tables come from the SAME routing code as a full rebuild —
-    // incremental and full cannot drift. The full (W55) shape carries the
-    // links fields through; full implies the qualified tables too.
-    val extraFields =
-      if (full) Seq(col("c.aliases").as("aliases"),
-        col("c.sitelinks").as("sitelinks"))
-      else Seq.empty
+    // incremental and full cannot drift
     val survivors = win
       .filter(!coalesce(col("c.deleted"), lit(false)))
-      .select(struct(Seq(
-        col("c.id").as("id"),
-        col("c.labels").as("labels"),
-        col("c.descriptions").as("descriptions"),
-        col("c.claims").as("claims")) ++ extraFields: _*).as("entity"))
-    val delta =
-      if (full) WikidataEtl.runFull(survivors, cache = true)
-      else if (qualified) WikidataEtl.runQualified(survivors, cache = true)
-      else WikidataEtl.run(survivors, cache = true)
+      .select(struct(surface.entitySchema.fieldNames.toSeq.map(n => col(s"c.$n").as(n)): _*)
+        .as("entity"))
+    val delta = WikidataEtl.run(survivors, cache = true)
     val touched = win.select("id")
-    def merged(name: String): DataFrame =
-      base(name)
+    WikidataTables(surface.tableNames.map { name =>
+      name -> base(name)
         .join(broadcast(touched), Seq("id"), "left_anti")
         .unionByName(delta.byName(name))
-    WikidataTables(
-      meta = merged("meta"),
-      string = merged("string"),
-      entity = merged("entity"),
-      coordinates = merged("coordinates"),
-      quantity = merged("quantity"),
-      time = merged("time"),
-      none = merged("none"),
-      unknown = merged("unknown"),
-      core = delta.core,
-      qualifiers = if (qualified || full) Some(merged("qualifiers")) else None,
-      statements = if (qualified || full) Some(merged("statements")) else None,
-      sitelinks = if (full) Some(merged("sitelinks")) else None,
-      aliases = if (full) Some(merged("aliases")) else None,
-      references = if (full) Some(merged("references")) else None)
+    }.toMap, delta.core)
   }
 
   /** File-level apply: parquet tables at `baseDir` + changeset dump at
-    * `changesetPath` → next-version frames. */
+    * `changesetPath` → next-version frames of `surface`'s tables. */
   def applyFile(spark: SparkSession, baseDir: String, changesetPath: String,
-      qualified: Boolean = false, full: Boolean = false): WikidataTables = {
-    val names = if (full) tableNamesFull
-      else if (qualified) tableNamesQualified else tableNames
-    val base = names.map(n => n -> spark.read.parquet(s"$baseDir/$n")).toMap
-    applyChangeset(base,
-      readChangeset(spark, changesetPath, qualified, full), qualified, full)
+      surface: Surface = Surface.Core): WikidataTables = {
+    val base = surface.tableNames.map(n => n -> spark.read.parquet(s"$baseDir/$n")).toMap
+    applyChangeset(base, readChangeset(spark, changesetPath, surface))
   }
 
-  /** Atomic refresh: apply the changeset and commit each table as the next
-    * [[graft.operators.SnapshotTable]] version. Readers on the previous
-    * version are unaffected (snapshot isolation); a crash mid-apply leaves
-    * every table at its old version — the manifest rename is the only
-    * publication point. Returns the committed version per table. */
+  /** Atomic refresh: apply the changeset and commit each table of its
+    * surface as the next [[graft.operators.SnapshotTable]] version. Readers
+    * on the previous version are unaffected (snapshot isolation); a crash
+    * mid-apply leaves every table at its old version — the manifest rename
+    * is the only publication point. Returns the committed version per
+    * table. */
   def applyCommit(spark: SparkSession, base: Map[String, DataFrame],
       changes: DataFrame, tableRoot: String): Map[String, Long] = {
     val next = applyChangeset(base, changes)

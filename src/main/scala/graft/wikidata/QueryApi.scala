@@ -160,16 +160,16 @@ final class QueryApi(val tables: WikidataTables) {
   /** W53/W56 name universe: English labels ∪ every language's aliases as
     * ONE (id, name) frame — the lookup surface users actually mean by
     * "the entity called X" ("Douglas Noël Adams", "DNA" and the label all
-    * resolve). Needs the links surface ([[WikidataEtl.runFull]] /
-    * [[DumpReader.readFull]]); throws loudly otherwise. Persisted once per
+    * resolve). Needs the `aliases` table of a [[Surface.Full]] run; throws
+    * loudly otherwise. Persisted once per
     * instance: it typically feeds several actions (probe-term agg, index
     * save, lookup verify), and its lineage is the full-surface parse,
     * which unpinned re-ran per consumer (the w56/w57 gates evaluated it
     * 3-6x). */
   def anyNames: DataFrame = {
     val aliases = tables.aliases.getOrElse(throw new IllegalArgumentException(
-      "any-name lookup needs the links surface: parse with DumpReader.readFull/" +
-        "readLinks and run WikidataEtl.runFull (W52 aliases)"))
+      "any-name lookup needs the aliases table: parse the dump with Surface.Full " +
+        "(DumpReader.read(spark, path, Surface.Full)) and run WikidataEtl.run on it"))
     memo("anyNames", persist = true)(QueryApi.anyNamesOf(tables.meta, aliases))
   }
 
@@ -205,13 +205,15 @@ final class QueryApi(val tables: WikidataTables) {
     * (pid, qid) FIRST (tiny), semi-joins the sourced claim-id set (also
     * claim-keyed), and the surviving per-conjunct id sets chain as LEFT
     * SEMI joins against meta — all broadcast-scale, the W15 shape with
-    * one extra claim-keyed cut. Needs the full surface
-    * ([[WikidataEtl.runFull]]); throws loudly otherwise. */
+    * one extra claim-keyed cut. Needs the tables of a [[Surface.Full]] run;
+    * throws loudly otherwise. */
   def conjunctiveSourcedSearch(conjuncts: Seq[(Long, Long)]): DataFrame = {
     val spine = tables.statements.getOrElse(throw new IllegalArgumentException(
-      "sourced search needs the claim spine: run WikidataEtl.runQualified/runFull"))
+      "sourced search needs the statements table: parse the dump with Surface.Full " +
+        "and run WikidataEtl.run on it"))
     val refs = tables.references.getOrElse(throw new IllegalArgumentException(
-      "sourced search needs the references surface: run WikidataEtl.runFull (W59)"))
+      "sourced search needs the references table: parse the dump with Surface.Full " +
+        "and run WikidataEtl.run on it"))
     val sourcedIds = memo("sourcedClaims", persist = true)(refs.select("claim_id").distinct())
     conjuncts.foldLeft(tables.meta) { case (acc, (pid, qid)) =>
       val sourcedClaim = spine

@@ -4,40 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The 8 typed claim tables produced by the ETL (reference: src/value.rs:63-112). */
-final case class WikidataTables(
-    meta: DataFrame,
-    string: DataFrame,
-    entity: DataFrame,
-    coordinates: DataFrame,
-    quantity: DataFrame,
-    time: DataFrame,
-    none: DataFrame,
-    unknown: DataFrame,
-    /** the shared cached parse (pruned entity structs), when
-      * `run(cache = true)` built one — call `unpersist()` once the sinks
-      * are done */
-    core: Option[DataFrame] = None,
-    /** W38: the qualifier table + statement spine, present when the ETL
-      * ran qualified ([[WikidataEtl.runQualified]]) — a strict superset of
-      * the reference's 8-table output. */
-    qualifiers: Option[DataFrame] = None,
-    statements: Option[DataFrame] = None,
-    /** W51/W52: the name-and-link tables, present when the ETL ran full
-      * ([[WikidataEtl.runFull]]). */
-    sitelinks: Option[DataFrame] = None,
-    aliases: Option[DataFrame] = None,
-    /** W59: the statement-reference (provenance) table, present when the
-      * ETL ran full. */
-    references: Option[DataFrame] = None) {
-
-  def byName: Map[String, DataFrame] = Map(
-    "meta" -> meta, "string" -> string, "entity" -> entity,
-    "coordinates" -> coordinates, "quantity" -> quantity, "time" -> time,
-    "none" -> none, "unknown" -> unknown) ++
-    qualifiers.map("qualifiers" -> _) ++ statements.map("statements" -> _) ++
-    sitelinks.map("sitelinks" -> _) ++ aliases.map("aliases" -> _) ++
-    references.map("references" -> _)
+/** The typed tables one ETL run produces, keyed by name: the reference's 8
+  * (src/value.rs:63-112) plus the extra tables of the run's [[Surface]].
+  * `core` is the shared cached parse (pruned entity structs), when
+  * `run(cache = true)` built one — call `unpersist()` once the sinks are
+  * done. */
+final case class WikidataTables(byName: Map[String, DataFrame], core: Option[DataFrame]) {
+  def meta: DataFrame = byName("meta")
+  def string: DataFrame = byName("string")
+  def entity: DataFrame = byName("entity")
+  def coordinates: DataFrame = byName("coordinates")
+  def quantity: DataFrame = byName("quantity")
+  def time: DataFrame = byName("time")
+  def none: DataFrame = byName("none")
+  def unknown: DataFrame = byName("unknown")
+  /** W38: the qualifier table + statement spine, from [[Surface.Qualified]] on. */
+  def qualifiers: Option[DataFrame] = byName.get("qualifiers")
+  def statements: Option[DataFrame] = byName.get("statements")
+  /** W51/W52/W59: the name-and-link and provenance tables, at [[Surface.Full]]. */
+  def sitelinks: Option[DataFrame] = byName.get("sitelinks")
+  def aliases: Option[DataFrame] = byName.get("aliases")
+  def references: Option[DataFrame] = byName.get("references")
 
   /** Release the cached claim core (bounded-memory long-running callers —
     * streaming micro-batches — must pair every `run` with this). */
@@ -52,18 +39,18 @@ final case class WikidataTables(
     * lookups by property and id probes — the two index shapes the reference
     * builds.
     *
-    * The eight writes are submitted CONCURRENTLY: they all read the one
-    * cached parse, and each is small relative to the parse, so serial
-    * submission leaves the cluster idle between write jobs (~8×
-    * job-scheduling + sink latency on the critical path). Spark's scheduler
-    * runs concurrent jobs from separate submitting threads.
+    * The writes are submitted CONCURRENTLY: they all read the one cached
+    * parse, and each is small relative to the parse, so serial submission
+    * leaves the cluster idle between write jobs (one job-scheduling + sink
+    * latency per table on the critical path). Spark's scheduler runs
+    * concurrent jobs from separate submitting threads.
     */
   def writeParquet(dir: String, partitions: Int = 0): Unit = {
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     // materialize the shared cache once, sequentially, before fanning out —
-    // otherwise all eight jobs race to compute the same uncached partitions
+    // otherwise all the jobs race to compute the same uncached partitions
     core.foreach(_.count())
     val pool = Executors.newFixedThreadPool(byName.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -83,6 +70,21 @@ final case class WikidataTables(
   }
 }
 
+object WikidataTables {
+  /** Named constructor over the table frames; the benchmark calls it. */
+  def apply(meta: DataFrame, string: DataFrame, entity: DataFrame,
+      coordinates: DataFrame, quantity: DataFrame, time: DataFrame,
+      none: DataFrame, unknown: DataFrame, core: Option[DataFrame] = None,
+      qualifiers: Option[DataFrame] = None, statements: Option[DataFrame] = None,
+      sitelinks: Option[DataFrame] = None, aliases: Option[DataFrame] = None,
+      references: Option[DataFrame] = None): WikidataTables =
+    WikidataTables(Map("meta" -> meta, "string" -> string, "entity" -> entity,
+      "coordinates" -> coordinates, "quantity" -> quantity, "time" -> time,
+      "none" -> none, "unknown" -> unknown) ++ qualifiers.map("qualifiers" -> _) ++
+      statements.map("statements" -> _) ++ sitelinks.map("sitelinks" -> _) ++
+      aliases.map("aliases" -> _) ++ references.map("references" -> _), core)
+}
+
 /** Wikidata JSON dump → normalized typed tables, the wd2sql pipeline
   * re-expressed as a declarative Spark plan.
   *
@@ -93,7 +95,7 @@ final case class WikidataTables(
   * parsed struct and each claim table is an explode+filter of it — no UDFs,
   * no shuffle anywhere (the ETL is embarrassingly parallel), all inside
   * WholeStageCodegen. `run(cache = true)` caches the parsed struct (not the
-  * exploded core) so ALL EIGHT sinks — meta included — share a single dump
+  * exploded core) so ALL sinks — meta included — share a single dump
   * scan; consumers re-explode from memory, which is CPU-cheap codegen work,
   * where a second dump pass would be the expensive thing at 100 TB.
   */
@@ -101,12 +103,11 @@ object WikidataEtl {
 
   private val E = "entity" // pruned struct column produced by DumpReader
 
-  /** Exploded claim core: one row per (entity, property, claim), with the
-    * snak fields every router needs extracted exactly once.
-    * Deprecated-rank claims are dropped (reference: src/main.rs:87).
-    */
-  def claimCore(entities: DataFrame): DataFrame = {
-    val exploded = entities
+  /** One row per surviving statement: (id, property_id, claim), both ids
+    * encoded, deprecated-rank statements dropped (reference:
+    * src/main.rs:87). The explode every claim-grain table starts from. */
+  private def liveStatements(entities: DataFrame): DataFrame =
+    entities
       .select(col(s"$E.id").as("id_text"), explode(col(s"$E.claims")).as(Seq("pid_text", "claims")))
       .select(
         IdCodec.encodeTextCol(col("id_text")).as("id"),
@@ -114,7 +115,12 @@ object WikidataEtl {
         explode(col("claims")).as("claim"))
       .filter(coalesce(col("claim.rank"), lit("normal")) =!= "deprecated")
 
-    val staged = exploded.select(
+  /** Exploded claim core: one row per (entity, property, claim), with the
+    * snak fields every router needs extracted exactly once.
+    * Deprecated-rank claims are dropped (reference: src/main.rs:87).
+    */
+  def claimCore(entities: DataFrame): DataFrame = {
+    val staged = liveStatements(entities).select(
       col("id"), col("property_id"), col("claim.mainsnak").as("snak"))
     projectSnak(staged, Seq("id", "property_id"))
   }
@@ -187,7 +193,7 @@ object WikidataEtl {
     * article is Q42" is the join every wiki-corpus pipeline starts from
     * (aligning dump entities with article text). Explode of the pruned
     * map — shuffle-free, WholeStageCodegen like every routed table. Input
-    * from [[DumpReader.readLinks]]. */
+    * parsed at [[Surface.Full]]. */
   def sitelinksTable(entities: DataFrame): DataFrame =
     entities
       .select(IdCodec.encodeTextCol(col(s"$E.id")).as("id"),
@@ -199,7 +205,7 @@ object WikidataEtl {
     * names (meta keeps only the one English label; the reference drops
     * aliases entirely). The other half of name lookup: "Douglas Noël
     * Adams" and "DNA" both resolve. Two nested explodes, shuffle-free.
-    * Input from [[DumpReader.readLinks]]. */
+    * Input parsed at [[Surface.Full]]. */
   def aliasesTable(entities: DataFrame): DataFrame =
     entities
       .select(IdCodec.encodeTextCol(col(s"$E.id")).as("id"),
@@ -301,21 +307,15 @@ object WikidataEtl {
       "unit:string,time:string>"
 
   /** `qualifiers`: (id, property_id, claim_id, qual_property_id, kind,
-    * typed value columns). Input must come from
-    * [[DumpReader.readQualified]]. Rank filtering matches the claim core:
+    * typed value columns). Input parsed at [[Surface.Qualified]] or
+    * wider. Rank filtering matches the claim core:
     * qualifiers of deprecated statements are dropped with their statement.
     * Routing mirrors [[stringTable]]..[[unknownTable]] exactly, per
     * qualifier snak — including the drop of unencodable entity refs and the
     * none-routing of text-less monolinguals — so a user can reason about
     * one routing law for both grains. */
   def qualifiersTable(entities: DataFrame): DataFrame = {
-    val qsnaks = entities
-      .select(col(s"$E.id").as("id_text"), explode(col(s"$E.claims")).as(Seq("pid_text", "claims")))
-      .select(
-        IdCodec.encodeTextCol(col("id_text")).as("id"),
-        IdCodec.encodeTextCol(col("pid_text")).as("property_id"),
-        explode(col("claims")).as("claim"))
-      .filter(coalesce(col("claim.rank"), lit("normal")) =!= "deprecated")
+    val qsnaks = liveStatements(entities)
       .select(col("id"), col("property_id"), col("claim.id").as("claim_id"),
         explode(col("claim.qualifiers")).as(Seq("qpid_text", "qsnaks")))
       .select(col("id"), col("property_id"), col("claim_id"),
@@ -335,16 +335,10 @@ object WikidataEtl {
     * (claim_id, ref_idx) reconstructs each citation. The access path is
     * "the sources of this claim", never "all time-reference-snaks" — the
     * W34 sparse-satellite argument, so one flattened table, not seven.
-    * Input from [[DumpReader.readReferenced]]; shuffle-free explodes,
+    * Input parsed at [[Surface.Full]]; shuffle-free explodes,
     * WholeStageCodegen end to end. */
   def referencesTable(entities: DataFrame): DataFrame = {
-    val rsnaks = entities
-      .select(col(s"$E.id").as("id_text"), explode(col(s"$E.claims")).as(Seq("pid_text", "claims")))
-      .select(
-        IdCodec.encodeTextCol(col("id_text")).as("id"),
-        IdCodec.encodeTextCol(col("pid_text")).as("property_id"),
-        explode(col("claims")).as("claim"))
-      .filter(coalesce(col("claim.rank"), lit("normal")) =!= "deprecated")
+    val rsnaks = liveStatements(entities)
       .select(col("id"), col("property_id"), col("claim.id").as("claim_id"),
         posexplode(col("claim.references")).as(Seq("ref_idx", "ref")))
       .select(col("id"), col("property_id"), col("claim_id"), col("ref_idx"),
@@ -363,15 +357,10 @@ object WikidataEtl {
     * actually sourced in this corpus?"), exactly as W44's temporal
     * coverage gates trust in validAt. One property-keyed aggregate with
     * map-side partials off the statement explode — answer is
-    * property-count-sized. Input from [[DumpReader.readReferenced]]. */
+    * property-count-sized. Input parsed at [[Surface.Full]]. */
   def referenceCoverage(entities: DataFrame): DataFrame =
-    entities
-      .select(col(s"$E.id").as("id_text"), explode(col(s"$E.claims")).as(Seq("pid_text", "claims")))
-      .select(IdCodec.encodeTextCol(col("id_text")).as("id"),
-        IdCodec.encodeTextCol(col("pid_text")).as("property_id"),
-        explode(col("claims")).as("claim"))
+    liveStatements(entities)
       .filter(col("id").isNotNull)
-      .filter(coalesce(col("claim.rank"), lit("normal")) =!= "deprecated")
       .select(col("property_id"),
         coalesce(size(col("claim.references")), lit(0)).as("nrefs"))
       .groupBy("property_id")
@@ -435,15 +424,8 @@ object WikidataEtl {
     * [[qualifiersTable]] rows — the key the reference never materializes
     * because it throws the qualifiers away. */
   def entityStatements(entities: DataFrame): DataFrame = {
-    val exploded = entities
-      .select(col(s"$E.id").as("id_text"), explode(col(s"$E.claims")).as(Seq("pid_text", "claims")))
-      .select(
-        IdCodec.encodeTextCol(col("id_text")).as("id"),
-        IdCodec.encodeTextCol(col("pid_text")).as("property_id"),
-        explode(col("claims")).as("claim"))
-      .filter(coalesce(col("claim.rank"), lit("normal")) =!= "deprecated")
+    liveStatements(entities)
       .filter(col("claim.mainsnak.snaktype") === "value")
-    exploded
       .select(col("id"), col("property_id"), col("claim.id").as("claim_id"),
         col("claim.mainsnak.datavalue.type").as("value_type"),
         try_variant_get(col("claim.mainsnak.datavalue.value"), "$", WideValue).as("w"))
@@ -470,15 +452,10 @@ object WikidataEtl {
     * table composes — `quantityTable(truthyCore(e))` is "the preferred
     * population figures", the reference README's own example finally
     * under `wdt:` semantics. One window max over (id, property_id) — a
-    * single shuffle of the claim-grain slice, no join. Input must come
-    * from [[DumpReader.readQualified]] (statement ids key the spine). */
+    * single shuffle of the claim-grain slice, no join. Input parsed at
+    * [[Surface.Qualified]] or wider (statement ids key the spine). */
   def truthyCore(entities: DataFrame): DataFrame = {
-    val exploded = entities
-      .select(col(s"$E.id").as("id_text"), explode(col(s"$E.claims")).as(Seq("pid_text", "claims")))
-      .select(
-        IdCodec.encodeTextCol(col("id_text")).as("id"),
-        IdCodec.encodeTextCol(col("pid_text")).as("property_id"),
-        explode(col("claims")).as("claim"))
+    val exploded = liveStatements(entities)
       .withColumn("rank", coalesce(col("claim.rank"), lit("normal")))
     val cut = truthyCut(exploded)
       .select(col("id"), col("property_id"), col("claim.id").as("claim_id"),
@@ -516,64 +493,49 @@ object WikidataEtl {
         IdCodec.encodeTextCol(col("v_entity_id")).as("entity_id"))
       .filter(col("entity_id").isNotNull)
 
-  /** Full pipeline: parsed entities → all 8 tables. `cache=true` persists
-    * the PARSED entity structs so all 8 sinks — meta included, which the
-    * exploded core cannot serve (it is pre-explode, per-entity grain) —
-    * share one dump scan (the distributed analogue of the reference's
-    * single pass). Claim consumers re-explode from the cache: in-memory
-    * codegen'd explode per sink is cheap; a second dump scan is not. */
+  /** Full pipeline: parsed entities → every table of their [[Surface]]
+    * (read from the parse, so the tables always match the parsed fields).
+    * `cache=true` persists the PARSED entity structs so every sink — meta
+    * included, which the exploded core cannot serve (it is pre-explode,
+    * per-entity grain) — shares one dump scan (the distributed analogue of
+    * the reference's single pass). Claim consumers re-explode from the
+    * cache: in-memory codegen'd explode per sink is cheap; a second dump
+    * scan is not. The wider surfaces' tables ride the same concurrent sink
+    * fan-out, repartitioned on id and stat-sorted like the reference's 8
+    * (and [[JdbcSink.writeTables]], which iterates `byName`, lands them all
+    * relationally). */
   def run(entities: DataFrame, cache: Boolean = true): WikidataTables = {
+    val surface = Surface.of(entities)
     val src  = if (cache) entities.cache() else entities
     val core = claimCore(src)
-    WikidataTables(
-      meta = meta(src),
-      string = stringTable(core),
-      entity = entityTable(core),
-      coordinates = coordinatesTable(core),
-      quantity = quantityTable(core),
-      time = timeTable(core),
-      none = noneTable(core),
-      unknown = unknownTable(core),
-      core = if (cache) Some(src) else None)
+    def table(name: String): DataFrame = name match {
+      case "meta" => meta(src)
+      case "string" => stringTable(core)
+      case "entity" => entityTable(core)
+      case "coordinates" => coordinatesTable(core)
+      case "quantity" => quantityTable(core)
+      case "time" => timeTable(core)
+      case "none" => noneTable(core)
+      case "unknown" => unknownTable(core)
+      case "qualifiers" => qualifiersTable(src)
+      case "statements" => entityStatements(src)
+      case "sitelinks" => sitelinksTable(src)
+      case "aliases" => aliasesTable(src)
+      case "references" => referencesTable(src)
+    }
+    WikidataTables(surface.tableNames.map(n => n -> table(n)).toMap,
+      if (cache) Some(src) else None)
   }
 
-  /** W38: the qualifier-aware run — the 8 reference tables PLUS the W34
-    * qualifier table and the claim spine, all off the one cached qualified
-    * parse (input must come from [[DumpReader.readQualified]]). The extra
-    * tables ride the same concurrent sink fan-out, repartitioned on id and
-    * stat-sorted like every other table; the 8-table fast path is
-    * untouched for callers that do not pay for qualifiers. */
-  def runQualified(entities: DataFrame, cache: Boolean = true): WikidataTables = {
-    val base = run(entities, cache)
-    val src = base.core.getOrElse(entities)
-    base.copy(
-      qualifiers = Some(qualifiersTable(src)),
-      statements = Some(entityStatements(src)))
-  }
+  /** [[run]]; the benchmark calls it. */
+  def runFull(entities: DataFrame, cache: Boolean = true): WikidataTables = run(entities, cache)
 
-  /** W54: the COMPLETE one-pass superset run — all 13 tables (the
-    * reference's 8, the W34 qualifier table + claim spine, the W59
-    * reference/provenance table, and the
-    * W51/W52 sitelinks + aliases) derived from ONE cached parse of the
-    * [[DumpReader.entitySchemaFull]] slice. This is the "switch from
-    * wd2sql" entry point: one dump scan, every surface the reference has
-    * plus every superset table, all riding `writeParquet`'s concurrent
-    * stat-sorted sink discipline (and [[JdbcSink.writeTables]], which
-    * iterates `byName`, lands all 13 relationally). */
-  def runFull(entities: DataFrame, cache: Boolean = true): WikidataTables = {
-    val base = runQualified(entities, cache)
-    val src = base.core.getOrElse(entities)
-    base.copy(
-      sitelinks = Some(sitelinksTable(src)),
-      aliases = Some(aliasesTable(src)),
-      references = Some(referencesTable(src)))
-  }
-
-  /** End-to-end: dump path → parquet tables at `outDir`. The cached claim
-    * core is released after the writes (callers re-reading the tables should
-    * read the written parquet, not the returned frames). */
-  def runFile(spark: SparkSession, dumpPath: String, outDir: String, partitions: Int = 0): WikidataTables = {
-    val tables = run(DumpReader.read(spark, dumpPath))
+  /** End-to-end: dump path → parquet tables of `surface` at `outDir`. The
+    * cached claim core is released after the writes (callers re-reading the
+    * tables should read the written parquet, not the returned frames). */
+  def runFile(spark: SparkSession, dumpPath: String, outDir: String, partitions: Int = 0,
+      surface: Surface = Surface.Core): WikidataTables = {
+    val tables = run(DumpReader.read(spark, dumpPath, surface))
     tables.writeParquet(outDir, partitions)
     tables.unpersist()
     tables

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.SnapshotTable
-import graft.wikidata.{DumpReader, WikidataEtl}
+import graft.wikidata.{DumpReader, Surface, WikidataEtl}
 import org.apache.spark.sql.DataFrame
 
 /** X13: exactly-once streaming ETL publication — batches append as tagged
@@ -56,9 +56,9 @@ class EtlSnapshotStreamSpec extends SparkSpec {
         chunk.mkString("\n").getBytes("UTF-8"))
     }
     EtlStream.startSnapshot(spark, in, root, ckpt, maxFilesPerTrigger = 1,
-      full = true).awaitTermination()
-    val full = WikidataEtl.runFull(DumpReader.readFull(spark, dumpPath), cache = false)
-    full.byName.keySet shouldBe graft.wikidata.IncrementalEtl.tableNamesFull.toSet
+      surface = Surface.Full).awaitTermination()
+    val full = WikidataEtl.run(DumpReader.read(spark, dumpPath, Surface.Full), cache = false)
+    full.byName.keySet shouldBe Surface.Full.tableNames.toSet
     for ((name, df) <- full.byName) {
       withClue(s"table $name: ") {
         multiset(SnapshotTable.read(spark, s"$root/$name")) shouldBe multiset(df)
@@ -75,18 +75,17 @@ class EtlSnapshotStreamSpec extends SparkSpec {
       """{"id":"Q9","labels":{"en":{"language":"en","value":"nine"}},"descriptions":{},""" +
       """"claims":{},"aliases":{"en":[{"language":"en","value":"niner"}]},""" +
       """"sitelinks":{"enwiki":{"site":"enwiki","title":"Nine"}}},"""
-    val batch = DumpReader.fromLines(spark, Seq("[", line, "]"),
-      DumpReader.entitySchemaFull)
-    EtlStream.commitBatch(spark, batch, root, batchId = 0L, full = true)
+    val batch = DumpReader.fromLines(spark, Seq("[", line, "]"), Surface.Full)
+    EtlStream.commitBatch(spark, batch, root, batchId = 0L)
     val aliasRows = multiset(SnapshotTable.read(spark, s"$root/aliases"))
     aliasRows.keySet shouldBe Set("[9,en,niner]")
     multiset(SnapshotTable.read(spark, s"$root/sitelinks")).keySet shouldBe
       Set("[9,enwiki,Nine]")
-    val versions = graft.wikidata.IncrementalEtl.tableNamesFull
+    val versions = Surface.Full.tableNames
       .map(n => n -> SnapshotTable.latestVersion(s"$root/$n")).toMap
     // full replay: every one of the 13 tables already carries tag 0
-    EtlStream.commitBatch(spark, batch, root, batchId = 0L, full = true)
-    graft.wikidata.IncrementalEtl.tableNamesFull.foreach { n =>
+    EtlStream.commitBatch(spark, batch, root, batchId = 0L)
+    Surface.Full.tableNames.foreach { n =>
       SnapshotTable.latestVersion(s"$root/$n") shouldBe versions(n)
     }
     multiset(SnapshotTable.read(spark, s"$root/aliases")) shouldBe aliasRows

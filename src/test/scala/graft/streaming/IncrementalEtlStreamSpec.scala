@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.SnapshotTable
-import graft.wikidata.{DumpReader, IncrementalEtl, WikidataEtl}
+import graft.wikidata.{DumpReader, IncrementalEtl, Surface, WikidataEtl}
 import org.apache.spark.sql.DataFrame
 
 /** X12: the streaming refresh loop — cross-batch LWW via the revisions
@@ -80,7 +80,7 @@ class IncrementalEtlStreamSpec extends SparkSpec {
     }
     // every non-empty batch commits all nine tables once: equal versions
     // are a consistent cross-table cut
-    val versions = (IncrementalEtl.tableNames :+ "revisions")
+    val versions = (Surface.Core.tableNames :+ "revisions")
       .map(n => SnapshotTable.latestVersion(s"$root/$n"))
     versions.distinct.size shouldBe 1
   }
@@ -93,9 +93,9 @@ class IncrementalEtlStreamSpec extends SparkSpec {
     def fent(id: String, label: String, alias: String, rev: Long): String =
       s"""{"id":"$id","lastrevid":$rev,"labels":{"en":{"language":"en","value":"$label"}},""" +
       s""""descriptions":{},"claims":{},"aliases":{"en":[{"language":"en","value":"$alias"}]}},"""
-    val v1 = WikidataEtl.runFull(DumpReader.fromLines(spark,
+    val v1 = WikidataEtl.run(DumpReader.fromLines(spark,
       Seq("[", fent("Q1", "apple", "pomme", 1), "]"),
-      DumpReader.entitySchemaFull), cache = false)
+      Surface.Full), cache = false)
     IncrementalEtlStream.bootstrap(spark, root, v1)
     EditJoin.saveIndex(spark, idx, QueryApi(v1).anyNames, "id", "name", files = 4)
     def currentNames() = QueryApi.anyNamesOf(
@@ -108,7 +108,7 @@ class IncrementalEtlStreamSpec extends SparkSpec {
     // batch 0: Q1 renamed (alias churn too) + a brand-new entity
     IncrementalEtlStream.applyBatch(spark,
       Seq(fent("Q1", "apfel", "mela", 9), fent("Q2", "pear", "poire", 3)).toDF("value"),
-      root, full = true, Some(idx), Some("t0"))
+      root, Surface.Full, Some(idx), Some("t0"))
     lookup("mela") shouldBe Set((1L, "mela"))   // new alias findable
     lookup("pomme") shouldBe Set.empty          // stale variant self-neutralizes
     lookup("poire") shouldBe Set((2L, "poire")) // new entity findable
@@ -117,7 +117,7 @@ class IncrementalEtlStreamSpec extends SparkSpec {
     // full replay of the consumed batch: guard rejects → total no-op
     IncrementalEtlStream.applyBatch(spark,
       Seq(fent("Q1", "apfel", "mela", 9), fent("Q2", "pear", "poire", 3)).toDF("value"),
-      root, full = true, Some(idx), Some("t0"))
+      root, Surface.Full, Some(idx), Some("t0"))
     SnapshotTable.latestVersion(idx) shouldBe vIdx
     SnapshotTable.latestVersion(s"$root/meta") shouldBe vMeta
     // crash-window form: a NEW batch arriving under the index's consumed
@@ -126,14 +126,14 @@ class IncrementalEtlStreamSpec extends SparkSpec {
     // the verify runs against current names
     IncrementalEtlStream.applyBatch(spark,
       Seq(fent("Q3", "plum", "prune", 4)).toDF("value"),
-      root, full = true, Some(idx), Some("t0"))
+      root, Surface.Full, Some(idx), Some("t0"))
     SnapshotTable.latestVersion(idx) shouldBe vIdx // index skipped by tag
     SnapshotTable.read(spark, s"$root/meta").count() shouldBe 3 // tables applied
     // Q3's names are not yet indexed (no candidates) — a later batch with
     // a fresh tag repairs the index delta
     IncrementalEtlStream.applyBatch(spark,
       Seq(fent("Q3", "plum", "prune", 5)).toDF("value"),
-      root, full = true, Some(idx), Some("t1"))
+      root, Surface.Full, Some(idx), Some("t1"))
     lookup("prune") shouldBe Set((3L, "prune"))
   }
 
@@ -143,7 +143,7 @@ class IncrementalEtlStreamSpec extends SparkSpec {
     val in   = graft.Scratch.fresh("x29spec_in")
     val root = graft.Scratch.fresh("x29spec_tables")
     val ckpt = graft.Scratch.fresh("x29spec_ckpt")
-    val v1 = WikidataEtl.runFull(DumpReader.readFull(spark, v1Path), cache = true)
+    val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path, Surface.Full), cache = true)
     IncrementalEtlStream.bootstrap(spark, root, v1)
     v1.unpersist()
     val lines = Files.readAllLines(Paths.get(csPath)).asScala.toSeq
@@ -153,15 +153,15 @@ class IncrementalEtlStreamSpec extends SparkSpec {
         chunk.mkString("\n").getBytes("UTF-8"))
     }
     IncrementalEtlStream.start(spark, in, root, ckpt, maxFilesPerTrigger = 1,
-      full = true).awaitTermination()
-    val full = WikidataEtl.runFull(DumpReader.readFull(spark, v2Path), cache = false)
-    full.byName.keySet shouldBe IncrementalEtl.tableNamesFull.toSet
+      surface = Surface.Full).awaitTermination()
+    val full = WikidataEtl.run(DumpReader.read(spark, v2Path, Surface.Full), cache = false)
+    full.byName.keySet shouldBe Surface.Full.tableNames.toSet
     for ((name, df) <- full.byName) {
       withClue(s"table $name: ") {
         multiset(SnapshotTable.read(spark, s"$root/$name")) shouldBe multiset(df)
       }
     }
-    val versions = (IncrementalEtl.tableNamesFull :+ "revisions")
+    val versions = (Surface.Full.tableNames :+ "revisions")
       .map(n => SnapshotTable.latestVersion(s"$root/$n"))
     versions.distinct.size shouldBe 1
   }

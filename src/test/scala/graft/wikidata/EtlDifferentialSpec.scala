@@ -186,7 +186,7 @@ class EtlDifferentialSpec extends SparkSpec {
     }
 
     val core = WikidataEtl.truthyCore(DumpReader.fromLines(
-      spark, lines.map(_ + ","), DumpReader.entitySchemaQualified))
+      spark, lines.map(_ + ","), Surface.Qualified))
     def multiset[A](xs: Seq[A]): Map[A, Int] =
       xs.groupBy(identity).view.mapValues(_.size).toMap
 

@@ -27,11 +27,15 @@ class EtlIncrementalSpec extends SparkSpec {
   private def tomb(id: String, rev: Long): String =
     s"""{"id":"$id","lastrevid":$rev,"deleted":true},"""
 
-  test("incremental apply of (v1, changeset) ≡ full rebuild of v2 — all 8 tables") {
-    val base = graft.Scratch.fresh("w22spec_base")
-    WikidataEtl.runFile(spark, v1Path, base)
-    val inc = IncrementalEtl.applyFile(spark, base, csPath)
-    val full = WikidataEtl.run(DumpReader.read(spark, v2Path), cache = false)
+  /** Builds the v1 base on `surface`, applies the changeset read on the same
+    * surface, and checks every table equals a full rebuild of v2. */
+  private def incrementalMatchesRebuild(surface: Surface, scratch: String): Unit = {
+    val base = graft.Scratch.fresh(scratch)
+    WikidataEtl.runFile(spark, v1Path, base, surface = surface)
+    val inc = IncrementalEtl.applyFile(spark, base, csPath, surface)
+    val full = WikidataEtl.run(DumpReader.read(spark, v2Path, surface), cache = false)
+    full.byName.keySet shouldBe surface.tableNames.toSet
+    inc.byName.keySet shouldBe surface.tableNames.toSet
     for (name <- full.byName.keys) {
       withClue(s"table $name: ") {
         multiset(inc.byName(name)) shouldBe multiset(full.byName(name))
@@ -40,21 +44,18 @@ class EtlIncrementalSpec extends SparkSpec {
     inc.unpersist()
   }
 
+  test("incremental apply of (v1, changeset) ≡ full rebuild of v2 — all 8 tables") {
+    incrementalMatchesRebuild(Surface.Core, "w22spec_base")
+  }
+
   test("qualified incremental apply ≡ qualified full rebuild of v2 — all 10 tables (W40)") {
-    val base = graft.Scratch.fresh("w40spec_base")
-    val t = WikidataEtl.runQualified(DumpReader.readQualified(spark, v1Path))
-    t.writeParquet(base)
-    t.unpersist()
-    val inc = IncrementalEtl.applyFile(spark, base, csPath, qualified = true)
-    val full = WikidataEtl.runQualified(
-      DumpReader.readQualified(spark, v2Path), cache = false)
-    full.byName.keys.toSeq.sorted.size shouldBe 10
-    for (name <- full.byName.keys) {
-      withClue(s"table $name: ") {
-        multiset(inc.byName(name)) shouldBe multiset(full.byName(name))
-      }
-    }
-    inc.unpersist()
+    Surface.Qualified.tableNames.size shouldBe 10
+    incrementalMatchesRebuild(Surface.Qualified, "w40spec_base")
+  }
+
+  test("Full-surface incremental apply ≡ Full rebuild of v2 — all 13 tables") {
+    Surface.Full.tableNames.size shouldBe 13
+    incrementalMatchesRebuild(Surface.Full, "w54spec_base")
   }
 
   test("last-writer-wins by lastrevid, not file order; revid tie → delete wins") {
@@ -91,16 +92,37 @@ class EtlIncrementalSpec extends SparkSpec {
   }
 
   test("applyCommit publishes atomically — the old snapshot version stays readable") {
-    val root = graft.Scratch.fresh("w22spec_snap")
+    for (surface <- Seq(Surface.Core, Surface.Full)) withClue(s"$surface: ") {
+      val root = graft.Scratch.fresh(s"w22spec_snap_$surface")
+      val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path, surface), cache = false)
+      v1.byName.foreach { case (n, df) => SnapshotTable.commit(spark, s"$root/$n", df) }
+      val base = v1.byName.keys.map(n => n -> SnapshotTable.read(spark, s"$root/$n")).toMap
+      val versions = IncrementalEtl.applyCommit(spark, base,
+        IncrementalEtl.readChangeset(spark, csPath, surface), root)
+      versions.keySet shouldBe surface.tableNames.toSet
+      versions.values.toSet shouldBe Set(2L)
+      // v1 unchanged under the new commit; v2 ≡ a full rebuild of the v2 dump
+      multiset(SnapshotTable.read(spark, s"$root/meta", version = 1L)) shouldBe multiset(v1.meta)
+      val full = WikidataEtl.run(DumpReader.read(spark, v2Path, surface), cache = false)
+      for ((name, df) <- full.byName) withClue(s"table $name: ") {
+        SnapshotTable.latestVersion(s"$root/$name") shouldBe Some(2L)
+        multiset(SnapshotTable.read(spark, s"$root/$name")) shouldBe multiset(df)
+      }
+    }
+  }
+
+  test("a changeset whose Surface does not match the base tables fails naming them") {
     val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path), cache = false)
-    v1.byName.foreach { case (n, df) => SnapshotTable.commit(spark, s"$root/$n", df) }
-    val base = v1.byName.keys.map(n => n -> SnapshotTable.read(spark, s"$root/$n")).toMap
-    val versions = IncrementalEtl.applyCommit(spark, base,
-      IncrementalEtl.readChangeset(spark, csPath), root)
-    versions.values.toSet shouldBe Set(2L)
-    // v1 unchanged under the new commit; v2 ≡ a full rebuild of the v2 dump
-    multiset(SnapshotTable.read(spark, s"$root/meta", version = 1L)) shouldBe multiset(v1.meta)
-    val full = WikidataEtl.run(DumpReader.read(spark, v2Path), cache = false)
-    multiset(SnapshotTable.read(spark, s"$root/meta")) shouldBe multiset(full.meta)
+    val missing = intercept[IllegalArgumentException] {
+      IncrementalEtl.applyChangeset(v1.byName,
+        IncrementalEtl.readChangeset(spark, csPath, Surface.Full))
+    }.getMessage
+    Seq("qualifiers", "statements", "sitelinks", "aliases", "references")
+      .foreach(n => missing should include(n))
+    val extra = intercept[IllegalArgumentException] {
+      IncrementalEtl.applyChangeset(
+        v1.byName + ("aliases" -> v1.meta), IncrementalEtl.readChangeset(spark, csPath))
+    }.getMessage
+    extra should include("has extra [aliases]")
   }
 }

@@ -64,7 +64,7 @@ class QualifierSpec extends SparkSpec {
         s""""P582":[${timeSnak("P582", "+1950-06-01T00:00:00Z")}]""") + "]}},"),
     "]")
 
-  private lazy val ents = DumpReader.fromLines(spark, dumpLines, DumpReader.entitySchemaQualified)
+  private lazy val ents = DumpReader.fromLines(spark, dumpLines, Surface.Qualified)
   private lazy val quals = WikidataEtl.qualifiersTable(ents)
   private lazy val stmts = WikidataEtl.entityStatements(ents)
 
@@ -194,7 +194,7 @@ class QualifierSpec extends SparkSpec {
          |}},""".stripMargin.replaceAll("\n", ""),
       "]")
     val truthy = WikidataEtl.truthyStatements(
-        DumpReader.fromLines(spark, lines, DumpReader.entitySchemaQualified))
+        DumpReader.fromLines(spark, lines, Surface.Qualified))
       .collect().map(r => (r.getAs[Long]("property_id"), r.getAs[Long]("entity_id"))).toSet
     truthy shouldBe Set(
       (IdCodec.pId(70), 10L),                      // preferred wins, normal suppressed
@@ -217,7 +217,7 @@ class QualifierSpec extends SparkSpec {
          |}},""".stripMargin.replaceAll("\n", ""),
       "]")
     val core = WikidataEtl.truthyCore(
-      DumpReader.fromLines(spark, lines, DumpReader.entitySchemaQualified))
+      DumpReader.fromLines(spark, lines, Surface.Qualified))
     // entity slice: P80's normal Q10 is suppressed by the PREFERRED
     // QUANTITY in the same group (the cross-family law); P83's normal Q12
     // by the preferred NOVALUE (ranks apply to valueless snaks too); P81
@@ -273,7 +273,7 @@ class QualifierSpec extends SparkSpec {
                 s""""P580":[${timeSnak("P580", "+1920-01-01T00:00:00Z")}],"P582":[${timeSnak("P582", "+1980-01-01T00:00:00Z")}]""")},${ent("Q23", "normal", "Q70$$3")}]
          |}},""".stripMargin.replaceAll("\n", ""),
       "]")
-    val e = DumpReader.fromLines(spark, lines, DumpReader.entitySchemaQualified)
+    val e = DumpReader.fromLines(spark, lines, Surface.Qualified)
     val alive = TemporalClaims.validAt(
       WikidataEtl.truthyStatements(e), WikidataEtl.qualifiersTable(e),
       lit("1950-06-01 00:00:00").cast("timestamp"))
@@ -311,7 +311,7 @@ class QualifierSpec extends SparkSpec {
         s"""{"snaks":{"P854":[{"snaktype":"value","property":"P854","datavalue":{"value":"ghost","type":"string"}}]}}]}]}},""",
       "]")
     val refs = WikidataEtl.referencesTable(
-      DumpReader.fromLines(spark, lines, DumpReader.entitySchemaReferenced))
+      DumpReader.fromLines(spark, lines, Surface.Full))
     val rows = refs.collect().map(r =>
       (r.getAs[String]("claim_id"), r.getAs[Int]("ref_idx"),
         r.getAs[Long]("ref_property_id"), r.getAs[String]("kind"))).toSet

@@ -45,7 +45,7 @@ class QueryApiMemoSpec extends SparkSpec {
         Seq(claim(i, 0, P31, c, refs = true)) ++
           (if (i % 2 == 0) Seq(claim(i, 1, 462, Red, refs = sourced(i))) else Nil),
         s"thing$i") } :+ "]"
-    WikidataEtl.runFull(DumpReader.fromLines(spark, lines, DumpReader.entitySchemaFull),
+    WikidataEtl.run(DumpReader.fromLines(spark, lines, Surface.Full),
       cache = false)
   }
 

@@ -153,8 +153,8 @@ class WikidataEtlSpec extends SparkSpec {
       // Q4: far from the term on every name
       """{"id":"Q4","labels":{"en":{"language":"en","value":"banana"}},"descriptions":{},"claims":{},"aliases":{"en":[{"language":"en","value":"plantain"}]}},""",
       "]")
-    val api = QueryApi(WikidataEtl.runFull(
-      DumpReader.fromLines(spark, lines, DumpReader.entitySchemaFull), cache = false))
+    val api = QueryApi(WikidataEtl.run(
+      DumpReader.fromLines(spark, lines, Surface.Full), cache = false))
     val got = api.byAnyNameFuzzy("apple").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
     got shouldBe Set((1L, "apple", 0), (1L, "appl", 1), (2L, "appla", 1), (3L, "apple", 0))
@@ -168,5 +168,26 @@ class WikidataEtlSpec extends SparkSpec {
     val bare = QueryApi(WikidataEtl.run(
       DumpReader.fromLines(spark, lines), cache = false))
     an[IllegalArgumentException] should be thrownBy bare.anyNames
+  }
+
+  test("each Surface: run yields its tables, Surface.of recovers it, changesets frame like dumps") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import spark.implicits._
+    // the fixture already carries blank, [/], trailing-comma and junk lines
+    val lines = dumpLines ++ Seq("   ", """{"id":"Q5","lastrevid":3,"deleted":true} ,""",
+      """{"id":"Q6","labels":""", """{"labels":{}},""")
+    for (surface <- Surface.all) withClue(s"$surface: ") {
+      val ents = DumpReader.fromLines(spark, lines, surface)
+      WikidataEtl.run(ents, cache = false).byName.keySet shouldBe surface.tableNames.toSet
+      Surface.of(surface.entitySchema) shouldBe surface
+      Surface.of(surface.changeSchema) shouldBe surface
+      Surface.of(ents) shouldBe surface
+      val changes = IncrementalEtl.changesFrom(lines.toDF("value"), surface)
+      Surface.of(changes) shouldBe surface
+      changes.select("c.id").as[String].collect().sorted shouldBe
+        ents.select("entity.id").as[String].collect().sorted
+    }
+    an[IllegalArgumentException] should be thrownBy
+      Surface.of(StructType(Seq(StructField("id", StringType))))
   }
 }

@@ -1,8 +1,9 @@
 """Generate the large synthetic dumps behind SURVEY §6's ETL throughput
 numbers (231 MB / 1.02 GB): gen_minidump's entity generator at scale, same
 framing. Usage: python3 tools/gen_throughput_dump.py <n_entities> <out>
-(500000 -> ~231 MB, 2200000 -> ~1.02 GB). See also tools/gen_bulkdump
-inline in EtlProbe's A/B docs for the realistic-bulk variant."""
+(500000 -> ~231 MB, 2200000 -> ~1.02 GB). Per-phase ETL times (parse +
+cache, sinks, jobs) come from the benchmark's traced query_mix run:
+python3 graftbench/run.py --workload query_mix --seed 1 --seconds 10 --trace 1"""
 import sys, json, os
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import gen_minidump as g
