@@ -41,6 +41,11 @@ object SnapshotStats {
 
   // ------------------------------------------------------------ capture
 
+  /** The one Hadoop conf of every driver-side footer read (stats capture
+    * here, the schema read in [[SnapshotTable.read]]): a fresh
+    * `Configuration` re-parses its default resources, once per file. */
+  private[operators] lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
   /** Fold one parquet file's row-group footer stats into per-column
     * (min, max). Only top-level plain INT32/INT64/FLOAT/DOUBLE and UTF-8
     * BINARY columns participate; a column with any stats-less or
@@ -50,9 +55,8 @@ object SnapshotStats {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = new org.apache.hadoop.conf.Configuration()
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), hadoopConf))
     try {
       val ranges = scala.collection.mutable.Map.empty[String, ColStats]
       val dropped = scala.collection.mutable.Set.empty[String]

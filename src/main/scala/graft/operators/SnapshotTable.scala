@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** R40: atomic multi-file commits with snapshot isolation and time travel —
   * a minimal manifest-log table format over parquet (the Delta/Iceberg
@@ -85,21 +86,31 @@ object SnapshotTable {
       files: Seq[String], parent: Option[Long], mode: Option[String],
       tag: Option[String], ts: Option[Long])
 
-  // Published manifests are immutable, so their parses memoize soundly;
-  // entries are validated against the file's (size, mtime) so a table
-  // directory recreated at the same path never serves a stale parse.
-  // Bounded LRU. Without this, snapshot RESOLUTION is O(retained versions)
-  // JSON reads PER CALL (versionAsOf/hasTag/history scan every manifest) —
-  // at 10⁴ commits that serializes planning on driver I/O; with it, each
-  // manifest is read once per process, a stat() per subsequent hit.
-  private final case class MKey(table: String, version: Long)
-  private final case class MVal(size: Long, mtime: Long, info: ManifestInfo)
-  private val manifestCacheMax = 4096
-  private val manifestCache =
-    new java.util.LinkedHashMap[MKey, MVal](256, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[MKey, MVal]): Boolean = size() > manifestCacheMax
+  /** Bounded LRU memo of parses of immutable files (published manifests,
+    * data-file footers), keyed by path. Each entry is validated against the
+    * file's (size, mtime), so a table directory recreated at the same path
+    * never serves a stale parse. */
+  private final class FileMemo[V](max: Int) {
+    // key → (size, mtime, parse)
+    private val entries = new java.util.LinkedHashMap[String, (Long, Long, V)](256, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, (Long, Long, V)]): Boolean =
+        size() > max
     }
+    def apply(key: String, size: Long, mtime: Long)(parse: => V): V =
+      entries.synchronized(Option(entries.get(key))) match {
+        case Some((`size`, `mtime`, value)) => value
+        case _ =>
+          val value = parse
+          entries.synchronized(entries.put(key, (size, mtime, value)))
+          value
+      }
+  }
+
+  // Without this memo, snapshot RESOLUTION is O(retained versions) JSON
+  // reads PER CALL (versionAsOf/hasTag/history scan every manifest) — at
+  // 10⁴ commits that serializes planning on driver I/O; with it, each
+  // manifest is read once per process, a stat() per subsequent hit.
+  private val manifestMemo = new FileMemo[ManifestInfo](4096)
 
   /** Manifest JSON parses actually performed (cache misses), per table —
     * the spec hook for the bounded-manifest-reads contract (per-table so
@@ -117,32 +128,25 @@ object SnapshotTable {
     val p = manifestPath(table, v)
     val attrs = Files.readAttributes(
       p, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val key = MKey(Paths.get(table).toAbsolutePath.normalize().toString, v)
-    val (size, mtime) = (attrs.size(), attrs.lastModifiedTime().toMillis)
-    manifestCache.synchronized {
-      val hit = manifestCache.get(key)
-      if (hit != null && hit.size == size && hit.mtime == mtime) return hit.info
+    val tableKey = Paths.get(table).toAbsolutePath.normalize().toString
+    manifestMemo(s"$tableKey/$v", attrs.size(), attrs.lastModifiedTime().toMillis) {
+      val json = new String(Files.readAllBytes(p), "UTF-8")
+      manifestParses.computeIfAbsent(tableKey,
+        _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+      def longField(name: String): Option[Long] =
+        ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json)
+          .map(_.group(1).toLong)
+      // manifest JSON is written by this object — a flat, known shape; the
+      // files array holds relative paths that never contain quotes
+      val filesStr = "\"files\"\\s*:\\s*\\[([^\\]]*)\\]".r
+        .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
+      ManifestInfo(
+        "\"([^\"]*)\"".r.findAllMatchIn(filesStr).map(_.group(1)).toSeq,
+        longField("parent"),
+        "\"mode\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)),
+        "\"tag\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)),
+        longField("ts"))
     }
-    val json = new String(Files.readAllBytes(p), "UTF-8")
-    manifestParses.computeIfAbsent(key.table,
-      _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-    def longField(name: String): Option[Long] =
-      ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json)
-        .map(_.group(1).toLong)
-    // manifest JSON is written by this object — a flat, known shape; the
-    // files array holds relative paths that never contain quotes
-    val filesStr = "\"files\"\\s*:\\s*\\[([^\\]]*)\\]".r
-      .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
-    val info = ManifestInfo(
-      "\"([^\"]*)\"".r.findAllMatchIn(filesStr).map(_.group(1)).toSeq,
-      longField("parent"),
-      "\"mode\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)),
-      "\"tag\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)),
-      longField("ts"))
-    manifestCache.synchronized {
-      manifestCache.put(key, MVal(size, mtime, info)): Unit
-    }
-    info
   }
 
   /** The idempotency tag of `version` (default: latest), if that commit
@@ -224,18 +228,19 @@ object SnapshotTable {
     * `WikidataTables.writeParquet` discipline). NOT a cross-table
     * transaction: each table commits atomically on its own; layer an
     * idempotency [[commit tag]] + per-table replay checks (X13) or version
-    * alignment (X12) on top for cross-table consistency. */
+    * alignment (X12) on top for cross-table consistency. Returns the
+    * committed versions, in `pairs` order. */
   def commitAll(spark: SparkSession, pairs: Seq[(String, DataFrame)],
-      mode: Mode = Overwrite, tag: Option[String] = None): Unit = {
-    if (pairs.isEmpty) return // fully-replayed batch: nothing pending
+      mode: Mode = Overwrite, tag: Option[String] = None): Seq[Long] = {
+    if (pairs.isEmpty) return Nil // fully-replayed batch: nothing pending
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = Executors.newFixedThreadPool(pairs.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try Await.result(Future.sequence(pairs.map { case (t, df) =>
-      Future { commit(spark, t, df, mode = mode, tag = tag): Unit }
-    }), Duration.Inf): Unit
+      Future(commit(spark, t, df, mode = mode, tag = tag))
+    }), Duration.Inf)
     finally pool.shutdown()
   }
 
@@ -316,6 +321,21 @@ object SnapshotTable {
       df.coalesce(parts.toInt) // no-op when current partitions <= parts
     else df
   }
+
+  /** Size the next Overwrite version of `table` like the one it replaces:
+    * coalesce `df` to ⌈bytes of the latest version's files / targetBytes⌉
+    * partitions, from a driver-side stat of the listed files (unlike
+    * [[rightSized]], no optimizer pass over a large ETL plan). Meant for a
+    * merge of the parent with a small delta: a small table lands in one file
+    * instead of one per parent file plus one per delta partition, a
+    * corpus-sized one keeps about its scan's partitioning. A table with no
+    * committed version is left alone. */
+  def parentSized(table: String, df: DataFrame, targetBytes: Long = 64L << 20): DataFrame =
+    latestVersion(table).fold(df)(v => df.coalesce(filesFor(versionBytes(table, v), targetBytes)))
+
+  /** ⌈bytes / targetBytes⌉ output files, at least 1. */
+  private def filesFor(bytes: Long, targetBytes: Long): Int =
+    math.max(1L, math.min(Int.MaxValue.toLong, (bytes + targetBytes - 1) / targetBytes)).toInt
 
   def commit(spark: SparkSession, table: String, df: DataFrame,
       mode: Mode = Overwrite, expectedVersion: Long = Long.MinValue,
@@ -448,17 +468,53 @@ object SnapshotTable {
     * column-add evolution shape: widening a table is just an Append whose
     * new files carry the new column, no rewrite of history. Off by default
     * because merged-footer resolution reads every file's footer instead of
-    * one; a pinned historical read keeps exactly the schema its files had. */
+    * one; a pinned historical read keeps exactly the schema its files had.
+    *
+    * With `mergeSchema` off, the schema is the one Spark's inference would
+    * find, without its Spark job: see [[footerSchema]]. */
   def read(spark: SparkSession, table: String, version: Long = -1L,
       mergeSchema: Boolean = false): DataFrame = {
     val v = if (version >= 0) version
       else latestVersion(table).getOrElse(
         throw new IllegalArgumentException(s"no committed version in $table"))
-    val files = manifestFiles(table, v)
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(files.map(f => s"$table/$f"): _*)
+    val paths = manifestFiles(table, v).map(f => s"$table/$f")
+    if (paths.isEmpty) spark.emptyDataFrame
+    else {
+      val reader = spark.read.option("mergeSchema", mergeSchema.toString)
+      (if (mergeSchema) None else footerSchema(paths))
+        .fold(reader)(reader.schema).parquet(paths: _*)
+    }
   }
+
+  // the footer entry where Spark's parquet writer records the frame's schema
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+  private val schemaMemo = new FileMemo[Option[StructType]](4096)
+
+  /** The schema `spark.read.parquet(paths)` infers with mergeSchema off,
+    * without the Spark job that inference runs to read ONE footer: the file
+    * whose qualified path sorts first (`ParquetUtils.inferSchema`). Reads
+    * the Spark schema entry of that footer on the driver, memoized per data
+    * file. `None` (no entry, as from a non-Spark writer; an empty or
+    * unreadable file) leaves the inference, and its errors, to Spark. */
+  private def footerSchema(paths: Seq[String]): Option[StructType] =
+    try {
+      import org.apache.hadoop.fs.{Path => HPath}
+      val conf = SnapshotStats.hadoopConf
+      val first = paths.map { p =>
+        val hp = new HPath(p)
+        hp.getFileSystem(conf).makeQualified(hp)
+      }.minBy(_.toString)
+      val st = first.getFileSystem(conf).getFileStatus(first)
+      if (st.getLen == 0) None // inference skips empty files
+      else schemaMemo(first.toString, st.getLen, st.getModificationTime) {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        val json = try reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+          finally reader.close()
+        Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+          .collect { case s: StructType => s }
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Drop manifests below `keepFrom` and delete data files no retained
     * version references — bounded storage for long-lived tables. Safe
@@ -789,8 +845,7 @@ object SnapshotTable {
           expectedVersion = v, beforePublish = beforePublish)
       }
     else {
-      val parts = math.max(1L,
-        (versionBytes(table, v) + targetBytes - 1) / targetBytes).toInt
+      val parts = filesFor(versionBytes(table, v), targetBytes)
       commit(spark, table,
         ZOrder.clusteredFrame(read(spark, table, v), zorderCols, parts, bitsPerCol),
         expectedVersion = v, beforePublish = beforePublish)

@@ -81,11 +81,7 @@ object EtlStream {
     }
     if (pendingNames.isEmpty) return
     val tables = WikidataEtl.run(parsedBatch)
-    try {
-      tables.core.foreach(_.count()) // materialize before the fan-out race
-      SnapshotTable.commitAll(spark,
-        pendingNames.map(name => s"$tableRoot/$name" -> tables.byName(name)),
-        mode = SnapshotTable.Append, tag = Some(tag))
-    } finally tables.unpersist()
+    try tables.commitTo(spark, tableRoot, pendingNames, SnapshotTable.Append, Some(tag))
+    finally tables.unpersist()
   }
 }

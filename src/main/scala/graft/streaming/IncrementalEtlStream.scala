@@ -105,13 +105,7 @@ object IncrementalEtlStream {
           .unionByName(guarded.select(col("id"),
             coalesce(col("c.lastrevid"), lit(0L)).as("lastrevid")))
         try {
-          next.core.foreach(_.count()) // materialize before the fan-out race
-          // NOT rightSized: these merged frames are base-files ∪ cached
-          // delta — already 1-2 partitions — and their ETL plans are large
-          // enough that the helper's extra optimizer pass measurably
-          // regressed the streaming gates (x29 1.9×) for zero file savings
-          SnapshotTable.commitAll(spark,
-            next.byName.toSeq.map { case (n, df) => s"$tableRoot/$n" -> df })
+          next.commitTo(spark, tableRoot)
           // X30: the index delta lands BETWEEN the data tables and the
           // mark, guarded by its own batch tag — a replay after a crash
           // here re-runs the data commits (mark still old) but skips the

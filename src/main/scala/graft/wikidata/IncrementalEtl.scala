@@ -28,8 +28,10 @@ import org.apache.spark.sql.functions._
   * anti-join broadcasts the touched-id set — one map-only pass per base
   * table, zero shuffles of base data. Pair with
   * [[graft.operators.SnapshotTable]] (see [[applyCommit]]) for atomic
-  * publication: readers see the old tables until the new version's manifest
-  * lands, and a crashed apply leaves the old version current.
+  * publication per table: readers of a table see its old version until the
+  * new version's manifest lands. The tables commit independently, so a
+  * crashed apply can leave some at the new version and the rest at the old;
+  * a reader that needs a cross-table cut uses [[graft.operators.SnapshotTxn]].
   */
 object IncrementalEtl {
 
@@ -106,17 +108,18 @@ object IncrementalEtl {
     applyChangeset(base, readChangeset(spark, changesetPath, surface))
   }
 
-  /** Atomic refresh: apply the changeset and commit each table of its
-    * surface as the next [[graft.operators.SnapshotTable]] version. Readers
-    * on the previous version are unaffected (snapshot isolation); a crash
-    * mid-apply leaves every table at its old version — the manifest rename
-    * is the only publication point. Returns the committed version per
-    * table. */
+  /** Refresh: apply the changeset and commit every table of its surface as
+    * the next [[graft.operators.SnapshotTable]] version, all at once
+    * ([[WikidataTables.commitTo]]). Each table commits atomically on its
+    * own; a crash mid-apply can leave some tables at the new version and the
+    * rest at the old ([[graft.operators.SnapshotTxn]] gives a cross-table
+    * cut). The winners are resolved once and cached for every table's
+    * anti-join and the delta ETL. Returns the committed version per table. */
   def applyCommit(spark: SparkSession, base: Map[String, DataFrame],
       changes: DataFrame, tableRoot: String): Map[String, Long] = {
-    val next = applyChangeset(base, changes)
-    try next.byName.map { case (name, df) =>
-      name -> graft.operators.SnapshotTable.commit(spark, s"$tableRoot/$name", df)
-    } finally next.unpersist()
+    val win = winners(changes).cache()
+    val next = applyWinners(base, win)
+    try next.commitTo(spark, tableRoot)
+    finally { next.unpersist(); win.unpersist(): Unit }
   }
 }

@@ -1,5 +1,6 @@
 package graft.wikidata
 
+import graft.operators.SnapshotTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,6 +30,25 @@ final case class WikidataTables(byName: Map[String, DataFrame], core: Option[Dat
   /** Release the cached claim core (bounded-memory long-running callers —
     * streaming micro-batches — must pair every `run` with this). */
   def unpersist(): Unit = core.foreach(_.unpersist(false))
+
+  /** Commit the tables `names` as the next [[SnapshotTable]] version of
+    * `tableRoot/<name>`, all at once ([[SnapshotTable.commitAll]]), and
+    * return the committed version per name. The cached core is computed
+    * first, so the concurrent writes read it instead of racing to compute
+    * it; releasing it stays with the caller. An Overwrite version is sized
+    * like the one it replaces ([[SnapshotTable.parentSized]]). Each table
+    * commits atomically on its own: this is not a cross-table transaction
+    * (see [[graft.operators.SnapshotTxn]]). */
+  def commitTo(spark: SparkSession, tableRoot: String,
+      names: Seq[String] = byName.keys.toSeq, mode: SnapshotTable.Mode = SnapshotTable.Overwrite,
+      tag: Option[String] = None): Map[String, Long] = {
+    core.foreach(_.count())
+    val sized = (n: String) =>
+      if (mode == SnapshotTable.Overwrite) SnapshotTable.parentSized(s"$tableRoot/$n", byName(n))
+      else byName(n)
+    names.zip(SnapshotTable.commitAll(spark,
+      names.map(n => s"$tableRoot/$n" -> sized(n)), mode, tag)).toMap
+  }
 
   /** Write all tables as parquet under `dir`, one subdirectory each.
     *

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -8,6 +12,37 @@ import org.scalatest.matchers.should.Matchers
   * sessions are expensive and getOrCreate dedups). */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs `body` starts — from its own thread or the threads it
+    * spawns, which inherit the job group — counted under a private job
+    * group; a marker job afterwards proves the listener saw every earlier
+    * event. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"spec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$group-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = body
+      sc.setJobGroup(s"$group-end", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      drained.await(30, TimeUnit.SECONDS) shouldBe true
+      (out, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

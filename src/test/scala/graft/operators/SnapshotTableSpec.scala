@@ -156,4 +156,52 @@ class SnapshotTableSpec extends SparkSpec {
     val small = spark.range(0L, 100L, 1L, 4).toDF()
     rightSized(small).rdd.getNumPartitions shouldBe 1
   }
+
+  test("read takes the schema inference would find from the footer, without a job") {
+    def inferred(files: Seq[String], merge: Boolean = false) =
+      spark.read.option("mergeSchema", merge.toString).parquet(files: _*).schema
+    def sameAsInference(t: String, v: Long = -1L): Unit = withClue(s"$t@$v: ") {
+      val want = inferred(filesOf(t, v))
+      val (got, jobs) = jobsOf(read(spark, t, v).schema)
+      got shouldBe want
+      jobs shouldBe 0
+    }
+    // Overwrite: each version has its own schema
+    val t = graft.Scratch.fresh("snap_schema")
+    commit(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(2))
+    commit(spark, t, Seq((3L, 1.5)).toDF("k", "w"))
+    sameAsInference(t, 1L)
+    sameAsInference(t)
+    // R52 Append with a new column: without mergeSchema, inference reads the
+    // first file by path, the older commit, pinned or latest
+    commit(spark, t, Seq((4L, 2.5, "x")).toDF("k", "w", "z"), mode = Append)
+    sameAsInference(t, 2L)
+    sameAsInference(t)
+    read(spark, t).columns.toSeq shouldBe Seq("k", "w")
+    read(spark, t, mergeSchema = true).schema shouldBe inferred(filesOf(t), merge = true)
+    read(spark, t, mergeSchema = true).columns.toSeq shouldBe Seq("k", "w", "z")
+    // RESTORE and a shallow clone (files reached through `../`)
+    restore(t, toVersion = 1L)
+    sameAsInference(t)
+    val clone = graft.Scratch.fresh("snap_schema_clone")
+    shallowClone(t, clone, version = 3L)
+    filesOf(clone).foreach(_ should include("../"))
+    sameAsInference(clone)
+    // a parquet file with no Spark schema in its footer: inference decides
+    val foreign = graft.Scratch.fresh("snap_schema_foreign")
+    val rel = "data/c0000000000000001-foreign/part-00000-foreign.parquet"
+    val msg = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 k; optional binary v (UTF8); optional int32 d (DATE); }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$foreign/$rel")).withType(msg).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
+      .newGroup().append("k", 7L).append("v", "q").append("d", 19000))
+    finally writer.close()
+    publishFiles(foreign, 1L, None, Overwrite, Seq(rel))
+    val (got, jobs) = jobsOf(read(spark, foreign).schema)
+    got shouldBe inferred(filesOf(foreign))
+    jobs should be > 0
+    read(spark, foreign).as[(Long, String, java.sql.Date)].collect().toSeq shouldBe
+      Seq((7L, "q", java.sql.Date.valueOf("2022-01-08")))
+  }
 }

@@ -111,6 +111,51 @@ class EtlIncrementalSpec extends SparkSpec {
     }
   }
 
+  /** An 8-table snapshot root at version 1 of the minidump. */
+  private def snapshotRoot(scratch: String): String = {
+    val root = graft.Scratch.fresh(scratch)
+    val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path), cache = false)
+    v1.byName.foreach { case (n, df) => SnapshotTable.commit(spark, s"$root/$n", df) }
+    root
+  }
+
+  private def snapshots(root: String): Map[String, DataFrame] =
+    Surface.Core.tableNames.map(n => n -> SnapshotTable.read(spark, s"$root/$n")).toMap
+
+  test("applyCommit resolves the changeset once: at most 20 jobs, no cache left behind") {
+    val root = snapshotRoot("w22spec_jobs")
+    val base = snapshots(root)
+    val changes = IncrementalEtl.readChangeset(spark, csPath)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (versions, jobs) = jobsOf(IncrementalEtl.applyCommit(spark, base, changes, root))
+    versions.values.toSet shouldBe Set(2L)
+    jobs should be <= 20
+    spark.sparkContext.getPersistentRDDs.keySet -- persisted shouldBe empty
+    IncrementalEtl.winners(changes).storageLevel shouldBe
+      org.apache.spark.storage.StorageLevel.NONE
+  }
+
+  test("successive applyCommits keep one right-sized file per table and the rebuilt rows") {
+    val root = snapshotRoot("w22spec_files")
+    val target = 64L << 20
+    def bytes(table: String): Long =
+      SnapshotTable.filesOf(table).map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
+    for (i <- 1 to 10) withClue(s"apply $i: ") {
+      val parentBytes = Surface.Core.tableNames.map(n => n -> bytes(s"$root/$n")).toMap
+      IncrementalEtl.applyCommit(spark, snapshots(root),
+        IncrementalEtl.readChangeset(spark, csPath), root)
+      for ((name, b) <- parentBytes) withClue(s"table $name: ") {
+        SnapshotTable.latestVersion(s"$root/$name") shouldBe Some(i + 1L)
+        SnapshotTable.filesOf(s"$root/$name").size shouldBe ((b + target - 1) / target)
+      }
+    }
+    // re-applying a changeset is idempotent: still the rebuilt v2 rows
+    val full = WikidataEtl.run(DumpReader.read(spark, v2Path), cache = false)
+    for ((name, df) <- full.byName) withClue(s"table $name: ") {
+      multiset(SnapshotTable.read(spark, s"$root/$name")) shouldBe multiset(df)
+    }
+  }
+
   test("a changeset whose Surface does not match the base tables fails naming them") {
     val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path), cache = false)
     val missing = intercept[IllegalArgumentException] {

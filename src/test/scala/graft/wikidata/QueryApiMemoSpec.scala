@@ -1,11 +1,7 @@
 package graft.wikidata
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
 import graft.operators.Caches
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
@@ -50,35 +46,6 @@ class QueryApiMemoSpec extends SparkSpec {
   }
 
   private def rows(df: DataFrame): Set[Row] = df.collect().toSet
-
-  /** Spark jobs `body` starts, counted under a private job group; a marker
-    * job afterwards proves the listener saw every earlier event. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"memo-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet(): Unit
-          case Some(g) if g == s"$group-end" => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      val out = body
-      sc.setJobGroup(s"$group-end", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      drained.await(30, TimeUnit.SECONDS) shouldBe true
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def cached(df: DataFrame): Boolean =
     df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.nonEmpty
