@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.perfDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // untimed warmup: session/codegen/JIT/parquet-footer AND page-cache
     // costs land here, not on whichever query happens to run first. The
     // host shows multi-second iowait noise; a full-column scan of every
@@ -30,9 +23,6 @@ object Bench {
           } catch { case _: Throwable => () }
         }
     }
-    val selected =
-      if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.toSet).toMap
-      else SparkEntry.queries
     // median-of-N per query: the host has multi-second iowait noise from
     // outside the container (SURVEY §6 forensics: identical back-to-back
     // runs swing 2× with per-query outliers like r7 1.4→7.2 s), so a
@@ -41,54 +31,38 @@ object Bench {
     // median is visible instead of needing forensics.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).getOrElse(3).max(1)
-    // deterministic name order: hash-map iteration order would otherwise
-    // decide which query pays shared-cache warmup (d2's persisted
-    // signatures feed d4), making totals jump run to run
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        // a failed query must NOT silently bench as a fast no-op — record it
-        val err = try { fn(spark, sfDir).count(); None } catch {
-          case e: Throwable =>
-            Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release every operator-internal cache OUTSIDE the timed window:
-        // each rep pays its own staging cost (reps stay independent), and
-        // leaked storage blocks must not squeeze later queries' execution
-        // memory (the round-2 p1/d3 regressions were exactly this
-        // accumulation across 51 queries)
-        graft.operators.LlmOps.clearPlanted()
-        graft.operators.Caches.releaseAll()
-        spark.catalog.clearCache()
-        (dt, err)
-      }
-      // median over SUCCESSFUL reps only: a fast failure (e.g. an analysis
+    // deterministic name order: registry order would otherwise decide
+    // which query pays shared-cache warmup (d2's persisted signatures feed
+    // d4), and totals stay comparable with earlier runs
+    val results = Gates.select(args.toSeq).sortBy(_.name).map { g =>
+      // each rep runs isolated and releases its caches outside the timed
+      // window: reps stay independent, and leaked storage blocks must not
+      // squeeze later queries' execution memory (the round-2 p1/d3
+      // regressions were exactly this accumulation across 51 queries)
+      val runs = (1 to reps).map(_ => Gates.measure(spark, g, sfDir)(_.count()))
+      // a failed query must NOT silently bench as a fast no-op — record it.
+      // Median over SUCCESSFUL reps only: a fast failure (e.g. an analysis
       // error thrown before any job runs) would otherwise drag the median
       // below the query's real cost while the error goes half-noticed. If
       // every rep failed, fall back to all timings so the entry still
       // carries a number alongside its error.
-      val ok = runs.collect { case (dt, None) => dt }
-      val times = (if (ok.nonEmpty) ok else runs.map(_._1)).sorted
+      val ok = runs.filter(_.result.isRight)
+      val times = (if (ok.nonEmpty) ok else runs).sortBy(_.wallS)
       val median = times(times.size / 2)
-      val err = runs.flatMap(_._2).headOption
-      (name, median, times.head, times.last, err)
+      val err = runs.flatMap(_.result.left.toOption).headOption.map(e =>
+        s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
+      (g.name, median, times.head.wallS, times.last.wallS, err)
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val spread = results.map { case (k, _, lo, hi, _) => s"\"$k\":[$lo,$hi]" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, _, Some(m)) => s"${jstr(k)}:${jstr(m)}" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"reps":$reps,"errors":$errs,"sf":"$sfDir"}"""
+    val total = results.map(_._2.wallS).sum
+    // per-gate layer metrics of the median rep go to the dump only
+    val line = Gates.json.writeValueAsString(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> ListMap(results.map { case (k, m, _, _, _) => k -> m.wallS }: _*),
+      "spread" -> ListMap(results.map { case (k, _, lo, hi, _) => k -> Seq(lo, hi) }: _*),
+      "layers" -> ListMap(results.map { case (k, m, _, _, _) => k -> m.layers }: _*),
+      "reps" -> reps,
+      "errors" -> ListMap(results.collect { case (k, _, _, _, Some(e)) => k -> e }: _*),
+      "sf" -> sfDir))
     // the full dump goes to a file named per CPU count, so a c8 run does
     // not overwrite the c32 one; stdout only gets a compact line, because
     // the full line (~19 KB at 249 gates) reaches the caller truncated
@@ -97,13 +71,13 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_selfdump_c$cpus.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out), (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] selfdump write failed: $e") }
-    val medianMs = results.map { case (k, v, _, _, _) => s"${jstr(k)}:${math.round(v * 1e3)}" }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, _, _, Some(_)) => jstr(k) }.mkString("[", ",", "]")
     // loud on stderr, but still exit 0: the caller parses the last line
     results.foreach { case (k, _, _, _, e) => e.foreach(m => System.err.println(s"[bench] $k FAILED: $m")) }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},""" +
-      s""""errors":$failed,"median_ms":$medianMs,"dump":${jstr(out)}}""")
+    println(Gates.json.writeValueAsString(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec", "n" -> results.size,
+      "errors" -> results.collect { case (k, _, _, _, Some(_)) => k },
+      "median_ms" -> ListMap(results.map { case (k, m, _, _, _) => k -> math.round(m.wallS * 1e3) }: _*),
+      "dump" -> out)))
     spark.stop()
   }
 }

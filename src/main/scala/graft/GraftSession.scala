@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory used by tests and benchmarks.
+/** The one session factory: specs, Bench, Verify, Profile and graftbench.
   *
   * Tuned for the container's local[32] mode but with settings that hold on a
   * real cluster: AQE on (runtime re-plan, skew-join splitting), shuffle
@@ -10,9 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Cross-cutting performance settings shared by every graft session
-    * (tests, Verify, Bench). Each is measured (OPTIMIZATION_r10.md §C1),
-    * env-overridable, and chosen to hold beyond local mode:
+  /** Cross-cutting performance settings of every graft session. Each is
+    * measured (OPTIMIZATION_r10.md §C1) and chosen to hold beyond local mode:
     *
     *   - `bypassMergeThreshold = 1`: always use the sort-based shuffle
     *     writer. The bypass writer opens/creates R partition files per map
@@ -32,15 +31,13 @@ object GraftSession {
     *     passes an explicit file list; above 32 paths Spark launches a
     *     LISTING JOB for what is a driver-side stat of known paths (~0.1-0.5
     *     s per read measured). Listing jobs only pay off on object stores
-    *     with thousands of directories; the threshold stays a conf knob.
+    *     with thousands of directories.
     */
-  def perfDefaults(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.shuffle.sort.bypassMergeThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+  private def perfDefaults(b: SparkSession.Builder): SparkSession.Builder = b
+    .config("spark.shuffle.sort.bypassMergeThreshold", "1")
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
     .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-    .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-      sys.env.getOrElse("SPARK_GRAFT_LISTING_THRESHOLD", "4096"))
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     // AQE partition coalescing for CACHED plans (off by default since 3.4
     // only to keep cache-hit partitioning byte-stable for exchange reuse):
     // every operator cache here (changeset winners, ETL delta cores, merge

@@ -1,89 +1,103 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
-/** Dev tool: run named gate queries with a job-level profiler — per-job
-  * wall, task count and task-time sum, so "where does this gate's wall
-  * go" is one run instead of UI archaeology (the UI is disabled in bench
-  * runs). Not part of the gate surface.
+/** Dev tool, one entry point in three modes. Not part of the gate surface.
   *
-  * Usage: runMain graft.Profile [<sfDir>] <query> [query ...]
+  *   - `plan <sfDir> [gate ...]`: the formatted physical plan of each gate
+  *     (all when none is named), so plan hygiene is auditable: PushedFilters
+  *     reaching scans, pruned ReadSchema, broadcast joins on dims,
+  *     WholeStageCodegen coverage.
+  *   - `jobs <sfDir> gate [gate ...]`: run each gate under the runner's
+  *     SparkListener and print where its wall went: jobs grouped by
+  *     description, summed job walls against the driver-side gap, and the
+  *     top stages by task CPU (the UI is disabled in bench runs).
+  *   - `recall <sfDir> [sfDir ...]`: LSH, IVF and IVF-PQ recall against the
+  *     exact scan on the natural embeddings corpus, across the parameter
+  *     settings behind the ANN gates' recall thresholds.
+  *
+  * Usage: runMain graft.Profile plan|jobs|recall <sfDir> [...]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val (sfDir, names) =
-      if (args.headOption.exists(a => new java.io.File(a).isDirectory))
-        (args.head, args.drop(1))
-      else ("/root/testdata/sf0.1", args)
-    require(names.nonEmpty, "usage: Profile [<sfDir>] <query> [query ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
+    require(args.length >= 2, "usage: Profile plan|jobs|recall <sfDir> [...]")
+    val (mode, sfDir, rest) = (args(0), args(1), args.drop(2).toSeq)
+    val spark = GraftSession.local()
+    try mode match {
+      case "plan" =>
+        for (g <- Gates.select(rest)) {
+          println(s"\n===== ${g.name} =====")
+          try println(Gates.run(spark, g, sfDir)(_.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)))
+          catch { case e: Throwable => println(s"ERROR: ${e.getMessage}") }
+        }
+      case "jobs" =>
+        require(rest.nonEmpty, "usage: Profile jobs <sfDir> gate [gate ...]")
+        Gates.select(rest).foreach(g => jobs(g.name, Gates.measure(spark, g, sfDir)(_.count())))
+      case "recall" =>
+        (sfDir +: rest).foreach(dir => recall(Tables(spark, dir).embeddings, dir))
+      case other => sys.error(s"unknown mode $other: plan|jobs|recall")
+    } finally spark.stop()
+  }
 
-    final case class Job(id: Int, t0: Long, desc: String)
-    val open = new java.util.concurrent.ConcurrentHashMap[Int, Job]
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Job, Long)]
-    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]
-    val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    val jobStages = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.nonEmpty)
-          .orElse(e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
-          .getOrElse("")
-        open.put(e.jobId, Job(e.jobId, System.nanoTime(), d))
-        jobStages.put(e.jobId, e.stageIds.map(_.toInt)): Unit
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = open.remove(e.jobId)
-        if (j != null) done.add((j, System.nanoTime())): Unit
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        stageTasks.put(si.stageId,
-          (si.numTasks, si.taskMetrics.executorRunTime)): Unit
-        stageNames.put(si.stageId, si.name.takeWhile(_ != '\n')): Unit
-      }
+  private def jobs(name: String, run: Gates.Run[Long]): Unit = {
+    println(f"\n===== $name: wall ${run.wallS}%.2f s, ${run.jobs.size} jobs =====")
+    run.result.left.foreach(e => println(s"FAILED: $e"))
+    val stageOf = run.stages.map(s => s.id -> s).toMap
+    val byDesc = run.jobs.groupBy(_.desc.take(90)).map { case (d, js) =>
+      val stages = js.flatMap(_.stages.flatMap(stageOf.get))
+      (d, js.size, js.map(_.wallS).sum, stages.map(_.tasks).sum, stages.map(_.cpuS).sum)
+    }.toSeq.sortBy(-_._3)
+    println(f"${"jobs"}%5s ${"wall_s"}%8s ${"tasks"}%6s ${"taskCPU_s"}%9s  desc")
+    byDesc.take(30).foreach { case (d, n, w, nt, cpu) =>
+      println(f"$n%5d $w%8.2f $nt%6d $cpu%9.2f  $d")
     }
-    spark.sparkContext.addSparkListener(listener)
+    println(f"sum of job walls: ${run.jobs.map(_.wallS).sum}%.2f s; " +
+      f"wall not covered by a job (driver-side): ${run.driverGapS}%.2f s")
+    println("top stages by task CPU:")
+    run.stages.sortBy(-_.cpuS).take(15).foreach { s =>
+      println(f"  stage ${s.id}%5d ${s.tasks}%5d tasks ${s.cpuS}%8.2f s  ${s.name}")
+    }
+  }
 
-    names.foreach { name =>
-      open.clear(); done.clear(); stageTasks.clear(); jobStages.clear()
-      stageNames.clear()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // let straggling listener events drain
-      Thread.sleep(300)
-      import scala.jdk.CollectionConverters._
-      val jobs = done.asScala.toSeq.sortBy(_._1.id)
-      println(f"\n===== $name: wall $wall%.2f s, ${jobs.size} jobs =====")
-      val byDesc = jobs.groupBy(_._1.desc.take(90)).map { case (d, js) =>
-        val w = js.map { case (j, t1) => (t1 - j.t0) / 1e9 }.sum
-        val tasks = js.flatMap { case (j, _) =>
-          jobStages.getOrDefault(j.id, Seq.empty)
-            .flatMap(s => Option(stageTasks.get(s))) }
-        (d, js.size, w, tasks.map(_._1).sum, tasks.map(_._2).sum / 1e3)
-      }.toSeq.sortBy(-_._3)
-      println(f"${"jobs"}%5s ${"wall_s"}%8s ${"tasks"}%6s ${"taskCPU_s"}%9s  desc")
-      byDesc.take(30).foreach { case (d, n, w, nt, tt) =>
-        println(f"$n%5d $w%8.2f $nt%6d $tt%9.2f  $d")
-      }
-      val jw = jobs.map { case (j, t1) => (t1 - j.t0) / 1e9 }.sum
-      println(f"sum of job walls: $jw%.2f s (gaps = driver-side: ${wall - jw}%.2f s)")
-      println(f"top stages by task-time:")
-      val stages = stageTasks.asScala.toSeq
-        .map { case (sid, (nt, rt)) =>
-          (sid, nt, rt / 1e3, stageNames.getOrDefault(sid, "")) }
-        .sortBy(-_._3)
-      stages.take(15).foreach { case (sid, nt, rt, nm) =>
-        println(f"  stage $sid%5d $nt%5d tasks $rt%8.2f s  $nm")
-      }
-      graft.operators.LlmOps.clearPlanted()
-      graft.operators.Caches.releaseAll()
-      spark.catalog.clearCache()
+  private def recall(base: DataFrame, dir: String): Unit = {
+    import graft.operators.{IvfAnn, IvfPq, Similarity}
+    def pairs(df: DataFrame): Set[(Long, Long)] = df.select("query_id", "neighbor_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val n = base.count()
+    val vecs = base.repartition(32)
+    val queries = vecs.filter(col("vec_id") < 32)
+    val exact = pairs(Similarity.bruteForceTopK(queries, vecs, "vec_id", "embedding", k = 10))
+    def recallOf(approx: DataFrame): Double = (exact intersect pairs(approx)).size.toDouble / exact.size
+    // planned config first (the production path), then fixed-table rows
+    // for comparison against the planner's choice
+    val plan = Similarity.lshPlan(n, dim = 64, k = 10)
+    val planned = recallOf(Similarity.lshTopK(queries, vecs, "vec_id", "embedding", k = 10, knownN = n))
+    println(f"[recall] $dir n=$n lsh planned bits=${plan.bits} r=${plan.radius} " +
+      f"tables=${plan.tables} predicted=${plan.predictedRecall}%.4f recall=$planned%.4f")
+    for (tables <- Seq(4, 8)) {
+      val r = recallOf(Similarity.lshTopK(queries, vecs, "vec_id", "embedding", k = 10,
+        tables = tables, knownN = n))
+      println(f"[recall] $dir n=$n lsh tables=$tables recall=$r%.4f")
     }
-    spark.stop()
+    for ((k, nprobe) <- Seq((8, 2), (8, 3), (16, 4))) {
+      val cents = IvfAnn.trainCentroids(vecs, "embedding", k = k, iters = 3, knownN = n)
+      val r = recallOf(IvfAnn.topK(queries, vecs, "vec_id", "embedding", cents,
+        k = 10, nprobe = nprobe))
+      println(f"[recall] $dir n=$n ivf k=$k nprobe=$nprobe recall=$r%.4f")
+    }
+    // IVF-PQ: same cells/nprobe as the s3 gate row, plus shortlist — with
+    // exact re-rank the gap to the ivf row above isolates ADC shortlist loss
+    // (true neighbors pushed below `shortlist` by quantization noise)
+    for ((m, pk, shortlist) <- Seq((4, 16, 128), (8, 16, 128), (8, 64, 128), (8, 256, 128), (8, 64, 64))) {
+      val index = IvfPq.build(vecs, "embedding", cells = 8, m = m, k = pk, knownN = n)
+      val enc = IvfPq.encode(vecs, "vec_id", "embedding", index)
+      val r = recallOf(IvfPq.search(queries, enc, vecs, "vec_id", "embedding", index,
+        k = 10, nprobe = 3, shortlist = shortlist))
+      println(f"[recall] $dir n=$n ivfpq cells=8 nprobe=3 m=$m k=$pk " +
+        f"shortlist=$shortlist recall=$r%.4f")
+    }
+    base.sparkSession.catalog.clearCache()
   }
 }

@@ -8,17 +8,15 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Relational.queries("r3_join_agg")(spark, "/root/testdata/sf0.001")
+    queries("r3_join_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ LlmOps.queries ++ graft.streaming.StreamingGates.queries ++
-      graft.wikidata.EtlGates.queries
+  /** Every gate, one per implemented operator from SURVEY.md §2, each with
+    * equivalent ANSI SQL runnable by DuckDB on the same parquet tables (the
+    * ETL gates read the checked-in mini-dump by absolute path instead). */
+  def gates: Seq[Gate] = Gates.distinct(Relational.gates ++ LlmOps.gates ++
+    graft.streaming.StreamingGates.gates ++ graft.wikidata.EtlGates.gates)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables (the ETL gates read the checked-in mini-dump
-    * by absolute path instead). Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracleSql ++ LlmOps.oracleSql ++ graft.streaming.StreamingGates.oracleSql ++
-      graft.wikidata.EtlGates.oracleSql
+  def queries: Map[String, (SparkSession, String) => DataFrame] = gates.map(g => g.name -> g.run).toMap
+
+  def oracleSql: Map[String, String] = gates.map(g => g.name -> g.oracle).toMap
 }

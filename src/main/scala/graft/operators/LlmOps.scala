@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gate, Tables}
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,13 +30,12 @@ object LlmOps {
   private def parallelism(s: SparkSession): Int =
     s.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
-  /** The planted corpora are shared by several gate queries in one Verify /
-    * Bench session — memoize the persisted frame per (session, dir) so
-    * d2/d3/d4 reuse one materialization instead of re-tokenizing the union
-    * each. Gate-harness code, not library surface. Owned via `clearPlanted`:
-    * Bench releases between timed queries (each query pays its own staging,
-    * and leaked blocks must not squeeze later queries' execution memory),
-    * Verify/tests release at teardown. */
+  /** The planted corpora are memoized as persisted frames per (session,
+    * dir), so a gate that reads one several times materializes it once.
+    * Gate-harness code, not library surface. Owned via `clearPlanted`,
+    * which the gate runner (`graft.Gates.run`) calls after every gate: each
+    * gate pays its own staging, and leaked blocks must not squeeze later
+    * gates' execution memory. */
   private val plantedCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
@@ -148,12 +147,23 @@ object LlmOps {
       dirty
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d1_exact_dedup" -> { (s, dir) =>
+  def gates: Seq[Gate] = Seq(
+    Gate("d1_exact_dedup",
+      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents GROUP BY md5(text)""".stripMargin) { (s, dir) =>
       Dedup.dupStats(Tables(s, dir).documents, "text", "doc_id")
     },
 
-    "d2_minhash_lsh" -> { (s, dir) =>
+    Gate("d2_minhash_lsh",
+      // d2/d3 planted-pair recall: the gates return exactly the recovered
+      // planted pairs, the oracle is the full planted set — a missed pair (or
+      // a phantom exactly-offset pair) breaks the hash. Recall is structural,
+      // not statistical: d2's copies are textually identical (est_jaccard ≡ 1,
+      // every band collides) and d3's are token-reversed (simhash is a bag
+      // function — identical signature, hamming 0), so the full pipeline
+      // (signatures → blocking → bucket join → dedup → threshold) must emit
+      // exactly these pairs at any scale factor.
+      "SELECT doc_id AS id_a, doc_id + 1000000 AS id_b FROM documents") { (s, dir) =>
       // planted-pair RECALL gate (mirrors d5): every (id, id+1e6) planted
       // pair must be re-found — ids only, SQL-expressible even though the
       // est_jaccard hash family is not. An id difference of exactly 1e6 can
@@ -166,7 +176,7 @@ object LlmOps {
         .orderBy("id_a")
     },
 
-    "d3_simhash" -> { (s, dir) =>
+    Gate("d3_simhash", "SELECT doc_id AS id_a, doc_id + 1000000 AS id_b FROM documents") { (s, dir) =>
       // same recall construction over the token-reversed corpus (signature
       // provably preserved, text different)
       Dedup.simhashPairs(plantedDocsPermuted(s, dir), "text", "doc_id", maxHamming = 7)
@@ -175,7 +185,39 @@ object LlmOps {
         .orderBy("id_a")
     },
 
-    "d4_ngram_jaccard" -> { (s, dir) =>
+    Gate("d4_ngram_jaccard",
+      // Exact n-gram Jaccard re-derived from scratch: same planted corpus,
+      // word 3-shingle sets, |∩| as a count aggregation over the inverted
+      // index, |∪| from the set sizes. Spark hashes shingles (xxhash64) while
+      // this uses the strings — counts agree absent 64-bit collisions, and
+      // the result is the pure semantic set {pairs: J >= 0.5}.
+      """WITH corpus AS (
+        |  SELECT doc_id AS id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000 AS id,
+        |         substr(text, 1, greatest(20, CAST(trunc(length(text)*0.9) AS INT))) AS text
+        |  FROM documents
+        |), toks AS (
+        |  SELECT id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM corpus
+        |), sets AS (
+        |  SELECT id, list_distinct(
+        |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+        |         ELSE list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2], ' ')) END) AS s
+        |  FROM toks
+        |), ex AS (
+        |  SELECT id, unnest(s) AS sh FROM sets
+        |), inter AS (
+        |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
+        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.id < b.id
+        |  GROUP BY 1, 2
+        |), sizes AS (
+        |  SELECT id, len(s) AS sz FROM sets
+        |)
+        |SELECT id_a, id_b, jaccard FROM (
+        |  SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
+        |  FROM inter JOIN sizes sa ON inter.id_a = sa.id
+        |             JOIN sizes sb ON inter.id_b = sb.id
+        |) WHERE jaccard >= 0.5""".stripMargin) { (s, dir) =>
       // prefix-filtered (AllPairs) candidates + exact verification: the
       // result is {pairs: J >= 0.5} independent of the blocking, so the
       // DuckDB re-derivation is a full end-to-end oracle
@@ -183,7 +225,16 @@ object LlmOps {
         .orderBy("id_a", "id_b")
     },
 
-    "d6_dedup_clusters" -> { (s, dir) =>
+    Gate("d6_dedup_clusters",
+      // D6: the d4 pair derivation (same CTEs) extended by a recursive-CTE
+      // transitive closure: comp(id) = min id reachable in the undirected pair
+      // graph; singletons label themselves. Component minima are unique, so
+      // the result is independent of how either engine orders the traversal.
+      (componentCteSql +
+      """
+        |SELECT c.id, coalesce(p.component, c.id) AS component,
+        |       coalesce(p.component, c.id) = c.id AS is_canonical
+        |FROM corpus c LEFT JOIN comp p ON c.id = p.id""".stripMargin)) { (s, dir) =>
       // the full fuzzy-dedup pipeline: exact-Jaccard near-dup PAIRS (d4's
       // operator) chained into CLUSTERS by connected components, one
       // canonical doc (min id) per cluster. Pairwise dedup alone over-keeps
@@ -199,7 +250,15 @@ object LlmOps {
         .orderBy("id")
     },
 
-    "d5_embed_dedup" -> { (s, dir) =>
+    Gate("d5_embed_dedup",
+      // The planted ground truth, derived independently: every vector pairs
+      // with exactly its 1.01-scaled copy (same direction → identical
+      // hyperplane signs in EVERY table, so LSH recall is structurally 1;
+      // float perturbation keeps cosine within 1e-14 of 1.0, far inside the
+      // 6dp round). Gates recall AND precision: a missed planted pair or any
+      // false positive above 0.999 breaks the hash.
+      """SELECT vec_id AS id_a, vec_id + 1000000 AS id_b, 1.0 AS cosine
+        |FROM embeddings""".stripMargin) { (s, dir) =>
       // knownN: bucket sizing from a footer-only count of the base parquet
       // (2× for the planted copies) instead of an extra pass over the
       // assembled corpus
@@ -210,7 +269,11 @@ object LlmOps {
         .orderBy("id_a", "id_b")
     },
 
-    "d10_semantic_dedup" -> { (s, dir) =>
+    Gate("d10_semantic_dedup",
+      // D10: every planted copy collapses onto its base (min id), every
+      // base survives — a missed copy (extra survivor) or a natural merge
+      // (missing base) breaks the hash either way
+      "SELECT vec_id AS kept_id FROM embeddings ORDER BY 1") { (s, dir) =>
       // SemDeDup-style cluster-scoped dedup over the planted-copy corpus:
       // identical vectors share a cell by construction (assignment is a
       // pure function of the vector), every (base, base+1e6) pair scores
@@ -226,7 +289,39 @@ object LlmOps {
         .orderBy("kept_id")
     },
 
-    "d11_line_dedup" -> { (s, dir) =>
+    Gate("d11_line_dedup",
+      // D11: keep-first line dedup re-derived from scratch over the same
+      // planted corpus — DuckDB groups by the trimmed line STRING where Spark
+      // groups by xxhash64 of it (the d4/d7 collision argument); the winner
+      // is the same min (doc_id, line_no) on both engines.
+      """WITH p AS (
+        |  SELECT doc_id,
+        |    'ACCEPT COOKIES TO CONTINUE' || chr(10) || text
+        |    || CASE WHEN doc_id % 4 = 0 THEN chr(10) || 'limited time promo offer' ELSE '' END
+        |    || CASE WHEN doc_id % 6 = 0 THEN chr(10) || text ELSE '' END AS text
+        |  FROM documents
+        |), l AS (
+        |  SELECT doc_id, i - 1 AS ln, trim(arr[i]) AS line
+        |  FROM (SELECT doc_id, string_split(text, chr(10)) AS arr FROM p) s,
+        |    unnest(range(1, len(arr) + 1)) AS u(i)
+        |  WHERE trim(arr[i]) <> ''
+        |), k AS (
+        |  SELECT doc_id, ln, line FROM (
+        |    SELECT doc_id, ln, line,
+        |      row_number() OVER (PARTITION BY line ORDER BY doc_id, ln) AS rk
+        |    FROM l) WHERE rk = 1
+        |), ka AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines_kept,
+        |    string_agg(line, chr(10) ORDER BY ln) AS text
+        |  FROM k GROUP BY doc_id
+        |), la AS (
+        |  SELECT doc_id, count(*) AS n_total FROM l GROUP BY doc_id
+        |)
+        |SELECT d.doc_id, coalesce(ka.text, '') AS text,
+        |  coalesce(ka.n_lines_kept, 0) AS n_lines_kept,
+        |  CAST(coalesce(la.n_total, 0) - coalesce(ka.n_lines_kept, 0) AS BIGINT) AS n_lines_dropped
+        |FROM documents d LEFT JOIN ka USING (doc_id) LEFT JOIN la USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       // The synthetic corpus is single-line, so plant the line structure
       // the operator exists for: a corpus-wide cookie banner (only the
       // global first occurrence — doc 0 line 0 — survives), a promo line
@@ -245,7 +340,60 @@ object LlmOps {
       SpanDedup.lineDedup(planted, "text", "doc_id").orderBy("doc_id")
     },
 
-    "d12_substr_dedup" -> { (s, dir) =>
+    Gate("d12_substr_dedup",
+      // D12: ExactSubstr re-derived from scratch — 8-token window STRINGS
+      // grouped directly (Spark uses the order-sensitive 64-bit window-hash
+      // kernel; equal gram ⟺ equal hash mod collisions), redundant = not the
+      // group's min (doc, pos), gaps-and-islands merge at pos <= prev + 8,
+      // removal by anti-containment, clean text re-joined in token order.
+      s"""WITH p AS (
+        |  SELECT doc_id, text
+        |    || CASE WHEN doc_id % 3 = 0 THEN ' $Chunk12' ELSE '' END
+        |    || CASE WHEN doc_id % 9 = 0 THEN ' $Chunk12' ELSE '' END
+        |    || CASE WHEN doc_id % 5 = 0 THEN ' uno dos tres cuatro cinco seis siete ocho' ELSE '' END AS text
+        |  FROM documents
+        |), t AS (
+        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks FROM p
+        |), g AS (
+        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
+        |    array_to_string(list_slice(toks, i + 1, i + 8), ' ') AS gram
+        |  FROM t, unnest(range(0, len(toks) - 8 + 1)) AS u(i)
+        |  WHERE len(toks) >= 8
+        |), r AS (
+        |  SELECT doc_id, pos FROM (
+        |    SELECT doc_id, pos,
+        |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rk,
+        |      count(*) OVER (PARTITION BY gram) AS c
+        |    FROM g) WHERE c >= 2 AND rk > 1
+        |), isl AS (
+        |  SELECT doc_id, pos,
+        |    sum(CASE WHEN prev IS NOT NULL AND pos <= prev + 8 THEN 0 ELSE 1 END)
+        |      OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        |  FROM (SELECT doc_id, pos,
+        |          lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev FROM r)
+        |), sp AS (
+        |  SELECT doc_id, island, min(pos) AS s, max(pos) + 8 AS e
+        |  FROM isl GROUP BY doc_id, island
+        |), agg AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
+        |    CAST(sum(e - s) AS BIGINT) AS n_removed_tokens
+        |  FROM sp GROUP BY doc_id
+        |), tok AS (
+        |  SELECT doc_id, CAST(j AS BIGINT) AS pos, toks[j + 1] AS tok
+        |  FROM t, unnest(range(0, len(toks))) AS u(j)
+        |), keep AS (
+        |  SELECT k.doc_id, k.pos, k.tok FROM tok k
+        |  WHERE NOT EXISTS (SELECT 1 FROM sp
+        |    WHERE sp.doc_id = k.doc_id AND k.pos >= sp.s AND k.pos < sp.e)
+        |), ct AS (
+        |  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text
+        |  FROM keep GROUP BY doc_id
+        |)
+        |SELECT d.doc_id, coalesce(a.n_spans, 0) AS n_spans,
+        |  coalesce(a.n_removed_tokens, 0) AS n_removed_tokens,
+        |  coalesce(ct.clean_text, '') AS clean_text
+        |FROM documents d LEFT JOIN agg a USING (doc_id) LEFT JOIN ct USING (doc_id)
+        |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
       // ExactSubstr planting: a shared 12-token chunk on docs ≡0 (mod 3)
       // (five overlapping 8-windows merging into one cross-doc span), the
       // SAME chunk twice back-to-back on docs ≡0 (mod 9) (adjacent-span
@@ -265,7 +413,24 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "d16_edit_join" -> { (s, dir) =>
+    Gate("d16_edit_join",
+      // D16: identical label derivation + typo planting, then the ed<=1 pair
+      // set by BRUTE-FORCE cross join with DuckDB's own levenshtein — the
+      // strongest possible oracle for a candidate-pruned join: any pair the
+      // deletion-neighborhood index missed (or invented) breaks the hash.
+      """WITH base AS (
+        |  SELECT doc_id, substr(text, 1, 12) AS lbl
+        |  FROM documents WHERE doc_id < 2000),
+        |typos AS (
+        |  SELECT doc_id + 1000000 AS doc_id,
+        |    substr(lbl, 1, 2) || 'z' || substr(lbl, 4, 9) AS lbl
+        |  FROM base WHERE doc_id % 10 = 0),
+        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM typos)
+        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |  CAST(levenshtein(a.lbl, b.lbl) AS INTEGER) AS dist
+        |FROM corpus a JOIN corpus b ON a.doc_id < b.doc_id
+        |WHERE levenshtein(a.lbl, b.lbl) <= 1
+        |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
       // bounded edit-distance join over 12-char pseudo-labels (the corpus
       // has no label column, so derive one), with planted single-char-
       // substitution typos (+1e6 ids) on mod-10 docs. doc_id < 2000 keeps
@@ -283,7 +448,49 @@ object LlmOps {
         .orderBy("a_id", "b_id")
     },
 
-    "d15_url_dedup" -> { (s, dir) =>
+    Gate("d15_url_dedup",
+      // D15: replant the identical URL spellings, then replay the documented
+      // canonicalization contract with DuckDB's own string/list kernels
+      // (lowercase scheme+host, default port, www., fragment, tracking
+      // params, bytewise param sort, trailing slash) and keep min(doc_id)
+      // per canonical string — generic derivation, no planted ids.
+      """WITH planted AS (
+        |  SELECT doc_id,
+        |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.Example.COM'
+        |          ELSE 'https://example.com' END)
+        |    || (CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END)
+        |    || '/docs/' || CAST(doc_id // 4 AS VARCHAR)
+        |    || (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END)
+        |    || (CASE WHEN doc_id % 2 = 0 THEN '?b=2&utm_source=feed&a=1'
+        |          ELSE '?a=1&b=2' END)
+        |    || (CASE WHEN doc_id % 5 = 0 THEN '#section-2' ELSE '' END) AS url
+        |  FROM documents),
+        |parts AS (
+        |  SELECT doc_id,
+        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+        |    lower(regexp_extract(regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://', ''),
+        |                         '^([^/?#]*)', 1)) AS hostport,
+        |    regexp_replace(regexp_extract(regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://', ''),
+        |                                  '^[^/?#]*(.*)$', 1), '#.*$', '') AS nofrag
+        |  FROM planted),
+        |canon AS (
+        |  SELECT doc_id,
+        |    scheme || '://' ||
+        |    regexp_replace(
+        |      CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
+        |           WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
+        |           ELSE hostport END, '^www\.', '') ||
+        |    (CASE WHEN regexp_extract(nofrag, '^([^?]*)', 1) = '' THEN '/'
+        |          ELSE regexp_replace(regexp_extract(nofrag, '^([^?]*)', 1), '(.)/$', '\1') END) ||
+        |    (CASE WHEN len(p) > 0 THEN '?' || array_to_string(p, '&') ELSE '' END) AS canon_url
+        |  FROM (SELECT doc_id, scheme, hostport, nofrag,
+        |          list_sort(list_filter(string_split(regexp_extract(nofrag, '\?(.*)$', 1), '&'),
+        |            q -> q <> '' AND NOT regexp_matches(q, '^(utm_[^=]*|gclid|fbclid|ref)=')
+        |          )) AS p
+        |        FROM parts))
+        |SELECT doc_id, canon_url FROM (
+        |  SELECT min(doc_id) AS doc_id, canon_url FROM canon GROUP BY canon_url)
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // URL-level dedup over planted URLs: docs 4k..4k+3 spell the SAME
       // page four ways — host case + www. (evens), explicit :443 (mod 3),
       // trailing slash (mod 4), shuffled params + a utm_ tracker (evens),
@@ -305,7 +512,22 @@ object LlmOps {
       Urls.dedupByUrl(planted, "doc_id", "url").orderBy("doc_id")
     },
 
-    "d14_soft_dedup" -> { (s, dir) =>
+    Gate("d14_soft_dedup",
+      // D14: group sizes over the planted-copy corpus, weights in exact
+      // per-mille floor division — grouping on text ≡ grouping on md5(text)
+      """WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 3 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 9 = 0
+        |), sizes AS (
+        |  SELECT text, CAST(count(*) AS BIGINT) AS n_copies
+        |  FROM corpus GROUP BY text
+        |)
+        |SELECT c.doc_id, s.n_copies,
+        |       CAST(1000 // s.n_copies AS BIGINT) AS weight_pm
+        |FROM corpus c JOIN sizes s ON c.text = s.text""".stripMargin) { (s, dir) =>
       // D14 over a planted-copy corpus: mod-3 docs gain one exact copy
       // (id+1e6), mod-9 docs a second (id+2e6) — so weights land at
       // 1000/500/333 per-mille by group size. Both engines run the same
@@ -319,7 +541,24 @@ object LlmOps {
       Dedup.softDedupWeights(corpus, "text", "doc_id").orderBy("doc_id")
     },
 
-    "d13_keep_best" -> { (s, dir) =>
+    Gate("d13_keep_best",
+      // D13: the d6 component derivation extended by a keep-best election —
+      // argmax(length(text)) per component, ties to MIN id, replayed as a
+      // window argmax so the oracle is order-independent exactly when the
+      // operator is.
+      (componentCteSql +
+      """, lab AS (
+        |  SELECT c.id, coalesce(p.component, c.id) AS component,
+        |         length(c.text) AS ln
+        |  FROM corpus c LEFT JOIN comp p ON c.id = p.id
+        |), win AS (
+        |  SELECT component, id AS kept_id,
+        |         row_number() OVER (PARTITION BY component
+        |                            ORDER BY ln DESC, id ASC) AS rn
+        |  FROM lab
+        |)
+        |SELECT l.id, l.component, w.kept_id, l.id = w.kept_id AS is_kept
+        |FROM lab l JOIN win w ON l.component = w.component AND w.rn = 1""".stripMargin)) { (s, dir) =>
       // D13 over the d4/d6 planted corpus: pairs = exact n-gram Jaccard
       // >= 0.5 (the d4 operator), score = length(text). A truncated copy is
       // strictly shorter than its base, so keep-best elects the base — but
@@ -333,7 +572,31 @@ object LlmOps {
         .orderBy("id")
     },
 
-    "s1_cosine_topk" -> { (s, dir) =>
+    Gate("s1_cosine_topk",
+      // Brute-force cosine re-derived with double math in the kernel's exact
+      // accumulation order (left fold seeded at 0.0) — bit-identical doubles,
+      // so the 6dp round matches too.
+      """WITH q AS (
+        |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5
+        |), c AS (
+        |  SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
+        |), scored AS (
+        |  SELECT query_id, neighbor_id,
+        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
+        |      list_transform(range(1, len(qv)+1), i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))),
+        |      (a,b) -> a + b)
+        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+        |         list_transform(range(1, len(qv)+1), i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))),
+        |         (a,b) -> a + b))
+        |       * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+        |           list_transform(range(1, len(cv)+1), i -> CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))),
+        |           (a,b) -> a + b))) AS cosine
+        |  FROM q, c WHERE query_id <> neighbor_id
+        |)
+        |SELECT query_id, neighbor_id, round(cosine, 6) AS cosine FROM (
+        |  SELECT query_id, neighbor_id, cosine,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
+        |  FROM scored) WHERE rk <= 5""".stripMargin) { (s, dir) =>
       val vecs = Tables(s, dir).embeddings.repartition(parallelism(s))
       Similarity.bruteForceTopK(vecs.filter(col("vec_id") < 5), vecs, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
@@ -346,7 +609,13 @@ object LlmOps {
     // of how the statistical tail of the top-k shakes out. Gates the full
     // path — signature kernel, band join, candidate dedup, scoring, bounded-
     // heap finish. Top-k recall on the natural corpus is spec-gated vs S1.
-    "s2_lsh_ann" -> { (s, dir) =>
+    Gate("s2_lsh_ann",
+      // Structural: each query's top-1 over the exact-copy planted corpus is
+      // its copy (vec_id + 1e6) at cosine 1 — identical vectors share every
+      // hyperplane bucket (s2) and the nearest-centroid cell (s3), and the
+      // kernel's cosine(v,v) is 1 to within 1 ulp, far inside the 6dp round.
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val vecs = plantedVecsExact(s, dir)
       // knownN from the base parquet footers — no extra pass over the
       // repartitioned corpus just to size the buckets
@@ -371,7 +640,12 @@ object LlmOps {
     // function of the data, asserted in-plan as a boolean (the r9_approx
     // construction — the hash family itself is not SQL-expressible, the
     // bound is).
-    "s2_recall" -> { (s, dir) =>
+    Gate("s2_recall",
+      // s2_recall: the recall bound is asserted in-plan (the r9_approx
+      // construction) — an LSH run recovering < 90% of the exact top-10 flips
+      // the boolean and breaks the hash.
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count() // footer-only count of the base parquet
@@ -393,7 +667,9 @@ object LlmOps {
     // the planted corpus is searched. A query and its exact copy get the
     // identical nearest-centroid assignment, so the copy always sits in the
     // rank-1 probed cell and wins top-1 at cosine 1.
-    "s3_ivf_ann" -> { (s, dir) =>
+    Gate("s3_ivf_ann",
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base  = Tables(s, dir).embeddings.repartition(parallelism(s))
       val vecs  = plantedVecsExact(s, dir)
       val cents = IvfAnn.trainCentroids(base, "embedding", k = 8, iters = 3,
@@ -411,7 +687,9 @@ object LlmOps {
     // cells — the gate at >= 0.55 sits above uninformed probing with margin
     // under every measurement, and catches assignment/probe regressions.
     // Clustered-corpus recall >= 0.9 stays spec-gated (IvfAnnSpec).
-    "s3_recall" -> { (s, dir) =>
+    Gate("s3_recall",
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -435,7 +713,10 @@ object LlmOps {
     // query's cell, and wins top-1 at cosine 1. The predicate BITES: odd
     // base vectors are excluded, so any post-filter leak that lets an
     // odd near-neighbor outrank the copy breaks the hash.
-    "s8_filtered_ann" -> { (s, dir) =>
+    Gate("s8_filtered_ann",
+      // s8: planted-copy top-1 under the parity predicate (copies keep parity)
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 64 AND vec_id % 2 = 0""".stripMargin) { (s, dir) =>
       val base  = Tables(s, dir).embeddings.repartition(parallelism(s))
       val vecs  = plantedVecsExact(s, dir)
       val cents = IvfAnn.trainCentroids(base, "embedding", k = 8, iters = 3,
@@ -451,7 +732,9 @@ object LlmOps {
     // ~0.48 selectivity): the 1/selectivity nprobe inflation (3 → 7 of 8
     // cells) holds filtered recall at-or-above the unfiltered s3 bar on
     // the same isotropic worst-case corpus.
-    "s8_recall" -> { (s, dir) =>
+    Gate("s8_recall",
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -475,7 +758,10 @@ object LlmOps {
     // codes (element-wise IEEE ops), so a planted copy's integer-dot score
     // is the self-cosine 1.0 — it heads any shortlist, and the exact
     // re-rank pins it at top-1. shortlist=∞ ≡ bruteForceTopK is spec'd.
-    "s7_int8_rerank" -> { (s, dir) =>
+    Gate("s7_int8_rerank",
+      // s7: planted-copy top-1 — identical codes, exact re-rank at cosine 1
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val vecs = plantedVecsExact(s, dir)
       Similarity.int8TopK(vecs.filter(col("vec_id") < 32), vecs, "vec_id",
           "embedding", k = 1, shortlist = 8)
@@ -489,7 +775,9 @@ object LlmOps {
     // shortlist for a top-10 cut loses nothing measurable — measured 1.0
     // at all three SFs; the 0.9 bound leaves margin for corpus refresh
     // while still catching any scoring/shortlist regression.
-    "s7_recall" -> { (s, dir) =>
+    Gate("s7_recall",
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val vecs = Tables(s, dir).embeddings.repartition(parallelism(s))
       val queries = vecs.filter(col("vec_id") < 32)
       val exact = Similarity.bruteForceTopK(queries, vecs, "vec_id", "embedding", k = 10)
@@ -511,7 +799,11 @@ object LlmOps {
     // frame) uniquely reached — so the copy heads every shortlist and the
     // exact re-rank pins it at top-1/cosine 1. shortlist=∞ ≡ bruteForceTopK
     // is spec'd in SimilaritySpec.
-    "s15_binary_rerank" -> { (s, dir) =>
+    Gate("s15_binary_rerank",
+      // s15: planted-copy top-1 — identical sign words maximize the
+      // asymmetric score, exact re-rank at cosine 1
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val vecs = plantedVecsExact(s, dir)
       Similarity.binaryTopK(vecs.filter(col("vec_id") < 32), vecs, "vec_id",
           "embedding", k = 1, shortlist = 8)
@@ -528,7 +820,9 @@ object LlmOps {
     // this gate is what catches anyone "simplifying" it away). Bound 0.8
     // leaves corpus-refresh margin while still failing on any scorer or
     // shortlist regression.
-    "s15_recall" -> { (s, dir) =>
+    Gate("s15_recall",
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val vecs = Tables(s, dir).embeddings.repartition(parallelism(s))
       val queries = vecs.filter(col("vec_id") < 32)
       val exact = Similarity.bruteForceTopK(queries, vecs, "vec_id", "embedding", k = 10)
@@ -550,7 +844,11 @@ object LlmOps {
     // PQ codes (first-index argmin) — so the copy sits in the rank-1 probed
     // cell with the minimal-possible ADC distance neighborhood, survives
     // any sane shortlist, and the exact re-rank puts it at top-1, cosine 1.
-    "s6_ivfpq_ann" -> { (s, dir) =>
+    Gate("s6_ivfpq_ann",
+      // s6: same planted-copy top-1 construction as s2/s3 — copies share cell
+      // AND PQ codes, and the exact re-rank makes the final ranking cosine's
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base = Tables(s, dir).embeddings.repartition(parallelism(s))
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
@@ -567,7 +865,10 @@ object LlmOps {
     // snapshot tables (doubles survive parquet bit-exactly), candidates
     // from the published encoded store. A serialization fault anywhere —
     // centroid order, codeword layout, codes — breaks top-1 at cosine 1.
-    "s9_persisted_ann" -> { (s, dir) =>
+    Gate("s9_persisted_ann",
+      // s9: planted-copy top-1 from the persisted index — same contract as s6
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("s9_index")
@@ -596,7 +897,11 @@ object LlmOps {
     // ranking at cosine 1; tombstoning the mod-4 copies then removes
     // those winners, and the generic output booleans encode exactly
     // which ids may appear. Regime split and exactness are spec'd.
-    "s11_filtered_store" -> { (s, dir) =>
+    Gate("s11_filtered_store",
+      // s11: live even copies head the ranking; odd/deleted ids never appear
+      """SELECT vec_id AS query_id, vec_id % 4 <> 0 AS copy_returned,
+        |       false AS odd_returned, false AS deleted_returned
+        |FROM embeddings WHERE vec_id < 64 AND vec_id % 2 = 0""".stripMargin) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("s11_index")
@@ -630,7 +935,10 @@ object LlmOps {
     // ≥ 55% of the exact filtered ground truth (s3's bound; the
     // structural s11 gate pins correctness, this pins QUALITY), asserted
     // in-plan as a hash-gated boolean.
-    "s12_store_recall" -> { (s, dir) =>
+    Gate("s12_store_recall",
+      // s12: the store's filtered recall bound, asserted in-plan
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -661,7 +969,10 @@ object LlmOps {
     // the cell-cohabitation shuffle join. The oracle enumerates the full
     // n-row answer. Full-probe ≡ brute-force and the no-broadcast shape
     // are IvfAnnSpec's.
-    "s14_knn_join" -> { (s, dir) =>
+    Gate("s14_knn_join",
+      // s14: every base row recovers its planted copy through the join
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       IvfAnn.knnJoin(Tables(s, dir).embeddings.repartition(parallelism(s)),
@@ -679,7 +990,11 @@ object LlmOps {
     // maximizes the asymmetric score, heads the shortlist and re-ranks to
     // top-1 at cosine 1 — a shortlist leak, a scan mis-rank or a re-rank
     // drift all break the hash. Equivalence laws are IvfAnnSpec's.
-    "s17_quantized_knn_join" -> { (s, dir) =>
+    Gate("s17_quantized_knn_join",
+      // S17: the identical planted-copy law — quantization, the shortlist
+      // and the re-rank are all invisible to the top-1
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       IvfAnn.knnJoinQuantized(Tables(s, dir).embeddings.repartition(parallelism(s)),
@@ -701,7 +1016,23 @@ object LlmOps {
     // re-encode would flip this) — and (b) the store's exact row count
     // (2n minus the deleted odd copies). Metadata carry-over, racing
     // deletes and membership equality are AnnIndexStoreSpec's.
-    "s15_reindex_advisor" -> { (s, dir) =>
+    Gate("s15_reindex_advisor",
+      // s13: the s10 contract survives the rebuild, and the re-encoded
+      // store holds exactly the live membership (2n minus odd copies)
+      // S15: both phases re-derived as pure arithmetic over the embeddings
+      // count — the sidecar fold and the decision plumbing are invisible.
+      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM embeddings),
+        |d AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings WHERE vec_id % 7 = 0)
+        |SELECT * FROM (
+        |  SELECT 'before' AS phase, c AS rows_indexed, c AS rows_latest,
+        |    CAST(0 AS BIGINT) AS n_tombstones, 1.0 AS growth,
+        |    0.0 AS deleted_share, false AS should_reindex
+        |  FROM n
+        |  UNION ALL
+        |  SELECT 'after', c, 2 * c, t, 2.0,
+        |    CAST(t AS DOUBLE) / (2 * c), true
+        |  FROM n, d)
+        |ORDER BY phase""".stripMargin) { (s, dir) =>
       // S15: the drift-triggered maintenance decision, metadata-priced —
       // a fresh index advises nothing; after an X18-style frozen-codebook
       // append DOUBLES the store (ids + 1e6) and every 7th base id is
@@ -737,7 +1068,13 @@ object LlmOps {
         .orderBy("phase")
     },
 
-    "s13_reindex" -> { (s, dir) =>
+    Gate("s13_reindex",
+      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
+        |       false AS deleted_returned,
+        |       CAST((SELECT count(*) * 2 FROM embeddings)
+        |            - (SELECT count(*) FROM embeddings WHERE vec_id % 2 = 1)
+        |         AS BIGINT) AS n_store
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("s13_index")
@@ -775,7 +1112,11 @@ object LlmOps {
     // and no deleted id may surface for anyone. copy_returned ≡ evenness
     // and deleted_returned ≡ false, both derived from the ACTUAL top-5
     // search output; a tombstone leak or an over-delete breaks the hash.
-    "s10_ann_deletes" -> { (s, dir) =>
+    Gate("s10_ann_deletes",
+      // s10: evenness ≡ live-copy-at-top, tombstones never surface
+      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
+        |       false AS deleted_returned
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("s10_index")
@@ -806,7 +1147,11 @@ object LlmOps {
     // deleted id ever) with the deletes having arrived THROUGH the
     // stream. Replay no-ops and batch-split independence are
     // StreamingAnnIngestSpec's.
-    "x20_stream_ann_deletes" -> { (s, dir) =>
+    Gate("x20_stream_ann_deletes",
+      // x20: the s10 contract with the deletes arriving through the stream
+      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
+        |       false AS deleted_returned
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       import java.nio.file.Paths
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
@@ -839,7 +1184,14 @@ object LlmOps {
         .orderBy("query_id")
     },
 
-    "x18_stream_ann_ingest" -> { (s, dir) =>
+    Gate("x18_stream_ann_ingest",
+      // x18: the s9 structural contract reached THROUGH the stream — every
+      // query's streamed copy at top-1/cosine 1 (a lost shard breaks it),
+      // plus the maintained-state row count (base + streamed copies = 2n; a
+      // double-applied shard breaks it).
+      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine,
+        |  (SELECT CAST(2 * count(*) AS BIGINT) FROM embeddings) AS n_state
+        |FROM embeddings WHERE vec_id < 32 ORDER BY vec_id""".stripMargin) { (s, dir) =>
       import java.nio.file.Paths
       val n = Tables(s, dir).embeddings.count()
       val base = Tables(s, dir).embeddings.repartition(parallelism(s))
@@ -877,7 +1229,9 @@ object LlmOps {
     // shortlist=128 measured recall is 0.628-0.663 across all three SFs, so
     // the gate reuses S3's >= 0.55 bound (above the 0.375 of probing 3
     // random cells of 8, margin >= 0.078 under every measurement).
-    "s6_recall" -> { (s, dir) =>
+    Gate("s6_recall",
+      """SELECT count(*) AS n_queries, true AS recall_ok
+        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -896,7 +1250,28 @@ object LlmOps {
             .as("recall_ok"))
     },
 
-    "s4_quantize_int8" -> { (s, dir) =>
+    Gate("s4_quantize_int8",
+      // S4: every op here (float→double cast, /, *, floor, abs, max) is
+      // correctly rounded and order-independent (max) or applied in the same
+      // order — codes, scales and errors are bit-identical cross-engine.
+      """WITH s AS (
+        |  SELECT vec_id, embedding,
+        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
+        |  FROM embeddings
+        |), z AS (
+        |  SELECT vec_id, embedding, scale,
+        |    CASE WHEN scale = 0.0
+        |      THEN list_transform(embedding, x -> CAST(0 AS INTEGER))
+        |      ELSE list_transform(embedding,
+        |        x -> CAST(floor(CAST(x AS DOUBLE) / scale + 0.5) AS INTEGER))
+        |    END AS q
+        |  FROM s
+        |)
+        |SELECT vec_id, scale,
+        |  md5(array_to_string(q, ',')) AS q_hash,
+        |  list_max(list_transform(range(1, len(q)+1),
+        |    i -> abs(CAST(embedding[i] AS DOUBLE) - CAST(q[i] AS DOUBLE) * scale))) AS max_err
+        |FROM z""".stripMargin) { (s, dir) =>
       // int8 scalar quantization of the embedding store: codes, scale and
       // max reconstruction error are all order-independent element-wise
       // double math, so DuckDB re-derives every value bit-for-bit — no
@@ -915,7 +1290,11 @@ object LlmOps {
         .orderBy("vec_id")
     },
 
-    "s5_pq_codes" -> { (s, dir) =>
+    Gate("s5_pq_codes",
+      // S5: exact copies code identically (deterministic argmin), so the
+      // code-match join over the planted corpus returns exactly the planted
+      // pairs — recall AND precision structural, like d5.
+      """SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings""".stripMargin) { (s, dir) =>
       // product quantization, gated structurally like s2/s3: identical
       // vectors get identical codes (argmin tiebreaks on the first index),
       // so over the exact-copy corpus every planted pair must code-match —
@@ -934,12 +1313,12 @@ object LlmOps {
         .orderBy("id_a")
     },
 
-    "t1_langid" -> { (s, dir) =>
+    Gate("t1_langid", t1OracleSql) { (s, dir) =>
       TextAnalysis.withDetectedLang(Tables(s, dir).documents, "text")
         .select(col("doc_id"), col("lang").as("labeled_lang"), col("detected_lang"))
     },
 
-    "t2_quality" -> { (s, dir) =>
+    Gate("t2_quality", t2OracleSql) { (s, dir) =>
       Tables(s, dir).documents.select(
         col("doc_id"),
         length(col("text")).as("len_chars"),
@@ -951,7 +1330,11 @@ object LlmOps {
         TextAnalysis.isQuality(col("text")).as("is_quality"))
     },
 
-    "t3_tokens" -> { (s, dir) =>
+    Gate("t3_tokens",
+      """SELECT doc_id,
+        |  len(regexp_split_to_array(trim(text), '\s+')) AS ws_tokens,
+        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_tokens
+        |FROM documents""".stripMargin) { (s, dir) =>
       Tables(s, dir).documents.select(
         col("doc_id"),
         TextAnalysis.wsTokens(col("text")).as("ws_tokens"),
@@ -962,7 +1345,9 @@ object LlmOps {
     // the oracle re-derives them exactly; the total-order materialization
     // (range partition + local sort, no single-partition funnel) is
     // spec-asserted in SamplingSpec.
-    "t17_global_shuffle" -> { (s, dir) =>
+    Gate("t17_global_shuffle",
+      """SELECT doc_id, md5('7:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
+        |FROM documents""".stripMargin) { (s, dir) =>
       Sampling.globalShuffle(Tables(s, dir).documents.select("doc_id"), "doc_id", seed = 7L)
         .select("doc_id", "shuffle_key")
     },
@@ -972,7 +1357,37 @@ object LlmOps {
     // DuckDB oracle replays the merge loop as a recursive CTE over the
     // DISTINCT corpus words, then joins counts back per doc — same
     // leftmost-lowest-rank-single-merge semantics as the kernel.
-    "t16_bpe_tokens" -> { (s, dir) =>
+    Gate("t16_bpe_tokens",
+      s"""WITH RECURSIVE
+        |merges(a, b, rank) AS (VALUES ${graft.functions.Bpe.mergeValuesSql()}),
+        |words AS (
+        |  SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
+        |  FROM documents
+        |),
+        |state AS (
+        |  SELECT w, list_transform(range(1, len(w)+1), i -> w[i]) AS toks FROM words
+        |  UNION ALL
+        |  SELECT s.w,
+        |    s.toks[1:p.i-1] || [s.toks[p.i] || s.toks[p.i+1]] || s.toks[p.i+2:] AS toks
+        |  FROM state s
+        |  JOIN LATERAL (
+        |    SELECT i FROM unnest(range(1, len(s.toks))) AS t(i)
+        |    JOIN merges m ON m.a = s.toks[i] AND m.b = s.toks[i+1]
+        |    ORDER BY m.rank, i LIMIT 1
+        |  ) p ON true
+        |),
+        |final AS (
+        |  SELECT w, len(toks) AS n FROM state s
+        |  WHERE NOT EXISTS (
+        |    SELECT 1 FROM unnest(range(1, len(s.toks))) AS t(i)
+        |    JOIN merges m ON m.a = s.toks[i] AND m.b = s.toks[i+1])
+        |)
+        |SELECT d.doc_id, CAST(coalesce(sum(f.n), 0) AS BIGINT) AS bpe_true_tokens
+        |FROM documents d
+        |LEFT JOIN (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
+        |           FROM documents) dw ON dw.doc_id = d.doc_id
+        |LEFT JOIN final f ON f.w = dw.w
+        |GROUP BY d.doc_id""".stripMargin) { (s, dir) =>
       Tables(s, dir).documents.select(
         col("doc_id"),
         graft.functions.Bpe.tokenCount(col("text")).as("bpe_true_tokens"))
@@ -987,7 +1402,20 @@ object LlmOps {
     // law itself; incremental ≡ naive-rescan, prefix stability and the
     // python-tool anchor (the shipped 8192-merge table's own prefix) are
     // BpeTrainSpec's.
-    "t29_bpe_train" -> { (s, dir) =>
+    Gate("t29_bpe_train",
+      // T16: the merge loop replayed as a recursive CTE — each step merges
+      // the leftmost occurrence of the lowest-rank adjacent pair (ORDER BY
+      // rank, i LIMIT 1), terminating at the no-pair fixpoint, exactly the
+      // kernel's step. Runs over DISTINCT words, then LEFT-joins per-doc from
+      // the documents table so the oracle is total over docs — an empty or
+      // all-whitespace doc counts 0, matching the kernel, instead of
+      // vanishing from the result.
+      // T29: training UNROLLED — per step, the weighted pair-count argmax
+      // (count desc, then lexicographically greatest pair) and a
+      // list_reduce fold applying the chosen merge left-to-right,
+      // non-overlapping, to every word. Generated programmatically (the w23
+      // unrolled-pagerank pattern).
+      t29OracleSql) { (s, dir) =>
       import s.implicits._
       val merges = BpeTrain.train(Tables(s, dir).documents, Seq("text"), 8)
       require(merges.size == 8, s"corpus must support 8 merges, got ${merges.size}")
@@ -1001,7 +1429,10 @@ object LlmOps {
     // re-derives base tokens AND ids from the same corpus CTEs and the
     // unrolled merges — a drift in training, char splitting or ordering
     // moves an id and breaks the hash.
-    "t30_bpe_vocab" -> { (s, dir) =>
+    Gate("t30_bpe_vocab",
+      // T30: base codepoints + merge tokens with dense-rank ids, off the
+      // same unrolled-training CTEs.
+      t30OracleSql) { (s, dir) =>
       import s.implicits._
       val counts = BpeTrain.wordCounts(Tables(s, dir).documents, Seq("text"))
       val merges = BpeTrain.trainFromCounts(counts, 8)
@@ -1016,14 +1447,23 @@ object LlmOps {
     // pipeline runs after its corpus mix shifts. The oracle re-derives the
     // WHOLE chain in one SQL statement (unrolled training feeding the
     // recursive tokenizer), so a drift in either half breaks the hash.
-    "p19_bpe_retrain" -> { (s, dir) =>
+    Gate("p19_bpe_retrain",
+      // P19: the whole retrain-and-apply chain in one statement — training
+      // CTEs (bpeTrainCtes) feeding the t16 recursive tokenizer.
+      p19OracleSql) { (s, dir) =>
       val merges = BpeTrain.train(Tables(s, dir).documents, Seq("text"), 8)
       require(merges.size == 8, s"corpus must support 8 merges, got ${merges.size}")
       Tables(s, dir).documents.select(col("doc_id"),
         graft.functions.Bpe.tokenCount(col("text"), merges).as("fresh_tokens"))
     },
 
-    "t5_tfidf" -> { (s, dir) =>
+    Gate("t5_tfidf",
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
+        |  FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+        |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1)
+        |SELECT doc_id, term, tf, df FROM tf JOIN df USING(term) WHERE doc_id < 20""".stripMargin) { (s, dir) =>
       // integer columns only (tf/df exact in any engine); the double tfidf
       // score itself is spec-gated, not hash-gated, to dodge libm ulps
       TextAnalysis.tfidf(Tables(s, dir).documents, "text", "doc_id")
@@ -1031,13 +1471,45 @@ object LlmOps {
         .select("doc_id", "term", "tf", "df")
     },
 
-    "t4_fingerprint" -> { (s, dir) =>
+    Gate("t4_fingerprint",
+      """SELECT doc_id,
+        |  list_reduce(
+        |    list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(regexp_extract_all(text, '[\s\S]'), c -> CAST(ascii(c) AS BIGINT))),
+        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
+        |FROM documents""".stripMargin) { (s, dir) =>
       Tables(s, dir).documents.select(
         col("doc_id"),
         TextAnalysis.fingerprint(col("text")).as("fingerprint"))
     },
 
-    "t26_normalize" -> { (s, dir) =>
+    Gate("t26_normalize",
+      """WITH dirty AS (
+        |  SELECT doc_id,
+        |    '  ' || chr(9) || text
+        |    || CASE WHEN doc_id % 2 = 0
+        |         THEN chr(13)||chr(10)||'Cafe'||chr(769)||' au lait' ELSE '' END
+        |    || CASE WHEN doc_id % 3 = 0
+        |         THEN chr(8203)||'promo'||chr(65279) ELSE '' END
+        |    || CASE WHEN doc_id % 4 = 0
+        |         THEN chr(10)||chr(10)||chr(10)||chr(10)||'end' ELSE '' END
+        |    || CASE WHEN doc_id % 5 = 0
+        |         THEN 'bel'||chr(7)||'l '||chr(11)||'vt' ELSE '' END
+        |    || CASE WHEN doc_id % 7 = 0 THEN ' unit '||chr(8491) ELSE '' END
+        |      AS text
+        |  FROM documents)
+        |SELECT doc_id,
+        |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+        |       regexp_replace(regexp_replace(
+        |    nfc_normalize(text),
+        |    '\r\n|\r', chr(10), 'g'),
+        |    '[\x{200B}-\x{200D}\x{FEFF}\x{00AD}]', '', 'g'),
+        |    '[\x{0000}-\x{0008}\x{000B}\x{000C}\x{000E}-\x{001F}\x{007F}]', '', 'g'),
+        |    '[ \t]+', ' ', 'g'),
+        |    ' ?\n ?', chr(10), 'g'),
+        |    '\n{3,}', chr(10)||chr(10), 'g')) AS norm_text
+        |FROM dirty
+        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // The synthetic corpus is clean ASCII, so plant the mess T26 exists
       // for, keyed on doc_id so every SF exercises every case: leading
       // whitespace junk on all docs; an NFD suffix (e + combining acute,
@@ -1066,7 +1538,20 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t27_normalize_multilingual" -> { (s, dir) =>
+    Gate("t27_normalize_multilingual",
+      // T26: replant the identical dirty string with chr() codepoints, then
+      // replay the documented normalization contract: utf8proc NFC (DuckDB
+      // nfc_normalize ≡ the JDK normalizer — both implement the Unicode
+      // canonical-composition tables), then the same RE2∩Java regex chain the
+      // Spark side runs, step for step.
+      // T27: the identical dirt replanted with chr() codepoints, the same
+      // presence-law flags re-derived with the IDENTICAL range regexes
+      // (explicit \x{...} ranges — RE2 and Java agree on those where they
+      // disagree on script-class spelling), then the profile-switched chain
+      // replayed step for step. The regexes and the translate mapping are
+      // substituted from the SAME Scala constants the operator compiles in,
+      // so the two sides cannot drift.
+      t27OracleSql) { (s, dir) =>
       // T27: the per-script profile law over planted multilingual dirt.
       // mod-3 docs get Persian with an ORTHOGRAPHIC ZWNJ (می\u200Cروم) plus a
       // stray ZWSP — the ZWNJ must survive, the ZWSP must not; mod-4 docs
@@ -1083,7 +1568,10 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t28_sql_ml_surface" -> { (s, dir) =>
+    Gate("t28_sql_ml_surface",
+      // T28: same oracle verbatim — the SQL surface resolves to the
+      // identical catalyst trees, so the answers must be byte-identical
+      t27OracleSql) { (s, dir) =>
       // T28: the T27 surface from PLAIN SQL — text_profile and
       // normalize_text_ml resolve to the identical catalyst trees the
       // Column API builds (one formulation, two entrances), so this gate
@@ -1096,12 +1584,47 @@ object LlmOps {
               |FROM t28_dirty ORDER BY doc_id""".stripMargin)
     },
 
-    "t6_hash_split" -> { (s, dir) =>
+    Gate("t6_hash_split", t6OracleSql) { (s, dir) =>
       Sampling.assignSplits(Tables(s, dir).documents, "doc_id", SplitSpec)
         .select("doc_id", "split")
     },
 
-    "p18_temporal_curation" -> { (s, dir) =>
+    Gate("p18_temporal_curation",
+      // P6: W20's recursive-CTE closure fragment + T6's shared md5
+      // fragments, chained — topic spread, root-2 selection, depth-3
+      // ancestor grouping and the split case all re-derived exactly.
+      s"""WITH RECURSIVE e0 AS (
+         |  SELECT id AS src, id // 2 AS dst,
+         |    CASE WHEN id % 3 = 0
+         |      THEN make_timestamp(CAST(1900 + id % 50 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vfrom,
+         |    CASE WHEN id % 4 = 0
+         |      THEN make_timestamp(CAST(1940 + id % 40 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vuntil
+         |  FROM range(2, 4096) t(id)
+         |), e AS (
+         |  SELECT src, dst FROM e0
+         |  WHERE (vfrom IS NULL OR vfrom <= TIMESTAMP '1950-06-01 00:00:00')
+         |    AND (vuntil IS NULL OR vuntil > TIMESTAMP '1950-06-01 00:00:00')
+         |), cl AS (
+         |  SELECT src, dst FROM e
+         |  UNION
+         |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
+         |), topics AS (
+         |  SELECT doc_id, 2048 + (${md5UnitSql("doc_id")} % 2048) AS topic
+         |  FROM documents
+         |), sel AS (
+         |  SELECT doc_id, topic FROM topics
+         |  WHERE topic IN (SELECT src FROM cl WHERE dst = 2)
+         |), comp AS (
+         |  SELECT doc_id, topic,
+         |    coalesce((SELECT min(m.dst) FROM (
+         |      SELECT src, dst FROM cl WHERE dst BETWEEN 8 AND 15
+         |      UNION SELECT id AS src, id AS dst FROM range(8, 16) t(id)) m
+         |      WHERE m.src = sel.topic), topic) AS component
+         |  FROM sel
+         |)
+         |SELECT doc_id, topic, component, $splitCaseSql AS split
+         |FROM (SELECT doc_id, topic, component, ${md5UnitSql("component")} AS u
+         |      FROM comp)""".stripMargin) { (s, dir) =>
       // P18 = P6 × W35: ontology-aware curation where the safety domain
       // is TIME-PINNED — splits computed over the ontology as it stood at
       // the training-cut date, so a later ontology edit cannot silently
@@ -1136,7 +1659,30 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p6_ontology_curation" -> { (s, dir) =>
+    Gate("p6_ontology_curation",
+      s"""WITH RECURSIVE e AS (
+         |  SELECT id AS src, id // 2 AS dst FROM range(2, 4096) t(id)
+         |), cl AS (
+         |  SELECT src, dst FROM e
+         |  UNION
+         |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
+         |), topics AS (
+         |  SELECT doc_id, 2048 + (${md5UnitSql("doc_id")} % 2048) AS topic
+         |  FROM documents
+         |), sel AS (
+         |  SELECT doc_id, topic FROM topics
+         |  WHERE topic IN (SELECT src FROM cl WHERE dst = 2)
+         |), comp AS (
+         |  SELECT doc_id, topic,
+         |    coalesce((SELECT min(m.dst) FROM (
+         |      SELECT src, dst FROM cl WHERE dst BETWEEN 8 AND 15
+         |      UNION SELECT id AS src, id AS dst FROM range(8, 16) t(id)) m
+         |      WHERE m.src = sel.topic), topic) AS component
+         |  FROM sel
+         |)
+         |SELECT doc_id, topic, component, $splitCaseSql AS split
+         |FROM (SELECT doc_id, topic, component, ${md5UnitSql("component")} AS u
+         |      FROM comp)""".stripMargin) { (s, dir) =>
       // ontology-aware curation: W20's closure over the deterministic
       // binary-tree ontology (child i -> parent i div 2, leaves
       // 2048..4095) selects docs whose topic sits under root node 2
@@ -1155,7 +1701,15 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t7_stratified_sample" -> { (s, dir) =>
+    Gate("t7_stratified_sample",
+      // T7: membership is a pure function of (lang, md5(doc_id)) — both
+      // engines compute the same lowercase-hex md5 over the same decimal
+      // rendering of doc_id, so the quota sample is re-derivable exactly.
+      """SELECT lang, doc_id FROM (
+        |  SELECT lang, doc_id,
+        |    row_number() OVER (PARTITION BY lang
+        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        |  FROM documents) WHERE rk <= 5""".stripMargin) { (s, dir) =>
       // deterministic per-language quota (the "balance by language/source"
       // op): 5 docs per lang chosen by md5(id) order — pure function of the
       // data, so DuckDB's row_number re-derivation is an exact oracle. Runs
@@ -1167,7 +1721,25 @@ object LlmOps {
         .orderBy("lang", "doc_id")
     },
 
-    "t11_temperature_mix" -> { (s, dir) =>
+    Gate("t11_temperature_mix",
+      // T11: quotas are integer arithmetic end-to-end — floor(sqrt(n)) is
+      // exact for any realistic stratum count, Σw and M·w div Σw are BIGINT —
+      // and membership is md5(id) order per stratum, so the rebalanced corpus
+      // is re-derivable row-for-row.
+      """WITH c AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY source
+        |), w AS (
+        |  SELECT source, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS w FROM c
+        |), q AS (
+        |  SELECT source, (200 * w) // (SELECT CAST(sum(w) AS BIGINT) FROM w) AS quota FROM w
+        |), r AS (
+        |  SELECT doc_id, source,
+        |    row_number() OVER (PARTITION BY source
+        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
+        |  FROM documents
+        |)
+        |SELECT r.doc_id, r.source FROM r JOIN q USING (source)
+        |WHERE r.rk <= q.quota""".stripMargin) { (s, dir) =>
       // α=0.5 temperature rebalancing across sources: quotas from integer
       // square-root weights (exact on any engine), membership by md5 order
       // — the data-mixing step of a multi-source training corpus.
@@ -1178,7 +1750,26 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t12_pack_sequences" -> { (s, dir) =>
+    Gate("t12_pack_sequences",
+      // T12: the packing is md5 order + prefix-sum + integer division — all
+      // exactly re-derivable (the shard is t6's hex-fold md5 unit mod 4; sums
+      // wrapped back to BIGINT because DuckDB sum(BIGINT) widens to HUGEINT).
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS toks,
+        |    md5(CAST(doc_id AS VARCHAR)) AS u,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1, 9),
+        |        i -> CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT))),
+        |      (a, b) -> a * 16 + b) % 4 AS shard
+        |  FROM documents
+        |), o AS (
+        |  SELECT doc_id, shard,
+        |    CAST(coalesce(sum(toks) OVER (PARTITION BY shard ORDER BY u, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
+        |  FROM t
+        |)
+        |SELECT doc_id, shard, off // 256 AS seq_id, off % 256 AS seq_off FROM o""".stripMargin) { (s, dir) =>
       // concat-and-chunk sequence packing: 256-token sequences over 4 hash
       // shards. Every assignment is md5-order + integer cumulative-sum
       // arithmetic — DuckDB re-derives (shard, seq_id, seq_off) row-for-row.
@@ -1190,7 +1781,35 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t13_boilerplate" -> { (s, dir) =>
+    Gate("t13_boilerplate",
+      // T13: the full frequent-line scrub re-derived generically — plant the
+      // same chrome, split on newlines, count each trimmed line once per doc,
+      // threshold at ceil(0.5·N) (identical double ceil in both engines),
+      // anti-filter, reassemble in line order. Docs reduced to nothing come
+      // back as '' via the left join.
+      """WITH p AS (
+        |  SELECT doc_id,
+        |    'ACCEPT COOKIES TO CONTINUE' || chr(10) || text ||
+        |    CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'rare per-page notice' ELSE '' END ||
+        |    chr(10) || 'Copyright Example Site' AS text
+        |  FROM documents
+        |), t AS (
+        |  SELECT doc_id, string_split(text, chr(10)) AS ls FROM p
+        |), ex AS (
+        |  SELECT doc_id, i, ls[i+1] AS l, trim(ls[i+1]) AS tl
+        |  FROM t, unnest(range(len(ls))) AS u(i)
+        |), freq AS (
+        |  SELECT tl FROM (
+        |    SELECT tl, count(DISTINCT doc_id) AS d FROM ex WHERE tl <> '' GROUP BY tl
+        |  ) WHERE d >= greatest(2, CAST(ceil(0.5 * (SELECT count(*) FROM documents)) AS BIGINT))
+        |), kept AS (
+        |  SELECT doc_id, i, l FROM ex WHERE tl NOT IN (SELECT tl FROM freq)
+        |)
+        |SELECT d.doc_id, coalesce(r.clean_text, '') AS clean_text
+        |FROM documents d LEFT JOIN (
+        |  SELECT doc_id, string_agg(l, chr(10) ORDER BY i) AS clean_text
+        |  FROM kept GROUP BY doc_id
+        |) r USING (doc_id)""".stripMargin) { (s, dir) =>
       // the synthetic corpus has no shared chrome, so plant it: every doc
       // gets a cookie banner + copyright footer (corpus-frequent → must be
       // stripped); docs ≡ 0 (mod 7) carry a rare notice (1/7 < 50% → must
@@ -1208,7 +1827,20 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t15_cluster_split" -> { (s, dir) =>
+    Gate("t15_cluster_split",
+      // T15: the cluster labels (d6's recursive CTE) keyed into the t6
+      // md5-threshold machinery — split is a pure function of the COMPONENT
+      // id, so both engines assign every cluster member identically.
+      (componentCteSql +
+      s""", lab AS (
+         |  SELECT c.id, coalesce(p.component, c.id) AS component
+         |  FROM corpus c LEFT JOIN comp p ON c.id = p.id
+         |), uu AS (
+         |  SELECT id, component, ${md5UnitSql("component")} AS u
+         |  FROM lab
+         |)
+         |SELECT id AS doc_id, component, $splitCaseSql AS split
+         |FROM uu""".stripMargin)) { (s, dir) =>
       // leakage-safe split assignment over the planted near-dup corpus:
       // d6's cluster labels keyed into t6's md5-threshold machinery —
       // every cluster member lands in the same split by construction
@@ -1220,7 +1852,47 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t14_repetition" -> { (s, dir) =>
+    Gate("t14_repetition",
+      // T14: the repetition profile is integer line/ngram counting — plant the
+      // same chrome, split lines (trimmed, non-empty) and word bigrams
+      // (lowered, \s+), count duplicates and the per-doc modal bigram. Empty
+      // list sums are NULL in DuckDB (coalesce to 0); sum(BIGINT) widens to
+      // HUGEINT (cast back); docs with < 2 tokens get their ngram stats from
+      // the LEFT JOIN's coalesce, mirroring Spark's explode_outer null row.
+      """WITH p AS (
+        |  SELECT doc_id,
+        |    text ||
+        |    CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'repeated banner line' || chr(10) || 'repeated banner line' || chr(10) || 'repeated banner line' ELSE '' END ||
+        |    CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'spam spam spam spam spam spam spam spam spam spam spam spam' ELSE '' END AS text
+        |  FROM documents
+        |), l AS (
+        |  SELECT doc_id,
+        |    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> len(x) > 0) AS ls,
+        |    regexp_split_to_array(lower(trim(text)), '\s+') AS t
+        |  FROM p
+        |), s AS (
+        |  SELECT doc_id,
+        |    CAST(len(ls) AS BIGINT) AS n_lines,
+        |    CAST(len(ls) - len(list_distinct(ls)) AS BIGINT) AS dup_lines,
+        |    CAST(coalesce(list_aggregate(list_transform(ls, x -> len(x)), 'sum'), 0)
+        |      - coalesce(list_aggregate(list_transform(list_distinct(ls), x -> len(x)), 'sum'), 0) AS BIGINT) AS dup_line_chars,
+        |    t
+        |  FROM l
+        |), e AS (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
+        |  FROM s WHERE len(t) >= 2
+        |), c AS (
+        |  SELECT doc_id, g, count(*) AS n FROM e GROUP BY doc_id, g
+        |), a AS (
+        |  SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_ngrams, CAST(max(n) AS BIGINT) AS top_ngram_n
+        |  FROM c GROUP BY doc_id
+        |)
+        |SELECT s.doc_id, s.n_lines, s.dup_lines, s.dup_line_chars,
+        |  coalesce(a.n_ngrams, 0) AS n_ngrams,
+        |  coalesce(a.top_ngram_n, 0) AS top_ngram_n,
+        |  ((s.n_lines > 0 AND s.dup_lines * 10 >= s.n_lines * 3)
+        |    OR (coalesce(a.n_ngrams, 0) > 0 AND coalesce(a.top_ngram_n, 0) * 5 >= coalesce(a.n_ngrams, 0))) AS is_repetitive
+        |FROM s LEFT JOIN a USING (doc_id)""".stripMargin) { (s, dir) =>
       // intra-document repetition profile. The synthetic corpus is
       // low-repetition, so plant both failure modes on top of the natural
       // text: docs ≡0 (mod 5) repeat a banner line 3× (duplicate-line
@@ -1239,7 +1911,9 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p15_dsir_corpus" -> { (s, dir) =>
+    Gate("p15_dsir_corpus",
+      // P15: the same fit chained into selection + split, per-split audit
+      p15OracleSql) { (s, dir) =>
       // P15: T25 × T6 — the DSIR-curated corpus cut a mix designer ships:
       // fit the importance model against the English target, keep the
       // target-like docs (the calibrated score_u > 0 rule), split the
@@ -1266,7 +1940,10 @@ object LlmOps {
         .orderBy("split")
     },
 
-    "t25_importance_weights" -> { (s, dir) =>
+    Gate("t25_importance_weights",
+      // T25: the DSIR fit replayed — polyhash buckets, add-one-smoothed
+      // bucket multinomials, fixed-point log2 millibit ratios, per-token sum
+      t25OracleSql) { (s, dir) =>
       // T25: DSIR-shaped importance weighting, target = English documents.
       // The estimator is integer end to end (t4 polyhash buckets, t20
       // fixed-point log2 millibits, add-one smoothing), so DuckDB replays
@@ -1278,7 +1955,31 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t24_token_drift" -> { (s, dir) =>
+    Gate("t24_token_drift",
+      // T24: the same planted refresh, counts full-outer joined, exact
+      // integer deltas under the same strict (delta desc, token) order
+      """WITH v2 AS (
+        |  SELECT doc_id,
+        |    text || CASE WHEN doc_id % 7 = 0
+        |                 THEN ' driftmarker driftmarker driftmarker'
+        |                 ELSE '' END AS text
+        |  FROM documents WHERE doc_id % 5 <> 0
+        |), ca AS (
+        |  SELECT t AS token, CAST(count(*) AS BIGINT) AS c_a
+        |  FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS t
+        |        FROM documents)
+        |  WHERE length(t) > 0 GROUP BY t
+        |), cb AS (
+        |  SELECT t AS token, CAST(count(*) AS BIGINT) AS c_b
+        |  FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS t
+        |        FROM v2)
+        |  WHERE length(t) > 0 GROUP BY t
+        |)
+        |SELECT coalesce(ca.token, cb.token) AS token,
+        |       coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b,
+        |       abs(coalesce(c_a, 0) - coalesce(c_b, 0)) AS delta
+        |FROM ca FULL JOIN cb ON ca.token = cb.token
+        |ORDER BY delta DESC, token LIMIT 50""".stripMargin) { (s, dir) =>
       // T24: corpus-refresh drift monitor. v2 is a planted refresh of the
       // corpus: mod-5 docs dropped (their tokens' counts fall), mod-7
       // docs gain a "driftmarker" run (a token that did not exist in v1).
@@ -1294,7 +1995,18 @@ object LlmOps {
       TextAnalysis.tokenDrift(v1, v2, "text", k = 50)
     },
 
-    "t23_dataset_card" -> { (s, dir) =>
+    Gate("t23_dataset_card",
+      // T23: the same measurements under ROLLUP — DuckDB's NULL subtotal
+      // rows match Spark's rollup semantics exactly
+      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
+        |  CAST(sum(CAST(length(text) >= 100
+        |    AND (CASE WHEN length(text) = 0 THEN 0.0
+        |         ELSE CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
+        |              / length(text) END) < 0.1 AS INT)) AS BIGINT) AS n_quality,
+        |  CAST(sum(length(text)) // count(*) AS BIGINT) AS mean_chars
+        |FROM documents
+        |GROUP BY ROLLUP (source, lang)""".stripMargin) { (s, dir) =>
       // T23: the dataset-card profile every corpus release ships — doc and
       // token counts, quality share and mean doc length per (source, lang)
       // with ROLLUP subtotals and a grand total, in ONE pass (T2/T3's
@@ -1314,7 +2026,7 @@ object LlmOps {
         .orderBy("source", "lang")
     },
 
-    "t22_gopher_rules" -> { (s, dir) =>
+    Gate("t22_gopher_rules", t22OracleSql) { (s, dir) =>
       // T22: Gopher document-filter profile. The synthetic corpus passes
       // most rules trivially, so plant each failure mode: mod-13 docs get
       // NO stopword line (stopword rule), mod-7 docs 30 distinct bullet
@@ -1339,7 +2051,11 @@ object LlmOps {
       TextAnalysis.gopherRules(planted, "doc_id", "text").orderBy("doc_id")
     },
 
-    "d7_decontaminate" -> { (s, dir) =>
+    Gate("d7_decontaminate",
+      // D7 re-derived over STRING shingles (hash-set ≡ string-set counts
+      // absent collisions): train docs whose shingle set intersects the eval
+      // slice's.
+      decontOracleSql) { (s, dir) =>
       // train/eval overlap scrub: train docs sharing ANY k-shingle with the
       // eval slice. Result is a pure semantic set (shingle-hash semi-join ≡
       // string-shingle IN-subquery absent xxhash64 collisions — the d4
@@ -1353,7 +2069,39 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "d9_decontaminate_near" -> { (s, dir) =>
+    Gate("d9_decontaminate_near",
+      // D9: exact cross-set Jaccard re-derived generically (string shingles ≡
+      // hash shingles absent collisions — the d4 argument). Eval ids are all
+      // ≥ 2e6 and pair ids are ordered, so cross pairs are (train, eval).
+      """WITH corpus AS (
+        |  SELECT doc_id AS id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 2000000 AS id, text || ' tail' AS text
+        |  FROM documents WHERE doc_id % 11 = 0
+        |), toks AS (
+        |  SELECT id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM corpus
+        |), sets AS (
+        |  SELECT id, list_distinct(
+        |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+        |         ELSE list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2], ' ')) END) AS s
+        |  FROM toks
+        |), ex AS (
+        |  SELECT id, unnest(s) AS sh FROM sets
+        |), inter AS (
+        |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
+        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.id < b.id
+        |  GROUP BY 1, 2
+        |), sizes AS (
+        |  SELECT id, len(s) AS sz FROM sets
+        |), pairs AS (
+        |  SELECT id_a, id_b FROM (
+        |    SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
+        |    FROM inter JOIN sizes sa ON inter.id_a = sa.id
+        |               JOIN sizes sb ON inter.id_b = sb.id
+        |  ) WHERE jaccard >= 0.5
+        |)
+        |SELECT DISTINCT id_a AS doc_id FROM pairs
+        |WHERE id_b >= 2000000 AND id_a < 2000000""".stripMargin) { (s, dir) =>
       // near-dup decontamination: the eval set is a tail-perturbed copy of
       // every 11th train doc (one appended token → J = |A|/(|A|+1) ≈ 0.99:
       // a NEAR dup d7's exact-shingle scrub would still catch here, but
@@ -1370,7 +2118,20 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t9_top_ngrams" -> { (s, dir) =>
+    Gate("t9_top_ngrams",
+      """WITH toks AS (
+        |  SELECT lang, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
+        |), bi AS (
+        |  SELECT lang, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS ngram
+        |  FROM toks WHERE len(t) >= 2
+        |), c AS (
+        |  SELECT lang, ngram, count(*) AS n FROM bi GROUP BY lang, ngram
+        |)
+        |SELECT lang, ngram, n FROM (
+        |  SELECT lang, ngram, n,
+        |    row_number() OVER (PARTITION BY lang ORDER BY n DESC, ngram) AS rn
+        |  FROM c
+        |) WHERE rn <= 5""".stripMargin) { (s, dir) =>
       // corpus n-gram statistics through the bounded-heap TopK node (P1's
       // third driver-visible consumer): top-5 bigrams per language,
       // count-desc with lexicographic tiebreak — fully re-derivable in SQL.
@@ -1378,7 +2139,23 @@ object LlmOps {
         .orderBy("lang", "ngram")
     },
 
-    "t18_bigram_lm" -> { (s, dir) =>
+    Gate("t18_bigram_lm",
+      // T18: same bigram explode as t9, self-joined through the corpus
+      // frequency table; integer division keeps the score engine-exact
+      """WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
+        |), bi AS (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS ngram
+        |  FROM toks WHERE len(t) >= 2
+        |), cf AS (
+        |  SELECT ngram, CAST(count(*) AS BIGINT) AS cf FROM bi GROUP BY ngram
+        |)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+        |  CAST((sum(cf) // count(*)) * 1000
+        |    + ((sum(cf) % count(*)) * 1000) // count(*) AS BIGINT)
+        |    AS avg_bigram_cf_x1000
+        |FROM bi JOIN cf USING (ngram)
+        |GROUP BY doc_id""".stripMargin) { (s, dir) =>
       // bigram-LM quality scoring: per-doc mean corpus bigram frequency in
       // integer units — the self-supervised "LM likelihood" curation
       // signal; every score is long arithmetic, so DuckDB re-derives the
@@ -1386,7 +2163,14 @@ object LlmOps {
       TextAnalysis.bigramCommonness(Tables(s, dir).documents, "doc_id", "text")
     },
 
-    "t20_bm25_search" -> { (s, dir) =>
+    Gate("t20_bm25_search",
+      // T20: integer-unit BM25 replayed end to end — tokenize, postings
+      // restricted to the query, df, interpolated-log2 idf (bit length +
+      // mantissa interpolation), saturation, length norm, top-50 — all
+      // BIGINT floor division, so the hash is exact (the shared fragment
+      // wraps count sums back to BIGINT where DuckDB widens to HUGEINT).
+      ("WITH " + bm25OracleSql("documents",
+        Seq("dup", "merge", "vector", "spark", "quantum"), 50))) { (s, dir) =>
       // ranked keyword search: integer-unit BM25 top-50 for a 5-term query
       // (one term, "quantum", is absent from the corpus — it must
       // contribute nothing); every score is floor-division long arithmetic
@@ -1396,7 +2180,32 @@ object LlmOps {
         Seq("dup", "merge", "vector", "spark", "quantum"), k = 50)
     },
 
-    "p7_quality_weighted_sample" -> { (s, dir) =>
+    Gate("p7_quality_weighted_sample",
+      // P7: t18's scoring CTEs + the weight band + t19's md5 draw + the
+      // lang join, all replayed in one SQL pipeline
+      """WITH toks AS (
+        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
+        |), bi AS (
+        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS ngram
+        |  FROM toks WHERE len(t) >= 2
+        |), cf AS (
+        |  SELECT ngram, CAST(count(*) AS BIGINT) AS cf FROM bi GROUP BY ngram
+        |), scored AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+        |    CAST((sum(cf) // count(*)) * 1000
+        |      + ((sum(cf) % count(*)) * 1000) // count(*) AS BIGINT) AS score
+        |  FROM bi JOIN cf USING (ngram) GROUP BY doc_id
+        |), w AS (
+        |  SELECT doc_id, n_bigrams, score,
+        |    CAST(least(8, 1 + score // 1000) AS BIGINT) AS wt FROM scored
+        |), keyed AS (
+        |  SELECT doc_id, n_bigrams, score, wt,
+        |    list_min(list_transform(range(1, wt + 1),
+        |      j -> md5(7 || ':' || doc_id || ':' || j))) AS wk
+        |  FROM w)
+        |SELECT k.doc_id, d.lang, k.n_bigrams, k.score AS avg_bigram_cf_x1000, k.wt
+        |FROM keyed k JOIN documents d USING (doc_id)
+        |ORDER BY wk LIMIT 150""".stripMargin) { (s, dir) =>
       // T18 × T19 composed: score every doc by bigram-LM commonness, band
       // the score into an integer weight (1..8, higher = more natural
       // prose), draw a 150-doc corpus without replacement under those
@@ -1412,7 +2221,16 @@ object LlmOps {
         .select("doc_id", "lang", "n_bigrams", "avg_bigram_cf_x1000", "wt")
     },
 
-    "t19_weighted_sample" -> { (s, dir) =>
+    Gate("t19_weighted_sample",
+      // T19: the same md5 copy expansion — min over w copy keys, smallest k
+      """WITH w AS (
+        |  SELECT doc_id, lang, CAST((n_chars % 5) + 1 AS BIGINT) AS wt FROM documents
+        |), keyed AS (
+        |  SELECT doc_id, lang, wt,
+        |    list_min(list_transform(range(1, wt + 1),
+        |      j -> md5(7 || ':' || doc_id || ':' || j))) AS wk
+        |  FROM w)
+        |SELECT doc_id, lang, wt FROM keyed ORDER BY wk LIMIT 200""".stripMargin) { (s, dir) =>
       // weighted sampling without replacement: 200 docs drawn by integer
       // weight (derived deterministically from n_chars) via min-of-copy-
       // hash keys — the Plackett–Luce draw the oracle replays with the
@@ -1422,7 +2240,20 @@ object LlmOps {
       Sampling.weightedSample(docs, "doc_id", "wt", k = 200)
     },
 
-    "t10_chunk" -> { (s, dir) =>
+    Gate("t10_chunk",
+      // T10: chunk count is integer ceil arithmetic and chunk text re-joins
+      // the token window with single spaces — both fully re-derivable.
+      """WITH t AS (
+        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents
+        |), d AS (
+        |  SELECT doc_id, toks, len(toks) AS n,
+        |    CASE WHEN len(toks) <= 64 THEN 1 ELSE ((len(toks) - 64 + 47) // 48) + 1 END AS nc
+        |  FROM t
+        |)
+        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
+        |  array_to_string(list_slice(toks, i*48+1, i*48+64), ' ') AS chunk_text,
+        |  CAST(least(64, n - i*48) AS BIGINT) AS n_tokens
+        |FROM d, unnest(range(nc)) AS u(i)""".stripMargin) { (s, dir) =>
       // sliding-window chunking: 64-token windows, 16-token overlap — the
       // training-sequence prep step; chunk boundaries are pure integer
       // arithmetic so DuckDB re-derives every chunk text byte-for-byte.
@@ -1431,7 +2262,10 @@ object LlmOps {
         .orderBy("doc_id", "chunk_id")
     },
 
-    "d8_decontaminate_bloom" -> { (s, dir) =>
+    Gate("d8_decontaminate_bloom",
+      // D8 = the same semantic set: bloom false negatives are impossible, so
+      // exact ∩ bloom must equal exact — the d7 derivation verbatim.
+      decontOracleSql) { (s, dir) =>
       // D7's Bloom-sketch scale path, gated for ZERO false negatives: every
       // exact-overlap doc must survive the bloom pre-filter, so semi-joining
       // the exact result against the bloom result must be the identity —
@@ -1447,7 +2281,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "t8_pii_redact" -> { (s, dir) =>
+    Gate("t8_pii_redact", t8OracleSql) { (s, dir) =>
       // PII planted deterministically per row (the synthetic corpus has
       // none): one email, one phone, one IPv4 — then the scrub runs and
       // BOTH the redacted text and the per-kind counts are hash-gated.
@@ -1463,7 +2297,10 @@ object LlmOps {
         TextAnalysis.redactPii(col("text")).as("redacted")) ++ counts: _*)
     },
 
-    "x5_neardedup_batch" -> { (s, dir) =>
+    Gate("x5_neardedup_batch",
+      // X5 batch equivalent: the planted subset of keep-first-per-simhash
+      // drops is structurally the full copy set (see the gate comment).
+      "SELECT doc_id + 1000000 AS doc_id FROM documents") { (s, dir) =>
       // batch equivalent of EventStreams.nearDedupStream (X5): keep-first
       // per SimHash signature, "first" pinned by doc_id order. Over the
       // token-reversed planted corpus every copy's signature provably equals
@@ -1478,7 +2315,22 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "x11_stream_curation" -> { (s, dir) =>
+    Gate("x11_stream_curation",
+      // X11: planted drops gated on BOTH quality predicates — the original's
+      // over the raw text, the copy's over the reconstructed token-reversed
+      // text (whitespace collapses to single spaces, so the lengths differ).
+      """WITH perm AS (
+        |  SELECT doc_id, text,
+        |    array_to_string(list_reverse(regexp_split_to_array(lower(trim(text)), '\s+')), ' ') AS ptext
+        |  FROM documents
+        |)
+        |SELECT doc_id + 1000000 AS doc_id FROM perm
+        |WHERE length(text) >= 100 AND
+        |  CASE WHEN length(text) = 0 THEN 0.0
+        |       ELSE CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(text) END < 0.1
+        |  AND length(ptext) >= 100 AND
+        |  CASE WHEN length(ptext) = 0 THEN 0.0
+        |       ELSE CAST(length(regexp_replace(ptext, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(ptext) END < 0.1""".stripMargin) { (s, dir) =>
       // batch equivalent of EventStreams.curationStream (X11): T2 quality
       // filter BEFORE X5's keep-first-per-SimHash dedup. Emitted set = the
       // planted DROPS whose original also passed quality — both sides'
@@ -1497,7 +2349,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p5_curation_v2" -> { (s, dir) =>
+    Gate("p5_curation_v2", p5OracleSql) { (s, dir) =>
       // curation pipeline v2 — the web-crawl order of operations: strip
       // corpus-frequent chrome (T13), drop repetitive spam (T14),
       // exact-dedup the CLEANED text (D1 — dedup after scrubbing, so pages
@@ -1513,7 +2365,11 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p8_curated_search" -> { (s, dir) =>
+    Gate("p8_curated_search",
+      // P8: the curation chain's survivors (cleaned text) feed the same
+      // BM25 fragment — search over the CURATED corpus, every upstream
+      // stage biting on the final hash
+      p8OracleSql) { (s, dir) =>
       // P5 × T20: ranked retrieval over the CURATED corpus — the audit
       // loop a pipeline owner actually runs ("what survived curation
       // about X?"). The BM25 stats (df, avgdl, N) are computed on the
@@ -1523,7 +2379,7 @@ object LlmOps {
         Seq("dup", "merge", "vector", "spark", "quantum"), k = 40)
     },
 
-    "t21_learned_quality" -> { (s, dir) =>
+    Gate("t21_learned_quality", t21OracleSql) { (s, dir) =>
       // T21: the TRAINED hashed-linear quality classifier (fastText shape;
       // weights fit offline by tools/train_quality_clf.py, frozen in
       // QualityClfWeights) over the same planted-spam construction it was
@@ -1543,7 +2399,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p10_budget_mixture" -> { (s, dir) =>
+    Gate("p10_budget_mixture", p10OracleSql) { (s, dir) =>
       // P10: mixture recipe → sampled corpus. Budget 20000 chars over five
       // sources: src0's 500‰ target (10000) exceeds its ~8k total — the
       // keep-every-row cap bites — while src1..src4 sample at descending
@@ -1557,7 +2413,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p17_web_intake_incr" -> { (s, dir) =>
+    Gate("p17_web_intake_incr", p17OracleSql) { (s, dir) =>
       // P17: the intake chain against a LIVE corpus. Batch 1 = docs with
       // doc_id % 3 != 2 under unique already-canonical URLs. Batch 2 =
       // the % 3 == 2 docs in four planted roles by doc_id % 5: 0 =
@@ -1603,7 +2459,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p16_web_intake" -> { (s, dir) =>
+    Gate("p16_web_intake", p16OracleSql) { (s, dir) =>
       // P16: the RefinedWeb/CCNet-style web-corpus INTAKE chain — the
       // seventh-wave operators composed in production order as one lazy
       // plan: URL-level dedup (D15) before any content work, canonical
@@ -1655,7 +2511,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p11_curation_v3" -> { (s, dir) =>
+    Gate("p11_curation_v3", p11OracleSql) { (s, dir) =>
       // P11: curation pipeline v3 — the third-wave operators composed in
       // production order as ONE lazy plan: learned quality gate (T21, spam
       // dropped BEFORE any dedup — the X11 order), corpus-wide line dedup
@@ -1673,7 +2529,27 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p14_corpus_refresh" -> { (s, dir) =>
+    Gate("p14_corpus_refresh",
+      // P14: first-arrival-wins over the identical planted union — batch 1
+      // incumbents (b=0) beat everything; within a batch the min id wins
+      """WITH all_docs AS (
+        |  SELECT doc_id, lang, source, n_chars, text,
+        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
+        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
+        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
+        |),
+        |ranked AS (
+        |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
+        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
+        |  FROM all_docs
+        |)
+        |SELECT doc_id, lang, source, n_chars, content_hash
+        |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // P14: the incremental crawl-ingest loop — bootstrap the corpus from
       // batch 1 (doc_id % 3 ≠ 2), then land a second crawl that mixes the
       // genuinely-new batch-2 docs with PLANTED noise a real crawl always
@@ -1707,7 +2583,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p13_corpus_build" -> { (s, dir) =>
+    Gate("p13_corpus_build", p13OracleSql) { (s, dir) =>
       // P13: the whole corpus build, raw dump to training shards, as ONE
       // derivation + ONE atomic publication: p11's curation/mixture chain
       // (T21 quality gate, D11 line dedup, D12 span removal, P10 budget
@@ -1737,7 +2613,40 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p12_shard_export" -> { (s, dir) =>
+    Gate("p12_shard_export",
+      // P12: t12's packing fragment over the T2-quality-filtered corpus,
+      // joined to the per-shard manifest stats — the whole export replayed
+      """WITH q AS (
+        |  SELECT doc_id, text FROM documents
+        |  WHERE length(text) >= 100
+        |    AND (CASE WHEN length(text) = 0 THEN 0.0
+        |         ELSE CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
+        |              / length(text) END) < 0.1
+        |), t AS (
+        |  SELECT doc_id,
+        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS toks,
+        |    md5(CAST(doc_id AS VARCHAR)) AS u,
+        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range(1, 9),
+        |        i -> CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT))),
+        |      (a, b) -> a * 16 + b) % 4 AS shard
+        |  FROM q
+        |), o AS (
+        |  SELECT doc_id, shard, toks,
+        |    CAST(coalesce(sum(toks) OVER (PARTITION BY shard ORDER BY u, doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
+        |  FROM t
+        |), map AS (
+        |  SELECT doc_id, shard, off // 256 AS seq_id, off % 256 AS seq_off, toks FROM o
+        |), stats AS (
+        |  SELECT shard, CAST(count(*) AS BIGINT) AS shard_docs,
+        |         CAST(sum(toks) AS BIGINT) AS shard_tokens,
+        |         CAST((sum(toks) + 255) // 256 AS BIGINT) AS shard_seqs
+        |  FROM map GROUP BY shard
+        |)
+        |SELECT m.doc_id, m.shard, m.seq_id, m.seq_off,
+        |       s.shard_docs, s.shard_tokens, s.shard_seqs
+        |FROM map m JOIN stats s USING (shard)""".stripMargin) { (s, dir) =>
       // P12: the export step a training run actually consumes — quality
       // gate (T2) → token counts → deterministic hash-shard packing into
       // 256-token sequences (T12) → per-shard manifest stats — published
@@ -1765,7 +2674,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "p9_hybrid_search" -> { (s, dir) =>
+    Gate("p9_hybrid_search", p9OracleSql) { (s, dir) =>
       // P9: hybrid retrieval — the RAG-corpus query shape: integer-BM25
       // keyword top-30 fused with exact-cosine vector top-30 (query = the
       // embedding of id 0) by reciprocal-rank fusion (T20 × S1 ×
@@ -1789,7 +2698,7 @@ object LlmOps {
       Search.rrfFuse(Seq(bm, ann), "doc_id", k = 20)
     },
 
-    "p3_prep_pipeline" -> { (s, dir) =>
+    Gate("p3_prep_pipeline", p3OracleSql) { (s, dir) =>
       // the composed prep flow a training pipeline actually runs — quality
       // filter (T2) → exact dedup, min-id winner (D1) → deterministic split
       // assignment (T6) — as ONE lazy plan: filter and hash are projections,
@@ -1804,14 +2713,73 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    "m1_multimodal" -> { (s, dir) =>
+    Gate("m1_multimodal",
+      // The M1 feature extraction re-derived byte-by-byte: payload = utf-8
+      // bytes (hex-decomposed), checksum = fold(c*31 + byte) with signed
+      // 64-bit WRAPAROUND emulated in HUGEINT (DuckDB BIGINT overflow throws,
+      // JVM long arithmetic wraps), hist_0 = count of bytes ≡ 0 (mod 16).
+      // Verifies the mapPartitions plumbing end to end — only the codec body
+      // itself is the declared stub.
+      """WITH m AS (
+        |  SELECT CAST(doc_id AS BIGINT) AS media_id,
+        |    CASE WHEN doc_id % 3 = 0 THEN 'image'
+        |         WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
+        |    encode(text) AS payload
+        |  FROM documents
+        |), hx AS (
+        |  SELECT media_id, modality, octet_length(payload) AS n_bytes, hex(payload) AS h FROM m
+        |), bytes AS (
+        |  SELECT media_id, modality, n_bytes,
+        |    list_transform(range(0, CAST(n_bytes AS INT)),
+        |      i -> (instr('0123456789ABCDEF', substr(h, 2*i+1, 1)) - 1) * 16
+        |         + (instr('0123456789ABCDEF', substr(h, 2*i+2, 1)) - 1)) AS bs
+        |  FROM hx
+        |), feat AS (
+        |  SELECT media_id, modality, CAST(n_bytes AS BIGINT) AS n_bytes,
+        |    list_reduce(list_prepend(CAST(17 AS HUGEINT), list_transform(bs, b -> CAST(b AS HUGEINT))),
+        |      (acc, b) -> (acc * 31 + b) % CAST('18446744073709551616' AS HUGEINT)) AS c_unsigned,
+        |    CAST(len(list_filter(bs, b -> b % 16 = 0)) AS BIGINT) AS hist_0
+        |  FROM bytes
+        |)
+        |SELECT media_id, modality, n_bytes,
+        |  CAST(CASE WHEN c_unsigned >= CAST('9223372036854775808' AS HUGEINT)
+        |       THEN c_unsigned - CAST('18446744073709551616' AS HUGEINT)
+        |       ELSE c_unsigned END AS BIGINT) AS checksum,
+        |  hist_0
+        |FROM feat""".stripMargin) { (s, dir) =>
       val media = Multimodal.asMediaCorpus(Tables(s, dir).documents, "doc_id", "text")
       Multimodal.extractFeatures(s, media).toDF()
         .select(col("media_id"), col("modality"), col("n_bytes"), col("checksum"),
           element_at(col("histogram"), 1).as("hist_0"))
     },
 
-    "m4_perceptual_dedup" -> { (s, dir) =>
+    Gate("m4_perceptual_dedup",
+      // M4: the phash — hex-decoded payload bytes → 16-bucket histogram →
+      // above-even-share bits — and the min-id group collapse, re-derived
+      // from scratch (m1's byte-extraction idiom)
+      """WITH m AS (
+        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload
+        |  FROM documents
+        |), hx AS (
+        |  SELECT media_id, octet_length(payload) AS n_bytes, hex(payload) AS h FROM m
+        |), bytes AS (
+        |  SELECT media_id, CAST(n_bytes AS BIGINT) AS n,
+        |    list_transform(range(0, CAST(n_bytes AS INT)),
+        |      i -> (instr('0123456789ABCDEF', substr(h, 2*i+1, 1)) - 1) * 16
+        |         + (instr('0123456789ABCDEF', substr(h, 2*i+2, 1)) - 1)) AS bs
+        |  FROM hx
+        |), buckets AS (
+        |  SELECT media_id, n, unnest(list_transform(bs, b -> b % 16)) AS bucket FROM bytes
+        |), g AS (
+        |  SELECT media_id, bucket, CAST(count(*) AS BIGINT) AS c, any_value(n) AS n
+        |  FROM buckets GROUP BY 1, 2
+        |), p AS (
+        |  SELECT media_id,
+        |    CAST(sum(CASE WHEN c * 16 >= n THEN 1 << bucket ELSE 0 END) AS BIGINT) AS phash
+        |  FROM g GROUP BY 1
+        |), c2 AS (SELECT phash, min(media_id) AS canonical_id FROM p GROUP BY 1)
+        |SELECT media_id, canonical_id, phash FROM p JOIN c2 USING (phash)
+        |ORDER BY media_id""".stripMargin) { (s, dir) =>
       // perceptual media dedup: codec-seam features → 16-bit histogram
       // aHash → canonical min id per exact phash group (62 groups at
       // sf0.01). Integer comparisons only, so DuckDB re-derives hash and
@@ -1821,7 +2789,36 @@ object LlmOps {
       Multimodal.perceptualDedup(s, media).orderBy("media_id")
     },
 
-    "m6_interleave_multi" -> { (s, dir) =>
+    Gate("m6_interleave_multi",
+      // M6: the m5 replay with a second image stream and text at 2^31-1
+      s"""WITH items AS (
+         |  SELECT doc_id AS id, 0 AS item_idx, 'image' AS kind,
+         |    CAST((((doc_id % 64) * 16 + 16 + 13) // 14)
+         |       * (((doc_id % 48) * 16 + 16 + 13) // 14) AS BIGINT) AS n_tokens
+         |  FROM documents WHERE doc_id % 3 = 0
+         |  UNION ALL
+         |  SELECT doc_id, 1, 'image',
+         |    CAST((((doc_id % 32) * 16 + 16 + 13) // 14)
+         |       * (((doc_id % 24) * 16 + 16 + 13) // 14) AS BIGINT)
+         |  FROM documents WHERE doc_id % 6 = 0
+         |  UNION ALL
+         |  SELECT doc_id, 2147483647, 'text',
+         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+         |  FROM documents
+         |), t AS (
+         |  SELECT *, md5(CAST(id AS VARCHAR)) AS u,
+         |    ${md5UnitSql("id")} % 8 AS shard
+         |  FROM items
+         |), o AS (
+         |  SELECT id, item_idx, kind, n_tokens, shard,
+         |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
+         |      ORDER BY u, id, item_idx
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
+         |  FROM t
+         |)
+         |SELECT id AS doc_id, item_idx, kind, n_tokens, shard,
+         |  off // 512 AS seq_id, off % 512 AS seq_off
+         |FROM o ORDER BY doc_id, item_idx""".stripMargin) { (s, dir) =>
       // multi-image interleaving: mod-3 docs carry an image at position 0
       // (the m5 dims), mod-6 docs a SECOND image at position 1 with its
       // own dims — every quantity a pure function of doc_id, so DuckDB
@@ -1843,7 +2840,34 @@ object LlmOps {
         .orderBy("doc_id", "item_idx")
     },
 
-    "m5_interleaved_pack" -> { (s, dir) =>
+    Gate("m5_interleaved_pack",
+      // M5: t12's replay at item granularity — image items only for mod-3
+      // docs (asMediaCorpus's modality rule), patch-token cost re-derived
+      // from the same width/height pure functions of doc_id, one added
+      // item_idx ordering key keeping a doc's image ahead of its text.
+      s"""WITH items AS (
+         |  SELECT doc_id AS id, 0 AS item_idx, 'image' AS kind,
+         |    CAST((((doc_id % 64) * 16 + 16 + 13) // 14)
+         |       * (((doc_id % 48) * 16 + 16 + 13) // 14) AS BIGINT) AS n_tokens
+         |  FROM documents WHERE doc_id % 3 = 0
+         |  UNION ALL
+         |  SELECT doc_id, 1, 'text',
+         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
+         |  FROM documents
+         |), t AS (
+         |  SELECT *, md5(CAST(id AS VARCHAR)) AS u,
+         |    ${md5UnitSql("id")} % 8 AS shard
+         |  FROM items
+         |), o AS (
+         |  SELECT id, item_idx, kind, n_tokens, shard,
+         |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
+         |      ORDER BY u, id, item_idx
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
+         |  FROM t
+         |)
+         |SELECT id AS doc_id, item_idx, kind, n_tokens, shard,
+         |  off // 512 AS seq_id, off % 512 AS seq_off
+         |FROM o ORDER BY doc_id, item_idx""".stripMargin) { (s, dir) =>
       // interleaved multimodal packing: the media corpus's image rows
       // (mod-3 docs under asMediaCorpus's deterministic modality) fold
       // into the packed stream ahead of their doc's text, costed at
@@ -1859,7 +2883,38 @@ object LlmOps {
         .orderBy("doc_id", "item_idx")
     },
 
-    "p4_multimodal_ann" -> { (s, dir) =>
+    Gate("p4_multimodal_ann",
+      // P4: the full multimodal chain re-derived — m1's byte decode, the
+      // 16-bin histogram as a double vector, s1's left-fold double cosine
+      // and (desc, id) rank. Rounding only on the EMITTED cosine (6dp), the
+      // ranking runs on unrounded doubles, like s1.
+      """WITH m AS (
+        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload FROM documents
+        |), hx AS (
+        |  SELECT media_id, octet_length(payload) AS n_bytes, hex(payload) AS h FROM m
+        |), bytes AS (
+        |  SELECT media_id, list_transform(range(0, CAST(n_bytes AS INT)),
+        |    i -> (instr('0123456789ABCDEF', substr(h, 2*i+1, 1)) - 1) * 16
+        |       + (instr('0123456789ABCDEF', substr(h, 2*i+2, 1)) - 1)) AS bs
+        |  FROM hx WHERE n_bytes > 0
+        |), emb AS (
+        |  SELECT media_id, list_transform(range(0, 16),
+        |    k -> CAST(len(list_filter(bs, b -> b % 16 = k)) AS DOUBLE)) AS e
+        |  FROM bytes
+        |), scored AS (
+        |  SELECT q.media_id AS query_id, c.media_id AS neighbor_id,
+        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
+        |      list_transform(range(1, 17), i -> q.e[i] * c.e[i])), (a,b) -> a + b)
+        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+        |         list_transform(range(1, 17), i -> q.e[i] * q.e[i])), (a,b) -> a + b))
+        |       * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+        |           list_transform(range(1, 17), i -> c.e[i] * c.e[i])), (a,b) -> a + b))) AS cosine
+        |  FROM emb q, emb c WHERE q.media_id < 3 AND q.media_id <> c.media_id
+        |)
+        |SELECT query_id, neighbor_id, round(cosine, 6) AS cosine FROM (
+        |  SELECT query_id, neighbor_id, cosine,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
+        |  FROM scored) WHERE rk <= 5""".stripMargin) { (s, dir) =>
       // composed multimodal retrieval: media corpus → per-partition batch
       // feature extraction (M1's codec seam; the 16-bin byte histogram is
       // the deterministic stand-in embedding) → exact cosine top-k through
@@ -1879,7 +2934,19 @@ object LlmOps {
         .orderBy("query_id", "neighbor_id")
     },
 
-    "m2_thumbnails" -> { (s, dir) =>
+    Gate("m2_thumbnails",
+      // M2: pixel i = payload byte at floor(i·len/64); the hex pair at that
+      // index IS the byte, so the thumbnail reassembles from substr slices.
+      """WITH m AS (
+        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload
+        |  FROM documents WHERE length(text) > 0
+        |), hx AS (
+        |  SELECT media_id, octet_length(payload) AS n, hex(payload) AS h FROM m
+        |)
+        |SELECT media_id, 8 AS width, 8 AS height,
+        |  md5(array_to_string(list_transform(range(0, 64),
+        |    i -> substr(h, 2*CAST((i*n)//64 AS INT)+1, 2)), '')) AS pix_hash
+        |FROM hx""".stripMargin) { (s, dir) =>
       // the resize stage's plumbing, byte-level gated: pixel i is the
       // payload byte at floor(i·len/64) (the stub's deterministic
       // sampling), so DuckDB re-derives the full 64-byte thumbnail from
@@ -1892,7 +2959,33 @@ object LlmOps {
         .orderBy("media_id")
     },
 
-    "m3_frames" -> { (s, dir) =>
+    Gate("m3_frames",
+      // M3: frame f starts at trunc((f·5000/dur)·len); the 32-byte window is
+      // the corresponding hex slice (clamped — the final frame may be empty).
+      """WITH m AS (
+        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload,
+        |    CAST(length(text) AS BIGINT) * 40 AS dur
+        |  FROM documents WHERE length(text) > 0
+        |), hx AS (
+        |  SELECT media_id, dur, octet_length(payload) AS n, hex(payload) AS h FROM m
+        |), f AS (
+        |  SELECT media_id, dur, n, h,
+        |    unnest(range(0, CAST(dur // 5000 + 1 AS INT))) AS fno
+        |  FROM hx
+        |), w AS (
+        |  SELECT media_id, CAST(fno AS INT) AS frame_no,
+        |    CAST(fno * 5000 AS BIGINT) AS offset_ms,
+        |    CAST(trunc((CAST(fno * 5000 AS DOUBLE) / dur) * n) AS INT) AS s0, n, h
+        |  FROM f
+        |), b AS (
+        |  SELECT media_id, frame_no, offset_ms,
+        |    least(s0, least(n, s0 + 32)) AS s1, least(n, s0 + 32) AS e1, h
+        |  FROM w
+        |)
+        |SELECT media_id, frame_no, offset_ms,
+        |  CAST(e1 - s1 AS INT) AS frame_len,
+        |  md5(substr(h, 2*s1 + 1, 2*(e1 - s1))) AS frame_hash
+        |FROM b""".stripMargin) { (s, dir) =>
       // the frame-sampling stage (1→N flatMap per media row): one frame
       // per 5 s of stub duration, each a 32-byte window at the
       // proportional offset — frame count, offsets, window bounds and
@@ -1906,7 +2999,24 @@ object LlmOps {
         .orderBy("media_id", "frame_no")
     },
 
-    "p2_sql_surface" -> { (s, dir) =>
+    Gate("p2_sql_surface",
+      // P2: fingerprint re-derived as in t4; shingle count re-derived over
+      // STRING shingles (d4's construction) — distinct-hash count equals
+      // distinct-string count absent xxhash64 collisions.
+      """WITH toks AS (
+        |  SELECT doc_id, text,
+        |    regexp_split_to_array(lower(trim(text)), '\s+') AS t
+        |  FROM documents
+        |)
+        |SELECT doc_id,
+        |  list_reduce(
+        |    list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(regexp_extract_all(text, '[\s\S]'), c -> CAST(ascii(c) AS BIGINT))),
+        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint,
+        |  CAST(len(list_distinct(
+        |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
+        |         ELSE list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2], ' ')) END)) AS BIGINT) AS n_shingles
+        |FROM toks""".stripMargin) { (s, dir) =>
       // P2 driver-visible: the SQL function surface. `register` writes the
       // same FunctionRegistry entries `GraftExtensions.injectFunction` does
       // (both consume GraftFunctions.definitions), so a hash-green result
@@ -2989,1284 +4099,4 @@ object LlmOps {
         .replace("@HWLIT@", graft.operators.TextAnalysis.HalfwidthTo.replace("'", "''")))
 
 
-  def oracleSql: Map[String, String] = Map(
-    "t1_langid" -> t1OracleSql,
-    "t6_hash_split" -> t6OracleSql,
-    "p3_prep_pipeline" -> p3OracleSql,
-    "p5_curation_v2" -> p5OracleSql,
-
-    // P6: W20's recursive-CTE closure fragment + T6's shared md5
-    // fragments, chained — topic spread, root-2 selection, depth-3
-    // ancestor grouping and the split case all re-derived exactly.
-    "p18_temporal_curation" ->
-      s"""WITH RECURSIVE e0 AS (
-         |  SELECT id AS src, id // 2 AS dst,
-         |    CASE WHEN id % 3 = 0
-         |      THEN make_timestamp(CAST(1900 + id % 50 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vfrom,
-         |    CASE WHEN id % 4 = 0
-         |      THEN make_timestamp(CAST(1940 + id % 40 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vuntil
-         |  FROM range(2, 4096) t(id)
-         |), e AS (
-         |  SELECT src, dst FROM e0
-         |  WHERE (vfrom IS NULL OR vfrom <= TIMESTAMP '1950-06-01 00:00:00')
-         |    AND (vuntil IS NULL OR vuntil > TIMESTAMP '1950-06-01 00:00:00')
-         |), cl AS (
-         |  SELECT src, dst FROM e
-         |  UNION
-         |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
-         |), topics AS (
-         |  SELECT doc_id, 2048 + (${md5UnitSql("doc_id")} % 2048) AS topic
-         |  FROM documents
-         |), sel AS (
-         |  SELECT doc_id, topic FROM topics
-         |  WHERE topic IN (SELECT src FROM cl WHERE dst = 2)
-         |), comp AS (
-         |  SELECT doc_id, topic,
-         |    coalesce((SELECT min(m.dst) FROM (
-         |      SELECT src, dst FROM cl WHERE dst BETWEEN 8 AND 15
-         |      UNION SELECT id AS src, id AS dst FROM range(8, 16) t(id)) m
-         |      WHERE m.src = sel.topic), topic) AS component
-         |  FROM sel
-         |)
-         |SELECT doc_id, topic, component, $splitCaseSql AS split
-         |FROM (SELECT doc_id, topic, component, ${md5UnitSql("component")} AS u
-         |      FROM comp)""".stripMargin,
-
-    "p6_ontology_curation" ->
-      s"""WITH RECURSIVE e AS (
-         |  SELECT id AS src, id // 2 AS dst FROM range(2, 4096) t(id)
-         |), cl AS (
-         |  SELECT src, dst FROM e
-         |  UNION
-         |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
-         |), topics AS (
-         |  SELECT doc_id, 2048 + (${md5UnitSql("doc_id")} % 2048) AS topic
-         |  FROM documents
-         |), sel AS (
-         |  SELECT doc_id, topic FROM topics
-         |  WHERE topic IN (SELECT src FROM cl WHERE dst = 2)
-         |), comp AS (
-         |  SELECT doc_id, topic,
-         |    coalesce((SELECT min(m.dst) FROM (
-         |      SELECT src, dst FROM cl WHERE dst BETWEEN 8 AND 15
-         |      UNION SELECT id AS src, id AS dst FROM range(8, 16) t(id)) m
-         |      WHERE m.src = sel.topic), topic) AS component
-         |  FROM sel
-         |)
-         |SELECT doc_id, topic, component, $splitCaseSql AS split
-         |FROM (SELECT doc_id, topic, component, ${md5UnitSql("component")} AS u
-         |      FROM comp)""".stripMargin,
-
-    // X5 batch equivalent: the planted subset of keep-first-per-simhash
-    // drops is structurally the full copy set (see the gate comment).
-    "x5_neardedup_batch" ->
-      "SELECT doc_id + 1000000 AS doc_id FROM documents",
-
-    // X11: planted drops gated on BOTH quality predicates — the original's
-    // over the raw text, the copy's over the reconstructed token-reversed
-    // text (whitespace collapses to single spaces, so the lengths differ).
-    "x11_stream_curation" ->
-      """WITH perm AS (
-        |  SELECT doc_id, text,
-        |    array_to_string(list_reverse(regexp_split_to_array(lower(trim(text)), '\s+')), ' ') AS ptext
-        |  FROM documents
-        |)
-        |SELECT doc_id + 1000000 AS doc_id FROM perm
-        |WHERE length(text) >= 100 AND
-        |  CASE WHEN length(text) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(text) END < 0.1
-        |  AND length(ptext) >= 100 AND
-        |  CASE WHEN length(ptext) = 0 THEN 0.0
-        |       ELSE CAST(length(regexp_replace(ptext, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE) / length(ptext) END < 0.1""".stripMargin,
-
-    // D7 re-derived over STRING shingles (hash-set ≡ string-set counts
-    // absent collisions): train docs whose shingle set intersects the eval
-    // slice's.
-    "d7_decontaminate" -> decontOracleSql,
-    // D8 = the same semantic set: bloom false negatives are impossible, so
-    // exact ∩ bloom must equal exact — the d7 derivation verbatim.
-    "d8_decontaminate_bloom" -> decontOracleSql,
-
-    "t8_pii_redact" -> t8OracleSql,
-
-    // D9: exact cross-set Jaccard re-derived generically (string shingles ≡
-    // hash shingles absent collisions — the d4 argument). Eval ids are all
-    // ≥ 2e6 and pair ids are ordered, so cross pairs are (train, eval).
-    "d9_decontaminate_near" ->
-      """WITH corpus AS (
-        |  SELECT doc_id AS id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 2000000 AS id, text || ' tail' AS text
-        |  FROM documents WHERE doc_id % 11 = 0
-        |), toks AS (
-        |  SELECT id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM corpus
-        |), sets AS (
-        |  SELECT id, list_distinct(
-        |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |         ELSE list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2], ' ')) END) AS s
-        |  FROM toks
-        |), ex AS (
-        |  SELECT id, unnest(s) AS sh FROM sets
-        |), inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.id < b.id
-        |  GROUP BY 1, 2
-        |), sizes AS (
-        |  SELECT id, len(s) AS sz FROM sets
-        |), pairs AS (
-        |  SELECT id_a, id_b FROM (
-        |    SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-        |    FROM inter JOIN sizes sa ON inter.id_a = sa.id
-        |               JOIN sizes sb ON inter.id_b = sb.id
-        |  ) WHERE jaccard >= 0.5
-        |)
-        |SELECT DISTINCT id_a AS doc_id FROM pairs
-        |WHERE id_b >= 2000000 AND id_a < 2000000""".stripMargin,
-
-    "t9_top_ngrams" ->
-      """WITH toks AS (
-        |  SELECT lang, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
-        |), bi AS (
-        |  SELECT lang, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS ngram
-        |  FROM toks WHERE len(t) >= 2
-        |), c AS (
-        |  SELECT lang, ngram, count(*) AS n FROM bi GROUP BY lang, ngram
-        |)
-        |SELECT lang, ngram, n FROM (
-        |  SELECT lang, ngram, n,
-        |    row_number() OVER (PARTITION BY lang ORDER BY n DESC, ngram) AS rn
-        |  FROM c
-        |) WHERE rn <= 5""".stripMargin,
-
-    // T18: same bigram explode as t9, self-joined through the corpus
-    // frequency table; integer division keeps the score engine-exact
-    "t18_bigram_lm" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
-        |), bi AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS ngram
-        |  FROM toks WHERE len(t) >= 2
-        |), cf AS (
-        |  SELECT ngram, CAST(count(*) AS BIGINT) AS cf FROM bi GROUP BY ngram
-        |)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |  CAST((sum(cf) // count(*)) * 1000
-        |    + ((sum(cf) % count(*)) * 1000) // count(*) AS BIGINT)
-        |    AS avg_bigram_cf_x1000
-        |FROM bi JOIN cf USING (ngram)
-        |GROUP BY doc_id""".stripMargin,
-
-    // T20: integer-unit BM25 replayed end to end — tokenize, postings
-    // restricted to the query, df, interpolated-log2 idf (bit length +
-    // mantissa interpolation), saturation, length norm, top-50 — all
-    // BIGINT floor division, so the hash is exact (the shared fragment
-    // wraps count sums back to BIGINT where DuckDB widens to HUGEINT).
-    "t20_bm25_search" ->
-      ("WITH " + bm25OracleSql("documents",
-        Seq("dup", "merge", "vector", "spark", "quantum"), 50)),
-
-    // P8: the curation chain's survivors (cleaned text) feed the same
-    // BM25 fragment — search over the CURATED corpus, every upstream
-    // stage biting on the final hash
-    "p8_curated_search" -> p8OracleSql,
-    "p9_hybrid_search" -> p9OracleSql,
-    "p10_budget_mixture" -> p10OracleSql,
-    "t21_learned_quality" -> t21OracleSql,
-    "p11_curation_v3" -> p11OracleSql,
-    "p16_web_intake" -> p16OracleSql,
-    "p17_web_intake_incr" -> p17OracleSql,
-    "p13_corpus_build" -> p13OracleSql,
-
-    // P14: first-arrival-wins over the identical planted union — batch 1
-    // incumbents (b=0) beat everything; within a batch the min id wins
-    "p14_corpus_refresh" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, lang, source, n_chars, text,
-        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
-        |),
-        |ranked AS (
-        |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
-        |  FROM all_docs
-        |)
-        |SELECT doc_id, lang, source, n_chars, content_hash
-        |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // P7: t18's scoring CTEs + the weight band + t19's md5 draw + the
-    // lang join, all replayed in one SQL pipeline
-    "p7_quality_weighted_sample" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
-        |), bi AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS ngram
-        |  FROM toks WHERE len(t) >= 2
-        |), cf AS (
-        |  SELECT ngram, CAST(count(*) AS BIGINT) AS cf FROM bi GROUP BY ngram
-        |), scored AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |    CAST((sum(cf) // count(*)) * 1000
-        |      + ((sum(cf) % count(*)) * 1000) // count(*) AS BIGINT) AS score
-        |  FROM bi JOIN cf USING (ngram) GROUP BY doc_id
-        |), w AS (
-        |  SELECT doc_id, n_bigrams, score,
-        |    CAST(least(8, 1 + score // 1000) AS BIGINT) AS wt FROM scored
-        |), keyed AS (
-        |  SELECT doc_id, n_bigrams, score, wt,
-        |    list_min(list_transform(range(1, wt + 1),
-        |      j -> md5(7 || ':' || doc_id || ':' || j))) AS wk
-        |  FROM w)
-        |SELECT k.doc_id, d.lang, k.n_bigrams, k.score AS avg_bigram_cf_x1000, k.wt
-        |FROM keyed k JOIN documents d USING (doc_id)
-        |ORDER BY wk LIMIT 150""".stripMargin,
-
-    // T19: the same md5 copy expansion — min over w copy keys, smallest k
-    "t19_weighted_sample" ->
-      """WITH w AS (
-        |  SELECT doc_id, lang, CAST((n_chars % 5) + 1 AS BIGINT) AS wt FROM documents
-        |), keyed AS (
-        |  SELECT doc_id, lang, wt,
-        |    list_min(list_transform(range(1, wt + 1),
-        |      j -> md5(7 || ':' || doc_id || ':' || j))) AS wk
-        |  FROM w)
-        |SELECT doc_id, lang, wt FROM keyed ORDER BY wk LIMIT 200""".stripMargin,
-
-    // T12: the packing is md5 order + prefix-sum + integer division — all
-    // exactly re-derivable (the shard is t6's hex-fold md5 unit mod 4; sums
-    // wrapped back to BIGINT because DuckDB sum(BIGINT) widens to HUGEINT).
-    "t12_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS toks,
-        |    md5(CAST(doc_id AS VARCHAR)) AS u,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1, 9),
-        |        i -> CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT))),
-        |      (a, b) -> a * 16 + b) % 4 AS shard
-        |  FROM documents
-        |), o AS (
-        |  SELECT doc_id, shard,
-        |    CAST(coalesce(sum(toks) OVER (PARTITION BY shard ORDER BY u, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-        |  FROM t
-        |)
-        |SELECT doc_id, shard, off // 256 AS seq_id, off % 256 AS seq_off FROM o""".stripMargin,
-
-    // M6: the m5 replay with a second image stream and text at 2^31-1
-    "m6_interleave_multi" ->
-      s"""WITH items AS (
-         |  SELECT doc_id AS id, 0 AS item_idx, 'image' AS kind,
-         |    CAST((((doc_id % 64) * 16 + 16 + 13) // 14)
-         |       * (((doc_id % 48) * 16 + 16 + 13) // 14) AS BIGINT) AS n_tokens
-         |  FROM documents WHERE doc_id % 3 = 0
-         |  UNION ALL
-         |  SELECT doc_id, 1, 'image',
-         |    CAST((((doc_id % 32) * 16 + 16 + 13) // 14)
-         |       * (((doc_id % 24) * 16 + 16 + 13) // 14) AS BIGINT)
-         |  FROM documents WHERE doc_id % 6 = 0
-         |  UNION ALL
-         |  SELECT doc_id, 2147483647, 'text',
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-         |  FROM documents
-         |), t AS (
-         |  SELECT *, md5(CAST(id AS VARCHAR)) AS u,
-         |    ${md5UnitSql("id")} % 8 AS shard
-         |  FROM items
-         |), o AS (
-         |  SELECT id, item_idx, kind, n_tokens, shard,
-         |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
-         |      ORDER BY u, id, item_idx
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-         |  FROM t
-         |)
-         |SELECT id AS doc_id, item_idx, kind, n_tokens, shard,
-         |  off // 512 AS seq_id, off % 512 AS seq_off
-         |FROM o ORDER BY doc_id, item_idx""".stripMargin,
-
-    // M5: t12's replay at item granularity — image items only for mod-3
-    // docs (asMediaCorpus's modality rule), patch-token cost re-derived
-    // from the same width/height pure functions of doc_id, one added
-    // item_idx ordering key keeping a doc's image ahead of its text.
-    "m5_interleaved_pack" ->
-      s"""WITH items AS (
-         |  SELECT doc_id AS id, 0 AS item_idx, 'image' AS kind,
-         |    CAST((((doc_id % 64) * 16 + 16 + 13) // 14)
-         |       * (((doc_id % 48) * 16 + 16 + 13) // 14) AS BIGINT) AS n_tokens
-         |  FROM documents WHERE doc_id % 3 = 0
-         |  UNION ALL
-         |  SELECT doc_id, 1, 'text',
-         |    CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT)
-         |  FROM documents
-         |), t AS (
-         |  SELECT *, md5(CAST(id AS VARCHAR)) AS u,
-         |    ${md5UnitSql("id")} % 8 AS shard
-         |  FROM items
-         |), o AS (
-         |  SELECT id, item_idx, kind, n_tokens, shard,
-         |    CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
-         |      ORDER BY u, id, item_idx
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-         |  FROM t
-         |)
-         |SELECT id AS doc_id, item_idx, kind, n_tokens, shard,
-         |  off // 512 AS seq_id, off % 512 AS seq_off
-         |FROM o ORDER BY doc_id, item_idx""".stripMargin,
-
-    // P12: t12's packing fragment over the T2-quality-filtered corpus,
-    // joined to the per-shard manifest stats — the whole export replayed
-    "p12_shard_export" ->
-      """WITH q AS (
-        |  SELECT doc_id, text FROM documents
-        |  WHERE length(text) >= 100
-        |    AND (CASE WHEN length(text) = 0 THEN 0.0
-        |         ELSE CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
-        |              / length(text) END) < 0.1
-        |), t AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS toks,
-        |    md5(CAST(doc_id AS VARCHAR)) AS u,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(range(1, 9),
-        |        i -> CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1 AS BIGINT))),
-        |      (a, b) -> a * 16 + b) % 4 AS shard
-        |  FROM q
-        |), o AS (
-        |  SELECT doc_id, shard, toks,
-        |    CAST(coalesce(sum(toks) OVER (PARTITION BY shard ORDER BY u, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS off
-        |  FROM t
-        |), map AS (
-        |  SELECT doc_id, shard, off // 256 AS seq_id, off % 256 AS seq_off, toks FROM o
-        |), stats AS (
-        |  SELECT shard, CAST(count(*) AS BIGINT) AS shard_docs,
-        |         CAST(sum(toks) AS BIGINT) AS shard_tokens,
-        |         CAST((sum(toks) + 255) // 256 AS BIGINT) AS shard_seqs
-        |  FROM map GROUP BY shard
-        |)
-        |SELECT m.doc_id, m.shard, m.seq_id, m.seq_off,
-        |       s.shard_docs, s.shard_tokens, s.shard_seqs
-        |FROM map m JOIN stats s USING (shard)""".stripMargin,
-
-    // T13: the full frequent-line scrub re-derived generically — plant the
-    // same chrome, split on newlines, count each trimmed line once per doc,
-    // threshold at ceil(0.5·N) (identical double ceil in both engines),
-    // anti-filter, reassemble in line order. Docs reduced to nothing come
-    // back as '' via the left join.
-    "t13_boilerplate" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    'ACCEPT COOKIES TO CONTINUE' || chr(10) || text ||
-        |    CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'rare per-page notice' ELSE '' END ||
-        |    chr(10) || 'Copyright Example Site' AS text
-        |  FROM documents
-        |), t AS (
-        |  SELECT doc_id, string_split(text, chr(10)) AS ls FROM p
-        |), ex AS (
-        |  SELECT doc_id, i, ls[i+1] AS l, trim(ls[i+1]) AS tl
-        |  FROM t, unnest(range(len(ls))) AS u(i)
-        |), freq AS (
-        |  SELECT tl FROM (
-        |    SELECT tl, count(DISTINCT doc_id) AS d FROM ex WHERE tl <> '' GROUP BY tl
-        |  ) WHERE d >= greatest(2, CAST(ceil(0.5 * (SELECT count(*) FROM documents)) AS BIGINT))
-        |), kept AS (
-        |  SELECT doc_id, i, l FROM ex WHERE tl NOT IN (SELECT tl FROM freq)
-        |)
-        |SELECT d.doc_id, coalesce(r.clean_text, '') AS clean_text
-        |FROM documents d LEFT JOIN (
-        |  SELECT doc_id, string_agg(l, chr(10) ORDER BY i) AS clean_text
-        |  FROM kept GROUP BY doc_id
-        |) r USING (doc_id)""".stripMargin,
-
-    // T14: the repetition profile is integer line/ngram counting — plant the
-    // same chrome, split lines (trimmed, non-empty) and word bigrams
-    // (lowered, \s+), count duplicates and the per-doc modal bigram. Empty
-    // list sums are NULL in DuckDB (coalesce to 0); sum(BIGINT) widens to
-    // HUGEINT (cast back); docs with < 2 tokens get their ngram stats from
-    // the LEFT JOIN's coalesce, mirroring Spark's explode_outer null row.
-    "t14_repetition" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    text ||
-        |    CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'repeated banner line' || chr(10) || 'repeated banner line' || chr(10) || 'repeated banner line' ELSE '' END ||
-        |    CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'spam spam spam spam spam spam spam spam spam spam spam spam' ELSE '' END AS text
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> len(x) > 0) AS ls,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM p
-        |), s AS (
-        |  SELECT doc_id,
-        |    CAST(len(ls) AS BIGINT) AS n_lines,
-        |    CAST(len(ls) - len(list_distinct(ls)) AS BIGINT) AS dup_lines,
-        |    CAST(coalesce(list_aggregate(list_transform(ls, x -> len(x)), 'sum'), 0)
-        |      - coalesce(list_aggregate(list_transform(list_distinct(ls), x -> len(x)), 'sum'), 0) AS BIGINT) AS dup_line_chars,
-        |    t
-        |  FROM l
-        |), e AS (
-        |  SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS g
-        |  FROM s WHERE len(t) >= 2
-        |), c AS (
-        |  SELECT doc_id, g, count(*) AS n FROM e GROUP BY doc_id, g
-        |), a AS (
-        |  SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_ngrams, CAST(max(n) AS BIGINT) AS top_ngram_n
-        |  FROM c GROUP BY doc_id
-        |)
-        |SELECT s.doc_id, s.n_lines, s.dup_lines, s.dup_line_chars,
-        |  coalesce(a.n_ngrams, 0) AS n_ngrams,
-        |  coalesce(a.top_ngram_n, 0) AS top_ngram_n,
-        |  ((s.n_lines > 0 AND s.dup_lines * 10 >= s.n_lines * 3)
-        |    OR (coalesce(a.n_ngrams, 0) > 0 AND coalesce(a.top_ngram_n, 0) * 5 >= coalesce(a.n_ngrams, 0))) AS is_repetitive
-        |FROM s LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // T10: chunk count is integer ceil arithmetic and chunk text re-joins
-    // the token window with single spaces — both fully re-derivable.
-    "t10_chunk" ->
-      """WITH t AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents
-        |), d AS (
-        |  SELECT doc_id, toks, len(toks) AS n,
-        |    CASE WHEN len(toks) <= 64 THEN 1 ELSE ((len(toks) - 64 + 47) // 48) + 1 END AS nc
-        |  FROM t
-        |)
-        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_id,
-        |  array_to_string(list_slice(toks, i*48+1, i*48+64), ' ') AS chunk_text,
-        |  CAST(least(64, n - i*48) AS BIGINT) AS n_tokens
-        |FROM d, unnest(range(nc)) AS u(i)""".stripMargin,
-
-    // d2/d3 planted-pair recall: the gates return exactly the recovered
-    // planted pairs, the oracle is the full planted set — a missed pair (or
-    // a phantom exactly-offset pair) breaks the hash. Recall is structural,
-    // not statistical: d2's copies are textually identical (est_jaccard ≡ 1,
-    // every band collides) and d3's are token-reversed (simhash is a bag
-    // function — identical signature, hamming 0), so the full pipeline
-    // (signatures → blocking → bucket join → dedup → threshold) must emit
-    // exactly these pairs at any scale factor.
-    "d2_minhash_lsh" ->
-      "SELECT doc_id AS id_a, doc_id + 1000000 AS id_b FROM documents",
-    "d3_simhash" ->
-      "SELECT doc_id AS id_a, doc_id + 1000000 AS id_b FROM documents",
-
-    // The M1 feature extraction re-derived byte-by-byte: payload = utf-8
-    // bytes (hex-decomposed), checksum = fold(c*31 + byte) with signed
-    // 64-bit WRAPAROUND emulated in HUGEINT (DuckDB BIGINT overflow throws,
-    // JVM long arithmetic wraps), hist_0 = count of bytes ≡ 0 (mod 16).
-    // Verifies the mapPartitions plumbing end to end — only the codec body
-    // itself is the declared stub.
-    "m1_multimodal" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS media_id,
-        |    CASE WHEN doc_id % 3 = 0 THEN 'image'
-        |         WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
-        |    encode(text) AS payload
-        |  FROM documents
-        |), hx AS (
-        |  SELECT media_id, modality, octet_length(payload) AS n_bytes, hex(payload) AS h FROM m
-        |), bytes AS (
-        |  SELECT media_id, modality, n_bytes,
-        |    list_transform(range(0, CAST(n_bytes AS INT)),
-        |      i -> (instr('0123456789ABCDEF', substr(h, 2*i+1, 1)) - 1) * 16
-        |         + (instr('0123456789ABCDEF', substr(h, 2*i+2, 1)) - 1)) AS bs
-        |  FROM hx
-        |), feat AS (
-        |  SELECT media_id, modality, CAST(n_bytes AS BIGINT) AS n_bytes,
-        |    list_reduce(list_prepend(CAST(17 AS HUGEINT), list_transform(bs, b -> CAST(b AS HUGEINT))),
-        |      (acc, b) -> (acc * 31 + b) % CAST('18446744073709551616' AS HUGEINT)) AS c_unsigned,
-        |    CAST(len(list_filter(bs, b -> b % 16 = 0)) AS BIGINT) AS hist_0
-        |  FROM bytes
-        |)
-        |SELECT media_id, modality, n_bytes,
-        |  CAST(CASE WHEN c_unsigned >= CAST('9223372036854775808' AS HUGEINT)
-        |       THEN c_unsigned - CAST('18446744073709551616' AS HUGEINT)
-        |       ELSE c_unsigned END AS BIGINT) AS checksum,
-        |  hist_0
-        |FROM feat""".stripMargin,
-    "d1_exact_dedup" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text)""".stripMargin,
-
-    // D11: keep-first line dedup re-derived from scratch over the same
-    // planted corpus — DuckDB groups by the trimmed line STRING where Spark
-    // groups by xxhash64 of it (the d4/d7 collision argument); the winner
-    // is the same min (doc_id, line_no) on both engines.
-    "d11_line_dedup" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    'ACCEPT COOKIES TO CONTINUE' || chr(10) || text
-        |    || CASE WHEN doc_id % 4 = 0 THEN chr(10) || 'limited time promo offer' ELSE '' END
-        |    || CASE WHEN doc_id % 6 = 0 THEN chr(10) || text ELSE '' END AS text
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id, i - 1 AS ln, trim(arr[i]) AS line
-        |  FROM (SELECT doc_id, string_split(text, chr(10)) AS arr FROM p) s,
-        |    unnest(range(1, len(arr) + 1)) AS u(i)
-        |  WHERE trim(arr[i]) <> ''
-        |), k AS (
-        |  SELECT doc_id, ln, line FROM (
-        |    SELECT doc_id, ln, line,
-        |      row_number() OVER (PARTITION BY line ORDER BY doc_id, ln) AS rk
-        |    FROM l) WHERE rk = 1
-        |), ka AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines_kept,
-        |    string_agg(line, chr(10) ORDER BY ln) AS text
-        |  FROM k GROUP BY doc_id
-        |), la AS (
-        |  SELECT doc_id, count(*) AS n_total FROM l GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(ka.text, '') AS text,
-        |  coalesce(ka.n_lines_kept, 0) AS n_lines_kept,
-        |  CAST(coalesce(la.n_total, 0) - coalesce(ka.n_lines_kept, 0) AS BIGINT) AS n_lines_dropped
-        |FROM documents d LEFT JOIN ka USING (doc_id) LEFT JOIN la USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // D12: ExactSubstr re-derived from scratch — 8-token window STRINGS
-    // grouped directly (Spark uses the order-sensitive 64-bit window-hash
-    // kernel; equal gram ⟺ equal hash mod collisions), redundant = not the
-    // group's min (doc, pos), gaps-and-islands merge at pos <= prev + 8,
-    // removal by anti-containment, clean text re-joined in token order.
-    "d12_substr_dedup" ->
-      s"""WITH p AS (
-        |  SELECT doc_id, text
-        |    || CASE WHEN doc_id % 3 = 0 THEN ' $Chunk12' ELSE '' END
-        |    || CASE WHEN doc_id % 9 = 0 THEN ' $Chunk12' ELSE '' END
-        |    || CASE WHEN doc_id % 5 = 0 THEN ' uno dos tres cuatro cinco seis siete ocho' ELSE '' END AS text
-        |  FROM documents
-        |), t AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks FROM p
-        |), g AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    array_to_string(list_slice(toks, i + 1, i + 8), ' ') AS gram
-        |  FROM t, unnest(range(0, len(toks) - 8 + 1)) AS u(i)
-        |  WHERE len(toks) >= 8
-        |), r AS (
-        |  SELECT doc_id, pos FROM (
-        |    SELECT doc_id, pos,
-        |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, pos) AS rk,
-        |      count(*) OVER (PARTITION BY gram) AS c
-        |    FROM g) WHERE c >= 2 AND rk > 1
-        |), isl AS (
-        |  SELECT doc_id, pos,
-        |    sum(CASE WHEN prev IS NOT NULL AND pos <= prev + 8 THEN 0 ELSE 1 END)
-        |      OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |  FROM (SELECT doc_id, pos,
-        |          lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev FROM r)
-        |), sp AS (
-        |  SELECT doc_id, island, min(pos) AS s, max(pos) + 8 AS e
-        |  FROM isl GROUP BY doc_id, island
-        |), agg AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-        |    CAST(sum(e - s) AS BIGINT) AS n_removed_tokens
-        |  FROM sp GROUP BY doc_id
-        |), tok AS (
-        |  SELECT doc_id, CAST(j AS BIGINT) AS pos, toks[j + 1] AS tok
-        |  FROM t, unnest(range(0, len(toks))) AS u(j)
-        |), keep AS (
-        |  SELECT k.doc_id, k.pos, k.tok FROM tok k
-        |  WHERE NOT EXISTS (SELECT 1 FROM sp
-        |    WHERE sp.doc_id = k.doc_id AND k.pos >= sp.s AND k.pos < sp.e)
-        |), ct AS (
-        |  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text
-        |  FROM keep GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.n_spans, 0) AS n_spans,
-        |  coalesce(a.n_removed_tokens, 0) AS n_removed_tokens,
-        |  coalesce(ct.clean_text, '') AS clean_text
-        |FROM documents d LEFT JOIN agg a USING (doc_id) LEFT JOIN ct USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // M4: the phash — hex-decoded payload bytes → 16-bucket histogram →
-    // above-even-share bits — and the min-id group collapse, re-derived
-    // from scratch (m1's byte-extraction idiom)
-    "m4_perceptual_dedup" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload
-        |  FROM documents
-        |), hx AS (
-        |  SELECT media_id, octet_length(payload) AS n_bytes, hex(payload) AS h FROM m
-        |), bytes AS (
-        |  SELECT media_id, CAST(n_bytes AS BIGINT) AS n,
-        |    list_transform(range(0, CAST(n_bytes AS INT)),
-        |      i -> (instr('0123456789ABCDEF', substr(h, 2*i+1, 1)) - 1) * 16
-        |         + (instr('0123456789ABCDEF', substr(h, 2*i+2, 1)) - 1)) AS bs
-        |  FROM hx
-        |), buckets AS (
-        |  SELECT media_id, n, unnest(list_transform(bs, b -> b % 16)) AS bucket FROM bytes
-        |), g AS (
-        |  SELECT media_id, bucket, CAST(count(*) AS BIGINT) AS c, any_value(n) AS n
-        |  FROM buckets GROUP BY 1, 2
-        |), p AS (
-        |  SELECT media_id,
-        |    CAST(sum(CASE WHEN c * 16 >= n THEN 1 << bucket ELSE 0 END) AS BIGINT) AS phash
-        |  FROM g GROUP BY 1
-        |), c2 AS (SELECT phash, min(media_id) AS canonical_id FROM p GROUP BY 1)
-        |SELECT media_id, canonical_id, phash FROM p JOIN c2 USING (phash)
-        |ORDER BY media_id""".stripMargin,
-
-    // Exact n-gram Jaccard re-derived from scratch: same planted corpus,
-    // word 3-shingle sets, |∩| as a count aggregation over the inverted
-    // index, |∪| from the set sizes. Spark hashes shingles (xxhash64) while
-    // this uses the strings — counts agree absent 64-bit collisions, and
-    // the result is the pure semantic set {pairs: J >= 0.5}.
-    "d4_ngram_jaccard" ->
-      """WITH corpus AS (
-        |  SELECT doc_id AS id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS id,
-        |         substr(text, 1, greatest(20, CAST(trunc(length(text)*0.9) AS INT))) AS text
-        |  FROM documents
-        |), toks AS (
-        |  SELECT id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM corpus
-        |), sets AS (
-        |  SELECT id, list_distinct(
-        |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |         ELSE list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2], ' ')) END) AS s
-        |  FROM toks
-        |), ex AS (
-        |  SELECT id, unnest(s) AS sh FROM sets
-        |), inter AS (
-        |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
-        |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.id < b.id
-        |  GROUP BY 1, 2
-        |), sizes AS (
-        |  SELECT id, len(s) AS sz FROM sets
-        |)
-        |SELECT id_a, id_b, jaccard FROM (
-        |  SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-        |  FROM inter JOIN sizes sa ON inter.id_a = sa.id
-        |             JOIN sizes sb ON inter.id_b = sb.id
-        |) WHERE jaccard >= 0.5""".stripMargin,
-
-    // D6: the d4 pair derivation (same CTEs) extended by a recursive-CTE
-    // transitive closure: comp(id) = min id reachable in the undirected pair
-    // graph; singletons label themselves. Component minima are unique, so
-    // the result is independent of how either engine orders the traversal.
-    "d6_dedup_clusters" -> (componentCteSql +
-      """
-        |SELECT c.id, coalesce(p.component, c.id) AS component,
-        |       coalesce(p.component, c.id) = c.id AS is_canonical
-        |FROM corpus c LEFT JOIN comp p ON c.id = p.id""".stripMargin),
-
-    // D16: identical label derivation + typo planting, then the ed<=1 pair
-    // set by BRUTE-FORCE cross join with DuckDB's own levenshtein — the
-    // strongest possible oracle for a candidate-pruned join: any pair the
-    // deletion-neighborhood index missed (or invented) breaks the hash.
-    "d16_edit_join" ->
-      """WITH base AS (
-        |  SELECT doc_id, substr(text, 1, 12) AS lbl
-        |  FROM documents WHERE doc_id < 2000),
-        |typos AS (
-        |  SELECT doc_id + 1000000 AS doc_id,
-        |    substr(lbl, 1, 2) || 'z' || substr(lbl, 4, 9) AS lbl
-        |  FROM base WHERE doc_id % 10 = 0),
-        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM typos)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(levenshtein(a.lbl, b.lbl) AS INTEGER) AS dist
-        |FROM corpus a JOIN corpus b ON a.doc_id < b.doc_id
-        |WHERE levenshtein(a.lbl, b.lbl) <= 1
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // D15: replant the identical URL spellings, then replay the documented
-    // canonicalization contract with DuckDB's own string/list kernels
-    // (lowercase scheme+host, default port, www., fragment, tracking
-    // params, bytewise param sort, trailing slash) and keep min(doc_id)
-    // per canonical string — generic derivation, no planted ids.
-    "d15_url_dedup" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.Example.COM'
-        |          ELSE 'https://example.com' END)
-        |    || (CASE WHEN doc_id % 3 = 0 THEN ':443' ELSE '' END)
-        |    || '/docs/' || CAST(doc_id // 4 AS VARCHAR)
-        |    || (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END)
-        |    || (CASE WHEN doc_id % 2 = 0 THEN '?b=2&utm_source=feed&a=1'
-        |          ELSE '?a=1&b=2' END)
-        |    || (CASE WHEN doc_id % 5 = 0 THEN '#section-2' ELSE '' END) AS url
-        |  FROM documents),
-        |parts AS (
-        |  SELECT doc_id,
-        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |    lower(regexp_extract(regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://', ''),
-        |                         '^([^/?#]*)', 1)) AS hostport,
-        |    regexp_replace(regexp_extract(regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://', ''),
-        |                                  '^[^/?#]*(.*)$', 1), '#.*$', '') AS nofrag
-        |  FROM planted),
-        |canon AS (
-        |  SELECT doc_id,
-        |    scheme || '://' ||
-        |    regexp_replace(
-        |      CASE WHEN scheme = 'http'  THEN regexp_replace(hostport, ':80$', '')
-        |           WHEN scheme = 'https' THEN regexp_replace(hostport, ':443$', '')
-        |           ELSE hostport END, '^www\.', '') ||
-        |    (CASE WHEN regexp_extract(nofrag, '^([^?]*)', 1) = '' THEN '/'
-        |          ELSE regexp_replace(regexp_extract(nofrag, '^([^?]*)', 1), '(.)/$', '\1') END) ||
-        |    (CASE WHEN len(p) > 0 THEN '?' || array_to_string(p, '&') ELSE '' END) AS canon_url
-        |  FROM (SELECT doc_id, scheme, hostport, nofrag,
-        |          list_sort(list_filter(string_split(regexp_extract(nofrag, '\?(.*)$', 1), '&'),
-        |            q -> q <> '' AND NOT regexp_matches(q, '^(utm_[^=]*|gclid|fbclid|ref)=')
-        |          )) AS p
-        |        FROM parts))
-        |SELECT doc_id, canon_url FROM (
-        |  SELECT min(doc_id) AS doc_id, canon_url FROM canon GROUP BY canon_url)
-        |ORDER BY doc_id""".stripMargin,
-
-    // D14: group sizes over the planted-copy corpus, weights in exact
-    // per-mille floor division — grouping on text ≡ grouping on md5(text)
-    "d14_soft_dedup" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 9 = 0
-        |), sizes AS (
-        |  SELECT text, CAST(count(*) AS BIGINT) AS n_copies
-        |  FROM corpus GROUP BY text
-        |)
-        |SELECT c.doc_id, s.n_copies,
-        |       CAST(1000 // s.n_copies AS BIGINT) AS weight_pm
-        |FROM corpus c JOIN sizes s ON c.text = s.text""".stripMargin,
-
-    // D13: the d6 component derivation extended by a keep-best election —
-    // argmax(length(text)) per component, ties to MIN id, replayed as a
-    // window argmax so the oracle is order-independent exactly when the
-    // operator is.
-    "d13_keep_best" -> (componentCteSql +
-      """, lab AS (
-        |  SELECT c.id, coalesce(p.component, c.id) AS component,
-        |         length(c.text) AS ln
-        |  FROM corpus c LEFT JOIN comp p ON c.id = p.id
-        |), win AS (
-        |  SELECT component, id AS kept_id,
-        |         row_number() OVER (PARTITION BY component
-        |                            ORDER BY ln DESC, id ASC) AS rn
-        |  FROM lab
-        |)
-        |SELECT l.id, l.component, w.kept_id, l.id = w.kept_id AS is_kept
-        |FROM lab l JOIN win w ON l.component = w.component AND w.rn = 1""".stripMargin),
-
-    // T15: the cluster labels (d6's recursive CTE) keyed into the t6
-    // md5-threshold machinery — split is a pure function of the COMPONENT
-    // id, so both engines assign every cluster member identically.
-    "t15_cluster_split" -> (componentCteSql +
-      s""", lab AS (
-         |  SELECT c.id, coalesce(p.component, c.id) AS component
-         |  FROM corpus c LEFT JOIN comp p ON c.id = p.id
-         |), uu AS (
-         |  SELECT id, component, ${md5UnitSql("component")} AS u
-         |  FROM lab
-         |)
-         |SELECT id AS doc_id, component, $splitCaseSql AS split
-         |FROM uu""".stripMargin),
-
-    // T7: membership is a pure function of (lang, md5(doc_id)) — both
-    // engines compute the same lowercase-hex md5 over the same decimal
-    // rendering of doc_id, so the quota sample is re-derivable exactly.
-    "t7_stratified_sample" ->
-      """SELECT lang, doc_id FROM (
-        |  SELECT lang, doc_id,
-        |    row_number() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents) WHERE rk <= 5""".stripMargin,
-
-    // T11: quotas are integer arithmetic end-to-end — floor(sqrt(n)) is
-    // exact for any realistic stratum count, Σw and M·w div Σw are BIGINT —
-    // and membership is md5(id) order per stratum, so the rebalanced corpus
-    // is re-derivable row-for-row.
-    "t11_temperature_mix" ->
-      """WITH c AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY source
-        |), w AS (
-        |  SELECT source, CAST(floor(sqrt(CAST(n AS DOUBLE))) AS BIGINT) AS w FROM c
-        |), q AS (
-        |  SELECT source, (200 * w) // (SELECT CAST(sum(w) AS BIGINT) FROM w) AS quota FROM w
-        |), r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        |  FROM documents
-        |)
-        |SELECT r.doc_id, r.source FROM r JOIN q USING (source)
-        |WHERE r.rk <= q.quota""".stripMargin,
-
-    // The planted ground truth, derived independently: every vector pairs
-    // with exactly its 1.01-scaled copy (same direction → identical
-    // hyperplane signs in EVERY table, so LSH recall is structurally 1;
-    // float perturbation keeps cosine within 1e-14 of 1.0, far inside the
-    // 6dp round). Gates recall AND precision: a missed planted pair or any
-    // false positive above 0.999 breaks the hash.
-    "d5_embed_dedup" ->
-      """SELECT vec_id AS id_a, vec_id + 1000000 AS id_b, 1.0 AS cosine
-        |FROM embeddings""".stripMargin,
-
-    // D10: every planted copy collapses onto its base (min id), every
-    // base survives — a missed copy (extra survivor) or a natural merge
-    // (missing base) breaks the hash either way
-    "d10_semantic_dedup" ->
-      "SELECT vec_id AS kept_id FROM embeddings ORDER BY 1",
-
-    // S4: every op here (float→double cast, /, *, floor, abs, max) is
-    // correctly rounded and order-independent (max) or applied in the same
-    // order — codes, scales and errors are bit-identical cross-engine.
-    "s4_quantize_int8" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding,
-        |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS scale
-        |  FROM embeddings
-        |), z AS (
-        |  SELECT vec_id, embedding, scale,
-        |    CASE WHEN scale = 0.0
-        |      THEN list_transform(embedding, x -> CAST(0 AS INTEGER))
-        |      ELSE list_transform(embedding,
-        |        x -> CAST(floor(CAST(x AS DOUBLE) / scale + 0.5) AS INTEGER))
-        |    END AS q
-        |  FROM s
-        |)
-        |SELECT vec_id, scale,
-        |  md5(array_to_string(q, ',')) AS q_hash,
-        |  list_max(list_transform(range(1, len(q)+1),
-        |    i -> abs(CAST(embedding[i] AS DOUBLE) - CAST(q[i] AS DOUBLE) * scale))) AS max_err
-        |FROM z""".stripMargin,
-
-    // M2: pixel i = payload byte at floor(i·len/64); the hex pair at that
-    // index IS the byte, so the thumbnail reassembles from substr slices.
-    "m2_thumbnails" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload
-        |  FROM documents WHERE length(text) > 0
-        |), hx AS (
-        |  SELECT media_id, octet_length(payload) AS n, hex(payload) AS h FROM m
-        |)
-        |SELECT media_id, 8 AS width, 8 AS height,
-        |  md5(array_to_string(list_transform(range(0, 64),
-        |    i -> substr(h, 2*CAST((i*n)//64 AS INT)+1, 2)), '')) AS pix_hash
-        |FROM hx""".stripMargin,
-
-    // M3: frame f starts at trunc((f·5000/dur)·len); the 32-byte window is
-    // the corresponding hex slice (clamped — the final frame may be empty).
-    "m3_frames" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload,
-        |    CAST(length(text) AS BIGINT) * 40 AS dur
-        |  FROM documents WHERE length(text) > 0
-        |), hx AS (
-        |  SELECT media_id, dur, octet_length(payload) AS n, hex(payload) AS h FROM m
-        |), f AS (
-        |  SELECT media_id, dur, n, h,
-        |    unnest(range(0, CAST(dur // 5000 + 1 AS INT))) AS fno
-        |  FROM hx
-        |), w AS (
-        |  SELECT media_id, CAST(fno AS INT) AS frame_no,
-        |    CAST(fno * 5000 AS BIGINT) AS offset_ms,
-        |    CAST(trunc((CAST(fno * 5000 AS DOUBLE) / dur) * n) AS INT) AS s0, n, h
-        |  FROM f
-        |), b AS (
-        |  SELECT media_id, frame_no, offset_ms,
-        |    least(s0, least(n, s0 + 32)) AS s1, least(n, s0 + 32) AS e1, h
-        |  FROM w
-        |)
-        |SELECT media_id, frame_no, offset_ms,
-        |  CAST(e1 - s1 AS INT) AS frame_len,
-        |  md5(substr(h, 2*s1 + 1, 2*(e1 - s1))) AS frame_hash
-        |FROM b""".stripMargin,
-
-    // P4: the full multimodal chain re-derived — m1's byte decode, the
-    // 16-bin histogram as a double vector, s1's left-fold double cosine
-    // and (desc, id) rank. Rounding only on the EMITTED cosine (6dp), the
-    // ranking runs on unrounded doubles, like s1.
-    "p4_multimodal_ann" ->
-      """WITH m AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS media_id, encode(text) AS payload FROM documents
-        |), hx AS (
-        |  SELECT media_id, octet_length(payload) AS n_bytes, hex(payload) AS h FROM m
-        |), bytes AS (
-        |  SELECT media_id, list_transform(range(0, CAST(n_bytes AS INT)),
-        |    i -> (instr('0123456789ABCDEF', substr(h, 2*i+1, 1)) - 1) * 16
-        |       + (instr('0123456789ABCDEF', substr(h, 2*i+2, 1)) - 1)) AS bs
-        |  FROM hx WHERE n_bytes > 0
-        |), emb AS (
-        |  SELECT media_id, list_transform(range(0, 16),
-        |    k -> CAST(len(list_filter(bs, b -> b % 16 = k)) AS DOUBLE)) AS e
-        |  FROM bytes
-        |), scored AS (
-        |  SELECT q.media_id AS query_id, c.media_id AS neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(1, 17), i -> q.e[i] * c.e[i])), (a,b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |         list_transform(range(1, 17), i -> q.e[i] * q.e[i])), (a,b) -> a + b))
-        |       * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |           list_transform(range(1, 17), i -> c.e[i] * c.e[i])), (a,b) -> a + b))) AS cosine
-        |  FROM emb q, emb c WHERE q.media_id < 3 AND q.media_id <> c.media_id
-        |)
-        |SELECT query_id, neighbor_id, round(cosine, 6) AS cosine FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
-        |  FROM scored) WHERE rk <= 5""".stripMargin,
-
-    // S5: exact copies code identically (deterministic argmin), so the
-    // code-match join over the planted corpus returns exactly the planted
-    // pairs — recall AND precision structural, like d5.
-    "s5_pq_codes" ->
-      """SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM embeddings""".stripMargin,
-
-    // Brute-force cosine re-derived with double math in the kernel's exact
-    // accumulation order (left fold seeded at 0.0) — bit-identical doubles,
-    // so the 6dp round matches too.
-    "s1_cosine_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5
-        |), c AS (
-        |  SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
-        |), scored AS (
-        |  SELECT query_id, neighbor_id,
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(1, len(qv)+1), i -> CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))),
-        |      (a,b) -> a + b)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |         list_transform(range(1, len(qv)+1), i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE))),
-        |         (a,b) -> a + b))
-        |       * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |           list_transform(range(1, len(cv)+1), i -> CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE))),
-        |           (a,b) -> a + b))) AS cosine
-        |  FROM q, c WHERE query_id <> neighbor_id
-        |)
-        |SELECT query_id, neighbor_id, round(cosine, 6) AS cosine FROM (
-        |  SELECT query_id, neighbor_id, cosine,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
-        |  FROM scored) WHERE rk <= 5""".stripMargin,
-
-    // Structural: each query's top-1 over the exact-copy planted corpus is
-    // its copy (vec_id + 1e6) at cosine 1 — identical vectors share every
-    // hyperplane bucket (s2) and the nearest-centroid cell (s3), and the
-    // kernel's cosine(v,v) is 1 to within 1 ulp, far inside the 6dp round.
-    "s2_lsh_ann" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s2_recall: the recall bound is asserted in-plan (the r9_approx
-    // construction) — an LSH run recovering < 90% of the exact top-10 flips
-    // the boolean and breaks the hash.
-    "s2_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    "s3_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    "s3_ivf_ann" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s8: planted-copy top-1 under the parity predicate (copies keep parity)
-    "s8_filtered_ann" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 64 AND vec_id % 2 = 0""".stripMargin,
-
-    "s8_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s9: planted-copy top-1 from the persisted index — same contract as s6
-    "s9_persisted_ann" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s12: the store's filtered recall bound, asserted in-plan
-    "s12_store_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s11: live even copies head the ranking; odd/deleted ids never appear
-    "s11_filtered_store" ->
-      """SELECT vec_id AS query_id, vec_id % 4 <> 0 AS copy_returned,
-        |       false AS odd_returned, false AS deleted_returned
-        |FROM embeddings WHERE vec_id < 64 AND vec_id % 2 = 0""".stripMargin,
-
-    // x20: the s10 contract with the deletes arriving through the stream
-    "x20_stream_ann_deletes" ->
-      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
-        |       false AS deleted_returned
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s14: every base row recovers its planted copy through the join
-    "s14_knn_join" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // S17: the identical planted-copy law — quantization, the shortlist
-    // and the re-rank are all invisible to the top-1
-    "s17_quantized_knn_join" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    // s13: the s10 contract survives the rebuild, and the re-encoded
-    // store holds exactly the live membership (2n minus odd copies)
-    // S15: both phases re-derived as pure arithmetic over the embeddings
-    // count — the sidecar fold and the decision plumbing are invisible.
-    "s15_reindex_advisor" ->
-      """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM embeddings),
-        |d AS (SELECT CAST(count(*) AS BIGINT) AS t FROM embeddings WHERE vec_id % 7 = 0)
-        |SELECT * FROM (
-        |  SELECT 'before' AS phase, c AS rows_indexed, c AS rows_latest,
-        |    CAST(0 AS BIGINT) AS n_tombstones, 1.0 AS growth,
-        |    0.0 AS deleted_share, false AS should_reindex
-        |  FROM n
-        |  UNION ALL
-        |  SELECT 'after', c, 2 * c, t, 2.0,
-        |    CAST(t AS DOUBLE) / (2 * c), true
-        |  FROM n, d)
-        |ORDER BY phase""".stripMargin,
-    "s13_reindex" ->
-      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
-        |       false AS deleted_returned,
-        |       CAST((SELECT count(*) * 2 FROM embeddings)
-        |            - (SELECT count(*) FROM embeddings WHERE vec_id % 2 = 1)
-        |         AS BIGINT) AS n_store
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s10: evenness ≡ live-copy-at-top, tombstones never surface
-    "s10_ann_deletes" ->
-      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
-        |       false AS deleted_returned
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s7: planted-copy top-1 — identical codes, exact re-rank at cosine 1
-    "s7_int8_rerank" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    "s7_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s15: planted-copy top-1 — identical sign words maximize the
-    // asymmetric score, exact re-rank at cosine 1
-    "s15_binary_rerank" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    "s15_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // s6: same planted-copy top-1 construction as s2/s3 — copies share cell
-    // AND PQ codes, and the exact re-rank makes the final ranking cosine's
-    "s6_ivfpq_ann" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    "s6_recall" ->
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin,
-
-    // x18: the s9 structural contract reached THROUGH the stream — every
-    // query's streamed copy at top-1/cosine 1 (a lost shard breaks it),
-    // plus the maintained-state row count (base + streamed copies = 2n; a
-    // double-applied shard breaks it).
-    "x18_stream_ann_ingest" ->
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine,
-        |  (SELECT CAST(2 * count(*) AS BIGINT) FROM embeddings) AS n_state
-        |FROM embeddings WHERE vec_id < 32 ORDER BY vec_id""".stripMargin,
-
-    "t2_quality" -> t2OracleSql,
-
-    "t22_gopher_rules" -> t22OracleSql,
-
-    // T25: the DSIR fit replayed — polyhash buckets, add-one-smoothed
-    // bucket multinomials, fixed-point log2 millibit ratios, per-token sum
-    "t25_importance_weights" -> t25OracleSql,
-
-    // P15: the same fit chained into selection + split, per-split audit
-    "p15_dsir_corpus" -> p15OracleSql,
-
-    // T24: the same planted refresh, counts full-outer joined, exact
-    // integer deltas under the same strict (delta desc, token) order
-    "t24_token_drift" ->
-      """WITH v2 AS (
-        |  SELECT doc_id,
-        |    text || CASE WHEN doc_id % 7 = 0
-        |                 THEN ' driftmarker driftmarker driftmarker'
-        |                 ELSE '' END AS text
-        |  FROM documents WHERE doc_id % 5 <> 0
-        |), ca AS (
-        |  SELECT t AS token, CAST(count(*) AS BIGINT) AS c_a
-        |  FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS t
-        |        FROM documents)
-        |  WHERE length(t) > 0 GROUP BY t
-        |), cb AS (
-        |  SELECT t AS token, CAST(count(*) AS BIGINT) AS c_b
-        |  FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS t
-        |        FROM v2)
-        |  WHERE length(t) > 0 GROUP BY t
-        |)
-        |SELECT coalesce(ca.token, cb.token) AS token,
-        |       coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b,
-        |       abs(coalesce(c_a, 0) - coalesce(c_b, 0)) AS delta
-        |FROM ca FULL JOIN cb ON ca.token = cb.token
-        |ORDER BY delta DESC, token LIMIT 50""".stripMargin,
-
-    // T23: the same measurements under ROLLUP — DuckDB's NULL subtotal
-    // rows match Spark's rollup semantics exactly
-    "t23_dataset_card" ->
-      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS n_tokens,
-        |  CAST(sum(CAST(length(text) >= 100
-        |    AND (CASE WHEN length(text) = 0 THEN 0.0
-        |         ELSE CAST(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) AS DOUBLE)
-        |              / length(text) END) < 0.1 AS INT)) AS BIGINT) AS n_quality,
-        |  CAST(sum(length(text)) // count(*) AS BIGINT) AS mean_chars
-        |FROM documents
-        |GROUP BY ROLLUP (source, lang)""".stripMargin,
-
-    "t17_global_shuffle" ->
-      """SELECT doc_id, md5('7:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-        |FROM documents""".stripMargin,
-
-    "t3_tokens" ->
-      """SELECT doc_id,
-        |  len(regexp_split_to_array(trim(text), '\s+')) AS ws_tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_tokens
-        |FROM documents""".stripMargin,
-
-    // T16: the merge loop replayed as a recursive CTE — each step merges
-    // the leftmost occurrence of the lowest-rank adjacent pair (ORDER BY
-    // rank, i LIMIT 1), terminating at the no-pair fixpoint, exactly the
-    // kernel's step. Runs over DISTINCT words, then LEFT-joins per-doc from
-    // the documents table so the oracle is total over docs — an empty or
-    // all-whitespace doc counts 0, matching the kernel, instead of
-    // vanishing from the result.
-    // T29: training UNROLLED — per step, the weighted pair-count argmax
-    // (count desc, then lexicographically greatest pair) and a
-    // list_reduce fold applying the chosen merge left-to-right,
-    // non-overlapping, to every word. Generated programmatically (the w23
-    // unrolled-pagerank pattern).
-    "t29_bpe_train" -> t29OracleSql,
-
-    // P19: the whole retrain-and-apply chain in one statement — training
-    // CTEs (bpeTrainCtes) feeding the t16 recursive tokenizer.
-    "p19_bpe_retrain" -> p19OracleSql,
-
-    // T30: base codepoints + merge tokens with dense-rank ids, off the
-    // same unrolled-training CTEs.
-    "t30_bpe_vocab" -> t30OracleSql,
-
-    "t16_bpe_tokens" ->
-      s"""WITH RECURSIVE
-        |merges(a, b, rank) AS (VALUES ${graft.functions.Bpe.mergeValuesSql()}),
-        |words AS (
-        |  SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
-        |  FROM documents
-        |),
-        |state AS (
-        |  SELECT w, list_transform(range(1, len(w)+1), i -> w[i]) AS toks FROM words
-        |  UNION ALL
-        |  SELECT s.w,
-        |    s.toks[1:p.i-1] || [s.toks[p.i] || s.toks[p.i+1]] || s.toks[p.i+2:] AS toks
-        |  FROM state s
-        |  JOIN LATERAL (
-        |    SELECT i FROM unnest(range(1, len(s.toks))) AS t(i)
-        |    JOIN merges m ON m.a = s.toks[i] AND m.b = s.toks[i+1]
-        |    ORDER BY m.rank, i LIMIT 1
-        |  ) p ON true
-        |),
-        |final AS (
-        |  SELECT w, len(toks) AS n FROM state s
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM unnest(range(1, len(s.toks))) AS t(i)
-        |    JOIN merges m ON m.a = s.toks[i] AND m.b = s.toks[i+1])
-        |)
-        |SELECT d.doc_id, CAST(coalesce(sum(f.n), 0) AS BIGINT) AS bpe_true_tokens
-        |FROM documents d
-        |LEFT JOIN (SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
-        |           FROM documents) dw ON dw.doc_id = d.doc_id
-        |LEFT JOIN final f ON f.w = dw.w
-        |GROUP BY d.doc_id""".stripMargin,
-
-    "t5_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-        |df AS (SELECT term, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1)
-        |SELECT doc_id, term, tf, df FROM tf JOIN df USING(term) WHERE doc_id < 20""".stripMargin,
-
-    "t4_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(regexp_extract_all(text, '[\s\S]'), c -> CAST(ascii(c) AS BIGINT))),
-        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint
-        |FROM documents""".stripMargin,
-
-    // T26: replant the identical dirty string with chr() codepoints, then
-    // replay the documented normalization contract: utf8proc NFC (DuckDB
-    // nfc_normalize ≡ the JDK normalizer — both implement the Unicode
-    // canonical-composition tables), then the same RE2∩Java regex chain the
-    // Spark side runs, step for step.
-    // T27: the identical dirt replanted with chr() codepoints, the same
-    // presence-law flags re-derived with the IDENTICAL range regexes
-    // (explicit \x{...} ranges — RE2 and Java agree on those where they
-    // disagree on script-class spelling), then the profile-switched chain
-    // replayed step for step. The regexes and the translate mapping are
-    // substituted from the SAME Scala constants the operator compiles in,
-    // so the two sides cannot drift.
-    "t27_normalize_multilingual" -> t27OracleSql,
-
-    // T28: same oracle verbatim — the SQL surface resolves to the
-    // identical catalyst trees, so the answers must be byte-identical
-    "t28_sql_ml_surface" -> t27OracleSql,
-
-    "t26_normalize" ->
-      """WITH dirty AS (
-        |  SELECT doc_id,
-        |    '  ' || chr(9) || text
-        |    || CASE WHEN doc_id % 2 = 0
-        |         THEN chr(13)||chr(10)||'Cafe'||chr(769)||' au lait' ELSE '' END
-        |    || CASE WHEN doc_id % 3 = 0
-        |         THEN chr(8203)||'promo'||chr(65279) ELSE '' END
-        |    || CASE WHEN doc_id % 4 = 0
-        |         THEN chr(10)||chr(10)||chr(10)||chr(10)||'end' ELSE '' END
-        |    || CASE WHEN doc_id % 5 = 0
-        |         THEN 'bel'||chr(7)||'l '||chr(11)||'vt' ELSE '' END
-        |    || CASE WHEN doc_id % 7 = 0 THEN ' unit '||chr(8491) ELSE '' END
-        |      AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |       regexp_replace(regexp_replace(
-        |    nfc_normalize(text),
-        |    '\r\n|\r', chr(10), 'g'),
-        |    '[\x{200B}-\x{200D}\x{FEFF}\x{00AD}]', '', 'g'),
-        |    '[\x{0000}-\x{0008}\x{000B}\x{000C}\x{000E}-\x{001F}\x{007F}]', '', 'g'),
-        |    '[ \t]+', ' ', 'g'),
-        |    ' ?\n ?', chr(10), 'g'),
-        |    '\n{3,}', chr(10)||chr(10), 'g')) AS norm_text
-        |FROM dirty
-        |ORDER BY doc_id""".stripMargin,
-
-    // P2: fingerprint re-derived as in t4; shingle count re-derived over
-    // STRING shingles (d4's construction) — distinct-hash count equals
-    // distinct-string count absent xxhash64 collisions.
-    "p2_sql_surface" ->
-      """WITH toks AS (
-        |  SELECT doc_id, text,
-        |    regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(regexp_extract_all(text, '[\s\S]'), c -> CAST(ascii(c) AS BIGINT))),
-        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fingerprint,
-        |  CAST(len(list_distinct(
-        |    CASE WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |         ELSE list_transform(range(1, len(t)-1), i -> array_to_string(t[i:i+2], ' ')) END)) AS BIGINT) AS n_shingles
-        |FROM toks""".stripMargin
-  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Gate, Tables}
 import graft.wikidata.IdCodec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -98,10 +98,13 @@ object Relational {
   private def revenue(ep: Column, disc: Column): Column =
     money(ep) * (lit(1).cast(DecimalType(18, 2)) - money(disc))
 
-  // ---------------------------------------------------------------- queries
+  // ------------------------------------------------------------------ gates
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r1_pushdown" -> { (s, dir) =>
+  def gates: Seq[Gate] = Seq(
+    Gate("r1_pushdown",
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '2000-01-01' AND l_shipdate < TIMESTAMP '2001-01-01'
+        |  AND l_quantity > 45""".stripMargin) { (s, dir) =>
       // Filter + projection both reach the parquet scan (PushedFilters/ReadSchema).
       Tables(s, dir).lineitem
         .filter(col("l_shipdate") >= lit("2000-01-01").cast("timestamp") &&
@@ -110,7 +113,14 @@ object Relational {
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     },
 
-    "r2_agg" -> { (s, dir) =>
+    Gate("r2_agg",
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
+        |  count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       Tables(s, dir).lineitem
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -121,7 +131,15 @@ object Relational {
           count(lit(1)).as("count_order"))
     },
 
-    "r3_join_agg" -> { (s, dir) =>
+    Gate("r3_join_agg",
+      """SELECT l_orderkey, o_orderdate, o_orderpriority,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS rev
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |  JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01' AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin) { (s, dir) =>
       val t = Tables(s, dir)
       t.customer.filter(col("c_mktsegment") === "BUILDING")
         .join(t.orders, col("c_custkey") === col("o_custkey"))
@@ -134,7 +152,14 @@ object Relational {
         .limit(10)
     },
 
-    "r4_star_join" -> { (s, dir) =>
+    Gate("r4_star_join",
+      """SELECT r_name, n_name,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS rev,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name""".stripMargin) { (s, dir) =>
       val t = Tables(s, dir)
       // Classic star join: fact shuffles once on s_suppkey; nation/region are
       // broadcast (they are tiny at any scale factor — explicit hint).
@@ -148,7 +173,10 @@ object Relational {
           count(lit(1)).as("n_items"))
     },
 
-    "r6_antijoin" -> { (s, dir) =>
+    Gate("r6_antijoin",
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')""".stripMargin) { (s, dir) =>
       val t = Tables(s, dir)
       t.customer
         .join(t.orders.filter(col("o_orderpriority") === "1-URGENT"),
@@ -156,7 +184,16 @@ object Relational {
         .select("c_custkey", "c_name")
     },
 
-    "r7_window_topn" -> { (s, dir) =>
+    Gate("r7_window_topn",
+      """SELECT p_brand, p_partkey, CAST(rev AS DOUBLE) AS rev, rk FROM (
+        |  SELECT p_brand, p_partkey, rev,
+        |    rank() OVER (PARTITION BY p_brand ORDER BY rev DESC, p_partkey) AS rk
+        |  FROM (
+        |    SELECT p_brand, p_partkey,
+        |      sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev
+        |    FROM lineitem JOIN part ON l_partkey = p_partkey
+        |    GROUP BY p_brand, p_partkey)
+        |) WHERE rk <= 3""".stripMargin) { (s, dir) =>
       val t = Tables(s, dir)
       val base = t.lineitem
         .join(t.part, col("l_partkey") === col("p_partkey"))
@@ -169,7 +206,12 @@ object Relational {
           col("rk").cast("long").as("rk"))
     },
 
-    "r8_window_running" -> { (s, dir) =>
+    Gate("r8_window_running",
+      """SELECT o_custkey, o_orderkey, o_orderdate,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
+        |FROM orders""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -178,7 +220,10 @@ object Relational {
           emit(sum(money(col("o_totalprice"))).over(w)).as("running_spend"))
     },
 
-    "r9_distinct" -> { (s, dir) =>
+    Gate("r9_distinct",
+      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
+        |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       Tables(s, dir).lineitem
         .groupBy("l_returnflag")
         .agg(
@@ -187,7 +232,9 @@ object Relational {
           count(lit(1)).as("n_rows"))
     },
 
-    "r9_approx" -> { (s, dir) =>
+    Gate("r9_approx",
+      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts, true AS approx_ok
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       // R9's approx half, driver-visible: approx_count_distinct (HLL++) has
       // no cross-engine-stable value, so the gate hashes the exact count
       // plus an in-plan boolean asserting the sketch landed within 5%
@@ -203,7 +250,12 @@ object Relational {
             col("n_parts") * lit(0.05)).as("approx_ok"))
     },
 
-    "r10_setops" -> { (s, dir) =>
+    Gate("r10_setops",
+      """SELECT nk, 'both' AS tag FROM
+        |  (SELECT c_nationkey AS nk FROM customer INTERSECT SELECT s_nationkey FROM supplier)
+        |UNION ALL
+        |SELECT nk, 'cust_only' AS tag FROM
+        |  (SELECT c_nationkey AS nk FROM customer EXCEPT SELECT s_nationkey FROM supplier)""".stripMargin) { (s, dir) =>
       val t    = Tables(s, dir)
       val cust = t.customer.select(col("c_nationkey").as("nk"))
       val supp = t.supplier.select(col("s_nationkey").as("nk"))
@@ -211,7 +263,15 @@ object Relational {
         .unionAll(cust.except(supp).withColumn("tag", lit("cust_only")))
     },
 
-    "r11_condagg" -> { (s, dir) =>
+    Gate("r11_condagg",
+      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+        |  count(*) AS n_events, count(DISTINCT user_id) AS n_users,
+        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
+        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchases,
+        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
+        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2))
+        |      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value
+        |FROM events GROUP BY 1""".stripMargin) { (s, dir) =>
       Tables(s, dir).events
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(
@@ -224,14 +284,23 @@ object Relational {
             .otherwise(money(lit(0))))).as("purchase_value"))
     },
 
-    "r12_topk" -> { (s, dir) =>
+    Gate("r12_topk",
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 15""".stripMargin) { (s, dir) =>
       Tables(s, dir).orders
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .limit(15)
     },
 
-    "r14_nullsafe" -> { (s, dir) =>
+    Gate("r14_nullsafe",
+      """SELECT o_orderkey,
+        |  CAST(coalesce(sum(CAST(bl_extendedprice AS DECIMAL(18,2))), CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS big_value,
+        |  count(bl_orderkey) AS n_big_items
+        |FROM orders LEFT JOIN (
+        |  SELECT l_orderkey AS bl_orderkey, l_extendedprice AS bl_extendedprice
+        |  FROM lineitem WHERE l_quantity > 49) ON o_orderkey = bl_orderkey
+        |GROUP BY o_orderkey""".stripMargin) { (s, dir) =>
       val t   = Tables(s, dir)
       val big = t.lineitem.filter(col("l_quantity") > 49)
         .select(col("l_orderkey").as("bl_orderkey"),
@@ -245,7 +314,12 @@ object Relational {
           count(col("bl_orderkey")).as("n_big_items"))
     },
 
-    "r15_percentile" -> { (s, dir) =>
+    Gate("r15_percentile",
+      """SELECT l_returnflag,
+        |  quantile_cont(l_quantity, 0.5) AS median_qty,
+        |  quantile_cont(l_quantity, 0.95) AS p95_qty,
+        |  quantile_cont(l_extendedprice, 0.5) AS median_price
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       // exact (sort-based) percentiles; linear interpolation matches
       // DuckDB quantile_cont bit-for-bit on these double inputs
       Tables(s, dir).lineitem
@@ -256,7 +330,10 @@ object Relational {
           expr("percentile(l_extendedprice, 0.5)").as("median_price"))
     },
 
-    "r20_approx_quantile" -> { (s, dir) =>
+    Gate("r20_approx_quantile",
+      """SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS median_price,
+        |  true AS approx_ok
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       // R15's approx half (same construction as r9_approx): the KLL/GK-style
       // approx_percentile sketch has no cross-engine-stable value, so the
       // gate hashes the exact median plus an in-plan boolean asserting the
@@ -274,7 +351,7 @@ object Relational {
             greatest(abs(col("median_price")) * lit(0.01), lit(1e-6))).as("approx_ok"))
     },
 
-    "r21_zorder_roundtrip" -> { (s, dir) =>
+    Gate("r21_zorder_roundtrip", "SELECT o_orderkey, o_custkey, o_totalprice FROM orders") { (s, dir) =>
       // z-order clustered write + read-back: the layout must not corrupt,
       // drop, or duplicate a row (the multi-dimensional pruning property
       // itself is spec-asserted on per-file stats — ZOrderSpec)
@@ -284,7 +361,16 @@ object Relational {
       s.read.parquet(out)
     },
 
-    "p1_topk_native" -> { (s, dir) =>
+    Gate("p1_topk_native",
+      """SELECT p_brand, p_partkey, CAST(rev AS DOUBLE) AS rev FROM (
+        |  SELECT p_brand, p_partkey, rev,
+        |    row_number() OVER (PARTITION BY p_brand ORDER BY rev DESC, p_partkey DESC) AS rn
+        |  FROM (
+        |    SELECT p_brand, p_partkey,
+        |      sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev
+        |    FROM lineitem JOIN part ON l_partkey = p_partkey
+        |    GROUP BY p_brand, p_partkey)
+        |) WHERE rn <= 3""".stripMargin) { (s, dir) =>
       // custom LogicalPlan/Strategy/Exec path (SURVEY §2 P1): bounded
       // per-group heaps instead of full sort + rank
       val t = Tables(s, dir)
@@ -296,7 +382,11 @@ object Relational {
         .withColumn("rev", emit(col("rev")))
     },
 
-    "r16_salted_join" -> { (s, dir) =>
+    Gate("r16_salted_join",
+      """SELECT s_name, count(*) AS n_items,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY s_name""".stripMargin) { (s, dir) =>
       // salted skew join must produce exactly the rows of the plain join —
       // the salt spreads hot keys across reducers without changing results
       val t = Tables(s, dir)
@@ -308,7 +398,11 @@ object Relational {
         .agg(count(lit(1)).as("n_items"), emit(sum(money(col("l_quantity")))).as("qty"))
     },
 
-    "r17_bucketed_join" -> { (s, dir) =>
+    Gate("r17_bucketed_join",
+      """SELECT c_mktsegment, count(*) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment""".stripMargin) { (s, dir) =>
       // bucketed managed tables: one write-time shuffle, then co-located
       // joins (the no-Exchange property is spec-asserted; this gates the
       // RESULT against a plain-join oracle)
@@ -326,7 +420,10 @@ object Relational {
         .agg(count(lit(1)).as("n_orders"), emit(sum(money(col("o_totalprice")))).as("total"))
     },
 
-    "r19_rollup" -> { (s, dir) =>
+    Gate("r19_rollup",
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin) { (s, dir) =>
       // OLAP super-aggregates: ROLLUP emits per-group, per-returnflag and
       // grand-total rows in one pass (Expand + single shuffle in Spark)
       Tables(s, dir).lineitem
@@ -334,7 +431,11 @@ object Relational {
         .agg(count(lit(1)).as("n"), emit(sum(money(col("l_quantity")))).as("qty"))
     },
 
-    "r22_pivot" -> { (s, dir) =>
+    Gate("r22_pivot",
+      """SELECT l_returnflag,
+        |  CAST(sum(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
+        |  CAST(sum(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       // pivot = conditional aggregation with a column per pivot value. The
       // value list is EXPLICIT (scale rule: pivot without values runs an
       // extra distinct pass over the corpus to discover columns — at 100 TB
@@ -348,7 +449,10 @@ object Relational {
           emit(col("F")).as("qty_f"), emit(col("O")).as("qty_o"))
     },
 
-    "r23_cube" -> { (s, dir) =>
+    Gate("r23_cube",
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin) { (s, dir) =>
       // CUBE = all 2^n grouping-set combinations in one Expand pass +
       // single shuffle (r19's ROLLUP is the hierarchical subset); the
       // grouping columns are non-null in this data, so NULL unambiguously
@@ -358,7 +462,20 @@ object Relational {
         .agg(count(lit(1)).as("n"), emit(sum(money(col("l_quantity")))).as("qty"))
     },
 
-    "r25_upsert" -> { (s, dir) =>
+    Gate("r25_upsert",
+      """WITH snap AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |), changes AS (
+        |  SELECT o_orderkey, o_custkey, o_totalprice, 'D' AS op FROM snap WHERE o_orderkey % 7 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, o_custkey, o_totalprice + 1000, 'U' FROM snap WHERE o_orderkey % 7 = 1
+        |  UNION ALL
+        |  SELECT o_orderkey + 1000000000, o_custkey, o_totalprice + 5, 'I' FROM snap WHERE o_orderkey % 7 = 2
+        |)
+        |SELECT s.o_orderkey, s.o_custkey, s.o_totalprice FROM snap s
+        |WHERE s.o_orderkey NOT IN (SELECT o_orderkey FROM changes)
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, o_totalprice FROM changes WHERE op <> 'D'""".stripMargin) { (s, dir) =>
       // CDC apply: a changeset synthesized deterministically from the
       // snapshot itself (keys ≡0 mod 7 deleted, ≡1 updated, ≡2 re-inserted
       // under offset keys), merged via one anti-join + union — the oracle
@@ -376,7 +493,7 @@ object Relational {
       Upsert.applyChanges(o, changes, Seq("o_orderkey"))
     },
 
-    "r26_compaction" -> { (s, dir) =>
+    Gate("r26_compaction", "SELECT o_orderkey, o_custkey, o_totalprice FROM orders") { (s, dir) =>
       // small-file compaction round-trip: fragment orders into 64 tiny
       // files, compact via scan-side bin-packing (no shuffle), read back —
       // the rewrite must not corrupt, drop, or duplicate a row. The
@@ -389,7 +506,11 @@ object Relational {
       s.read.parquet(out)
     },
 
-    "r40_snapshot_commit" -> { (s, dir) =>
+    Gate("r40_snapshot_commit",
+      // R40: version 2 = commit 1 (keys ≡0 mod 3) + appended commit 2 (≡1);
+      // the v3 overwrite (≡2) is pinned out by the time-travel read
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin) { (s, dir) =>
       // atomic manifest-log commits + time travel: three commits (base,
       // append, overwrite), then read pinned at v2 — the overwrite in v3
       // must be invisible, and the returned content is exactly commits
@@ -405,7 +526,38 @@ object Relational {
       SnapshotTable.read(s, t, version = 2L)
     },
 
-    "r62_analyze_incremental" -> { (s, dir) =>
+    Gate("r62_analyze_incremental",
+      // R60: exact per-column stats re-derived from the same planted rows;
+      // R62: stats of the union, blind to the fold count — the identical
+      // derivation as r60's oracle (same planted nulls, same columns), over
+      // ALL slices since base+append+append reassembles the whole table.
+      """WITH src AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
+        |         ELSE l_returnflag END AS l_returnflag
+        |  FROM lineitem)
+        |SELECT * FROM (
+        |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
+        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
+        |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
+        |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
+        |  FROM src
+        |  UNION ALL
+        |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
+        |    CAST(count(*) - count(l_returnflag) AS BIGINT),
+        |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
+        |    CAST(min(l_returnflag) AS VARCHAR),
+        |    CAST(max(l_returnflag) AS VARCHAR), true
+        |  FROM src
+        |  UNION ALL
+        |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
+        |    CAST(count(*) - count(l_suppkey) AS BIGINT),
+        |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
+        |    CAST(min(l_suppkey) AS VARCHAR),
+        |    CAST(max(l_suppkey) AS VARCHAR), true
+        |  FROM src)
+        |ORDER BY "column"""".stripMargin) { (s, dir) =>
       // R62: mergeable ANALYZE — base commit + two appends, each analyze
       // folding ONLY the new files into the persisted sketch state
       // (incremental=true required in-gate). The merged result must equal
@@ -449,7 +601,36 @@ object Relational {
         .orderBy("column")
     },
 
-    "r60_analyze" -> { (s, dir) =>
+    Gate("r60_analyze",
+      // ndv_ok is the in-plan HLL bound (literal true on the oracle side —
+      // the s2_recall hash-gated-quality pattern)
+      """WITH src AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
+        |         ELSE l_returnflag END AS l_returnflag
+        |  FROM lineitem)
+        |SELECT * FROM (
+        |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
+        |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
+        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
+        |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
+        |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
+        |  FROM src
+        |  UNION ALL
+        |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
+        |    CAST(count(*) - count(l_returnflag) AS BIGINT),
+        |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
+        |    CAST(min(l_returnflag) AS VARCHAR),
+        |    CAST(max(l_returnflag) AS VARCHAR), true
+        |  FROM src
+        |  UNION ALL
+        |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
+        |    CAST(count(*) - count(l_suppkey) AS BIGINT),
+        |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
+        |    CAST(min(l_suppkey) AS VARCHAR),
+        |    CAST(max(l_suppkey) AS VARCHAR), true
+        |  FROM src)
+        |ORDER BY "column"""".stripMargin) { (s, dir) =>
       // R60: ANALYZE on a pinned snapshot version. The gate hashes the
       // EXACT fields (rows/nulls/ndv/min/max per column — DuckDB
       // re-derives them from the same rows) and bounds the HLL sketch
@@ -486,7 +667,27 @@ object Relational {
         .orderBy("column")
     },
 
-    "r59_merge_evolve" -> { (s, dir) =>
+    Gate("r59_merge_evolve",
+      // R59: the evolving merge re-derived — survivors with a NULL note,
+      // updates overwritten with one, deletes gone, inserts present
+      """WITH base AS (
+        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0
+        |), upd AS (
+        |  SELECT o_orderkey, o_custkey + 1000000 AS o_custkey, 'upd' AS o_note
+        |  FROM orders WHERE o_orderkey % 10 = 0
+        |), del AS (
+        |  SELECT o_orderkey FROM orders
+        |  WHERE o_orderkey % 14 = 0 AND o_orderkey % 10 <> 0 AND o_orderkey % 2 = 0
+        |), ins AS (
+        |  SELECT o_orderkey, o_custkey, 'new' AS o_note
+        |  FROM orders WHERE o_orderkey % 2 = 1 AND o_orderkey % 9 = 0
+        |)
+        |SELECT o_orderkey, o_custkey, CAST(NULL AS VARCHAR) AS o_note FROM base
+        |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
+        |  AND o_orderkey NOT IN (SELECT o_orderkey FROM del)
+        |UNION ALL SELECT * FROM upd
+        |UNION ALL SELECT * FROM ins
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       // R59: schema-evolving MERGE (Delta autoMerge) — the changeset
       // carries a column the table lacks (o_note): updates overwrite
       // custkey and attach a note, inserts arrive with one, deletes drop
@@ -515,7 +716,12 @@ object Relational {
         .orderBy("o_orderkey")
     },
 
-    "r58_sql_time_travel" -> { (s, dir) =>
+    Gate("r58_sql_time_travel",
+      // R58: latest = the %3=1 overwrite plus the %3=2 append, reached
+      // through pure-SQL catalog reads
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 <> 0 AND o_custkey % 7 = 0
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       // R58: the TableCatalog — an r57-style lifecycle reached from PURE
       // SQL: VERSION AS OF must pin the same manifests the API pins
       // (in-gate require, row-exact both ways), the R44 commit tag
@@ -544,7 +750,12 @@ object Relational {
       latest.filter(col("o_custkey") % 7 === 0).orderBy("o_orderkey")
     },
 
-    "r57_dsv2_read" -> { (s, dir) =>
+    Gate("r57_dsv2_read",
+      // R57: latest = the %3=1 overwrite plus the %3=2 append, through the
+      // DSv2 connector with a residual filter
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 <> 0 AND o_custkey % 5 = 0
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       // R57: the DataSourceV2 connector end to end — an r55-style
       // lifecycle (overwrite, overwrite, append) read back through
       // `spark.read.format("graft")`: versionAsOf and timestampAsOf must
@@ -570,7 +781,22 @@ object Relational {
         .orderBy("o_orderkey")
     },
 
-    "r56_history" -> { (s, dir) =>
+    Gate("r56_history",
+      // R56: the audit trail replayed as literals over the lifecycle's
+      // deterministic row counts — parent lineage, modes, the tag and each
+      // version's visible rows all pinned
+      """WITH c AS (
+        |  SELECT count(CASE WHEN o_orderkey % 3 = 0 THEN 1 END) AS c0,
+        |         count(CASE WHEN o_orderkey % 3 = 1 THEN 1 END) AS c1,
+        |         count(CASE WHEN o_orderkey % 3 = 2 THEN 1 END) AS c2
+        |  FROM orders
+        |)
+        |SELECT CAST(1 AS BIGINT) AS version, CAST(-1 AS BIGINT) AS parent,
+        |       'Overwrite' AS mode, '' AS tag, CAST(c0 AS BIGINT) AS n_rows FROM c
+        |UNION ALL SELECT 2, 1, 'Append', '', CAST(c0 + c1 AS BIGINT) FROM c
+        |UNION ALL SELECT 3, 2, 'Restore', '', CAST(c0 AS BIGINT) FROM c
+        |UNION ALL SELECT 4, 3, 'Append', 'batch-7', CAST(c0 + c2 AS BIGINT) FROM c
+        |ORDER BY version""".stripMargin) { (s, dir) =>
       // R56: DESCRIBE HISTORY — a fixed lifecycle (overwrite, append,
       // restore-to-v1, tagged append) read back as the audit trail, with
       // each version's visible ROW COUNT joined on so the history rows
@@ -597,7 +823,10 @@ object Relational {
         .orderBy("version")
     },
 
-    "r55_time_travel" -> { (s, dir) =>
+    Gate("r55_time_travel",
+      // R55: AS OF the post-overwrite boundary sees exactly version 2
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 = 1 ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       // R55: AS OF TIMESTAMP — three commits with wall-clock boundaries
       // captured between them; reading at the boundary AFTER the overwrite
       // must resolve to version 2 exactly (the appended v3 rows invisible),
@@ -623,7 +852,19 @@ object Relational {
       SnapshotTable.readAsOf(s, t, t2).orderBy("o_orderkey")
     },
 
-    "r54_partition_prune" -> { (s, dir) =>
+    Gate("r54_partition_prune",
+      // R54: partition + stats pruning must be invisible — the pruned read
+      // equals the plain filter (most frequent user × first 7 days)
+      """WITH u AS (
+        |  SELECT user_id FROM events
+        |  GROUP BY user_id ORDER BY count(*) DESC, user_id LIMIT 1
+        |),
+        |t0 AS (SELECT min(ts) AS ts0 FROM events)
+        |SELECT event_id, ts, e.user_id, event_type, value
+        |FROM events e, u, t0
+        |WHERE e.user_id = u.user_id
+        |  AND e.ts >= t0.ts0 AND e.ts < t0.ts0 + INTERVAL 7 DAY
+        |ORDER BY event_id""".stripMargin) { (s, dir) =>
       // R54: hidden-partition pruning + per-commit spec evolution. Commit 1
       // lays even events out by day(ts); commit 2 APPENDS the odd events
       // under an EVOLVED spec, bucket(user_id, 8) × identity(event_type) —
@@ -656,7 +897,10 @@ object Relational {
       SnapshotPartitions.readPruned(s, t, pred).orderBy("event_id")
     },
 
-    "r53_deletion_vectors" -> { (s, dir) =>
+    Gate("r53_deletion_vectors",
+      // R53: the MoR read equals the plain predicate filter
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 7 <> 0 AND o_custkey % 11 <> 0""".stripMargin) { (s, dir) =>
       // R53: merge-on-read deletes — two cumulative DV batches against a
       // two-commit base; the in-gate require proves NO data file was
       // rewritten (the whole point vs R43's copy-on-write), and the MoR
@@ -676,7 +920,13 @@ object Relational {
       SnapshotDv.readMor(s, t).orderBy("o_orderkey")
     },
 
-    "r52_snapshot_evolution" -> { (s, dir) =>
+    Gate("r52_snapshot_evolution",
+      // R52: old commit's rows surface with NULL in the later-added column
+      """SELECT o_orderkey, o_custkey, CAST(NULL AS DOUBLE) AS o_totalprice
+        |FROM orders WHERE o_orderkey % 3 = 0
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders WHERE o_orderkey % 3 = 1""".stripMargin) { (s, dir) =>
       // R52: column-add schema evolution under the manifest log — v1 files
       // predate o_totalprice, the Append's files carry it, and a merged
       // read resolves the union schema with nulls for the old rows. No
@@ -694,7 +944,10 @@ object Relational {
       SnapshotTable.read(s, t, mergeSchema = true).orderBy("o_orderkey")
     },
 
-    "r51_bloom_skip" -> { (s, dir) =>
+    Gate("r51_bloom_skip",
+      // R51: the point lookup's exact rows; skipping is proven in-gate
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders)""".stripMargin) { (s, dir) =>
       // R51: bloom point-lookup skipping on a layout R42's ranges CANNOT
       // prune — four Append commits each hold one residue class mod 4, so
       // every file's o_orderkey range spans the table, but a point probe
@@ -717,7 +970,16 @@ object Relational {
       SnapshotBloom.readPoint(s, t, "o_orderkey", key)
     },
 
-    "r50_txn_commit" -> { (s, dir) =>
+    Gate("r50_txn_commit",
+      // R50: the txn-1 cut is the FULL aggregates of both tables — a torn
+      // read resolving either table to txn 2's filtered half breaks the hash
+      """SELECT 'nation' AS tbl, CAST(c_nationkey AS VARCHAR) AS key,
+        |       CAST(count(*) AS BIGINT) AS cnt
+        |FROM customer GROUP BY c_nationkey
+        |UNION ALL
+        |SELECT 'status' AS tbl, o_orderstatus AS key,
+        |       CAST(count(*) AS BIGINT) AS cnt
+        |FROM orders GROUP BY o_orderstatus""".stripMargin) { (s, dir) =>
       // R50: atomic cross-table transaction + cross-table time travel.
       // Txn 1 commits the full per-nation and per-orderstatus aggregates;
       // txn 2 overwrites BOTH with filtered halves. Reading both tables
@@ -743,7 +1005,10 @@ object Relational {
         .orderBy("tbl", "key")
     },
 
-    "r47_snapshot_restore" -> { (s, dir) =>
+    Gate("r47_snapshot_restore",
+      // R47: after the restore, only the base commit's rows are visible
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 = 0""".stripMargin) { (s, dir) =>
       // R47: RESTORE — commit the base, clobber it twice (a bad overwrite,
       // then a bad append), restore to v1 and read LATEST. The restore is
       // metadata-only: the in-gate require proves the restored version
@@ -762,7 +1027,11 @@ object Relational {
       SnapshotTable.read(s, t)
     },
 
-    "r64_vacuum" -> { (s, dir) =>
+    Gate("r64_vacuum",
+      // R64: the post-vacuum latest = v2 overwrite + v3 append — vacuum must
+      // be invisible to every retained reader
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 IN (1, 2)""".stripMargin) { (s, dir) =>
       // R64: retention VACUUM — the storage-lifecycle bound every
       // long-lived table format needs (Delta/Iceberg VACUUM / expire
       // snapshots): drop manifests below the retention floor and
@@ -797,7 +1066,11 @@ object Relational {
       SnapshotTable.read(s, t)
     },
 
-    "r49_shallow_clone" -> { (s, dir) =>
+    Gate("r49_shallow_clone",
+      // R49: the clone pins the forked content; the source's later
+      // overwrite must be invisible through it
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin) { (s, dir) =>
       // R49: zero-copy fork. Clone the source, then OVERWRITE the source —
       // the clone must still read the forked content (independence), and
       // the in-gate require proves the clone is metadata-only: no data
@@ -817,7 +1090,15 @@ object Relational {
       SnapshotTable.read(s, dst)
     },
 
-    "r48_checked_commit" -> { (s, dir) =>
+    Gate("r48_checked_commit",
+      // R48: the expectations replayed in SQL — positive_chars never fires
+      // on this corpus (min n_chars = 48), short_text splits it; the failed
+      // Fail-policy attempt must have published zero versions
+      """SELECT doc_id,
+        |  CASE WHEN n_chars < 400 THEN 'kept' ELSE 'quarantined' END AS bucket,
+        |  CASE WHEN n_chars < 400 THEN '' ELSE 'short_text' END AS violations,
+        |  CAST(0 AS BIGINT) AS n_failed_versions
+        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // R48: expectation-gated publication (R36 × R40). A Fail-policy
       // commit against a violated rule must publish NOTHING (the failed
       // table's version count rides the output); the Quarantine retry
@@ -847,7 +1128,9 @@ object Relational {
         .orderBy("doc_id")
     },
 
-    "r41_optimize" -> { (s, dir) =>
+    Gate("r41_optimize",
+      // R41: OPTIMIZE is invisible to readers — same rows, better layout
+      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders") { (s, dir) =>
       // R41: snapshot-preserving OPTIMIZE — commit a deliberately
       // 64-fragmented table, z-order-optimize it into the next version,
       // read the result. Content must be byte-identical to the source
@@ -860,7 +1143,10 @@ object Relational {
       SnapshotTable.read(s, t)
     },
 
-    "r42_stats_skipping" -> { (s, dir) =>
+    Gate("r42_stats_skipping",
+      // R42: skipping is invisible to readers — same rows, fewer files read
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey BETWEEN 500 AND 2500""".stripMargin) { (s, dir) =>
       // R42: manifest-level data skipping — commit orders range-clustered
       // on o_orderkey (footer stats per file land in the sidecar), then
       // readPruned a selective key range: the scan plans only the files
@@ -876,7 +1162,16 @@ object Relational {
         col("o_orderkey") >= 500 && col("o_orderkey") <= 2500)
     },
 
-    "r43_cow_merge" -> { (s, dir) =>
+    Gate("r43_cow_merge",
+      // R43: the merge replayed in SQL — updates as CASE, deletes as WHERE,
+      // inserts as a UNION'd range
+      """SELECT o_orderkey, o_custkey,
+        |  CASE WHEN o_orderkey BETWEEN 100 AND 200 THEN -1.0
+        |       ELSE o_totalprice END AS o_totalprice
+        |FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
+        |UNION ALL
+        |SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT), 5.0
+        |FROM range(5)""".stripMargin) { (s, dir) =>
       // R43: copy-on-write MERGE — commit orders key-clustered, apply a
       // narrow changeset (updates in [100,200], deletes in [300,350], 5
       // inserts past the key range); R42's stats confine the rewrite to
@@ -903,7 +1198,21 @@ object Relational {
       SnapshotTable.read(s, t)
     },
 
-    "r44_snapshot_cdc" -> { (s, dir) =>
+    Gate("r44_snapshot_cdc",
+      // R44: the change feed reconstructed from the changeset definition —
+      // updates contribute a pre and a post image, deletes their old image,
+      // inserts their new one; carried rows contribute NOTHING
+      """SELECT o_orderkey, o_custkey, o_totalprice, 'U_pre' AS op
+        |FROM orders WHERE o_orderkey BETWEEN 100 AND 200
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, -1.0, 'U_post'
+        |FROM orders WHERE o_orderkey BETWEEN 100 AND 200
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, o_totalprice, 'D'
+        |FROM orders WHERE o_orderkey BETWEEN 300 AND 350
+        |UNION ALL
+        |SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT), 5.0, 'I'
+        |FROM range(5)""".stripMargin) { (s, dir) =>
       // R44: change-data-feed read — replay r43's merge, then ask the
       // table WHAT CHANGED between the two versions. The feed must be
       // exactly the changeset's net effect (I/D plus U_pre+U_post pairs);
@@ -928,7 +1237,22 @@ object Relational {
       SnapshotTable.changesBetween(s, t, 1L, 2L, Seq("o_orderkey"))
     },
 
-    "x14_snapshot_ivm" -> { (s, dir) =>
+    Gate("x14_snapshot_ivm",
+      // X14: the maintained rollup must equal a from-scratch aggregate over
+      // the post-merge base state (the merge replayed in SQL as in r43)
+      """WITH v2 AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    CASE WHEN o_orderkey BETWEEN 100 AND 200
+        |         THEN CAST(-1.0 AS DECIMAL(18,2))
+        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
+        |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
+        |  UNION ALL
+        |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
+        |    CAST(5.0 AS DECIMAL(18,2))
+        |  FROM range(5))
+        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(price) AS DOUBLE) AS sum_price
+        |FROM v2 GROUP BY o_custkey""".stripMargin) { (s, dir) =>
       // X14: incremental MV maintenance over the table format — bootstrap
       // a per-customer (n, sum_price) rollup of a committed orders
       // snapshot, merge r43's changeset into the base, refresh. The
@@ -960,7 +1284,13 @@ object Relational {
         .select(col("o_custkey"), col("n"), emit(col("sum_price")).as("sum_price"))
     },
 
-    "r45_mv_rewrite" -> { (s, dir) =>
+    Gate("r45_mv_rewrite",
+      // R45: the rewrite must be invisible to results — the oracle aggregates
+      // raw lineitem, never seeing the rollup
+      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem WHERE l_linestatus = 'F'
+        |GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       // R45: MV auto-rewrite — lineitem (decimal qty) committed as a
       // snapshot base, its (returnflag, linestatus) rollup maintained by
       // X14, registered with the optimizer rule; the gate query filters a
@@ -1005,7 +1335,19 @@ object Relational {
       q.select(col("l_returnflag"), col("n_rows"), emit(col("sum_qty")).as("sum_qty"))
     },
 
-    "r46_frequent_items" -> { (s, dir) =>
+    Gate("r46_frequent_items",
+      // R46: the sketch+verify pipeline is semantically a plain
+      // GROUP BY/HAVING over the planted-skew key — any candidate the
+      // sketch missed or extra the verify pass kept breaks the hash
+      """WITH k AS (
+        |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
+        |              WHEN o_orderkey % 7 = 0 THEN 7
+        |              ELSE o_custkey END AS item
+        |  FROM orders
+        |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
+        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
+        |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
+        |ORDER BY item""".stripMargin) { (s, dir) =>
       // R46: exact heavy hitters over a skewed key stream — two hot keys
       // planted into the otherwise-uniform custkey distribution (≡0 mod 3
       // → key 42 at ~33%, else ≡0 mod 7 → key 7 at ~9.5%; capacity 20 ⇒
@@ -1022,7 +1364,21 @@ object Relational {
       HeavyHitters.exact(keyed, "k", capacity = 20)
     },
 
-    "x15_stream_ivm" -> { (s, dir) =>
+    Gate("x15_stream_ivm",
+      // X15: same final state as x14 — the batch split must be invisible
+      """WITH v2 AS (
+        |  SELECT o_orderkey, o_custkey,
+        |    CASE WHEN o_orderkey BETWEEN 100 AND 200
+        |         THEN CAST(-1.0 AS DECIMAL(18,2))
+        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
+        |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
+        |  UNION ALL
+        |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
+        |    CAST(5.0 AS DECIMAL(18,2))
+        |  FROM range(5))
+        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(price) AS DOUBLE) AS sum_price
+        |FROM v2 GROUP BY o_custkey""".stripMargin) { (s, dir) =>
       // X15: the R43×R44×X14 chain driven by a stream — three disjoint CDC
       // shards (U/D/I, one per micro-batch) merge into the snapshot base
       // and the rollup refreshes after each batch; the final MV must equal
@@ -1057,7 +1413,13 @@ object Relational {
         .select(col("o_custkey"), col("n"), emit(col("sum_price")).as("sum_price"))
     },
 
-    "r27_rolling_window" -> { (s, dir) =>
+    Gate("r27_rolling_window",
+      """SELECT event_id, user_id, ts,
+        |  count(*) OVER w AS n_1h,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
+        |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""".stripMargin) { (s, dir) =>
       // time-RANGE rolling aggregate (r8's running agg is row-framed): each
       // event's trailing 1-hour sum/count per user. Range frames are
       // tie-insensitive — equal timestamps are peers and always share a
@@ -1072,7 +1434,7 @@ object Relational {
           emit(sum(money(col("value"))).over(w)).as("sum_1h"))
     },
 
-    "r28_partitioned_write" -> { (s, dir) =>
+    Gate("r28_partitioned_write", "SELECT doc_id, text, lang, source, n_chars FROM documents") { (s, dir) =>
       // hive-style partition layout: documents written partitionBy(lang) —
       // the coarse-pruning layer ABOVE row-group stats (a lang='en' query
       // never lists, opens, or reads any other language's files; at 100 TB
@@ -1086,7 +1448,15 @@ object Relational {
       s.read.parquet(out).select("doc_id", "text", "lang", "source", "n_chars")
     },
 
-    "r29_schema_evolution" -> { (s, dir) =>
+    Gate("r29_schema_evolution",
+      // R29: the merged read = old rows null-extended ∪ new rows, with the
+      // partition column restored from directory names.
+      """SELECT o_orderkey, o_custkey, CAST(NULL AS DOUBLE) AS o_totalprice,
+        |  CAST(1 AS BIGINT) AS batch
+        |FROM orders WHERE o_orderkey % 2 = 0
+        |UNION ALL
+        |SELECT o_orderkey, o_custkey, o_totalprice, CAST(2 AS BIGINT) AS batch
+        |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin) { (s, dir) =>
       // schema evolution on a growing dataset: batch 1 wrote (key, cust),
       // batch 2 added a column. mergeSchema reconciles parquet footers at
       // read time and null-fills the old files — the at-scale alternative
@@ -1104,7 +1474,17 @@ object Relational {
           col("batch").cast("long").as("batch"))
     },
 
-    "r30_range_join" -> { (s, dir) =>
+    Gate("r30_range_join",
+      // R30: the oracle runs the NAIVE inequality join — the binned
+      // decomposition must return the identical row set.
+      """SELECT o.o_orderkey, l.l_orderkey, l.l_linenumber,
+        |  CAST(CAST(l.l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS ship_day,
+        |  CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS win_start
+        |FROM orders o JOIN lineitem l
+        |  ON CAST(l.l_shipdate AS DATE) - DATE '1970-01-01'
+        |       BETWEEN CAST(o.o_orderdate AS DATE) - DATE '1970-01-01'
+        |           AND CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' + 14
+        |WHERE o.o_orderkey % 50 = 0 AND l.l_orderkey % 97 = 0""".stripMargin) { (s, dir) =>
       // generic range join, NO equi-key: each sampled shipment matches
       // every sampled order whose 15-day window [o_orderdate, +14d]
       // contains its ship day. The binned decomposition (16-day bins:
@@ -1126,7 +1506,18 @@ object Relational {
         .select("o_orderkey", "l_orderkey", "l_linenumber", "ship_day", "win_start")
     },
 
-    "r31_incr_agg" -> { (s, dir) =>
+    Gate("r31_incr_agg",
+      // R31: the oracle recomputes the rollup from the post-change row set
+      // (survivors ∪ re-inserts) — delta maintenance must equal recompute.
+      """WITH live AS (
+        |  SELECT o_orderstatus, CAST(o_totalprice AS DECIMAL(18,2)) AS price
+        |  FROM orders WHERE o_orderkey % 9 <> 0
+        |  UNION ALL
+        |  SELECT o_orderstatus, CAST(o_totalprice AS DECIMAL(18,2)) + 10 AS price
+        |  FROM orders WHERE o_orderkey % 9 = 1
+        |)
+        |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
+        |FROM live GROUP BY o_orderstatus""".stripMargin) { (s, dir) =>
       // incremental view maintenance: the per-status (count, sum) rollup
       // maintained under a CDC changeset (keys ≡0 mod 9 deleted, ≡1 mod 9
       // re-inserted at price+10) WITHOUT rescanning the base — the oracle
@@ -1144,7 +1535,12 @@ object Relational {
         .select(col("o_orderstatus"), col("n"), emit(col("sum_price")).as("sum_price"))
     },
 
-    "r32_grouping_sets" -> { (s, dir) =>
+    Gate("r32_grouping_sets",
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+        |  (l_returnflag), (l_linestatus))""".stripMargin) { (s, dir) =>
       // arbitrary GROUPING SETS (r19 ROLLUP and r23 CUBE are the fixed
       // hierarchical/exhaustive specializations): per-flag×status,
       // per-flag, and per-status rollups in ONE Expand pass + single
@@ -1158,7 +1554,15 @@ object Relational {
               |  (l_returnflag), (l_linestatus))""".stripMargin)
     },
 
-    "r33_dpp" -> { (s, dir) =>
+    Gate("r33_dpp",
+      // R33: one ASIA-mapped year survives the dim filter; the oracle joins
+      // on the derived year directly.
+      """SELECT CAST(year(o_orderdate) AS INT) AS o_year, r_name,
+        |  count(*) AS n,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders JOIN region ON year(o_orderdate) = r_regionkey + 1994
+        |WHERE r_name = 'ASIA'
+        |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
       // dynamic partition pruning: the fact table is partitioned on disk by
       // order year; the join's partition filter is only knowable at RUNTIME
       // from the filtered dim scan (r_name = 'ASIA' → one year), and Spark
@@ -1182,7 +1586,14 @@ object Relational {
         .agg(count(lit(1)).as("n"), emit(sum(col("price"))).as("total"))
     },
 
-    "r34_scd2" -> { (s, dir) =>
+    Gate("r34_scd2",
+      // R34: the shared change feed + lead() window re-derived; D tombstones
+      // close intervals but emit no row.
+      (scd2CteSql +
+      """
+        |SELECT o_orderkey, CAST(price AS DOUBLE) AS price, valid_from, valid_to,
+        |  (valid_to IS NULL AND op <> 'D') AS is_current
+        |FROM v WHERE op <> 'D'""".stripMargin)) { (s, dir) =>
       // SCD Type-2 history from the shared synthesized change feed
       // (scd2ChangeFeed — r35 consumes the same fixture): every sampled
       // order inserts at seq 1, keys ≡0 mod 3 update at seq 2, keys ≡0
@@ -1194,7 +1605,21 @@ object Relational {
           col("valid_from"), col("valid_to"), col("is_current"))
     },
 
-    "r35_pit_join" -> { (s, dir) =>
+    Gate("r35_pit_join",
+      // R35: the same SCD2 history + interval-containment fact join.
+      (scd2CteSql +
+      """, hist AS (
+        |  SELECT o_orderkey, price, valid_from, valid_to FROM v WHERE op <> 'D'
+        |), facts AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |    CAST((l_linenumber % 4) + 1 AS BIGINT) AS fact_seq
+        |  FROM lineitem WHERE l_orderkey % 7 = 0
+        |)
+        |SELECT l_orderkey, l_linenumber, fact_seq,
+        |  CAST(price AS DOUBLE) AS price, valid_from
+        |FROM facts JOIN hist ON l_orderkey = o_orderkey
+        |  AND fact_seq >= valid_from
+        |  AND (valid_to IS NULL OR fact_seq < valid_to)""".stripMargin)) { (s, dir) =>
       // the R34 consumer path: facts join the SCD2 history point-in-time —
       // key equality plus seq ∈ [valid_from, valid_to) picks the dimension
       // version that was current when the fact happened. The equi-key makes
@@ -1213,7 +1638,27 @@ object Relational {
           emit(col("price")).as("price"), col("valid_from"))
     },
 
-    "r36_constraints" -> { (s, dir) =>
+    Gate("r36_constraints",
+      // R36: the same planted violations re-derived; list sorted, comma-joined.
+      """WITH o AS (
+        |  SELECT o_orderkey,
+        |    CASE WHEN o_orderkey % 17 = 0 THEN 'Z' ELSE o_orderstatus END AS status,
+        |    CASE WHEN o_orderkey % 13 = 0 THEN -CAST(o_totalprice AS DECIMAL(18,2))
+        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price,
+        |    CASE WHEN o_orderkey % 19 = 0 THEN NULL ELSE o_custkey END AS cust
+        |  FROM orders
+        |), v AS (
+        |  SELECT o_orderkey,
+        |    list_sort(list_filter([
+        |      CASE WHEN NOT coalesce(price > 0, false) THEN 'positive_price' END,
+        |      CASE WHEN NOT coalesce(status IN ('F','O','P'), false) THEN 'known_status' END,
+        |      CASE WHEN NOT coalesce(cust IS NOT NULL, false) THEN 'has_customer' END
+        |    ], x -> x IS NOT NULL)) AS vio
+        |  FROM o
+        |)
+        |SELECT o_orderkey, coalesce(array_to_string(vio, ','), '') AS violations,
+        |  len(vio) = 0 AS is_valid
+        |FROM v""".stripMargin) { (s, dir) =>
       // declarative data-quality constraints over a feed with PLANTED
       // violations (keys ≡0 mod 13 get negative prices, ≡0 mod 17 an
       // unknown status, ≡0 mod 19 a null custkey): each row carries the
@@ -1236,7 +1681,18 @@ object Relational {
           col("is_valid"))
     },
 
-    "r37_json_ops" -> { (s, dir) =>
+    Gate("r37_json_ops",
+      // R37: DuckDB's ->> JSON extraction mirrors the path extract; sums
+      // wrapped back to BIGINT (DuckDB widens to HUGEINT). TRY_CAST mirrors
+      // Spark's cast-to-NULL on non-numeric payloads (CAST would hard-error),
+      // and ((k % 7) + 7) % 7 mirrors pmod on any sign — both identical to
+      // the simple forms on the current non-negative generator, but the
+      // oracle should match Spark semantics on ANY payload.
+      """SELECT CAST(((k % 7) + 7) % 7 AS BIGINT) AS bucket, count(*) AS n,
+        |  CAST(sum(k) AS BIGINT) AS k_sum, CAST(max(k) AS BIGINT) AS k_max
+        |FROM (SELECT TRY_CAST(props->>'k' AS BIGINT) AS k FROM events)
+        |WHERE k IS NOT NULL
+        |GROUP BY 1""".stripMargin) { (s, dir) =>
       // semi-structured column processing: the events feed carries a JSON
       // props payload; extract a typed field with a JSON path (codegen'd
       // get_json_object — schema-on-read, no ETL rewrite when the payload
@@ -1251,7 +1707,12 @@ object Relational {
           max(col("k")).as("k_max"))
     },
 
-    "r38_bloom_join" -> { (s, dir) =>
+    Gate("r38_bloom_join",
+      """SELECT o_orderpriority, count(*) AS n,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY o_orderpriority""".stripMargin) { (s, dir) =>
       // runtime bloom-filter join pruning: for a shuffle join with a
       // selective dim side, Spark's InjectRuntimeFilter builds a bloom
       // over the dim keys at runtime and pushes `might_contain` onto the
@@ -1268,7 +1729,11 @@ object Relational {
           emit(sum(money(col("l_extendedprice")))).as("total"))
     },
 
-    "r61_stats_join" -> { (s, dir) =>
+    Gate("r61_stats_join",
+      // R61: the plain join — broadcast/salt/shuffle strategy (and every
+      // in-gate plan assert) must be invisible to the answer.
+      """SELECT c_custkey, c_nationkey AS nationkey, n_name
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin) { (s, dir) =>
       // R61: the CBO consumption side of R60 — join strategy picked at
       // plan time from the two metadata surfaces the snapshot format
       // already maintains (manifest bytes + _analyze NDV), zero data I/O.
@@ -1309,7 +1774,13 @@ object Relational {
       dfa.select("c_custkey", "nationkey", "n_name")
     },
 
-    "r63_stats_sql_join" -> { (s, dir) =>
+    Gate("r63_stats_sql_join",
+      // R63: the plain-join re-derivation — broadcast promotion from the
+      // manifest bytes must be invisible to the answer
+      """SELECT c_mktsegment AS segment, count(*) AS n_orders,
+        |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_mktsegment""".stripMargin) { (s, dir) =>
       // R63: R61's broadcast law consumed INSIDE the SQL planner — a pure
       // SQL join of two R58 catalog tables, session broadcast threshold
       // DISABLED, must still plan the map-side join because the rule reads
@@ -1352,7 +1823,19 @@ object Relational {
       }
     },
 
-    "r39_aqe_skew_join" -> { (s, dir) =>
+    Gate("r39_aqe_skew_join",
+      // R39: the skew-key mapping re-derived; keys are non-negative so plain
+      // % matches Spark's %, and counts are BIGINT on both engines.
+      """WITH l AS (
+        |  SELECT CASE WHEN id % 4 < 3 THEN CAST(0 AS BIGINT)
+        |              ELSE CAST(id % 64 AS BIGINT) END AS k,
+        |         CAST(id % 97 AS DOUBLE) * 0.25 AS qty
+        |  FROM range(0, 200000) t(id))
+        |SELECT CAST(k % 8 AS BIGINT) AS bucket, count(*) AS n_rows,
+        |  CAST(sum(CAST(qty AS DECIMAL(18,2))) AS DOUBLE) AS qty,
+        |  max(n_name) AS top_nation
+        |FROM l JOIN nation ON l.k = CAST(n_nationkey AS BIGINT)
+        |GROUP BY 1""".stripMargin) { (s, dir) =>
       // AQE runtime skew split, the complement of R16's static salting: a
       // deliberately skewed fact join (~3/4 of lineitem maps to key 0)
       // whose VALUES are optimization-independent and hash-gated here; that
@@ -1388,7 +1871,9 @@ object Relational {
           max(col("n_name")).as("top_nation"))
     },
 
-    "r24_hll_sketch" -> { (s, dir) =>
+    Gate("r24_hll_sketch",
+      """SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users, true AS sketch_ok
+        |FROM events""".stripMargin) { (s, dir) =>
       // Mergeable distinct sketches (Apache DataSketches HLL via Spark's
       // hll_sketch_agg): per-event_type sketches built in one pass over the
       // facts are UNIONED into a global estimate — the re-aggregatable form
@@ -1409,7 +1894,11 @@ object Relational {
             greatest(col("n_users").cast("double") * lit(0.05), lit(1.0))).as("sketch_ok"))
     },
 
-    "r18_asof_join" -> { (s, dir) =>
+    Gate("r18_asof_join",
+      """SELECT p.event_id, p.user_id, p.ts, p.value, c.ts AS asof_click_ts
+        |FROM (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase') p
+        |ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') c
+        |  ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin) { (s, dir) =>
       // point-in-time join: each purchase picks up the user's latest click
       // at-or-before it (NULL when none) — DuckDB's native ASOF JOIN is the
       // oracle for the union-window formulation
@@ -1423,7 +1912,14 @@ object Relational {
 
     // ---- wd2sql surface (reference: README.md:103-156, src/id.rs:6-24) ----
 
-    "w1_id_encode" -> { (s, dir) =>
+    Gate("w1_id_encode",
+      """SELECT CAST(n_nationkey AS BIGINT) AS raw_id,
+        |  CAST(n_nationkey AS BIGINT) AS q_enc,
+        |  CAST(n_nationkey AS BIGINT) + 1000000000 AS p_enc,
+        |  CAST(n_nationkey AS BIGINT) + 2000000000 AS l_enc,
+        |  CAST(n_nationkey AS BIGINT) + 2000000000 + 2 * 100000000000 AS f_enc,
+        |  CAST(n_nationkey AS BIGINT) + 2000000000 + 3 * 100000000000 + 10000000000 AS s_enc
+        |FROM nation""".stripMargin) { (s, dir) =>
       Tables(s, dir).nation.select(
         col("n_nationkey").cast("long").as("raw_id"),
         IdCodec.qid(col("n_nationkey")).as("q_enc"),
@@ -1433,7 +1929,27 @@ object Relational {
         IdCodec.sid(col("n_nationkey"), lit(3)).as("s_enc"))
     },
 
-    "w2_id_decode" -> { (s, dir) =>
+    Gate("w2_id_decode",
+      """WITH enc AS (
+        |  SELECT unnest([CAST(n_nationkey AS BIGINT),
+        |                 CAST(n_nationkey AS BIGINT) + 1000000000,
+        |                 CAST(n_nationkey AS BIGINT) + 2000000000,
+        |                 CAST(n_nationkey AS BIGINT) + 2000000000 + 2 * 100000000000,
+        |                 CAST(n_nationkey AS BIGINT) + 2000000000 + 3 * 100000000000 + 10000000000]) AS eid
+        |  FROM nation)
+        |SELECT eid,
+        |  CASE WHEN eid >= 100000000000 THEN
+        |         CASE WHEN eid % 100000000000 >= 12000000000 THEN 'S' ELSE 'F' END
+        |       WHEN eid >= 2000000000 THEN 'L'
+        |       WHEN eid >= 1000000000 THEN 'P' ELSE 'Q' END AS kind,
+        |  CASE WHEN eid >= 100000000000 THEN
+        |         CASE WHEN eid % 100000000000 >= 12000000000
+        |              THEN eid % 100000000000 - 12000000000
+        |              ELSE eid % 100000000000 - 2000000000 END
+        |       WHEN eid >= 2000000000 THEN eid - 2000000000
+        |       WHEN eid >= 1000000000 THEN eid - 1000000000 ELSE eid END AS num,
+        |  CASE WHEN eid >= 100000000000 THEN eid // 100000000000 ELSE 0 END AS sub
+        |FROM enc""".stripMargin) { (s, dir) =>
       val enc = Tables(s, dir).nation.select(
         explode(array(
           IdCodec.qid(col("n_nationkey")),
@@ -1448,7 +1964,9 @@ object Relational {
         IdCodec.subCol(col("eid")).as("sub"))
     },
 
-    "w14_label_lookup" -> { (s, dir) =>
+    Gate("w14_label_lookup",
+      """SELECT p_partkey AS id, p_name AS label, p_type AS description
+        |FROM part WHERE label LIKE 'red %'""".stripMargin) { (s, dir) =>
       // meta-table label lookup ≙ README.md:108 `SELECT * FROM meta WHERE label = 'red'`
       Tables(s, dir).part
         .select(col("p_partkey").as("id"), col("p_name").as("label"),
@@ -1456,7 +1974,17 @@ object Relational {
         .filter(col("label").startsWith("red "))
     },
 
-    "w33_fuzzy_stored" -> { (s, dir) =>
+    Gate("w33_fuzzy_stored",
+      // W33: identical brute-force oracle as w32 — the stored index and its
+      // pruning are invisible to the answer (that is the point)
+      """WITH term AS (
+        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
+        |  FROM part WHERE p_partkey = 1)
+        |SELECT p_partkey AS id, p_name AS label,
+        |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
+        |FROM part
+        |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
+        |ORDER BY id""".stripMargin) { (s, dir) =>
       // W33: w32's lookup through the PERSISTED range-clustered variant
       // index — same typo term, same answer (the oracle is the identical
       // brute-force scan), but the probe plans only the files whose __h
@@ -1478,7 +2006,26 @@ object Relational {
         .orderBy("id")
     },
 
-    "w36_fuzzy_maintained" -> { (s, dir) =>
+    Gate("w36_fuzzy_maintained",
+      // W36: the changeset arithmetic re-derived in SQL, then the identical
+      // brute-force scan over the CURRENT label set — appends, stale
+      // variants, pruning and the maintenance fold are all invisible to it.
+      """WITH cur AS (
+        |  SELECT p_partkey AS id,
+        |    CASE WHEN p_partkey % 7 = 3
+        |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
+        |         ELSE p_name END AS label
+        |  FROM part WHERE p_partkey % 11 <> 0
+        |  UNION ALL
+        |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
+        |), term AS (
+        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
+        |  FROM part WHERE p_partkey = 1)
+        |SELECT id, label,
+        |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
+        |FROM cur
+        |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
+        |ORDER BY id""".stripMargin) { (s, dir) =>
       // W36: the W33 store under label churn — build on the v1 labels,
       // then apply one changeset (renames: id % 7 == 3 gets its 3rd char
       // turned to 'x'; deletes: id % 11 == 0; adds: id + 1000000 with a
@@ -1514,7 +2061,25 @@ object Relational {
       maintained.orderBy("id")
     },
 
-    "x27_stream_variant_index" -> { (s, dir) =>
+    Gate("x27_stream_variant_index",
+      // X27: the streamed W36 — same oracle verbatim; shard boundaries,
+      // batch tags and the replay probe are invisible to the answer.
+      """WITH cur AS (
+        |  SELECT p_partkey AS id,
+        |    CASE WHEN p_partkey % 7 = 3
+        |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
+        |         ELSE p_name END AS label
+        |  FROM part WHERE p_partkey % 11 <> 0
+        |  UNION ALL
+        |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
+        |), term AS (
+        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
+        |  FROM part WHERE p_partkey = 1)
+        |SELECT id, label,
+        |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
+        |FROM cur
+        |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
+        |ORDER BY id""".stripMargin) { (s, dir) =>
       // X27: the W36 maintenance loop as a STREAM — the same churn
       // arrives as 3 label shards in a watched directory, each
       // micro-batch Appends only its variant delta batch-tagged; a
@@ -1550,7 +2115,17 @@ object Relational {
         .orderBy("id")
     },
 
-    "w32_fuzzy_label" -> { (s, dir) =>
+    Gate("w32_fuzzy_label",
+      // W32: the same typo derivation, then a full levenshtein scan — the
+      // brute-force oracle for the variant-index probe path.
+      """WITH term AS (
+        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
+        |  FROM part WHERE p_partkey = 1)
+        |SELECT p_partkey AS id, p_name AS label,
+        |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
+        |FROM part
+        |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
+        |ORDER BY id""".stripMargin) { (s, dir) =>
       // W32: typo-tolerant label lookup over the same label surface as
       // w14 — the query term is part 1's name with its 3rd char turned
       // into 'z' (a one-substitution typo both engines derive from the
@@ -1571,7 +2146,12 @@ object Relational {
         .orderBy("id")
     },
 
-    "w15_conjunctive_semijoin" -> { (s, dir) =>
+    Gate("w15_conjunctive_semijoin",
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem JOIN part ON l_partkey = p_partkey
+        |                     WHERE p_brand = 'Brand#1')
+        |  AND o_orderkey IN (SELECT l_orderkey FROM lineitem JOIN part ON l_partkey = p_partkey
+        |                     WHERE p_brand = 'Brand#2')""".stripMargin) { (s, dir) =>
       // "red fruits" pattern (README.md:129-131): ids satisfying claim A AND claim B
       // = chained LEFT SEMI joins; Catalyst broadcasts the small claim sets.
       val t = Tables(s, dir)
@@ -1585,7 +2165,16 @@ object Relational {
         .select("o_orderkey", "o_totalprice")
     },
 
-    "w45_conjunctive_at" -> { (s, dir) =>
+    Gate("w45_conjunctive_at",
+      // W45: the surviving conjunction as pure residue arithmetic — claim
+      // plumbing, spans and semi-join order all invisible. The span
+      // residues intersect the conjunction set (23 mod 70), so the
+      // temporal clauses remove real rows (14 → 8).
+      """SELECT id FROM range(0, 1000) t(id)
+        |WHERE id % 10 = 3 AND id % 7 = 2
+        |  AND NOT id % 3 = 0   -- P31 claim ended 1940: dead at 1950
+        |  AND NOT id % 11 = 0  -- P27 claim starts 1960: not yet at 1950
+        |ORDER BY id""".stripMargin) { (s, dir) =>
       // W45 = W15 × W35: "red fruits, as of 1950" — ids whose P31 points
       // at 3 AND P27 at 2, both claims in force at T. Deterministic
       // two-property claim set over ids 0..999 (P31 → id%10, P27 → id%7)
@@ -1624,7 +2213,33 @@ object Relational {
         .orderBy("id")
     },
 
-    "w41_temporal_path" -> { (s, dir) =>
+    Gate("w41_temporal_path",
+      // W41: both alive edge sets, the closure and the zero-hop rewrite
+      // re-derived from the same arithmetic.
+      """WITH RECURSIVE e279 AS (
+        |  SELECT id AS src, id // 2 AS dst,
+        |    CASE WHEN id % 3 = 0
+        |      THEN make_timestamp(CAST(1900 + id % 50 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vfrom,
+        |    CASE WHEN id % 4 = 0
+        |      THEN make_timestamp(CAST(1940 + id % 40 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vuntil
+        |  FROM range(2, 256) t(id)
+        |), a279 AS (
+        |  SELECT src, dst FROM e279
+        |  WHERE (vfrom IS NULL OR vfrom <= TIMESTAMP '1950-06-01 00:00:00')
+        |    AND (vuntil IS NULL OR vuntil > TIMESTAMP '1950-06-01 00:00:00')
+        |), a31 AS (
+        |  SELECT 1000 + id AS src, id AS dst
+        |  FROM range(2, 256) t(id)
+        |  WHERE NOT (id % 5 = 0 AND make_timestamp(1945, 1, 1, 0, 0, 0.0) <= TIMESTAMP '1950-06-01 00:00:00')
+        |    AND NOT (id % 7 = 0 AND make_timestamp(1960, 1, 1, 0, 0, 0.0) > TIMESTAMP '1950-06-01 00:00:00')
+        |), cl AS (
+        |  SELECT src, dst FROM a279
+        |  UNION
+        |  SELECT cl.src, a.dst FROM cl JOIN a279 a ON cl.dst = a.src
+        |)
+        |SELECT DISTINCT x.src, y.dst FROM a31 x JOIN cl y ON x.dst = y.src
+        |UNION
+        |SELECT src, dst FROM a31""".stripMargin) { (s, dir) =>
       // W41 = W21 × W35: a COMPOSED path at a point in time —
       // P31/P279* ("instances of any subclass, as the ontology stood at
       // 1950") over a two-property temporal graph: the P279 class tree
@@ -1665,7 +2280,26 @@ object Relational {
         .orderBy("src", "dst")
     },
 
-    "w39_temporal_closure" -> { (s, dir) =>
+    Gate("w39_temporal_closure",
+      // W39: spans, the alive-at-T filter and the recursive closure all
+      // re-derived from the same arithmetic — qualifier plumbing invisible.
+      """WITH RECURSIVE e AS (
+        |  SELECT id AS src, id // 2 AS dst,
+        |    CASE WHEN id % 3 = 0
+        |      THEN make_timestamp(CAST(1900 + id % 50 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vfrom,
+        |    CASE WHEN id % 4 = 0
+        |      THEN make_timestamp(CAST(1940 + id % 40 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vuntil
+        |  FROM range(2, 4096) t(id)
+        |), alive AS (
+        |  SELECT src, dst FROM e
+        |  WHERE (vfrom IS NULL OR vfrom <= TIMESTAMP '1950-06-01 00:00:00')
+        |    AND (vuntil IS NULL OR vuntil > TIMESTAMP '1950-06-01 00:00:00')
+        |), cl AS (
+        |  SELECT src, dst FROM alive
+        |  UNION
+        |  SELECT cl.src, a.dst FROM cl JOIN alive a ON cl.dst = a.src
+        |)
+        |SELECT src, dst FROM cl""".stripMargin) { (s, dir) =>
       // W39 = W20 × W35: the ontology closure AS OF a point in time — the
       // "subclass tree as of 1950" query neither operator answers alone
       // (and the reference cannot ask at all: no qualifiers, no closure).
@@ -1698,7 +2332,17 @@ object Relational {
         .orderBy("src", "dst")
     },
 
-    "w20_path_closure" -> { (s, dir) =>
+    Gate("w20_path_closure",
+      // W20: the same closure via DuckDB's recursive CTE (UNION dedups, so
+      // the recursion terminates at the fixpoint like the doubling does).
+      """WITH RECURSIVE e AS (
+        |  SELECT id AS src, id // 2 AS dst FROM range(2, 4096) t(id)
+        |), cl AS (
+        |  SELECT src, dst FROM e
+        |  UNION
+        |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
+        |)
+        |SELECT src, dst FROM cl""".stripMargin) { (s, dir) =>
       // transitive property path (P279*-shaped): full reachability closure
       // of a deterministic 4094-node binary-tree hierarchy (child i →
       // parent i div 2, depth 11) via path doubling — the ontology-closure
@@ -1711,7 +2355,20 @@ object Relational {
         .orderBy("src", "dst")
     },
 
-    "w49_truthy_closure" -> { (s, dir) =>
+    Gate("w49_truthy_closure",
+      // W49: the truthy edge set re-derived as residue arithmetic — a %5 id
+      // keeps ONLY its preferred id//4 edge, everyone else the normal id//2
+      // edge, deprecated edges never exist — then the same recursive CTE.
+      """WITH RECURSIVE e AS (
+        |  SELECT id AS src,
+        |    CASE WHEN id % 5 = 0 THEN id // 4 ELSE id // 2 END AS dst
+        |  FROM range(2, 4096) t(id)
+        |), cl AS (
+        |  SELECT src, dst FROM e
+        |  UNION
+        |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
+        |)
+        |SELECT src, dst FROM cl ORDER BY src, dst""".stripMargin) { (s, dir) =>
       // W49 = W20 × W46: the ontology closure under wdt: semantics — the
       // BestRank cut picks each node's edge set, THEN path doubling runs
       // over the survivors. Deterministic contested hierarchy over ids
@@ -1741,7 +2398,24 @@ object Relational {
         .orderBy("src", "dst")
     },
 
-    "w31_ontology_cycles" -> { (s, dir) =>
+    Gate("w31_ontology_cycles",
+      // W31: closure over the planted-cycle tree, self-pairs = loop members,
+      // taint = everything whose ancestor chain reaches one
+      """WITH RECURSIVE e AS (
+        |  SELECT id AS src, id // 2 AS dst FROM range(2, 2048) t(id)
+        |  UNION ALL
+        |  SELECT * FROM (VALUES (4, 8), (32, 64), (256, 512)) v(src, dst)
+        |), cl AS (
+        |  SELECT src, dst FROM e
+        |  UNION
+        |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
+        |), cyc AS (
+        |  SELECT DISTINCT src AS cid FROM cl WHERE src = dst
+        |)
+        |SELECT DISTINCT cl.src AS id,
+        |  cl.src IN (SELECT cid FROM cyc) AS on_cycle
+        |FROM cl WHERE cl.dst IN (SELECT cid FROM cyc)
+        |ORDER BY id""".stripMargin) { (s, dir) =>
       // W31: the P279-loop audit over a deterministic 2046-node class tree
       // with three planted back-edges (parent → child), each closing a
       // 2-cycle. cycleAudit must flag exactly the six loop members and
@@ -1756,7 +2430,23 @@ object Relational {
         .orderBy("id")
     },
 
-    "w21_path_compose" -> { (s, dir) =>
+    Gate("w21_path_compose",
+      // W21: (P31|P101)/P279* — seed with the alternation's 1-step pairs
+      // (zero P279 hops), then extend through the class tree; UNION dedups,
+      // so the fixpoint is the reachability set
+      """WITH RECURSIVE p279 AS (
+        |  SELECT id AS src, id // 2 AS dst FROM range(2, 1025) t(id)
+        |), step1 AS (
+        |  SELECT 100000 + i AS src, 2 + (i % 1023) AS dst FROM range(0, 5000) t(i)
+        |  UNION
+        |  SELECT 100000 + i AS src, 2 + ((i * 3) % 1023) AS dst
+        |  FROM range(0, 1000) t(i) WHERE i % 7 = 0
+        |), reach AS (
+        |  SELECT src, dst FROM step1
+        |  UNION
+        |  SELECT reach.src, p279.dst FROM reach JOIN p279 ON reach.dst = p279.src
+        |)
+        |SELECT src, dst FROM reach""".stripMargin) { (s, dir) =>
       // composed property path `(P31|P101)/P279*` — "instance (or field-of-
       // work) of any subclass of", the reference README's own SPARQL
       // comparison pattern (README.md:146-152) that single-property closure
@@ -1778,7 +2468,26 @@ object Relational {
         .orderBy("src", "dst")
     },
 
-    "w30_negated_path" -> { (s, dir) =>
+    Gate("w30_negated_path",
+      // W30: negating the instance properties leaves exactly P279, so the
+      // first leg is the P279+ closure; the inverse-negated set is the
+      // reversed instance edges
+      """WITH RECURSIVE p279 AS (
+        |  SELECT id AS src, id // 2 AS dst FROM range(2, 1025) t(id)
+        |), plus AS (
+        |  SELECT src, dst FROM p279
+        |  UNION
+        |  SELECT plus.src, p279.dst FROM plus JOIN p279 ON plus.dst = p279.src
+        |), step1 AS (
+        |  SELECT 100000 + i AS src, 2 + (i % 1023) AS dst FROM range(0, 5000) t(i)
+        |  UNION
+        |  SELECT 100000 + i AS src, 2 + ((i * 3) % 1023) AS dst
+        |  FROM range(0, 1000) t(i) WHERE i % 7 = 0
+        |)
+        |SELECT src, dst FROM plus
+        |UNION
+        |SELECT dst AS src, src AS dst FROM step1
+        |ORDER BY src, dst""".stripMargin) { (s, dir) =>
       // SPARQL negated property sets composed into the algebra:
       // `(!(P31|P101)/P279*) | !(^P279)` over the w21 claim universe. The
       // first leg negates every instance property, leaving exactly the
@@ -1804,7 +2513,25 @@ object Relational {
         .orderBy("src", "dst")
     },
 
-    "w24_geo_radius" -> { (s, dir) =>
+    Gate("w24_geo_radius",
+      // W24: same deterministic point set from range(); the oracle needs no
+      // bbox (that is pushdown plumbing, not semantics) — the integer circle
+      // test is the whole predicate, cos_pm = 658 the shared literal
+      """WITH pts AS (
+        |  SELECT range AS id,
+        |    (range * 2654435761) % 120000001 - 60000000 AS lat_micro,
+        |    (range * 1597334677) % 360000001 - 180000000 AS lon_micro
+        |  FROM range(0, 50000)
+        |), d AS (
+        |  SELECT id, lat_micro, lon_micro,
+        |    abs(lat_micro - 48856600) * abs(lat_micro - 48856600)
+        |      + ((abs(lon_micro - 2352200) * 658) // 1000)
+        |        * ((abs(lon_micro - 2352200) * 658) // 1000) AS dist2
+        |  FROM pts
+        |)
+        |SELECT id, lat_micro, lon_micro, dist2 FROM d
+        |WHERE dist2 <= CAST(4491600 AS BIGINT) * 4491600
+        |ORDER BY dist2, id LIMIT 100""".stripMargin) { (s, dir) =>
       // geo-radius search: 100 nearest of 50k deterministic points
       // (multiplicative-hash spread over lat ∈ ±60°, lon ∈ ±180°, exactly
       // re-derivable from range() in DuckDB) within ~500 km of Paris.
@@ -1820,1039 +2547,9 @@ object Relational {
         radiusMicro = 4491600L, k = 100)
     },
 
-    "w26_entity_similarity" -> { (s, dir) =>
-      // KG entity resolution re-expressed on the stand-in schema: two
-      // entities are similar when the sets of claims they carry overlap —
-      // here nations by the distinct parts their suppliers ship
-      // (lineitem ≙ claims). Exact Jaccard ≥ 0.5 through the LOSSLESS
-      // PPJoin path over arbitrary long-id sets (setJaccardPairs, the D4
-      // kernel generalized past text), so the blocking is invisible and
-      // DuckDB re-derives the pure pair set from shared elements.
-      val t = Tables(s, dir)
-      val sets = t.lineitem
-        .join(t.supplier.select("s_suppkey", "s_nationkey"),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("s_nationkey").as("id"))
-        .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("__set"))
-      Dedup.setJaccardPairs(sets, threshold = 0.5)
-        .orderBy("id_a", "id_b")
-    },
-
-    "w25_geo_pairs" -> { (s, dir) =>
-      // spatial pair self-join: all pairs within 2.0 deg (squared-microdegree
-      // metric) over 10k deterministic points. The operator grid-blocks
-      // (cell = eps, 3×3 replication, home-side dedup); the oracle brute
-      // forces the same long-arithmetic predicate with a lat-band range
-      // join — blocking must be invisible. Exactly-once pair emission and
-      // boundary coverage are GeoSpec's.
-      val pts = s.range(0, 10000).select(col("id"),
-        ((col("id") * 2654435761L) % 120000001L - 60000000L).as("lat_micro"),
-        ((col("id") * 1597334677L) % 360000001L - 180000000L).as("lon_micro"))
-      Geo.pairsWithin(pts, "id", "lat_micro", "lon_micro", epsMicro = 2000000L)
-        .orderBy("id_a", "id_b")
-    },
-
-    "w27_hop_distance" -> { (s, dir) =>
-      // min-hop distances from the root over the w23 claim graph with
-      // edges reversed (child→parent becomes parent→child): "how deep
-      // below the root class is each entity" — the distance question the
-      // boolean closure (w20/w21) cannot answer. Frontier BFS settles
-      // each depth in one round; DuckDB replays with a recursive
-      // UNION-dedup walk + min aggregation. BFS semantics (multi-source
-      // min, unreachable absent, round bound) are PropertyPathSpec's.
-      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
-      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
-      val rev = tree.unionByName(cross)
-        .select(col("dst").as("src"), col("src").as("dst"))
-      PropertyPath.hopDistances(rev, s.range(1, 2).toDF("id"))
-        .orderBy("id")
-    },
-
-    "w29_shortest_path" -> { (s, dir) =>
-      // single-pair shortest path with its meet certificate: from deep
-      // leaf 4093 to the root over the w23 claim graph (tree edges point
-      // child → parent; cross links add shortcuts, so the answer is NOT
-      // simply the tree depth). The operator meets in the middle
-      // (bidirectional BFS, smaller-frontier rule); the oracle replays
-      // two full recursive BFS walks and intersects — the search strategy
-      // must be invisible in the (meet_id, dist) set. Brute-force
-      // equality on random graphs, unreachable pairs, self pairs and the
-      // early-exit bound are PropertyPathSpec's.
-      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
-      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
-      PropertyPath.shortestMeet(tree.unionByName(cross), srcId = 4093L, dstId = 1L)
-        .orderBy("meet_id")
-    },
-
-    "w23_pagerank" -> { (s, dir) =>
-      // entity centrality: 5 integer-unit PageRank steps over a
-      // deterministic claim graph — a 4094-edge class tree (i -> i div 2,
-      // the w20 hierarchy) plus a sparse cross-link family; node 1 (the
-      // root) has no out-edge, exercising the dangling-mass convention.
-      // Every intermediate is floor division on longs, so the DuckDB
-      // oracle unrolling the same 5 steps in SQL is hash-exact on all
-      // 4095 ranks. Fixed points, brute-force equality and dangling
-      // semantics are CentralitySpec's.
-      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
-      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
-      Centrality.pageRank(tree.unionByName(cross), iterations = 5)
-    },
-
-    "w28_triangles" -> { (s, dir) =>
-      // per-node triangle counts over the w23 claim graph densified with
-      // grandparent short-cuts (i -> i div 4), which close one triangle
-      // {i, i div 2, i div 4} per node — plus the cross-link family for
-      // irregular closures, reverse edges and parallel edges (the
-      // canonicalization must absorb them). The operator counts via
-      // degree-ordered orientation; the oracle brute-forces the canonical
-      // a<b<c triple join — the orientation strategy must be invisible.
-      // Orientation-vs-brute equality on random graphs, skew safety and
-      // the simple-graph contract are CentralitySpec's.
-      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
-      val grand = s.range(4, 4096).select(col("id").as("src"), expr("id div 4").as("dst"))
-      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
-        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
-      Centrality.triangleCounts(tree.unionByName(grand).unionByName(cross))
-        .orderBy("id")
-    },
-
-    "w16_claim_filter" -> { (s, dir) =>
-      // claim-value lookup with property filter: claims(id, property, value)
-      // ≙ lineitem(l_orderkey, l_partkey, l_quantity) + label join.
-      val t = Tables(s, dir)
-      t.lineitem
-        .join(t.part.filter(col("p_brand") === "Brand#3"),
-          col("l_partkey") === col("p_partkey"))
-        .filter(col("l_quantity") >= 50)
-        .select(col("l_orderkey").as("id"), col("p_name").as("label"),
-          col("l_quantity").as("quantity"))
-    }
-  )
-
-  // ---------------------------------------------------------------- oracles
-
-  def oracleSql: Map[String, String] = Map(
-    "r1_pushdown" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '2000-01-01' AND l_shipdate < TIMESTAMP '2001-01-01'
-        |  AND l_quantity > 45""".stripMargin,
-
-    "r2_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "r3_join_agg" ->
-      """SELECT l_orderkey, o_orderdate, o_orderpriority,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS rev
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01' AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY rev DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "r4_star_join" ->
-      """SELECT r_name, n_name,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS rev,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name""".stripMargin,
-
-    "r6_antijoin" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')""".stripMargin,
-
-    "r7_window_topn" ->
-      """SELECT p_brand, p_partkey, CAST(rev AS DOUBLE) AS rev, rk FROM (
-        |  SELECT p_brand, p_partkey, rev,
-        |    rank() OVER (PARTITION BY p_brand ORDER BY rev DESC, p_partkey) AS rk
-        |  FROM (
-        |    SELECT p_brand, p_partkey,
-        |      sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev
-        |    FROM lineitem JOIN part ON l_partkey = p_partkey
-        |    GROUP BY p_brand, p_partkey)
-        |) WHERE rk <= 3""".stripMargin,
-
-    "r8_window_running" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-        |FROM orders""".stripMargin,
-
-    "r9_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-        |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "r9_approx" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts, true AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "r10_setops" ->
-      """SELECT nk, 'both' AS tag FROM
-        |  (SELECT c_nationkey AS nk FROM customer INTERSECT SELECT s_nationkey FROM supplier)
-        |UNION ALL
-        |SELECT nk, 'cust_only' AS tag FROM
-        |  (SELECT c_nationkey AS nk FROM customer EXCEPT SELECT s_nationkey FROM supplier)""".stripMargin,
-
-    "r11_condagg" ->
-      """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |  count(*) AS n_events, count(DISTINCT user_id) AS n_users,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchases,
-        |  CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2))
-        |      ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "r12_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 15""".stripMargin,
-
-    "r14_nullsafe" ->
-      """SELECT o_orderkey,
-        |  CAST(coalesce(sum(CAST(bl_extendedprice AS DECIMAL(18,2))), CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS big_value,
-        |  count(bl_orderkey) AS n_big_items
-        |FROM orders LEFT JOIN (
-        |  SELECT l_orderkey AS bl_orderkey, l_extendedprice AS bl_extendedprice
-        |  FROM lineitem WHERE l_quantity > 49) ON o_orderkey = bl_orderkey
-        |GROUP BY o_orderkey""".stripMargin,
-
-    "r15_percentile" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.5) AS median_qty,
-        |  quantile_cont(l_quantity, 0.95) AS p95_qty,
-        |  quantile_cont(l_extendedprice, 0.5) AS median_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "r20_approx_quantile" ->
-      """SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5) AS median_price,
-        |  true AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "r21_zorder_roundtrip" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders",
-
-    "p1_topk_native" ->
-      """SELECT p_brand, p_partkey, CAST(rev AS DOUBLE) AS rev FROM (
-        |  SELECT p_brand, p_partkey, rev,
-        |    row_number() OVER (PARTITION BY p_brand ORDER BY rev DESC, p_partkey DESC) AS rn
-        |  FROM (
-        |    SELECT p_brand, p_partkey,
-        |      sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev
-        |    FROM lineitem JOIN part ON l_partkey = p_partkey
-        |    GROUP BY p_brand, p_partkey)
-        |) WHERE rn <= 3""".stripMargin,
-
-    "r16_salted_join" ->
-      """SELECT s_name, count(*) AS n_items,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name""".stripMargin,
-
-    "r17_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    "r19_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "r22_pivot" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
-        |  CAST(sum(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "r23_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "r25_upsert" ->
-      """WITH snap AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |), changes AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice, 'D' AS op FROM snap WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey, o_totalprice + 1000, 'U' FROM snap WHERE o_orderkey % 7 = 1
-        |  UNION ALL
-        |  SELECT o_orderkey + 1000000000, o_custkey, o_totalprice + 5, 'I' FROM snap WHERE o_orderkey % 7 = 2
-        |)
-        |SELECT s.o_orderkey, s.o_custkey, s.o_totalprice FROM snap s
-        |WHERE s.o_orderkey NOT IN (SELECT o_orderkey FROM changes)
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_totalprice FROM changes WHERE op <> 'D'""".stripMargin,
-
-    "r26_compaction" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders",
-
-    // R40: version 2 = commit 1 (keys ≡0 mod 3) + appended commit 2 (≡1);
-    // the v3 overwrite (≡2) is pinned out by the time-travel read
-    "r40_snapshot_commit" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin,
-
-    // R56: the audit trail replayed as literals over the lifecycle's
-    // deterministic row counts — parent lineage, modes, the tag and each
-    // version's visible rows all pinned
-    "r56_history" ->
-      """WITH c AS (
-        |  SELECT count(CASE WHEN o_orderkey % 3 = 0 THEN 1 END) AS c0,
-        |         count(CASE WHEN o_orderkey % 3 = 1 THEN 1 END) AS c1,
-        |         count(CASE WHEN o_orderkey % 3 = 2 THEN 1 END) AS c2
-        |  FROM orders
-        |)
-        |SELECT CAST(1 AS BIGINT) AS version, CAST(-1 AS BIGINT) AS parent,
-        |       'Overwrite' AS mode, '' AS tag, CAST(c0 AS BIGINT) AS n_rows FROM c
-        |UNION ALL SELECT 2, 1, 'Append', '', CAST(c0 + c1 AS BIGINT) FROM c
-        |UNION ALL SELECT 3, 2, 'Restore', '', CAST(c0 AS BIGINT) FROM c
-        |UNION ALL SELECT 4, 3, 'Append', 'batch-7', CAST(c0 + c2 AS BIGINT) FROM c
-        |ORDER BY version""".stripMargin,
-
-    // R55: AS OF the post-overwrite boundary sees exactly version 2
-    "r55_time_travel" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 = 1 ORDER BY o_orderkey""".stripMargin,
-
-    // R60: exact per-column stats re-derived from the same planted rows;
-    // R62: stats of the union, blind to the fold count — the identical
-    // derivation as r60's oracle (same planted nulls, same columns), over
-    // ALL slices since base+append+append reassembles the whole table.
-    "r62_analyze_incremental" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
-        |         ELSE l_returnflag END AS l_returnflag
-        |  FROM lineitem)
-        |SELECT * FROM (
-        |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
-        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
-        |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
-        |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_returnflag) AS BIGINT),
-        |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
-        |    CAST(min(l_returnflag) AS VARCHAR),
-        |    CAST(max(l_returnflag) AS VARCHAR), true
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_suppkey) AS BIGINT),
-        |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
-        |    CAST(min(l_suppkey) AS VARCHAR),
-        |    CAST(max(l_suppkey) AS VARCHAR), true
-        |  FROM src)
-        |ORDER BY "column"""".stripMargin,
-
-    // R61: the plain join — broadcast/salt/shuffle strategy (and every
-    // in-gate plan assert) must be invisible to the answer.
-    "r61_stats_join" ->
-      """SELECT c_custkey, c_nationkey AS nationkey, n_name
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
-
-    // R63: the plain-join re-derivation — broadcast promotion from the
-    // manifest bytes must be invisible to the answer
-    "r63_stats_sql_join" ->
-      """SELECT c_mktsegment AS segment, count(*) AS n_orders,
-        |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-
-    // ndv_ok is the in-plan HLL bound (literal true on the oracle side —
-    // the s2_recall hash-gated-quality pattern)
-    "r60_analyze" ->
-      """WITH src AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
-        |         ELSE l_returnflag END AS l_returnflag
-        |  FROM lineitem)
-        |SELECT * FROM (
-        |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
-        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
-        |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
-        |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_returnflag) AS BIGINT),
-        |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
-        |    CAST(min(l_returnflag) AS VARCHAR),
-        |    CAST(max(l_returnflag) AS VARCHAR), true
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_suppkey) AS BIGINT),
-        |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
-        |    CAST(min(l_suppkey) AS VARCHAR),
-        |    CAST(max(l_suppkey) AS VARCHAR), true
-        |  FROM src)
-        |ORDER BY "column"""".stripMargin,
-
-    // R59: the evolving merge re-derived — survivors with a NULL note,
-    // updates overwritten with one, deletes gone, inserts present
-    "r59_merge_evolve" ->
-      """WITH base AS (
-        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 2 = 0
-        |), upd AS (
-        |  SELECT o_orderkey, o_custkey + 1000000 AS o_custkey, 'upd' AS o_note
-        |  FROM orders WHERE o_orderkey % 10 = 0
-        |), del AS (
-        |  SELECT o_orderkey FROM orders
-        |  WHERE o_orderkey % 14 = 0 AND o_orderkey % 10 <> 0 AND o_orderkey % 2 = 0
-        |), ins AS (
-        |  SELECT o_orderkey, o_custkey, 'new' AS o_note
-        |  FROM orders WHERE o_orderkey % 2 = 1 AND o_orderkey % 9 = 0
-        |)
-        |SELECT o_orderkey, o_custkey, CAST(NULL AS VARCHAR) AS o_note FROM base
-        |WHERE o_orderkey NOT IN (SELECT o_orderkey FROM upd)
-        |  AND o_orderkey NOT IN (SELECT o_orderkey FROM del)
-        |UNION ALL SELECT * FROM upd
-        |UNION ALL SELECT * FROM ins
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // R58: latest = the %3=1 overwrite plus the %3=2 append, reached
-    // through pure-SQL catalog reads
-    "r58_sql_time_travel" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 <> 0 AND o_custkey % 7 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // R57: latest = the %3=1 overwrite plus the %3=2 append, through the
-    // DSv2 connector with a residual filter
-    "r57_dsv2_read" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 <> 0 AND o_custkey % 5 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // R54: partition + stats pruning must be invisible — the pruned read
-    // equals the plain filter (most frequent user × first 7 days)
-    "r54_partition_prune" ->
-      """WITH u AS (
-        |  SELECT user_id FROM events
-        |  GROUP BY user_id ORDER BY count(*) DESC, user_id LIMIT 1
-        |),
-        |t0 AS (SELECT min(ts) AS ts0 FROM events)
-        |SELECT event_id, ts, e.user_id, event_type, value
-        |FROM events e, u, t0
-        |WHERE e.user_id = u.user_id
-        |  AND e.ts >= t0.ts0 AND e.ts < t0.ts0 + INTERVAL 7 DAY
-        |ORDER BY event_id""".stripMargin,
-
-    // R53: the MoR read equals the plain predicate filter
-    "r53_deletion_vectors" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 7 <> 0 AND o_custkey % 11 <> 0""".stripMargin,
-
-    // R52: old commit's rows surface with NULL in the later-added column
-    "r52_snapshot_evolution" ->
-      """SELECT o_orderkey, o_custkey, CAST(NULL AS DOUBLE) AS o_totalprice
-        |FROM orders WHERE o_orderkey % 3 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders WHERE o_orderkey % 3 = 1""".stripMargin,
-
-    // R51: the point lookup's exact rows; skipping is proven in-gate
-    "r51_bloom_skip" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders)""".stripMargin,
-
-    // R50: the txn-1 cut is the FULL aggregates of both tables — a torn
-    // read resolving either table to txn 2's filtered half breaks the hash
-    "r50_txn_commit" ->
-      """SELECT 'nation' AS tbl, CAST(c_nationkey AS VARCHAR) AS key,
-        |       CAST(count(*) AS BIGINT) AS cnt
-        |FROM customer GROUP BY c_nationkey
-        |UNION ALL
-        |SELECT 'status' AS tbl, o_orderstatus AS key,
-        |       CAST(count(*) AS BIGINT) AS cnt
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    // R47: after the restore, only the base commit's rows are visible
-    "r47_snapshot_restore" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 = 0""".stripMargin,
-
-    // R64: the post-vacuum latest = v2 overwrite + v3 append — vacuum must
-    // be invisible to every retained reader
-    "r64_vacuum" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 IN (1, 2)""".stripMargin,
-
-    // R41: OPTIMIZE is invisible to readers — same rows, better layout
-    "r41_optimize" ->
-      "SELECT o_orderkey, o_custkey, o_totalprice FROM orders",
-
-    // R49: the clone pins the forked content; the source's later
-    // overwrite must be invisible through it
-    "r49_shallow_clone" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin,
-
-    // R48: the expectations replayed in SQL — positive_chars never fires
-    // on this corpus (min n_chars = 48), short_text splits it; the failed
-    // Fail-policy attempt must have published zero versions
-    "r48_checked_commit" ->
-      """SELECT doc_id,
-        |  CASE WHEN n_chars < 400 THEN 'kept' ELSE 'quarantined' END AS bucket,
-        |  CASE WHEN n_chars < 400 THEN '' ELSE 'short_text' END AS violations,
-        |  CAST(0 AS BIGINT) AS n_failed_versions
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // R42: skipping is invisible to readers — same rows, fewer files read
-    "r42_stats_skipping" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey BETWEEN 500 AND 2500""".stripMargin,
-
-    // R43: the merge replayed in SQL — updates as CASE, deletes as WHERE,
-    // inserts as a UNION'd range
-    "r43_cow_merge" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey BETWEEN 100 AND 200 THEN -1.0
-        |       ELSE o_totalprice END AS o_totalprice
-        |FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
-        |UNION ALL
-        |SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT), 5.0
-        |FROM range(5)""".stripMargin,
-
-    // R44: the change feed reconstructed from the changeset definition —
-    // updates contribute a pre and a post image, deletes their old image,
-    // inserts their new one; carried rows contribute NOTHING
-    "r44_snapshot_cdc" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, 'U_pre' AS op
-        |FROM orders WHERE o_orderkey BETWEEN 100 AND 200
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, -1.0, 'U_post'
-        |FROM orders WHERE o_orderkey BETWEEN 100 AND 200
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_totalprice, 'D'
-        |FROM orders WHERE o_orderkey BETWEEN 300 AND 350
-        |UNION ALL
-        |SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT), 5.0, 'I'
-        |FROM range(5)""".stripMargin,
-
-    // X14: the maintained rollup must equal a from-scratch aggregate over
-    // the post-merge base state (the merge replayed in SQL as in r43)
-    "x14_snapshot_ivm" ->
-      """WITH v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |         THEN CAST(-1.0 AS DECIMAL(18,2))
-        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
-        |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
-        |  UNION ALL
-        |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
-        |    CAST(5.0 AS DECIMAL(18,2))
-        |  FROM range(5))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM v2 GROUP BY o_custkey""".stripMargin,
-
-    // R45: the rewrite must be invisible to results — the oracle aggregates
-    // raw lineitem, never seeing the rollup
-    "r45_mv_rewrite" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem WHERE l_linestatus = 'F'
-        |GROUP BY l_returnflag""".stripMargin,
-
-    // X15: same final state as x14 — the batch split must be invisible
-    "x15_stream_ivm" ->
-      """WITH v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |         THEN CAST(-1.0 AS DECIMAL(18,2))
-        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
-        |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
-        |  UNION ALL
-        |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
-        |    CAST(5.0 AS DECIMAL(18,2))
-        |  FROM range(5))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM v2 GROUP BY o_custkey""".stripMargin,
-
-    // R46: the sketch+verify pipeline is semantically a plain
-    // GROUP BY/HAVING over the planted-skew key — any candidate the
-    // sketch missed or extra the verify pass kept breaks the hash
-    "r46_frequent_items" ->
-      """WITH k AS (
-        |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
-        |              WHEN o_orderkey % 7 = 0 THEN 7
-        |              ELSE o_custkey END AS item
-        |  FROM orders
-        |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
-        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
-        |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
-        |ORDER BY item""".stripMargin,
-
-    "r27_rolling_window" ->
-      """SELECT event_id, user_id, ts,
-        |  count(*) OVER w AS n_1h,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_1h
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts
-        |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "r28_partitioned_write" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents",
-
-    "r24_hll_sketch" ->
-      """SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users, true AS sketch_ok
-        |FROM events""".stripMargin,
-
-    // R29: the merged read = old rows null-extended ∪ new rows, with the
-    // partition column restored from directory names.
-    "r29_schema_evolution" ->
-      """SELECT o_orderkey, o_custkey, CAST(NULL AS DOUBLE) AS o_totalprice,
-        |  CAST(1 AS BIGINT) AS batch
-        |FROM orders WHERE o_orderkey % 2 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_custkey, o_totalprice, CAST(2 AS BIGINT) AS batch
-        |FROM orders WHERE o_orderkey % 2 = 1""".stripMargin,
-
-    // R30: the oracle runs the NAIVE inequality join — the binned
-    // decomposition must return the identical row set.
-    "r30_range_join" ->
-      """SELECT o.o_orderkey, l.l_orderkey, l.l_linenumber,
-        |  CAST(CAST(l.l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS ship_day,
-        |  CAST(CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS win_start
-        |FROM orders o JOIN lineitem l
-        |  ON CAST(l.l_shipdate AS DATE) - DATE '1970-01-01'
-        |       BETWEEN CAST(o.o_orderdate AS DATE) - DATE '1970-01-01'
-        |           AND CAST(o.o_orderdate AS DATE) - DATE '1970-01-01' + 14
-        |WHERE o.o_orderkey % 50 = 0 AND l.l_orderkey % 97 = 0""".stripMargin,
-
-    // R31: the oracle recomputes the rollup from the post-change row set
-    // (survivors ∪ re-inserts) — delta maintenance must equal recompute.
-    "r31_incr_agg" ->
-      """WITH live AS (
-        |  SELECT o_orderstatus, CAST(o_totalprice AS DECIMAL(18,2)) AS price
-        |  FROM orders WHERE o_orderkey % 9 <> 0
-        |  UNION ALL
-        |  SELECT o_orderstatus, CAST(o_totalprice AS DECIMAL(18,2)) + 10 AS price
-        |  FROM orders WHERE o_orderkey % 9 = 1
-        |)
-        |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM live GROUP BY o_orderstatus""".stripMargin,
-
-    "r32_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |  (l_returnflag), (l_linestatus))""".stripMargin,
-
-    // R33: one ASIA-mapped year survives the dim filter; the oracle joins
-    // on the derived year directly.
-    "r33_dpp" ->
-      """SELECT CAST(year(o_orderdate) AS INT) AS o_year, r_name,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders JOIN region ON year(o_orderdate) = r_regionkey + 1994
-        |WHERE r_name = 'ASIA'
-        |GROUP BY 1, 2""".stripMargin,
-
-    // R34: the shared change feed + lead() window re-derived; D tombstones
-    // close intervals but emit no row.
-    "r34_scd2" -> (scd2CteSql +
-      """
-        |SELECT o_orderkey, CAST(price AS DOUBLE) AS price, valid_from, valid_to,
-        |  (valid_to IS NULL AND op <> 'D') AS is_current
-        |FROM v WHERE op <> 'D'""".stripMargin),
-
-    // R35: the same SCD2 history + interval-containment fact join.
-    "r35_pit_join" -> (scd2CteSql +
-      """, hist AS (
-        |  SELECT o_orderkey, price, valid_from, valid_to FROM v WHERE op <> 'D'
-        |), facts AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    CAST((l_linenumber % 4) + 1 AS BIGINT) AS fact_seq
-        |  FROM lineitem WHERE l_orderkey % 7 = 0
-        |)
-        |SELECT l_orderkey, l_linenumber, fact_seq,
-        |  CAST(price AS DOUBLE) AS price, valid_from
-        |FROM facts JOIN hist ON l_orderkey = o_orderkey
-        |  AND fact_seq >= valid_from
-        |  AND (valid_to IS NULL OR fact_seq < valid_to)""".stripMargin),
-
-    "r38_bloom_join" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    // R39: the skew-key mapping re-derived; keys are non-negative so plain
-    // % matches Spark's %, and counts are BIGINT on both engines.
-    "r39_aqe_skew_join" ->
-      """WITH l AS (
-        |  SELECT CASE WHEN id % 4 < 3 THEN CAST(0 AS BIGINT)
-        |              ELSE CAST(id % 64 AS BIGINT) END AS k,
-        |         CAST(id % 97 AS DOUBLE) * 0.25 AS qty
-        |  FROM range(0, 200000) t(id))
-        |SELECT CAST(k % 8 AS BIGINT) AS bucket, count(*) AS n_rows,
-        |  CAST(sum(CAST(qty AS DECIMAL(18,2))) AS DOUBLE) AS qty,
-        |  max(n_name) AS top_nation
-        |FROM l JOIN nation ON l.k = CAST(n_nationkey AS BIGINT)
-        |GROUP BY 1""".stripMargin,
-
-    // R37: DuckDB's ->> JSON extraction mirrors the path extract; sums
-    // wrapped back to BIGINT (DuckDB widens to HUGEINT). TRY_CAST mirrors
-    // Spark's cast-to-NULL on non-numeric payloads (CAST would hard-error),
-    // and ((k % 7) + 7) % 7 mirrors pmod on any sign — both identical to
-    // the simple forms on the current non-negative generator, but the
-    // oracle should match Spark semantics on ANY payload.
-    "r37_json_ops" ->
-      """SELECT CAST(((k % 7) + 7) % 7 AS BIGINT) AS bucket, count(*) AS n,
-        |  CAST(sum(k) AS BIGINT) AS k_sum, CAST(max(k) AS BIGINT) AS k_max
-        |FROM (SELECT TRY_CAST(props->>'k' AS BIGINT) AS k FROM events)
-        |WHERE k IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    // R36: the same planted violations re-derived; list sorted, comma-joined.
-    "r36_constraints" ->
-      """WITH o AS (
-        |  SELECT o_orderkey,
-        |    CASE WHEN o_orderkey % 17 = 0 THEN 'Z' ELSE o_orderstatus END AS status,
-        |    CASE WHEN o_orderkey % 13 = 0 THEN -CAST(o_totalprice AS DECIMAL(18,2))
-        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price,
-        |    CASE WHEN o_orderkey % 19 = 0 THEN NULL ELSE o_custkey END AS cust
-        |  FROM orders
-        |), v AS (
-        |  SELECT o_orderkey,
-        |    list_sort(list_filter([
-        |      CASE WHEN NOT coalesce(price > 0, false) THEN 'positive_price' END,
-        |      CASE WHEN NOT coalesce(status IN ('F','O','P'), false) THEN 'known_status' END,
-        |      CASE WHEN NOT coalesce(cust IS NOT NULL, false) THEN 'has_customer' END
-        |    ], x -> x IS NOT NULL)) AS vio
-        |  FROM o
-        |)
-        |SELECT o_orderkey, coalesce(array_to_string(vio, ','), '') AS violations,
-        |  len(vio) = 0 AS is_valid
-        |FROM v""".stripMargin,
-
-    "r18_asof_join" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value, c.ts AS asof_click_ts
-        |FROM (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
-
-    "w1_id_encode" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS raw_id,
-        |  CAST(n_nationkey AS BIGINT) AS q_enc,
-        |  CAST(n_nationkey AS BIGINT) + 1000000000 AS p_enc,
-        |  CAST(n_nationkey AS BIGINT) + 2000000000 AS l_enc,
-        |  CAST(n_nationkey AS BIGINT) + 2000000000 + 2 * 100000000000 AS f_enc,
-        |  CAST(n_nationkey AS BIGINT) + 2000000000 + 3 * 100000000000 + 10000000000 AS s_enc
-        |FROM nation""".stripMargin,
-
-    "w2_id_decode" ->
-      """WITH enc AS (
-        |  SELECT unnest([CAST(n_nationkey AS BIGINT),
-        |                 CAST(n_nationkey AS BIGINT) + 1000000000,
-        |                 CAST(n_nationkey AS BIGINT) + 2000000000,
-        |                 CAST(n_nationkey AS BIGINT) + 2000000000 + 2 * 100000000000,
-        |                 CAST(n_nationkey AS BIGINT) + 2000000000 + 3 * 100000000000 + 10000000000]) AS eid
-        |  FROM nation)
-        |SELECT eid,
-        |  CASE WHEN eid >= 100000000000 THEN
-        |         CASE WHEN eid % 100000000000 >= 12000000000 THEN 'S' ELSE 'F' END
-        |       WHEN eid >= 2000000000 THEN 'L'
-        |       WHEN eid >= 1000000000 THEN 'P' ELSE 'Q' END AS kind,
-        |  CASE WHEN eid >= 100000000000 THEN
-        |         CASE WHEN eid % 100000000000 >= 12000000000
-        |              THEN eid % 100000000000 - 12000000000
-        |              ELSE eid % 100000000000 - 2000000000 END
-        |       WHEN eid >= 2000000000 THEN eid - 2000000000
-        |       WHEN eid >= 1000000000 THEN eid - 1000000000 ELSE eid END AS num,
-        |  CASE WHEN eid >= 100000000000 THEN eid // 100000000000 ELSE 0 END AS sub
-        |FROM enc""".stripMargin,
-
-    "w14_label_lookup" ->
-      """SELECT p_partkey AS id, p_name AS label, p_type AS description
-        |FROM part WHERE label LIKE 'red %'""".stripMargin,
-
-    // W33: identical brute-force oracle as w32 — the stored index and its
-    // pruning are invisible to the answer (that is the point)
-    "w33_fuzzy_stored" ->
-      """WITH term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT p_partkey AS id, p_name AS label,
-        |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM part
-        |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin,
-
-    // X27: the streamed W36 — same oracle verbatim; shard boundaries,
-    // batch tags and the replay probe are invisible to the answer.
-    "x27_stream_variant_index" ->
-      """WITH cur AS (
-        |  SELECT p_partkey AS id,
-        |    CASE WHEN p_partkey % 7 = 3
-        |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
-        |         ELSE p_name END AS label
-        |  FROM part WHERE p_partkey % 11 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
-        |), term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT id, label,
-        |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM cur
-        |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin,
-
-    // W36: the changeset arithmetic re-derived in SQL, then the identical
-    // brute-force scan over the CURRENT label set — appends, stale
-    // variants, pruning and the maintenance fold are all invisible to it.
-    "w36_fuzzy_maintained" ->
-      """WITH cur AS (
-        |  SELECT p_partkey AS id,
-        |    CASE WHEN p_partkey % 7 = 3
-        |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
-        |         ELSE p_name END AS label
-        |  FROM part WHERE p_partkey % 11 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
-        |), term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT id, label,
-        |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM cur
-        |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin,
-
-    // W32: the same typo derivation, then a full levenshtein scan — the
-    // brute-force oracle for the variant-index probe path.
-    "w32_fuzzy_label" ->
-      """WITH term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT p_partkey AS id, p_name AS label,
-        |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM part
-        |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin,
-
-    "w15_conjunctive_semijoin" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem JOIN part ON l_partkey = p_partkey
-        |                     WHERE p_brand = 'Brand#1')
-        |  AND o_orderkey IN (SELECT l_orderkey FROM lineitem JOIN part ON l_partkey = p_partkey
-        |                     WHERE p_brand = 'Brand#2')""".stripMargin,
-
-    // W45: the surviving conjunction as pure residue arithmetic — claim
-    // plumbing, spans and semi-join order all invisible. The span
-    // residues intersect the conjunction set (23 mod 70), so the
-    // temporal clauses remove real rows (14 → 8).
-    "w45_conjunctive_at" ->
-      """SELECT id FROM range(0, 1000) t(id)
-        |WHERE id % 10 = 3 AND id % 7 = 2
-        |  AND NOT id % 3 = 0   -- P31 claim ended 1940: dead at 1950
-        |  AND NOT id % 11 = 0  -- P27 claim starts 1960: not yet at 1950
-        |ORDER BY id""".stripMargin,
-
-    // W41: both alive edge sets, the closure and the zero-hop rewrite
-    // re-derived from the same arithmetic.
-    "w41_temporal_path" ->
-      """WITH RECURSIVE e279 AS (
-        |  SELECT id AS src, id // 2 AS dst,
-        |    CASE WHEN id % 3 = 0
-        |      THEN make_timestamp(CAST(1900 + id % 50 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vfrom,
-        |    CASE WHEN id % 4 = 0
-        |      THEN make_timestamp(CAST(1940 + id % 40 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vuntil
-        |  FROM range(2, 256) t(id)
-        |), a279 AS (
-        |  SELECT src, dst FROM e279
-        |  WHERE (vfrom IS NULL OR vfrom <= TIMESTAMP '1950-06-01 00:00:00')
-        |    AND (vuntil IS NULL OR vuntil > TIMESTAMP '1950-06-01 00:00:00')
-        |), a31 AS (
-        |  SELECT 1000 + id AS src, id AS dst
-        |  FROM range(2, 256) t(id)
-        |  WHERE NOT (id % 5 = 0 AND make_timestamp(1945, 1, 1, 0, 0, 0.0) <= TIMESTAMP '1950-06-01 00:00:00')
-        |    AND NOT (id % 7 = 0 AND make_timestamp(1960, 1, 1, 0, 0, 0.0) > TIMESTAMP '1950-06-01 00:00:00')
-        |), cl AS (
-        |  SELECT src, dst FROM a279
-        |  UNION
-        |  SELECT cl.src, a.dst FROM cl JOIN a279 a ON cl.dst = a.src
-        |)
-        |SELECT DISTINCT x.src, y.dst FROM a31 x JOIN cl y ON x.dst = y.src
-        |UNION
-        |SELECT src, dst FROM a31""".stripMargin,
-
-    // W39: spans, the alive-at-T filter and the recursive closure all
-    // re-derived from the same arithmetic — qualifier plumbing invisible.
-    "w39_temporal_closure" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT id AS src, id // 2 AS dst,
-        |    CASE WHEN id % 3 = 0
-        |      THEN make_timestamp(CAST(1900 + id % 50 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vfrom,
-        |    CASE WHEN id % 4 = 0
-        |      THEN make_timestamp(CAST(1940 + id % 40 AS BIGINT), 1, 1, 0, 0, 0.0) END AS vuntil
-        |  FROM range(2, 4096) t(id)
-        |), alive AS (
-        |  SELECT src, dst FROM e
-        |  WHERE (vfrom IS NULL OR vfrom <= TIMESTAMP '1950-06-01 00:00:00')
-        |    AND (vuntil IS NULL OR vuntil > TIMESTAMP '1950-06-01 00:00:00')
-        |), cl AS (
-        |  SELECT src, dst FROM alive
-        |  UNION
-        |  SELECT cl.src, a.dst FROM cl JOIN alive a ON cl.dst = a.src
-        |)
-        |SELECT src, dst FROM cl""".stripMargin,
-
-    // W20: the same closure via DuckDB's recursive CTE (UNION dedups, so
-    // the recursion terminates at the fixpoint like the doubling does).
-    "w20_path_closure" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT id AS src, id // 2 AS dst FROM range(2, 4096) t(id)
-        |), cl AS (
-        |  SELECT src, dst FROM e
-        |  UNION
-        |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
-        |)
-        |SELECT src, dst FROM cl""".stripMargin,
-
-    // W49: the truthy edge set re-derived as residue arithmetic — a %5 id
-    // keeps ONLY its preferred id//4 edge, everyone else the normal id//2
-    // edge, deprecated edges never exist — then the same recursive CTE.
-    "w49_truthy_closure" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT id AS src,
-        |    CASE WHEN id % 5 = 0 THEN id // 4 ELSE id // 2 END AS dst
-        |  FROM range(2, 4096) t(id)
-        |), cl AS (
-        |  SELECT src, dst FROM e
-        |  UNION
-        |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
-        |)
-        |SELECT src, dst FROM cl ORDER BY src, dst""".stripMargin,
-
-    // W31: closure over the planted-cycle tree, self-pairs = loop members,
-    // taint = everything whose ancestor chain reaches one
-    "w31_ontology_cycles" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT id AS src, id // 2 AS dst FROM range(2, 2048) t(id)
-        |  UNION ALL
-        |  SELECT * FROM (VALUES (4, 8), (32, 64), (256, 512)) v(src, dst)
-        |), cl AS (
-        |  SELECT src, dst FROM e
-        |  UNION
-        |  SELECT cl.src, e.dst FROM cl JOIN e ON cl.dst = e.src
-        |), cyc AS (
-        |  SELECT DISTINCT src AS cid FROM cl WHERE src = dst
-        |)
-        |SELECT DISTINCT cl.src AS id,
-        |  cl.src IN (SELECT cid FROM cyc) AS on_cycle
-        |FROM cl WHERE cl.dst IN (SELECT cid FROM cyc)
-        |ORDER BY id""".stripMargin,
-
-    // W21: (P31|P101)/P279* — seed with the alternation's 1-step pairs
-    // (zero P279 hops), then extend through the class tree; UNION dedups,
-    // so the fixpoint is the reachability set
-    "w21_path_compose" ->
-      """WITH RECURSIVE p279 AS (
-        |  SELECT id AS src, id // 2 AS dst FROM range(2, 1025) t(id)
-        |), step1 AS (
-        |  SELECT 100000 + i AS src, 2 + (i % 1023) AS dst FROM range(0, 5000) t(i)
-        |  UNION
-        |  SELECT 100000 + i AS src, 2 + ((i * 3) % 1023) AS dst
-        |  FROM range(0, 1000) t(i) WHERE i % 7 = 0
-        |), reach AS (
-        |  SELECT src, dst FROM step1
-        |  UNION
-        |  SELECT reach.src, p279.dst FROM reach JOIN p279 ON reach.dst = p279.src
-        |)
-        |SELECT src, dst FROM reach""".stripMargin,
-
-    "w16_claim_filter" ->
-      """SELECT l_orderkey AS id, p_name AS label, l_quantity AS quantity
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand = 'Brand#3' AND l_quantity >= 50""".stripMargin,
-
-    // W30: negating the instance properties leaves exactly P279, so the
-    // first leg is the P279+ closure; the inverse-negated set is the
-    // reversed instance edges
-    "w30_negated_path" ->
-      """WITH RECURSIVE p279 AS (
-        |  SELECT id AS src, id // 2 AS dst FROM range(2, 1025) t(id)
-        |), plus AS (
-        |  SELECT src, dst FROM p279
-        |  UNION
-        |  SELECT plus.src, p279.dst FROM plus JOIN p279 ON plus.dst = p279.src
-        |), step1 AS (
-        |  SELECT 100000 + i AS src, 2 + (i % 1023) AS dst FROM range(0, 5000) t(i)
-        |  UNION
-        |  SELECT 100000 + i AS src, 2 + ((i * 3) % 1023) AS dst
-        |  FROM range(0, 1000) t(i) WHERE i % 7 = 0
-        |)
-        |SELECT src, dst FROM plus
-        |UNION
-        |SELECT dst AS src, src AS dst FROM step1
-        |ORDER BY src, dst""".stripMargin,
-
-    // W24: same deterministic point set from range(); the oracle needs no
-    // bbox (that is pushdown plumbing, not semantics) — the integer circle
-    // test is the whole predicate, cos_pm = 658 the shared literal
-    "w24_geo_radius" ->
-      """WITH pts AS (
-        |  SELECT range AS id,
-        |    (range * 2654435761) % 120000001 - 60000000 AS lat_micro,
-        |    (range * 1597334677) % 360000001 - 180000000 AS lon_micro
-        |  FROM range(0, 50000)
-        |), d AS (
-        |  SELECT id, lat_micro, lon_micro,
-        |    abs(lat_micro - 48856600) * abs(lat_micro - 48856600)
-        |      + ((abs(lon_micro - 2352200) * 658) // 1000)
-        |        * ((abs(lon_micro - 2352200) * 658) // 1000) AS dist2
-        |  FROM pts
-        |)
-        |SELECT id, lat_micro, lon_micro, dist2 FROM d
-        |WHERE dist2 <= CAST(4491600 AS BIGINT) * 4491600
-        |ORDER BY dist2, id LIMIT 100""".stripMargin,
-
-    // W27: recursive UNION-dedup walk (rows (id, d) dedup, so the bound
-    // terminates it) + min per node ≡ BFS settling order
-    "w27_hop_distance" ->
-      """WITH RECURSIVE r AS (
-        |  SELECT range // 2 AS src, range AS dst FROM range(2, 4096)
-        |  UNION ALL
-        |  SELECT (range * 7) % 4095 + 1 AS src, range AS dst
-        |  FROM range(1, 4096) WHERE range % 3 = 0
-        |), walk(id, d) AS (
-        |  SELECT CAST(1 AS BIGINT) AS id, CAST(0 AS BIGINT) AS d
-        |  UNION
-        |  SELECT r.dst, walk.d + 1 FROM walk JOIN r ON r.src = walk.id
-        |  WHERE walk.d < 30
-        |)
-        |SELECT id, min(d) AS dist FROM walk GROUP BY id""".stripMargin,
-
-    // W26: the pure semantic pair set {J >= 0.5} re-derived from shared
-    // elements — the prefix-filter blocking must be invisible
-    "w26_entity_similarity" ->
+    Gate("w26_entity_similarity",
+      // W26: the pure semantic pair set {J >= 0.5} re-derived from shared
+      // elements — the prefix-filter blocking must be invisible
       """WITH sets AS (
         |  SELECT s_nationkey AS id, list_distinct(list(l_partkey)) AS s
         |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -2870,11 +2567,27 @@ object Relational {
         |  SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jaccard
         |  FROM inter JOIN sz sa ON inter.id_a = sa.id
         |             JOIN sz sb ON inter.id_b = sb.id
-        |) WHERE jaccard >= 0.5""".stripMargin,
+        |) WHERE jaccard >= 0.5""".stripMargin) { (s, dir) =>
+      // KG entity resolution re-expressed on the stand-in schema: two
+      // entities are similar when the sets of claims they carry overlap —
+      // here nations by the distinct parts their suppliers ship
+      // (lineitem ≙ claims). Exact Jaccard ≥ 0.5 through the LOSSLESS
+      // PPJoin path over arbitrary long-id sets (setJaccardPairs, the D4
+      // kernel generalized past text), so the blocking is invisible and
+      // DuckDB re-derives the pure pair set from shared elements.
+      val t = Tables(s, dir)
+      val sets = t.lineitem
+        .join(t.supplier.select("s_suppkey", "s_nationkey"),
+          col("l_suppkey") === col("s_suppkey"))
+        .groupBy(col("s_nationkey").as("id"))
+        .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("__set"))
+      Dedup.setJaccardPairs(sets, threshold = 0.5)
+        .orderBy("id_a", "id_b")
+    },
 
-    // W25: brute-force replay of the same long-arithmetic pair predicate;
-    // the lat-band condition makes it a DuckDB IEJoin, not a cross join
-    "w25_geo_pairs" ->
+    Gate("w25_geo_pairs",
+      // W25: brute-force replay of the same long-arithmetic pair predicate;
+      // the lat-band condition makes it a DuckDB IEJoin, not a cross join
       """WITH pts AS (
         |  SELECT range AS id,
         |    (range * 2654435761) % 120000001 - 60000000 AS lat,
@@ -2889,13 +2602,132 @@ object Relational {
         | AND a.id < b.id
         |WHERE (a.lat - b.lat) * (a.lat - b.lat)
         |    + (a.lon - b.lon) * (a.lon - b.lon)
-        |  <= CAST(2000000 AS BIGINT) * 2000000""".stripMargin,
+        |  <= CAST(2000000 AS BIGINT) * 2000000""".stripMargin) { (s, dir) =>
+      // spatial pair self-join: all pairs within 2.0 deg (squared-microdegree
+      // metric) over 10k deterministic points. The operator grid-blocks
+      // (cell = eps, 3×3 replication, home-side dedup); the oracle brute
+      // forces the same long-arithmetic predicate with a lat-band range
+      // join — blocking must be invisible. Exactly-once pair emission and
+      // boundary coverage are GeoSpec's.
+      val pts = s.range(0, 10000).select(col("id"),
+        ((col("id") * 2654435761L) % 120000001L - 60000000L).as("lat_micro"),
+        ((col("id") * 1597334677L) % 360000001L - 180000000L).as("lon_micro"))
+      Geo.pairsWithin(pts, "id", "lat_micro", "lon_micro", epsMicro = 2000000L)
+        .orderBy("id_a", "id_b")
+    },
 
-    // W28: canonical-triple brute force — triangles are the (a < b < c)
-    // closures of the deduped undirected edge set; per-node counts fall
-    // out of unioning the three corners. The Spark side's degree-ordered
-    // orientation must produce exactly this set.
-    "w28_triangles" ->
+    Gate("w27_hop_distance",
+      // W27: recursive UNION-dedup walk (rows (id, d) dedup, so the bound
+      // terminates it) + min per node ≡ BFS settling order
+      """WITH RECURSIVE r AS (
+        |  SELECT range // 2 AS src, range AS dst FROM range(2, 4096)
+        |  UNION ALL
+        |  SELECT (range * 7) % 4095 + 1 AS src, range AS dst
+        |  FROM range(1, 4096) WHERE range % 3 = 0
+        |), walk(id, d) AS (
+        |  SELECT CAST(1 AS BIGINT) AS id, CAST(0 AS BIGINT) AS d
+        |  UNION
+        |  SELECT r.dst, walk.d + 1 FROM walk JOIN r ON r.src = walk.id
+        |  WHERE walk.d < 30
+        |)
+        |SELECT id, min(d) AS dist FROM walk GROUP BY id""".stripMargin) { (s, dir) =>
+      // min-hop distances from the root over the w23 claim graph with
+      // edges reversed (child→parent becomes parent→child): "how deep
+      // below the root class is each entity" — the distance question the
+      // boolean closure (w20/w21) cannot answer. Frontier BFS settles
+      // each depth in one round; DuckDB replays with a recursive
+      // UNION-dedup walk + min aggregation. BFS semantics (multi-source
+      // min, unreachable absent, round bound) are PropertyPathSpec's.
+      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
+      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
+        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
+      val rev = tree.unionByName(cross)
+        .select(col("dst").as("src"), col("src").as("dst"))
+      PropertyPath.hopDistances(rev, s.range(1, 2).toDF("id"))
+        .orderBy("id")
+    },
+
+    Gate("w29_shortest_path",
+      // W29: two full recursive BFS walks (forward from 4093, backward from
+      // the root), intersected; the meet set is every node with
+      // da + db = min — the bidirectional strategy must land on exactly it
+      """WITH RECURSIVE e AS (
+        |  SELECT range AS src, range // 2 AS dst FROM range(2, 4096)
+        |  UNION ALL
+        |  SELECT range AS src, ((range * 7) % 4095) + 1 AS dst
+        |  FROM range(1, 4096) WHERE range % 3 = 0
+        |), fa(id, d) AS (
+        |  SELECT CAST(4093 AS BIGINT) AS id, CAST(0 AS BIGINT) AS d
+        |  UNION
+        |  SELECT e.dst, fa.d + 1 FROM fa JOIN e ON e.src = fa.id WHERE fa.d < 20
+        |), fb(id, d) AS (
+        |  SELECT CAST(1 AS BIGINT) AS id, CAST(0 AS BIGINT) AS d
+        |  UNION
+        |  SELECT e.src, fb.d + 1 FROM fb JOIN e ON e.dst = fb.id WHERE fb.d < 20
+        |), da AS (SELECT id, min(d) AS d1 FROM fa GROUP BY id),
+        |db AS (SELECT id, min(d) AS d2 FROM fb GROUP BY id),
+        |m AS (SELECT da.id, d1 + d2 AS dist FROM da JOIN db USING (id)),
+        |t AS (SELECT min(dist) AS best FROM m)
+        |SELECT m.id AS meet_id, m.dist FROM m, t WHERE m.dist = t.best
+        |ORDER BY meet_id""".stripMargin) { (s, dir) =>
+      // single-pair shortest path with its meet certificate: from deep
+      // leaf 4093 to the root over the w23 claim graph (tree edges point
+      // child → parent; cross links add shortcuts, so the answer is NOT
+      // simply the tree depth). The operator meets in the middle
+      // (bidirectional BFS, smaller-frontier rule); the oracle replays
+      // two full recursive BFS walks and intersects — the search strategy
+      // must be invisible in the (meet_id, dist) set. Brute-force
+      // equality on random graphs, unreachable pairs, self pairs and the
+      // early-exit bound are PropertyPathSpec's.
+      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
+      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
+        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
+      PropertyPath.shortestMeet(tree.unionByName(cross), srcId = 4093L, dstId = 1L)
+        .orderBy("meet_id")
+    },
+
+    Gate("w23_pagerank", {
+      // W23: the same 5 integer-unit PageRank steps unrolled in SQL — floor
+      // division per edge, so every rank is bit-identical
+      def step(k: Int) =
+        s"""r$k AS (
+           |  SELECT n.id, CAST(150000 + (85 * COALESCE(c.s, 0)) // 100 AS BIGINT) AS rank
+           |  FROM nodes n LEFT JOIN (
+           |    SELECT e.dst AS id, SUM(r.rank // deg.d) AS s
+           |    FROM e JOIN r${k - 1} r ON r.id = e.src JOIN deg ON deg.src = e.src
+           |    GROUP BY e.dst) c ON c.id = n.id)""".stripMargin
+      """WITH e AS (
+        |  SELECT range AS src, range // 2 AS dst FROM range(2, 4096)
+        |  UNION ALL
+        |  SELECT range AS src, ((range * 7) % 4095) + 1 AS dst
+        |  FROM range(1, 4096) WHERE range % 3 = 0
+        |),
+        |nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
+        |deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
+        |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM nodes),
+        |""".stripMargin +
+        (1 to 5).map(step).mkString(",\n") +
+        "\nSELECT id, rank FROM r5"
+    }) { (s, dir) =>
+      // entity centrality: 5 integer-unit PageRank steps over a
+      // deterministic claim graph — a 4094-edge class tree (i -> i div 2,
+      // the w20 hierarchy) plus a sparse cross-link family; node 1 (the
+      // root) has no out-edge, exercising the dangling-mass convention.
+      // Every intermediate is floor division on longs, so the DuckDB
+      // oracle unrolling the same 5 steps in SQL is hash-exact on all
+      // 4095 ranks. Fixed points, brute-force equality and dangling
+      // semantics are CentralitySpec's.
+      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
+      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
+        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
+      Centrality.pageRank(tree.unionByName(cross), iterations = 5)
+    },
+
+    Gate("w28_triangles",
+      // W28: canonical-triple brute force — triangles are the (a < b < c)
+      // closures of the deduped undirected edge set; per-node counts fall
+      // out of unioning the three corners. The Spark side's degree-ordered
+      // orientation must produce exactly this set.
       """WITH e0 AS (
         |  SELECT range AS src, range // 2 AS dst FROM range(2, 4096)
         |  UNION ALL
@@ -2919,54 +2751,37 @@ object Relational {
         |  UNION ALL SELECT y FROM tri
         |  UNION ALL SELECT z FROM tri
         |)
-        |SELECT id, count(*) AS triangles FROM m GROUP BY id ORDER BY id""".stripMargin,
+        |SELECT id, count(*) AS triangles FROM m GROUP BY id ORDER BY id""".stripMargin) { (s, dir) =>
+      // per-node triangle counts over the w23 claim graph densified with
+      // grandparent short-cuts (i -> i div 4), which close one triangle
+      // {i, i div 2, i div 4} per node — plus the cross-link family for
+      // irregular closures, reverse edges and parallel edges (the
+      // canonicalization must absorb them). The operator counts via
+      // degree-ordered orientation; the oracle brute-forces the canonical
+      // a<b<c triple join — the orientation strategy must be invisible.
+      // Orientation-vs-brute equality on random graphs, skew safety and
+      // the simple-graph contract are CentralitySpec's.
+      val tree = s.range(2, 4096).select(col("id").as("src"), expr("id div 2").as("dst"))
+      val grand = s.range(4, 4096).select(col("id").as("src"), expr("id div 4").as("dst"))
+      val cross = s.range(1, 4096).filter(col("id") % 3 === 0)
+        .select(col("id").as("src"), ((col("id") * 7) % 4095 + 1).as("dst"))
+      Centrality.triangleCounts(tree.unionByName(grand).unionByName(cross))
+        .orderBy("id")
+    },
 
-    // W29: two full recursive BFS walks (forward from 4093, backward from
-    // the root), intersected; the meet set is every node with
-    // da + db = min — the bidirectional strategy must land on exactly it
-    "w29_shortest_path" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT range AS src, range // 2 AS dst FROM range(2, 4096)
-        |  UNION ALL
-        |  SELECT range AS src, ((range * 7) % 4095) + 1 AS dst
-        |  FROM range(1, 4096) WHERE range % 3 = 0
-        |), fa(id, d) AS (
-        |  SELECT CAST(4093 AS BIGINT) AS id, CAST(0 AS BIGINT) AS d
-        |  UNION
-        |  SELECT e.dst, fa.d + 1 FROM fa JOIN e ON e.src = fa.id WHERE fa.d < 20
-        |), fb(id, d) AS (
-        |  SELECT CAST(1 AS BIGINT) AS id, CAST(0 AS BIGINT) AS d
-        |  UNION
-        |  SELECT e.src, fb.d + 1 FROM fb JOIN e ON e.dst = fb.id WHERE fb.d < 20
-        |), da AS (SELECT id, min(d) AS d1 FROM fa GROUP BY id),
-        |db AS (SELECT id, min(d) AS d2 FROM fb GROUP BY id),
-        |m AS (SELECT da.id, d1 + d2 AS dist FROM da JOIN db USING (id)),
-        |t AS (SELECT min(dist) AS best FROM m)
-        |SELECT m.id AS meet_id, m.dist FROM m, t WHERE m.dist = t.best
-        |ORDER BY meet_id""".stripMargin,
-
-    // W23: the same 5 integer-unit PageRank steps unrolled in SQL — floor
-    // division per edge, so every rank is bit-identical
-    "w23_pagerank" -> {
-      def step(k: Int) =
-        s"""r$k AS (
-           |  SELECT n.id, CAST(150000 + (85 * COALESCE(c.s, 0)) // 100 AS BIGINT) AS rank
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.dst AS id, SUM(r.rank // deg.d) AS s
-           |    FROM e JOIN r${k - 1} r ON r.id = e.src JOIN deg ON deg.src = e.src
-           |    GROUP BY e.dst) c ON c.id = n.id)""".stripMargin
-      """WITH e AS (
-        |  SELECT range AS src, range // 2 AS dst FROM range(2, 4096)
-        |  UNION ALL
-        |  SELECT range AS src, ((range * 7) % 4095) + 1 AS dst
-        |  FROM range(1, 4096) WHERE range % 3 = 0
-        |),
-        |nodes AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-        |deg AS (SELECT src, COUNT(*) AS d FROM e GROUP BY src),
-        |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM nodes),
-        |""".stripMargin +
-        (1 to 5).map(step).mkString(",\n") +
-        "\nSELECT id, rank FROM r5"
+    Gate("w16_claim_filter",
+      """SELECT l_orderkey AS id, p_name AS label, l_quantity AS quantity
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand = 'Brand#3' AND l_quantity >= 50""".stripMargin) { (s, dir) =>
+      // claim-value lookup with property filter: claims(id, property, value)
+      // ≙ lineitem(l_orderkey, l_partkey, l_quantity) + label join.
+      val t = Tables(s, dir)
+      t.lineitem
+        .join(t.part.filter(col("p_brand") === "Brand#3"),
+          col("l_partkey") === col("p_partkey"))
+        .filter(col("l_quantity") >= 50)
+        .select(col("l_orderkey").as("id"), col("p_name").as("label"),
+          col("l_quantity").as("quantity"))
     }
   )
 }

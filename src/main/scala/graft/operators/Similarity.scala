@@ -224,7 +224,7 @@ object Similarity {
     * 3 at 1e4, ~7 at 1e6, ~16 at 1e9) while predicted recall stays at the
     * target — asserted across six decades of n in SimilaritySpec and
     * measured cross-SF in AnnScaleSpec. */
-  private[operators] def lshPlan(n: Long, dim: Int, k: Int,
+  private[graft] def lshPlan(n: Long, dim: Int, k: Int,
       fixedBits: Int = 0, fixedTables: Int = 0, fixedRadius: Int = -1,
       targetRecall: Double = 0.95, designSim: Double = Double.NaN,
       targetBucket: Int = 64, minBits: Int = 4, maxTables: Int = 48): LshPlan = {

@@ -94,6 +94,8 @@ object MvRegistry {
 
   def clear(): Unit = synchronized { defs = Nil }
 
+  def isEmpty: Boolean = defs.isEmpty
+
   private[plans] def lookup(paths: Seq[String]): Option[MvDef] = {
     val ps = paths.map(stripScheme)
     defs.find { d =>

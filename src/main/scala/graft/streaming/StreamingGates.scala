@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Gate, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
 
@@ -14,19 +14,43 @@ import org.apache.spark.sql.functions.{col, lit, when}
   * floats — see Relational.emit. */
 object StreamingGates {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x1_window_agg" -> { (s, dir) =>
+  def gates: Seq[Gate] = Seq(
+    Gate("x1_window_agg",
+      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws, event_type,
+        |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2""".stripMargin) { (s, dir) =>
       EventStreams.windowedAgg(Tables(s, dir).events)
         .withColumn("total_value", col("total_value").cast("double"))
     },
-    "x2_sessionize" -> { (s, dir) =>
+    Gate("x2_sessionize",
+      """WITH flagged AS (
+        |  SELECT user_id, event_id, ts, value,
+        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 30 * 60 * 1000000
+        |         THEN 1 ELSE 0 END AS is_new
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+        |), numbered AS (
+        |  SELECT user_id, ts, value,
+        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+        |  FROM flagged
+        |)
+        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
+        |  count(*) AS n_events,
+        |  CAST(min(ts) AS TIMESTAMP) AS session_start,
+        |  CAST(max(ts) AS TIMESTAMP) AS session_end,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM numbered GROUP BY user_id, session_seq""".stripMargin) { (s, dir) =>
       EventStreams.sessionizeBatch(Tables(s, dir).events, gapMinutes = 30)
         .withColumn("total_value", col("total_value").cast("double"))
     },
     // X6: stream-static broadcast enrichment — the gate runs the operator's
     // exact code path on the batch events frame (the function is
     // source-agnostic; stream ≡ batch is spec-asserted in StreamingSpec).
-    "x6_stream_enrich" -> { (s, dir) =>
+    Gate("x6_stream_enrich",
+      """SELECT event_id, ts, user_id, event_type, value, c_mktsegment, c_name
+        |FROM events LEFT JOIN customer ON user_id = c_custkey""".stripMargin) { (s, dir) =>
       val t = Tables(s, dir)
       EventStreams.enrichStream(t.events,
           t.customer.select("c_custkey", "c_mktsegment", "c_name"),
@@ -36,7 +60,13 @@ object StreamingGates {
     },
     // X7: stream-stream interval join (batch form of the same code path;
     // the result is a pure pair set, deterministic at any parallelism).
-    "x7_interval_join" -> { (s, dir) =>
+    Gate("x7_interval_join",
+      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
+        |  p.user_id, p.ts AS purchase_ts, c.ts AS click_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON p.user_id = c.user_id
+        | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin) { (s, dir) =>
       val ev = Tables(s, dir).events
       EventStreams.attributionJoin(
         ev.filter(col("event_type") === "purchase"),
@@ -45,7 +75,13 @@ object StreamingGates {
     // X10: the left-outer attribution join — unattributed purchases emit
     // with null click columns. Batch form of the same code path; the
     // streaming null-emission (watermark-triggered) is spec-asserted.
-    "x10_outer_interval_join" -> { (s, dir) =>
+    Gate("x10_outer_interval_join",
+      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
+        |  p.user_id, p.ts AS purchase_ts, c.ts AS click_ts
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        |  ON p.user_id = c.user_id
+        | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin) { (s, dir) =>
       val ev = Tables(s, dir).events
       EventStreams.attributionJoinOuter(
         ev.filter(col("event_type") === "purchase"),
@@ -57,7 +93,13 @@ object StreamingGates {
     // copy-on-write merges, final state read back. Last-writer-wins is by
     // SEQ, not arrival, so the result is identical under any file order or
     // batch split — which is exactly what makes it oracle-checkable.
-    "x8_cdc_stream" -> { (s, dir) =>
+    Gate("x8_cdc_stream",
+      // X8: the final CDC state is a pure function of the change set (LWW by
+      // seq) — updates land on keys ≡0 mod 3, deletes remove keys ≡0 mod 9.
+      """SELECT o_orderkey, o_custkey,
+        |  CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 10
+        |       ELSE o_totalprice END AS o_totalprice
+        |FROM orders WHERE o_orderkey % 9 <> 0""".stripMargin) { (s, dir) =>
       val watch = graft.Scratch.fresh("x8_in")
       val state = graft.Scratch.fresh("x8_state")
       val o = Tables(s, dir).orders.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -92,7 +134,17 @@ object StreamingGates {
     // maintained rollup is LINEAR in the deltas (groups stay far from the
     // zero-count drop), so the final state is identical under any shard
     // order or batch split — recompute-oracle-checkable like r31.
-    "x9_ivm_stream" -> { (s, dir) =>
+    Gate("x9_ivm_stream",
+      // X9: the maintained rollup must equal a recompute over the live row
+      // set (survivors at their updated prices) — delta chain ≡ recompute.
+      """WITH live AS (
+        |  SELECT o_orderstatus,
+        |    CAST(o_totalprice AS DECIMAL(18,2)) +
+        |      CASE WHEN o_orderkey % 3 = 0 THEN 10 ELSE 0 END AS price
+        |  FROM orders WHERE o_orderkey % 9 <> 0
+        |)
+        |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
+        |FROM live GROUP BY o_orderstatus""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.functions.lit
       val watch = graft.Scratch.fresh("x9_in")
       val state = graft.Scratch.fresh("x9_state")
@@ -132,7 +184,18 @@ object StreamingGates {
     // corpus) must equal the same plain GROUP BY/HAVING oracle as the
     // batch operator — the batch split invisible. Replay idempotency and
     // split-invariance are StreamingHeavyHittersSpec's.
-    "x16_stream_heavy_hitters" -> { (s, dir) =>
+    Gate("x16_stream_heavy_hitters",
+      // X16: same replay as the batch r46 oracle — the stream's state path
+      // must land on the identical exact heavy-hitter set
+      """WITH k AS (
+        |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
+        |              WHEN o_orderkey % 7 = 0 THEN 7
+        |              ELSE o_custkey END AS item
+        |  FROM orders
+        |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
+        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
+        |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
+        |ORDER BY item""".stripMargin) { (s, dir) =>
       import java.nio.file.Paths
       val in = graft.Scratch.fresh("x16_in")
       val state = graft.Scratch.fresh("x16_state")
@@ -162,7 +225,10 @@ object StreamingGates {
     // the plain predicate filter with ZERO base files rewritten
     // (in-gate require). Replay no-ops and split-independence are
     // StreamingMorDeletesSpec's.
-    "x21_stream_mor_deletes" -> { (s, dir) =>
+    Gate("x21_stream_mor_deletes",
+      // X21: the MoR read after the streamed deletes ≡ the plain filter
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderkey % 7 <> 0""".stripMargin) { (s, dir) =>
       import java.nio.file.Paths
       val t = graft.Scratch.fresh("x21_table")
       val in = graft.Scratch.fresh("x21_in")
@@ -192,7 +258,15 @@ object StreamingGates {
     // GROUP BY oracle certifies it. Crash-window atomicity (totals never
     // skew from by_key at ANY txn) and replay no-ops are
     // StreamingTxnIngestSpec's.
-    "x19_stream_txn_ingest" -> { (s, dir) =>
+    Gate("x19_stream_txn_ingest",
+      // X19: maintained txn state ≡ one-shot aggregate over the landed rows
+      """SELECT event_type AS key, count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events GROUP BY event_type
+        |UNION ALL
+        |SELECT '__total' AS key, count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events""".stripMargin) { (s, dir) =>
       import java.nio.file.Paths
       val in = graft.Scratch.fresh("x19_in")
       val root = graft.Scratch.fresh("x19_txn")
@@ -216,7 +290,10 @@ object StreamingGates {
     // STATE must equal batch t20 over the whole corpus — the same DuckDB
     // oracle, the batch split invisible. Replay/crash repair and
     // state ≡ fresh-tokenization are StreamingSearchIndexSpec's.
-    "x17_stream_search_index" -> { (s, dir) =>
+    Gate("x17_stream_search_index",
+      // X17: scoring from the streamed index ≡ the batch t20 formula
+      ("WITH " + graft.operators.LlmOps.bm25OracleSql("documents",
+        Seq("dup", "merge", "vector", "spark", "quantum"), 50))) { (s, dir) =>
       import java.nio.file.Paths
       val in = graft.Scratch.fresh("x17_in")
       val root = graft.Scratch.fresh("x17_idx")
@@ -242,7 +319,16 @@ object StreamingGates {
     // a bootstrap-only shortcut fails loudly). Replay/checkpoint-loss
     // idempotency, net-span folding and maintenance-commit suppression
     // are SnapshotTailStreamSpec's.
-    "x22_snapshot_tail" -> { (s, dir) =>
+    Gate("x22_snapshot_tail",
+      // X22: the tailed destination ≡ the source's latest content — updates
+      // landed on keys ≡0 mod 6, deletes removed keys ≡0 mod 10 (except the
+      // updated ones), the Append added the odd keys
+      """SELECT o_orderkey, o_custkey,
+        |  CASE WHEN o_orderkey % 6 = 0 THEN o_totalprice + 10
+        |       ELSE o_totalprice END AS o_totalprice
+        |FROM orders
+        |WHERE NOT (o_orderkey % 10 = 0 AND o_orderkey % 6 <> 0)
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val src = graft.Scratch.fresh("x22_src")
       val dst = graft.Scratch.fresh("x22_dst")
       val ckpt = graft.Scratch.fresh("x22_ckpt")
@@ -274,7 +360,27 @@ object StreamingGates {
     // streaming transport must be invisible; the require proves only ONE
     // shard landed a version (the other two were pure duplicates).
     // Replay no-ops and order semantics are StreamingCorpusRefreshSpec's.
-    "x23_stream_corpus" -> { (s, dir) =>
+    Gate("x23_stream_corpus",
+      // X23: identical first-arrival replay to the batch p14 oracle — the
+      // streaming transport must be invisible in the corpus content
+      """WITH all_docs AS (
+        |  SELECT doc_id, lang, source, n_chars, text,
+        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
+        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
+        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
+        |),
+        |ranked AS (
+        |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
+        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
+        |  FROM all_docs
+        |)
+        |SELECT doc_id, lang, source, n_chars, content_hash
+        |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import java.nio.file.Paths
       val t = graft.Scratch.fresh("x23_corpus")
       val in = graft.Scratch.fresh("x23_in")
@@ -310,7 +416,19 @@ object StreamingGates {
     // rollup over the live row set — a drifted fold at any link breaks
     // the hash. Replay/out-of-order no-ops and ceiling-vs-latest
     // equivalence are SnapshotIvmTailSpec's.
-    "x24_tail_ivm" -> { (s, dir) =>
+    Gate("x24_tail_ivm",
+      // X24: the maintained rollup ≡ a recompute over the live row set
+      // (updates +10 on keys ≡0 mod 6, deletes on ≡0 mod 10 except updated,
+      // odd keys appended unchanged)
+      """WITH live AS (
+        |  SELECT o_orderstatus,
+        |    CAST(o_totalprice AS DECIMAL(18,2)) +
+        |      CASE WHEN o_orderkey % 6 = 0 THEN 10 ELSE 0 END AS price
+        |  FROM orders
+        |  WHERE NOT (o_orderkey % 10 = 0 AND o_orderkey % 6 <> 0)
+        |)
+        |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
+        |FROM live GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val base = graft.Scratch.fresh("x24_base")
       val mv = graft.Scratch.fresh("x24_mv")
       val ckpt = graft.Scratch.fresh("x24_ckpt")
@@ -348,7 +466,30 @@ object StreamingGates {
     // duplicate into the index, a lost novel doc, or any scoring drift
     // across the two commit-protocol hops breaks the hash. Insert-only
     // enforcement and replay no-ops are SearchIndexTailSpec's.
-    "x25_live_search" -> { (s, dir) =>
+    Gate("x25_live_search", {
+      // X25: bm25 over the first-arrival corpus content — both streaming
+      // hops (crawl → corpus, corpus log → index) must be invisible
+      """WITH all_docs AS (
+        |  SELECT doc_id, text,
+        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text, 1
+        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
+        |  UNION ALL
+        |  SELECT doc_id + 2000000, text, 1
+        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
+        |),
+        |ranked AS (
+        |  SELECT doc_id, text,
+        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
+        |  FROM all_docs
+        |),
+        |corpus AS (SELECT doc_id, text FROM ranked WHERE rn = 1),
+        |""".stripMargin +
+        graft.operators.LlmOps.bm25OracleSql("corpus",
+          Seq("dup", "merge", "vector", "spark", "quantum"), 50)
+    }) { (s, dir) =>
       import java.nio.file.Paths
       val t = graft.Scratch.fresh("x25_corpus")
       val in = graft.Scratch.fresh("x25_in")
@@ -378,7 +519,13 @@ object StreamingGates {
     // X4 batch equivalent: deterministic first-occurrence per event_id (the
     // streaming form keeps the first arrival; batch pins "first" with a
     // total order so both engines agree).
-    "x4_dedup_batch" -> { (s, dir) =>
+    Gate("x4_dedup_batch",
+      """SELECT event_id, ts, user_id, event_type, value FROM (
+        |  SELECT event_id, ts, user_id, event_type, value,
+        |    row_number() OVER (PARTITION BY event_id
+        |      ORDER BY ts, user_id, event_type, value) AS rn
+        |  FROM events
+        |) WHERE rn = 1""".stripMargin) { (s, dir) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_id")
         .orderBy("ts", "user_id", "event_type", "value")
@@ -389,184 +536,4 @@ object StreamingGates {
     }
   )
 
-  def oracleSql: Map[String, String] = Map(
-    "x1_window_agg" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS ws, event_type,
-        |  count(*) AS n, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "x2_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 30 * 60 * 1000000
-        |         THEN 1 ELSE 0 END AS is_new
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), numbered AS (
-        |  SELECT user_id, ts, value,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        |  FROM flagged
-        |)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        |  count(*) AS n_events,
-        |  CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |  CAST(max(ts) AS TIMESTAMP) AS session_end,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM numbered GROUP BY user_id, session_seq""".stripMargin,
-
-    // X22: the tailed destination ≡ the source's latest content — updates
-    // landed on keys ≡0 mod 6, deletes removed keys ≡0 mod 10 (except the
-    // updated ones), the Append added the odd keys
-    "x22_snapshot_tail" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 6 = 0 THEN o_totalprice + 10
-        |       ELSE o_totalprice END AS o_totalprice
-        |FROM orders
-        |WHERE NOT (o_orderkey % 10 = 0 AND o_orderkey % 6 <> 0)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // X23: identical first-arrival replay to the batch p14 oracle — the
-    // streaming transport must be invisible in the corpus content
-    "x23_stream_corpus" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, lang, source, n_chars, text,
-        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
-        |),
-        |ranked AS (
-        |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
-        |  FROM all_docs
-        |)
-        |SELECT doc_id, lang, source, n_chars, content_hash
-        |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // X24: the maintained rollup ≡ a recompute over the live row set
-    // (updates +10 on keys ≡0 mod 6, deletes on ≡0 mod 10 except updated,
-    // odd keys appended unchanged)
-    "x24_tail_ivm" ->
-      """WITH live AS (
-        |  SELECT o_orderstatus,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) +
-        |      CASE WHEN o_orderkey % 6 = 0 THEN 10 ELSE 0 END AS price
-        |  FROM orders
-        |  WHERE NOT (o_orderkey % 10 = 0 AND o_orderkey % 6 <> 0)
-        |)
-        |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM live GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // X25: bm25 over the first-arrival corpus content — both streaming
-    // hops (crawl → corpus, corpus log → index) must be invisible
-    "x25_live_search" -> {
-      """WITH all_docs AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text, 1
-        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text, 1
-        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
-        |),
-        |ranked AS (
-        |  SELECT doc_id, text,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
-        |  FROM all_docs
-        |),
-        |corpus AS (SELECT doc_id, text FROM ranked WHERE rn = 1),
-        |""".stripMargin +
-        graft.operators.LlmOps.bm25OracleSql("corpus",
-          Seq("dup", "merge", "vector", "spark", "quantum"), 50)
-    },
-
-    // X21: the MoR read after the streamed deletes ≡ the plain filter
-    "x21_stream_mor_deletes" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 7 <> 0""".stripMargin,
-
-    // X19: maintained txn state ≡ one-shot aggregate over the landed rows
-    "x19_stream_txn_ingest" ->
-      """SELECT event_type AS key, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY event_type
-        |UNION ALL
-        |SELECT '__total' AS key, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events""".stripMargin,
-
-    "x7_interval_join" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-        |  p.user_id, p.ts AS purchase_ts, c.ts AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin,
-
-    "x10_outer_interval_join" ->
-      """SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-        |  p.user_id, p.ts AS purchase_ts, c.ts AS click_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON p.user_id = c.user_id
-        | AND c.ts BETWEEN p.ts - INTERVAL 1 HOUR AND p.ts""".stripMargin,
-
-    "x6_stream_enrich" ->
-      """SELECT event_id, ts, user_id, event_type, value, c_mktsegment, c_name
-        |FROM events LEFT JOIN customer ON user_id = c_custkey""".stripMargin,
-
-    // X8: the final CDC state is a pure function of the change set (LWW by
-    // seq) — updates land on keys ≡0 mod 3, deletes remove keys ≡0 mod 9.
-    "x8_cdc_stream" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 10
-        |       ELSE o_totalprice END AS o_totalprice
-        |FROM orders WHERE o_orderkey % 9 <> 0""".stripMargin,
-
-    // X9: the maintained rollup must equal a recompute over the live row
-    // set (survivors at their updated prices) — delta chain ≡ recompute.
-    "x9_ivm_stream" ->
-      """WITH live AS (
-        |  SELECT o_orderstatus,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) +
-        |      CASE WHEN o_orderkey % 3 = 0 THEN 10 ELSE 0 END AS price
-        |  FROM orders WHERE o_orderkey % 9 <> 0
-        |)
-        |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM live GROUP BY o_orderstatus""".stripMargin,
-
-    // X16: same replay as the batch r46 oracle — the stream's state path
-    // must land on the identical exact heavy-hitter set
-    "x16_stream_heavy_hitters" ->
-      """WITH k AS (
-        |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
-        |              WHEN o_orderkey % 7 = 0 THEN 7
-        |              ELSE o_custkey END AS item
-        |  FROM orders
-        |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
-        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
-        |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
-        |ORDER BY item""".stripMargin,
-
-    // X17: scoring from the streamed index ≡ the batch t20 formula
-    "x17_stream_search_index" ->
-      ("WITH " + graft.operators.LlmOps.bm25OracleSql("documents",
-        Seq("dup", "merge", "vector", "spark", "quantum"), 50)),
-
-    "x4_dedup_batch" ->
-      """SELECT event_id, ts, user_id, event_type, value FROM (
-        |  SELECT event_id, ts, user_id, event_type, value,
-        |    row_number() OVER (PARTITION BY event_id
-        |      ORDER BY ts, user_id, event_type, value) AS rn
-        |  FROM events
-        |) WHERE rn = 1""".stripMargin
-  )
 }

@@ -1,5 +1,6 @@
 package graft.wikidata
 
+import graft.Gate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-visible oracle gates for the wd2sql ETL core (SURVEY.md §2.1
@@ -51,13 +52,18 @@ object EtlGates {
     lines
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def gates: Seq[Gate] = Seq(
     // W13: the JDBC sink round-trip, driver-visible — ETL the mini-dump,
     // write all 8 tables + reference-style indices into an embedded Derby
     // database, read `meta` back over JDBC and gate it against the same
     // DuckDB oracle as the direct path (SQLite itself stays waived: no
     // SQLite JDBC driver exists in the zero-egress container).
-    "w13_jdbc_roundtrip"  -> { (s, _) =>
+    Gate("w13_jdbc_roundtrip",
+      s"""$corePrefixMeta
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
       val db  = s"memory:graftgate${java.util.UUID.randomUUID().toString.take(8)}"
       val url = s"jdbc:derby:$db;create=true"
       JdbcSink.writeTables(tables(s), url)
@@ -68,7 +74,12 @@ object EtlGates {
     // mini-dump into a fresh watched dir, drain it with AvailableNow, read
     // the streamed `meta` table back and gate against the same oracle:
     // streaming and batch routing cannot drift without failing the hash.
-    "x3_stream_etl"       -> { (s, _) =>
+    Gate("x3_stream_etl",
+      s"""$corePrefixMeta
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
       import java.nio.file.{Files, Paths}
       val in   = graft.Scratch.fresh("x3_in")
       val out  = graft.Scratch.fresh("x3_out")
@@ -85,7 +96,10 @@ object EtlGates {
     // gate the round-tripped bytes against the same DuckDB oracle as the
     // direct w6 path: the sink cannot corrupt, drop, or re-route a row
     // without failing the hash.
-    "w12_parquet_sink"    -> { (s, _) =>
+    Gate("w12_parquet_sink",
+      // identical derivation to w6 — the gate's value is that the Spark side
+      // passed through the partitioned sink and a disk round-trip first
+      stringOracle) { (s, _) =>
       val out = graft.Scratch.fresh("w12_sink")
       WikidataEtl.runFile(s, dumpPath, out, partitions = 4)
       s.read.parquet(s"$out/string")
@@ -96,7 +110,10 @@ object EtlGates {
     // survive byte-exactly; gated against the same oracle as the direct w6
     // path. Scale caveat: multiLine CSV is not splittable — at 100 TB CSV is
     // an EXPORT format; columnar formats remain the processing path.
-    "w17_csv_roundtrip"   -> { (s, _) =>
+    Gate("w17_csv_roundtrip",
+      // same again through the CSV, ORC and JSONL sinks (w17/w18/w19): the
+      // format cannot corrupt, drop, or re-route a row without failing the hash
+      stringOracle) { (s, _) =>
       val out = graft.Scratch.fresh("w17_csv")
       val str = tables(s).string
       str.write.mode("overwrite")
@@ -108,7 +125,7 @@ object EtlGates {
     },
     // W18: ORC sink round-trip — the other columnar ecosystem (Hive/Trino
     // interop); same stat-pruned, splittable properties as parquet.
-    "w18_orc_roundtrip"   -> { (s, _) =>
+    Gate("w18_orc_roundtrip", entityOracle) { (s, _) =>
       val out = graft.Scratch.fresh("w18_orc")
       tables(s).entity.write.mode("overwrite").orc(out)
       s.read.orc(out)
@@ -118,7 +135,7 @@ object EtlGates {
     // splittable and streamable, unlike multiLine CSV; explicit schema on
     // read (JSON writes omit null fields — the schema restores them, and
     // at 100 TB inference would cost an extra full pass anyway).
-    "w19_jsonl_roundtrip" -> { (s, _) =>
+    Gate("w19_jsonl_roundtrip", stringOracle) { (s, _) =>
       val out = graft.Scratch.fresh("w19_jsonl")
       val str = tables(s).string
       str.write.mode("overwrite").json(out)
@@ -131,14 +148,22 @@ object EtlGates {
     // equivalent v2 dump: incremental and from-scratch cannot drift without
     // failing the hash. Two grains: `string` (claim rows replaced wholesale
     // per revised entity) and `meta` (entity rows — deletions visible).
-    "w22_incremental_etl" -> { (s, _) =>
+    Gate("w22_incremental_etl",
+      // W22: the oracle rebuilds from the v2 FULL dump — the Spark side never
+      // reads that file, it derives the same state from (v1, changeset)
+      stringOracleFor(dumpV2Path)) { (s, _) =>
       val base = graft.Scratch.fresh("w22_base")
       WikidataEtl.runFile(s, dumpPath, base)
       val next = IncrementalEtl.applyFile(s, base, changesetPath)
       next.unpersist() // single-consumer gate: the shared delta cache is idle
       next.string
     },
-    "w22_incremental_meta" -> { (s, _) =>
+    Gate("w22_incremental_meta",
+      s"""${corePrefixMetaFor(dumpV2Path)}
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
       val base = graft.Scratch.fresh("w22m_base")
       WikidataEtl.runFile(s, dumpPath, base)
       val next = IncrementalEtl.applyFile(s, base, changesetPath)
@@ -152,7 +177,10 @@ object EtlGates {
     // incremental result vs a DuckDB full qualifier re-derivation from
     // the v2 dump: incremental and from-scratch cannot drift at the
     // qualifier grain either.
-    "w40_incremental_qualifiers" -> { (s, _) =>
+    Gate("w40_incremental_qualifiers",
+      // W40: the qualifier derivation over the FULL v2 dump — the oracle
+      // never sees the changeset; only a correct LWW apply matches it
+      qualifiersOracleFor(dumpV2Path)) { (s, _) =>
       val base = graft.Scratch.fresh("w40_base")
       WikidataEtl.runFile(s, dumpPath, base, partitions = 4, surface = Surface.Qualified)
       val next = IncrementalEtl.applyFile(s, base, changesetPath, Surface.Qualified)
@@ -163,7 +191,9 @@ object EtlGates {
     // qualified run lands all 10 tables (+ reference-style per-column
     // indices) in the relational sink; the qualifier table read back over
     // JDBC gates against the same re-derivation as the direct w34 path.
-    "w43_jdbc_qualified" -> { (s, _) =>
+    Gate("w43_jdbc_qualified",
+      // W43: the identical w34 oracle — the JDBC round-trip is invisible
+      qualifiersOracle) { (s, _) =>
       val db  = s"memory:graftq${java.util.UUID.randomUUID().toString.take(8)}"
       val url = s"jdbc:derby:$db;create=true"
       val t = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Qualified), cache = false)
@@ -181,7 +211,14 @@ object EtlGates {
     // whatever batch boundaries the source picked. (Two batches exercise
     // the guard; the 4-shard convergence sweep is the spec's. Gate cost is
     // per-commit scheduling — 9 snapshot commits per batch — not data.)
-    "x12_stream_incremental" -> { (s, _) =>
+    Gate("x12_stream_incremental",
+      // X12 converges to the same state as W22 — same v2 full-rebuild oracle,
+      // reached through sharded micro-batches + snapshot commits instead
+      s"""${corePrefixMetaFor(dumpV2Path)}
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
       val in   = graft.Scratch.fresh("x12_in")
       val root = graft.Scratch.fresh("x12_tables")
       val ckpt = graft.Scratch.fresh("x12_ckpt")
@@ -201,7 +238,11 @@ object EtlGates {
     // equal the DuckDB full re-derivation from the v2 dump the stream
     // never reads — incremental, streaming and from-scratch cannot drift
     // at the links grain, whatever batch boundaries the source picked.
-    "x29_stream_incremental_full" -> { (s, _) =>
+    Gate("x29_stream_incremental_full",
+      // X29: the w55 derivation (aliases over the FULL v2 dump) — the
+      // streaming LWW apply, its batch boundaries and the revision guard
+      // are all invisible; only a correct 13-table streamed apply matches.
+      aliasesOracleFor(dumpV2Path)) { (s, _) =>
       val in   = graft.Scratch.fresh("x29_in")
       val root = graft.Scratch.fresh("x29_tables")
       val ckpt = graft.Scratch.fresh("x29_ckpt")
@@ -222,7 +263,10 @@ object EtlGates {
     // CURRENT published name universe and replays w57's brute-force v2
     // oracle: batch boundaries, the guard, tags and the appends are all
     // invisible to the answer.
-    "x30_stream_any_name_index" -> { (s, _) =>
+    Gate("x30_stream_any_name_index",
+      // X30: w57's oracle again — the streamed maintenance loop, its batch
+      // boundaries, tags and the revision guard are all invisible.
+      anyNameFuzzyOracleFor(dumpV2Path)) { (s, _) =>
       import org.apache.spark.sql.functions.min
       val in   = graft.Scratch.fresh("x30_in")
       val root = graft.Scratch.fresh("x30_tables")
@@ -265,7 +309,13 @@ object EtlGates {
     // its batch id; the final meta SNAPSHOT must equal the same DuckDB
     // oracle as x3's bare-append path. Replay idempotency and partial-crash
     // repair are EtlSnapshotStreamSpec's.
-    "x13_stream_snapshot" -> { (s, _) =>
+    Gate("x13_stream_snapshot",
+      // X13 publishes the same derivation through tagged snapshot commits
+      s"""$corePrefixMeta
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
       val in   = graft.Scratch.fresh("x13_in")
       val root = graft.Scratch.fresh("x13_tables")
       val ckpt = graft.Scratch.fresh("x13_ckpt")
@@ -285,7 +335,10 @@ object EtlGates {
     // streaming path are invisible at the links grain too. Replay
     // idempotency and partial-crash repair over the 13-table surface are
     // EtlSnapshotStreamSpec's.
-    "x28_stream_full" -> { (s, _) =>
+    Gate("x28_stream_full",
+      // X28: the identical w52 derivation — sharding, micro-batch
+      // boundaries and the snapshot publication protocol are invisible.
+      aliasesOracleFor(dumpPath)) { (s, _) =>
       val in   = graft.Scratch.fresh("x28_in")
       val root = graft.Scratch.fresh("x28_tables")
       val ckpt = graft.Scratch.fresh("x28_ckpt")
@@ -306,7 +359,7 @@ object EtlGates {
     // claim, 7-way-routed like the main tables but flattened under a `kind`
     // discriminator; gated against a full DuckDB re-derivation from the
     // same dump.
-    "w34_etl_qualifiers"  -> { (s, _) =>
+    Gate("w34_etl_qualifiers", qualifiersOracle) { (s, _) =>
       WikidataEtl.qualifiersTable(DumpReader.read(s, dumpPath, Surface.Qualified))
     },
     // W59: statement REFERENCES — the provenance surface the reference
@@ -316,7 +369,11 @@ object EtlGates {
     // under the same flattened 7-way kind law as W34. Gated against a
     // full DuckDB re-derivation from the raw dump (references unnested
     // with a 0-based record index, snak maps walked like the claims map).
-    "w59_etl_references" -> { (s, _) =>
+    Gate("w59_etl_references",
+      // W59: the reference table re-derived from the raw dump — record
+      // index, snak-map walk, 7-way routing, deprecated drop, unencodable
+      // entity-ref drop, all replayed.
+      referencesOracleFor(dumpPath)) { (s, _) =>
       WikidataEtl.referencesTable(DumpReader.read(s, dumpPath, Surface.Full))
     },
     // W60: the provenance grain under the 13-table incremental apply —
@@ -328,7 +385,18 @@ object EtlGates {
     // citation grain either.
     // W61: the provenance-coverage rollup — per property: statements,
     // statements carrying at least one citation, citation records.
-    "w61_reference_coverage" -> { (s, _) =>
+    Gate("w61_reference_coverage",
+      // W61: per-property rollup over the surviving statements.
+      s"""$corePrefix, rstat AS (
+         |  SELECT property_id,
+         |    coalesce(len(from_json(json_extract(claim, '$$.references'), '["JSON"]')), 0) AS nrefs
+         |  FROM claims WHERE coalesce(claim->>'$$.rank','normal') <> 'deprecated'
+         |)
+         |SELECT property_id,
+         |  CAST(count(*) AS BIGINT) AS n_statements,
+         |  CAST(sum(CASE WHEN nrefs > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_referenced,
+         |  CAST(sum(nrefs) AS BIGINT) AS n_ref_records
+         |FROM rstat GROUP BY 1""".stripMargin) { (s, _) =>
       WikidataEtl.referenceCoverage(DumpReader.read(s, dumpPath, Surface.Full))
     },
     // W62: the reference README's own conjunctive pattern (W15) under a
@@ -338,7 +406,48 @@ object EtlGates {
     // pairs contributes its two least pairs — nothing hard-coded, and the
     // whole chain (references parse, spine, sourced cut, conjunction) is
     // load-bearing in the derivation itself.
-    "w62_sourced_conjunctive" -> { (s, _) =>
+    Gate("w62_sourced_conjunctive",
+      // W62: the sourced conjunction re-derived end to end — sourced claim
+      // ids from the references unnest, the entity-valued spine
+      // (project-first, the DuckDB JSON-optimizer lesson), the same
+      // least-entity/least-pairs conjunct derivation, and the EXISTS chain.
+      s"""${refPrefixFor(dumpPath)}, spineraw AS (
+         |  SELECT id, property_id,
+         |    claim->>'$$.id' AS claim_id,
+         |    claim->>'$$.mainsnak.snaktype' AS snaktype,
+         |    claim->>'$$.mainsnak.datavalue.type' AS vtype,
+         |    claim->>'$$.mainsnak.datavalue.value.id' AS vid,
+         |    coalesce(claim->>'$$.rank','normal') AS rank
+         |  FROM claims
+         |), spine AS (
+         |  SELECT id, property_id, claim_id, ${encodeIdSql("vid")} AS entity_id
+         |  FROM spineraw
+         |  WHERE rank <> 'deprecated' AND snaktype = 'value'
+         |    AND vtype = 'wikibase-entityid'
+         |), srcspine AS (
+         |  SELECT * FROM spine
+         |  WHERE entity_id IS NOT NULL
+         |    AND claim_id IN (SELECT DISTINCT claim_id FROM rrefs)
+         |), probe AS (
+         |  SELECT min(id) AS pr FROM (
+         |    SELECT id FROM (SELECT DISTINCT id, property_id, entity_id FROM srcspine)
+         |    GROUP BY id HAVING count(*) >= 2)
+         |), cpair AS (
+         |  SELECT p, q, row_number() OVER (ORDER BY p, q) AS rn FROM (
+         |    SELECT DISTINCT property_id AS p, entity_id AS q FROM srcspine
+         |    WHERE id = (SELECT pr FROM probe))
+         |  ORDER BY p, q LIMIT 2
+         |), metaq AS (
+         |  SELECT id, e->>'$$.labels.en.value' AS label,
+         |    e->>'$$.descriptions.en.value' AS description
+         |  FROM encoded WHERE id IS NOT NULL
+         |)
+         |SELECT m.id, m.label, m.description FROM metaq m
+         |WHERE EXISTS (SELECT 1 FROM srcspine s JOIN cpair c ON c.rn = 1
+         |  AND s.property_id = c.p AND s.entity_id = c.q WHERE s.id = m.id)
+         |  AND EXISTS (SELECT 1 FROM srcspine s JOIN cpair c ON c.rn = 2
+         |  AND s.property_id = c.p AND s.entity_id = c.q WHERE s.id = m.id)
+         |ORDER BY m.id""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.{col, countDistinct, min, struct}
       val t = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full))
       val sourced = t.statements.get
@@ -356,7 +465,11 @@ object EtlGates {
       t.unpersist()
       out
     },
-    "w60_incremental_references" -> { (s, _) =>
+    Gate("w60_incremental_references",
+      // W60: the identical derivation over the FULL v2 dump — the oracle
+      // never sees the changeset; only a correct 13-table LWW apply matches
+      // at the citation grain.
+      referencesOracleFor(dumpV2Path)) { (s, _) =>
       val base = graft.Scratch.fresh("w60_base")
       WikidataEtl.runFile(s, dumpPath, base, partitions = 4, surface = Surface.Full)
       val next = IncrementalEtl.applyFile(s, base, changesetPath, Surface.Full)
@@ -370,7 +483,9 @@ object EtlGates {
     // corrupt, drop, or re-route a qualifier row without failing the
     // hash, and the spine+qualifiers ride the same repartition/stat-sort
     // discipline as the reference's 8.
-    "w38_qualified_sink"  -> { (s, _) =>
+    Gate("w38_qualified_sink",
+      // W38: identical oracle as w34 — the sink round-trip is invisible
+      qualifiersOracle) { (s, _) =>
       val out = graft.Scratch.fresh("w38_sink")
       WikidataEtl.runFile(s, dumpPath, out, partitions = 4, surface = Surface.Qualified)
       s.read.parquet(s"$out/qualifiers")
@@ -380,7 +495,9 @@ object EtlGates {
     // valid at 1950-06-01 under the min(P580)/max(P582) span law; the
     // DuckDB oracle rebuilds statements, spans, and the validity filter
     // from the raw dump.
-    "w35_valid_at"        -> { (s, _) =>
+    Gate("w35_valid_at",
+      s"""$temporalPrefixAlive
+         |SELECT id, property_id, claim_id, entity_id FROM alive""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.{lit, col}
       val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.validAt(
@@ -397,7 +514,18 @@ object EtlGates {
     // contests (a preferred quantity or novalue next to normal entity
     // statements): the flag must aggregate over the whole group, so a
     // per-value-family flag diverges here (the round-9 advisor's case).
-    "w46_truthy" -> { (s, _) =>
+    Gate("w46_truthy",
+      // W46: the BestRank law re-derived — rank-kept statements, the
+      // per-group any-preferred flag over ALL of them (every value family,
+      // novalue/somevalue included), then the entity-family routing of the
+      // survivors. The flag-before-routing order is the point: a preferred
+      // quantity in the group must suppress its normal entity statements.
+      s"""$corePrefix$truthyCtes
+         |SELECT id, property_id, claim_id,
+         |  ${encodeIdSql("v->>'$.id'")} AS entity_id
+         |FROM tcore
+         |WHERE snaktype = 'value' AND value_type = 'wikibase-entityid'
+         |  AND ${encodeIdSql("v->>'$.id'")} IS NOT NULL""".stripMargin) { (s, _) =>
       WikidataEtl.truthyStatements(DumpReader.read(s, dumpPath, Surface.Qualified))
     },
     // W47: TRUTHY over the TYPED value tables — the BestRank cut composed
@@ -406,11 +534,32 @@ object EtlGates {
     // table of the truthy core returns only the preferred figure where
     // one exists. The mini-dump plants same-family contested quantity and
     // time groups so the cut removes real rows from both tables.
-    "w47_truthy_quantity" -> { (s, _) =>
+    Gate("w47_truthy_quantity",
+      // W47: the w9/w10 typed-table bodies routed FROM THE TRUTHY CORE —
+      // same projection laws, claim set cut by BestRank first.
+      s"""$corePrefix$truthyCtes
+         |SELECT id, property_id,
+         |  try_cast(regexp_replace(v->>'$$.amount', '^\\+', '') AS DOUBLE) AS amount,
+         |  try_cast(regexp_replace(v->>'$$.lowerBound', '^\\+', '') AS DOUBLE) AS lower_bound,
+         |  try_cast(regexp_replace(v->>'$$.upperBound', '^\\+', '') AS DOUBLE) AS upper_bound,
+         |  CASE WHEN v->>'$$.unit' = '1' THEN NULL
+         |       ELSE CAST(regexp_extract(v->>'$$.unit', '[QqPpLl]([0-9]+)$$', 1) AS BIGINT)
+         |         + CASE WHEN regexp_matches(v->>'$$.unit', '[Pp][0-9]+$$') THEN 1000000000
+         |                WHEN regexp_matches(v->>'$$.unit', '[Ll][0-9]+$$') THEN 2000000000
+         |                ELSE 0 END
+         |  END AS unit_id
+         |FROM tcore WHERE snaktype = 'value' AND value_type = 'quantity'""".stripMargin) { (s, _) =>
       WikidataEtl.quantityTable(
         WikidataEtl.truthyCore(DumpReader.read(s, dumpPath, Surface.Qualified)))
     },
-    "w47_truthy_time" -> { (s, _) =>
+    Gate("w47_truthy_time",
+      s"""$corePrefix$truthyCtes
+         |SELECT id, property_id,
+         |  try_strptime(
+         |    regexp_replace(regexp_replace(regexp_replace(v->>'$$.time', '^\\+', ''), '-00-', '-01-'), '-00T', '-01T'),
+         |    '%Y-%m-%dT%H:%M:%SZ') AS time,
+         |  coalesce(try_cast(v->>'$$.precision' AS INTEGER), 0) AS precision
+         |FROM tcore WHERE snaktype = 'value' AND value_type = 'time'""".stripMargin) { (s, _) =>
       WikidataEtl.timeTable(
         WikidataEtl.truthyCore(DumpReader.read(s, dumpPath, Surface.Qualified)))
     },
@@ -421,7 +570,17 @@ object EtlGates {
     // spans (dead before T, starting after T, and alive at T) alongside
     // normals, so both cuts bite the same groups. Both are claim-keyed
     // filters on the spine — they compose as two cheap joins.
-    "w48_truthy_at" -> { (s, _) =>
+    Gate("w48_truthy_at",
+      // W48: truthy × validAt — the truthy entity slice LEFT-joined to the
+      // span law, alive at 1950-06-01. Both cuts re-derived independently.
+      s"""$qualPrefix, $spansCte$truthyCtes
+         |SELECT t.id, t.property_id, t.claim_id,
+         |  ${encodeIdSql("t.v->>'$.id'")} AS entity_id
+         |FROM tcore t LEFT JOIN spans p ON t.claim_id = p.claim_id
+         |WHERE t.snaktype = 'value' AND t.value_type = 'wikibase-entityid'
+         |  AND ${encodeIdSql("t.v->>'$.id'")} IS NOT NULL
+         |  AND (p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1950-06-01 00:00:00')
+         |  AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1950-06-01 00:00:00')""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.{col, lit}
       val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.validAt(
@@ -434,7 +593,17 @@ object EtlGates {
     // claim count, how many carry any validity span, and the stated time
     // range; the sanity check a temporal-query user runs before trusting
     // validAt over a corpus.
-    "w44_temporal_coverage" -> { (s, _) =>
+    Gate("w44_temporal_coverage",
+      // W44: the per-property rollup over the shared span/statement CTEs.
+      s"""$temporalBase
+         |SELECT s.property_id,
+         |  CAST(count(*) AS BIGINT) AS n_claims,
+         |  CAST(count(p.claim_id) AS BIGINT) AS n_temporal,
+         |  min(p.valid_from) AS earliest_from,
+         |  max(p.valid_until) AS latest_until
+         |FROM stmts s LEFT JOIN spans p ON s.claim_id = p.claim_id
+         |WHERE s.entity_id IS NOT NULL
+         |GROUP BY s.property_id""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.col
       val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.temporalCoverage(
@@ -446,7 +615,20 @@ object EtlGates {
     // W42: the temporal DIFF — entity-valued claims whose in-force status
     // flipped between 1925 and 1985, tagged gained/lost; churn-sized by
     // construction (claims alive or dead at both times never survive).
-    "w42_temporal_diff" -> { (s, _) =>
+    Gate("w42_temporal_diff",
+      // W42: both alive cuts re-derived over the shared span/statement CTEs;
+      // the status-flip filter and gained/lost tagging replayed inline.
+      s"""$temporalBase
+         |SELECT s.id, s.property_id, s.claim_id, s.entity_id,
+         |  CASE WHEN ((p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1985-01-01 00:00:00')
+         |        AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1985-01-01 00:00:00'))
+         |       THEN 'gained' ELSE 'lost' END AS change
+         |FROM stmts s LEFT JOIN spans p ON s.claim_id = p.claim_id
+         |WHERE s.entity_id IS NOT NULL
+         |  AND ((p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1925-01-01 00:00:00')
+         |       AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1925-01-01 00:00:00'))
+         |   <> ((p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1985-01-01 00:00:00')
+         |       AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1985-01-01 00:00:00'))""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.{lit, col}
       val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.changedBetween(
@@ -460,7 +642,19 @@ object EtlGates {
     // W37: "what was true at T", labeled — W35's surviving claims joined
     // to the meta table for both endpoints' labels; the composed question
     // the reference's users cannot ask at all (no qualifiers, no time).
-    "w37_temporal_labels" -> { (s, _) =>
+    Gate("w37_temporal_labels",
+      // W37: the temporal answer decorated with both endpoints' labels —
+      // the meta derivation joined twice, LEFT so unlabeled entities keep
+      // the reference's NULL semantics.
+      s"""$temporalPrefixAlive, metaq AS (
+         |  SELECT id, e->>'$$.labels.en.value' AS label
+         |  FROM encoded WHERE id IS NOT NULL
+         |)
+         |SELECT v.claim_id, v.id, ml.label AS subject_label,
+         |  v.property_id, v.entity_id, mo.label AS object_label
+         |FROM alive v
+         |LEFT JOIN metaq ml ON v.id = ml.id
+         |LEFT JOIN metaq mo ON v.entity_id = mo.id""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.lit
       val ents = DumpReader.read(s, dumpPath, Surface.Qualified)
       TemporalClaims.labeledAt(
@@ -479,7 +673,14 @@ object EtlGates {
     // byte-invisible. At scale the bz2 half is the story: bz2 is
     // SPLITTABLE, so one multi-GB official dump file parallelizes across
     // executors without pre-decompression.
-    "w50_compressed_dump" -> { (s, _) =>
+    Gate("w50_compressed_dump",
+      // W50: the identical w4 derivation over the UNCOMPRESSED file — the
+      // Spark side read gz+bz2 shards; compression must be byte-invisible
+      s"""$corePrefixMeta
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._
       val dir = graft.Scratch.fresh("w50_dump")
@@ -502,10 +703,21 @@ object EtlGates {
     // pipeline starts from) and EVERY language's aliases (meta keeps one
     // English label). Both are shuffle-free explodes of the Surface.Full
     // pruned parse; both re-derived in DuckDB from the raw dump.
-    "w51_sitelinks" -> { (s, _) =>
+    Gate("w51_sitelinks",
+      // W51: sitelinks re-derived — map keys walked like the claims map.
+      s"""$corePrefixMeta, slk AS (
+         |  SELECT id, e, unnest(json_keys(e, '$$.sitelinks')) AS site
+         |  FROM encoded WHERE id IS NOT NULL
+         |)
+         |SELECT id, site,
+         |  json_extract(e, '$$.sitelinks."' || site || '"')->>'$$.title' AS title
+         |FROM slk
+         |WHERE json_extract(e, '$$.sitelinks."' || site || '"')->>'$$.title' IS NOT NULL""".stripMargin) { (s, _) =>
       WikidataEtl.sitelinksTable(DumpReader.read(s, dumpPath, Surface.Full))
     },
-    "w52_aliases" -> { (s, _) =>
+    Gate("w52_aliases",
+      // W52: aliases re-derived — language keys, then each list unnested.
+      aliasesOracleFor(dumpPath)) { (s, _) =>
       WikidataEtl.aliasesTable(DumpReader.read(s, dumpPath, Surface.Full))
     },
     // W55: the 13-table INCREMENTAL apply — W22's LWW law over the full
@@ -515,7 +727,10 @@ object EtlGates {
     // plant them), gate = the ALIASES table of the incremental result vs
     // a DuckDB full re-derivation from the v2 dump: incremental and
     // from-scratch cannot drift at the links grain either.
-    "w55_incremental_full" -> { (s, _) =>
+    Gate("w55_incremental_full",
+      // W55: the aliases derivation over the FULL v2 dump — the oracle never
+      // sees the changeset; only a correct 13-table LWW apply matches it.
+      aliasesOracleFor(dumpV2Path)) { (s, _) =>
       val base = graft.Scratch.fresh("w55_base")
       WikidataEtl.runFile(s, dumpPath, base, partitions = 4, surface = Surface.Full)
       val next = IncrementalEtl.applyFile(s, base, changesetPath, Surface.Full)
@@ -529,7 +744,10 @@ object EtlGates {
     // OFF DISK gates against the same DuckDB re-derivation as the direct
     // w52 path — the "switch from wd2sql" entry point cannot drop or
     // corrupt a surface without failing a hash.
-    "w54_full_sink" -> { (s, _) =>
+    Gate("w54_full_sink",
+      // W54: the identical w52 derivation — the 13-table run + sink
+      // round-trip is invisible.
+      aliasesOracleFor(dumpPath)) { (s, _) =>
       val out = graft.Scratch.fresh("w54_sink")
       WikidataEtl.runFile(s, dumpPath, out, partitions = 4, surface = Surface.Full)
       s.read.parquet(s"$out/aliases")
@@ -538,7 +756,29 @@ object EtlGates {
     // "find the entity called X" must match labels AND aliases. The probe
     // term is data-derived on both sides (the alphabetically-least alias),
     // nothing hard-coded.
-    "w53_any_name_lookup" -> { (s, _) =>
+    Gate("w53_any_name_lookup",
+      // W53: the data-derived probe (min alias) against labels ∪ aliases.
+      s"""$corePrefixMeta, ak AS (
+         |  SELECT id, e, unnest(json_keys(e, '$$.aliases')) AS language
+         |  FROM encoded WHERE id IS NOT NULL
+         |), al AS (
+         |  SELECT id, language,
+         |    unnest(from_json(json_extract(e, '$$.aliases."' || language || '"'), '["JSON"]')) AS a
+         |  FROM ak
+         |), names AS (
+         |  SELECT id, a->>'$$.value' AS alias FROM al WHERE a->>'$$.value' IS NOT NULL
+         |), term AS (SELECT min(alias) AS t FROM names
+         |), lbl AS (
+         |  -- project BEFORE filtering: a JSON ->> extract compared inside a
+         |  -- multi-predicate WHERE trips the DuckDB JSON-optimizer cast bug
+         |  SELECT id, e->>'$$.labels.en.value' AS label
+         |  FROM encoded WHERE id IS NOT NULL
+         |)
+         |SELECT DISTINCT id FROM (
+         |  SELECT id FROM lbl WHERE label = (SELECT t FROM term)
+         |  UNION ALL
+         |  SELECT id FROM names WHERE alias = (SELECT t FROM term)
+         |)""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.functions.{col, min}
       val aliases = WikidataEtl.aliasesTable(DumpReader.read(s, dumpPath, Surface.Full))
       val meta = WikidataEtl.meta(DumpReader.read(s, dumpPath))
@@ -554,7 +794,11 @@ object EtlGates {
     // last character dropped — nothing hard-coded); the oracle answers
     // by brute-force levenshtein scan of the same union, so the index, its
     // footer-stats pruning (asserted in-gate) and the store are invisible.
-    "w56_fuzzy_any_name" -> { (s, _) =>
+    Gate("w56_fuzzy_any_name",
+      // W56: brute-force levenshtein over labels ∪ aliases with the same
+      // data-derived term (min name, last char dropped) — the variant
+      // index, the persisted store and its footer pruning are all invisible.
+      anyNameFuzzyOracleFor(dumpPath)) { (s, _) =>
       import org.apache.spark.sql.functions.{col, min}
       val api = QueryApi(WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = false))
       // drop the min name's LAST character: every sibling name one
@@ -583,7 +827,12 @@ object EtlGates {
     // oracle as w56 but over the v2 dump the Spark side never reads —
     // only a correct apply + a correct append can match. The in-gate
     // require proves maintained ≡ fold-and-rebuild, row-exact.
-    "w57_fuzzy_index_refresh" -> { (s, _) =>
+    Gate("w57_fuzzy_index_refresh",
+      // W57: the identical brute force over the FULL v2 dump — the Spark
+      // side builds on v1 and maintains by append; only a correct changeset
+      // apply plus a correct delta append (stale variants self-neutralized)
+      // can match the v2 name universe.
+      anyNameFuzzyOracleFor(dumpV2Path)) { (s, _) =>
       import org.apache.spark.sql.functions.{broadcast, col, min}
       val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = true)
       val t = graft.Scratch.fresh("w57_index")
@@ -613,17 +862,66 @@ object EtlGates {
     // W58: the schema-discovery rollup — unordered property pairs by the
     // number of entities asserting both, re-derived in DuckDB as a
     // distinct-props self-join over the same claim core.
-    "w58_property_cooccurrence" -> { (s, _) =>
+    Gate("w58_property_cooccurrence",
+      // W58: distinct (entity, property) self-joined under p1 < p2 — the
+      // blocking-free brute force the Spark set-explode must equal.
+      s"""$corePrefix, props AS (
+         |  SELECT DISTINCT id, property_id FROM core
+         |)
+         |SELECT a.property_id AS p1, b.property_id AS p2,
+         |  CAST(count(*) AS BIGINT) AS n_entities
+         |FROM props a JOIN props b
+         |  ON a.id = b.id AND a.property_id < b.property_id
+         |GROUP BY 1, 2""".stripMargin) { (s, _) =>
       WikidataEtl.propertyCooccurrence(DumpReader.read(s, dumpPath))
     },
-    "w4_etl_meta"         -> ((s, _) => tables(s).meta),
-    "w6_etl_string"       -> ((s, _) => tables(s).string),
-    "w7_etl_entity"       -> ((s, _) => tables(s).entity),
-    "w8_etl_coordinates"  -> ((s, _) => tables(s).coordinates),
-    "w9_etl_quantity"     -> ((s, _) => tables(s).quantity),
-    "w10_etl_time"        -> ((s, _) => tables(s).time),
-    "w11_etl_none"        -> ((s, _) => tables(s).none),
-    "w11_etl_unknown"     -> ((s, _) => tables(s).unknown)
+    Gate("w4_etl_meta",
+      s"""$corePrefixMeta
+         |SELECT id,
+         |  e->>'$$.labels.en.value' AS label,
+         |  e->>'$$.descriptions.en.value' AS description
+         |FROM encoded WHERE id IS NOT NULL""".stripMargin)((s, _) => tables(s).meta),
+    Gate("w6_etl_string", stringOracle)((s, _) => tables(s).string),
+    Gate("w7_etl_entity", entityOracle)((s, _) => tables(s).entity),
+    Gate("w8_etl_coordinates",
+      s"""$corePrefix
+         |SELECT id, property_id,
+         |  try_cast(v->>'$$.latitude' AS DOUBLE) AS latitude,
+         |  try_cast(v->>'$$.longitude' AS DOUBLE) AS longitude,
+         |  coalesce(try_cast(v->>'$$.precision' AS DOUBLE), 0.0) AS precision,
+         |  coalesce(CAST(regexp_extract(v->>'$$.globe', '[Qq]([0-9]+)$$', 1) AS BIGINT), 0) AS globe_id
+         |FROM core WHERE snaktype = 'value' AND value_type = 'globecoordinate'""".stripMargin)((s, _) => tables(s).coordinates),
+    Gate("w9_etl_quantity",
+      s"""$corePrefix
+         |SELECT id, property_id,
+         |  try_cast(regexp_replace(v->>'$$.amount', '^\\+', '') AS DOUBLE) AS amount,
+         |  try_cast(regexp_replace(v->>'$$.lowerBound', '^\\+', '') AS DOUBLE) AS lower_bound,
+         |  try_cast(regexp_replace(v->>'$$.upperBound', '^\\+', '') AS DOUBLE) AS upper_bound,
+         |  CASE WHEN v->>'$$.unit' = '1' THEN NULL
+         |       ELSE CAST(regexp_extract(v->>'$$.unit', '[QqPpLl]([0-9]+)$$', 1) AS BIGINT)
+         |         + CASE WHEN regexp_matches(v->>'$$.unit', '[Pp][0-9]+$$') THEN 1000000000
+         |                WHEN regexp_matches(v->>'$$.unit', '[Ll][0-9]+$$') THEN 2000000000
+         |                ELSE 0 END
+         |  END AS unit_id
+         |FROM core WHERE snaktype = 'value' AND value_type = 'quantity'""".stripMargin)((s, _) => tables(s).quantity),
+    Gate("w10_etl_time",
+      s"""$corePrefix
+         |SELECT id, property_id,
+         |  try_strptime(
+         |    regexp_replace(regexp_replace(regexp_replace(v->>'$$.time', '^\\+', ''), '-00-', '-01-'), '-00T', '-01T'),
+         |    '%Y-%m-%dT%H:%M:%SZ') AS time,
+         |  coalesce(try_cast(v->>'$$.precision' AS INTEGER), 0) AS precision
+         |FROM core WHERE snaktype = 'value' AND value_type = 'time'""".stripMargin)((s, _) => tables(s).time),
+    Gate("w11_etl_none",
+      s"""$corePrefix
+         |SELECT id, property_id FROM core
+         |WHERE CASE WHEN snaktype = 'novalue' THEN true
+         |           WHEN snaktype = 'value' AND value_type = 'monolingualtext'
+         |             THEN v->>'$$.text' IS NULL
+         |           ELSE false END""".stripMargin)((s, _) => tables(s).none),
+    Gate("w11_etl_unknown",
+      s"""$corePrefix
+         |SELECT id, property_id FROM core WHERE snaktype = 'somevalue'""".stripMargin)((s, _) => tables(s).unknown)
   )
 
   // ---------------------------------------------------------------- oracles
@@ -914,377 +1212,6 @@ object EtlGates {
        |    AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1950-06-01 00:00:00')
        |)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "w34_etl_qualifiers" -> qualifiersOracle,
-
-    // W38: identical oracle as w34 — the sink round-trip is invisible
-    "w38_qualified_sink" -> qualifiersOracle,
-
-    // W40: the qualifier derivation over the FULL v2 dump — the oracle
-    // never sees the changeset; only a correct LWW apply matches it
-    "w40_incremental_qualifiers" -> qualifiersOracleFor(dumpV2Path),
-
-    // W43: the identical w34 oracle — the JDBC round-trip is invisible
-    "w43_jdbc_qualified" -> qualifiersOracle,
-
-    "w35_valid_at" ->
-      s"""$temporalPrefixAlive
-         |SELECT id, property_id, claim_id, entity_id FROM alive""".stripMargin,
-
-    // W46: the BestRank law re-derived — rank-kept statements, the
-    // per-group any-preferred flag over ALL of them (every value family,
-    // novalue/somevalue included), then the entity-family routing of the
-    // survivors. The flag-before-routing order is the point: a preferred
-    // quantity in the group must suppress its normal entity statements.
-    "w46_truthy" ->
-      s"""$corePrefix$truthyCtes
-         |SELECT id, property_id, claim_id,
-         |  ${encodeIdSql("v->>'$.id'")} AS entity_id
-         |FROM tcore
-         |WHERE snaktype = 'value' AND value_type = 'wikibase-entityid'
-         |  AND ${encodeIdSql("v->>'$.id'")} IS NOT NULL""".stripMargin,
-
-    // W47: the w9/w10 typed-table bodies routed FROM THE TRUTHY CORE —
-    // same projection laws, claim set cut by BestRank first.
-    "w47_truthy_quantity" ->
-      s"""$corePrefix$truthyCtes
-         |SELECT id, property_id,
-         |  try_cast(regexp_replace(v->>'$$.amount', '^\\+', '') AS DOUBLE) AS amount,
-         |  try_cast(regexp_replace(v->>'$$.lowerBound', '^\\+', '') AS DOUBLE) AS lower_bound,
-         |  try_cast(regexp_replace(v->>'$$.upperBound', '^\\+', '') AS DOUBLE) AS upper_bound,
-         |  CASE WHEN v->>'$$.unit' = '1' THEN NULL
-         |       ELSE CAST(regexp_extract(v->>'$$.unit', '[QqPpLl]([0-9]+)$$', 1) AS BIGINT)
-         |         + CASE WHEN regexp_matches(v->>'$$.unit', '[Pp][0-9]+$$') THEN 1000000000
-         |                WHEN regexp_matches(v->>'$$.unit', '[Ll][0-9]+$$') THEN 2000000000
-         |                ELSE 0 END
-         |  END AS unit_id
-         |FROM tcore WHERE snaktype = 'value' AND value_type = 'quantity'""".stripMargin,
-
-    "w47_truthy_time" ->
-      s"""$corePrefix$truthyCtes
-         |SELECT id, property_id,
-         |  try_strptime(
-         |    regexp_replace(regexp_replace(regexp_replace(v->>'$$.time', '^\\+', ''), '-00-', '-01-'), '-00T', '-01T'),
-         |    '%Y-%m-%dT%H:%M:%SZ') AS time,
-         |  coalesce(try_cast(v->>'$$.precision' AS INTEGER), 0) AS precision
-         |FROM tcore WHERE snaktype = 'value' AND value_type = 'time'""".stripMargin,
-
-    // W48: truthy × validAt — the truthy entity slice LEFT-joined to the
-    // span law, alive at 1950-06-01. Both cuts re-derived independently.
-    "w48_truthy_at" ->
-      s"""$qualPrefix, $spansCte$truthyCtes
-         |SELECT t.id, t.property_id, t.claim_id,
-         |  ${encodeIdSql("t.v->>'$.id'")} AS entity_id
-         |FROM tcore t LEFT JOIN spans p ON t.claim_id = p.claim_id
-         |WHERE t.snaktype = 'value' AND t.value_type = 'wikibase-entityid'
-         |  AND ${encodeIdSql("t.v->>'$.id'")} IS NOT NULL
-         |  AND (p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1950-06-01 00:00:00')
-         |  AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1950-06-01 00:00:00')""".stripMargin,
-
-    // W44: the per-property rollup over the shared span/statement CTEs.
-    "w44_temporal_coverage" ->
-      s"""$temporalBase
-         |SELECT s.property_id,
-         |  CAST(count(*) AS BIGINT) AS n_claims,
-         |  CAST(count(p.claim_id) AS BIGINT) AS n_temporal,
-         |  min(p.valid_from) AS earliest_from,
-         |  max(p.valid_until) AS latest_until
-         |FROM stmts s LEFT JOIN spans p ON s.claim_id = p.claim_id
-         |WHERE s.entity_id IS NOT NULL
-         |GROUP BY s.property_id""".stripMargin,
-
-    // W42: both alive cuts re-derived over the shared span/statement CTEs;
-    // the status-flip filter and gained/lost tagging replayed inline.
-    "w42_temporal_diff" ->
-      s"""$temporalBase
-         |SELECT s.id, s.property_id, s.claim_id, s.entity_id,
-         |  CASE WHEN ((p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1985-01-01 00:00:00')
-         |        AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1985-01-01 00:00:00'))
-         |       THEN 'gained' ELSE 'lost' END AS change
-         |FROM stmts s LEFT JOIN spans p ON s.claim_id = p.claim_id
-         |WHERE s.entity_id IS NOT NULL
-         |  AND ((p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1925-01-01 00:00:00')
-         |       AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1925-01-01 00:00:00'))
-         |   <> ((p.valid_from IS NULL OR p.valid_from <= TIMESTAMP '1985-01-01 00:00:00')
-         |       AND (p.valid_until IS NULL OR p.valid_until > TIMESTAMP '1985-01-01 00:00:00'))""".stripMargin,
-
-    // W37: the temporal answer decorated with both endpoints' labels —
-    // the meta derivation joined twice, LEFT so unlabeled entities keep
-    // the reference's NULL semantics.
-    "w37_temporal_labels" ->
-      s"""$temporalPrefixAlive, metaq AS (
-         |  SELECT id, e->>'$$.labels.en.value' AS label
-         |  FROM encoded WHERE id IS NOT NULL
-         |)
-         |SELECT v.claim_id, v.id, ml.label AS subject_label,
-         |  v.property_id, v.entity_id, mo.label AS object_label
-         |FROM alive v
-         |LEFT JOIN metaq ml ON v.id = ml.id
-         |LEFT JOIN metaq mo ON v.entity_id = mo.id""".stripMargin,
-
-    "w4_etl_meta" ->
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    // W50: the identical w4 derivation over the UNCOMPRESSED file — the
-    // Spark side read gz+bz2 shards; compression must be byte-invisible
-    "w50_compressed_dump" ->
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    // W51: sitelinks re-derived — map keys walked like the claims map.
-    "w51_sitelinks" ->
-      s"""$corePrefixMeta, slk AS (
-         |  SELECT id, e, unnest(json_keys(e, '$$.sitelinks')) AS site
-         |  FROM encoded WHERE id IS NOT NULL
-         |)
-         |SELECT id, site,
-         |  json_extract(e, '$$.sitelinks."' || site || '"')->>'$$.title' AS title
-         |FROM slk
-         |WHERE json_extract(e, '$$.sitelinks."' || site || '"')->>'$$.title' IS NOT NULL""".stripMargin,
-
-    // W52: aliases re-derived — language keys, then each list unnested.
-    "w52_aliases" -> aliasesOracleFor(dumpPath),
-
-    // W54: the identical w52 derivation — the 13-table run + sink
-    // round-trip is invisible.
-    "w54_full_sink" -> aliasesOracleFor(dumpPath),
-
-    // W55: the aliases derivation over the FULL v2 dump — the oracle never
-    // sees the changeset; only a correct 13-table LWW apply matches it.
-    "w55_incremental_full" -> aliasesOracleFor(dumpV2Path),
-
-    // X28: the identical w52 derivation — sharding, micro-batch
-    // boundaries and the snapshot publication protocol are invisible.
-    "x28_stream_full" -> aliasesOracleFor(dumpPath),
-
-    // X29: the w55 derivation (aliases over the FULL v2 dump) — the
-    // streaming LWW apply, its batch boundaries and the revision guard
-    // are all invisible; only a correct 13-table streamed apply matches.
-    "x29_stream_incremental_full" -> aliasesOracleFor(dumpV2Path),
-
-    // W56: brute-force levenshtein over labels ∪ aliases with the same
-    // data-derived term (min name, last char dropped) — the variant
-    // index, the persisted store and its footer pruning are all invisible.
-    "w56_fuzzy_any_name" -> anyNameFuzzyOracleFor(dumpPath),
-
-    // W57: the identical brute force over the FULL v2 dump — the Spark
-    // side builds on v1 and maintains by append; only a correct changeset
-    // apply plus a correct delta append (stale variants self-neutralized)
-    // can match the v2 name universe.
-    "w57_fuzzy_index_refresh" -> anyNameFuzzyOracleFor(dumpV2Path),
-
-    // X30: w57's oracle again — the streamed maintenance loop, its batch
-    // boundaries, tags and the revision guard are all invisible.
-    "x30_stream_any_name_index" -> anyNameFuzzyOracleFor(dumpV2Path),
-
-    // W59: the reference table re-derived from the raw dump — record
-    // index, snak-map walk, 7-way routing, deprecated drop, unencodable
-    // entity-ref drop, all replayed.
-    "w59_etl_references" -> referencesOracleFor(dumpPath),
-
-    // W60: the identical derivation over the FULL v2 dump — the oracle
-    // never sees the changeset; only a correct 13-table LWW apply matches
-    // at the citation grain.
-    "w60_incremental_references" -> referencesOracleFor(dumpV2Path),
-
-    // W62: the sourced conjunction re-derived end to end — sourced claim
-    // ids from the references unnest, the entity-valued spine
-    // (project-first, the DuckDB JSON-optimizer lesson), the same
-    // least-entity/least-pairs conjunct derivation, and the EXISTS chain.
-    "w62_sourced_conjunctive" ->
-      s"""${refPrefixFor(dumpPath)}, spineraw AS (
-         |  SELECT id, property_id,
-         |    claim->>'$$.id' AS claim_id,
-         |    claim->>'$$.mainsnak.snaktype' AS snaktype,
-         |    claim->>'$$.mainsnak.datavalue.type' AS vtype,
-         |    claim->>'$$.mainsnak.datavalue.value.id' AS vid,
-         |    coalesce(claim->>'$$.rank','normal') AS rank
-         |  FROM claims
-         |), spine AS (
-         |  SELECT id, property_id, claim_id, ${encodeIdSql("vid")} AS entity_id
-         |  FROM spineraw
-         |  WHERE rank <> 'deprecated' AND snaktype = 'value'
-         |    AND vtype = 'wikibase-entityid'
-         |), srcspine AS (
-         |  SELECT * FROM spine
-         |  WHERE entity_id IS NOT NULL
-         |    AND claim_id IN (SELECT DISTINCT claim_id FROM rrefs)
-         |), probe AS (
-         |  SELECT min(id) AS pr FROM (
-         |    SELECT id FROM (SELECT DISTINCT id, property_id, entity_id FROM srcspine)
-         |    GROUP BY id HAVING count(*) >= 2)
-         |), cpair AS (
-         |  SELECT p, q, row_number() OVER (ORDER BY p, q) AS rn FROM (
-         |    SELECT DISTINCT property_id AS p, entity_id AS q FROM srcspine
-         |    WHERE id = (SELECT pr FROM probe))
-         |  ORDER BY p, q LIMIT 2
-         |), metaq AS (
-         |  SELECT id, e->>'$$.labels.en.value' AS label,
-         |    e->>'$$.descriptions.en.value' AS description
-         |  FROM encoded WHERE id IS NOT NULL
-         |)
-         |SELECT m.id, m.label, m.description FROM metaq m
-         |WHERE EXISTS (SELECT 1 FROM srcspine s JOIN cpair c ON c.rn = 1
-         |  AND s.property_id = c.p AND s.entity_id = c.q WHERE s.id = m.id)
-         |  AND EXISTS (SELECT 1 FROM srcspine s JOIN cpair c ON c.rn = 2
-         |  AND s.property_id = c.p AND s.entity_id = c.q WHERE s.id = m.id)
-         |ORDER BY m.id""".stripMargin,
-
-    // W61: per-property rollup over the surviving statements.
-    "w61_reference_coverage" ->
-      s"""$corePrefix, rstat AS (
-         |  SELECT property_id,
-         |    coalesce(len(from_json(json_extract(claim, '$$.references'), '["JSON"]')), 0) AS nrefs
-         |  FROM claims WHERE coalesce(claim->>'$$.rank','normal') <> 'deprecated'
-         |)
-         |SELECT property_id,
-         |  CAST(count(*) AS BIGINT) AS n_statements,
-         |  CAST(sum(CASE WHEN nrefs > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_referenced,
-         |  CAST(sum(nrefs) AS BIGINT) AS n_ref_records
-         |FROM rstat GROUP BY 1""".stripMargin,
-
-    // W58: distinct (entity, property) self-joined under p1 < p2 — the
-    // blocking-free brute force the Spark set-explode must equal.
-    "w58_property_cooccurrence" ->
-      s"""$corePrefix, props AS (
-         |  SELECT DISTINCT id, property_id FROM core
-         |)
-         |SELECT a.property_id AS p1, b.property_id AS p2,
-         |  CAST(count(*) AS BIGINT) AS n_entities
-         |FROM props a JOIN props b
-         |  ON a.id = b.id AND a.property_id < b.property_id
-         |GROUP BY 1, 2""".stripMargin,
-
-    // W53: the data-derived probe (min alias) against labels ∪ aliases.
-    "w53_any_name_lookup" ->
-      s"""$corePrefixMeta, ak AS (
-         |  SELECT id, e, unnest(json_keys(e, '$$.aliases')) AS language
-         |  FROM encoded WHERE id IS NOT NULL
-         |), al AS (
-         |  SELECT id, language,
-         |    unnest(from_json(json_extract(e, '$$.aliases."' || language || '"'), '["JSON"]')) AS a
-         |  FROM ak
-         |), names AS (
-         |  SELECT id, a->>'$$.value' AS alias FROM al WHERE a->>'$$.value' IS NOT NULL
-         |), term AS (SELECT min(alias) AS t FROM names
-         |), lbl AS (
-         |  -- project BEFORE filtering: a JSON ->> extract compared inside a
-         |  -- multi-predicate WHERE trips the DuckDB JSON-optimizer cast bug
-         |  SELECT id, e->>'$$.labels.en.value' AS label
-         |  FROM encoded WHERE id IS NOT NULL
-         |)
-         |SELECT DISTINCT id FROM (
-         |  SELECT id FROM lbl WHERE label = (SELECT t FROM term)
-         |  UNION ALL
-         |  SELECT id FROM names WHERE alias = (SELECT t FROM term)
-         |)""".stripMargin,
-
-    "w13_jdbc_roundtrip" ->
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    "x3_stream_etl" ->
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    // X13 publishes the same derivation through tagged snapshot commits
-    "x13_stream_snapshot" ->
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    // W22: the oracle rebuilds from the v2 FULL dump — the Spark side never
-    // reads that file, it derives the same state from (v1, changeset)
-    "w22_incremental_etl" -> stringOracleFor(dumpV2Path),
-    "w22_incremental_meta" ->
-      s"""${corePrefixMetaFor(dumpV2Path)}
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    // X12 converges to the same state as W22 — same v2 full-rebuild oracle,
-    // reached through sharded micro-batches + snapshot commits instead
-    "x12_stream_incremental" ->
-      s"""${corePrefixMetaFor(dumpV2Path)}
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin,
-
-    // identical derivation to w6 — the gate's value is that the Spark side
-    // passed through the partitioned sink and a disk round-trip first
-    "w12_parquet_sink" -> stringOracle,
-
-    // same again through the CSV, ORC and JSONL sinks (w17/w18/w19): the
-    // format cannot corrupt, drop, or re-route a row without failing the hash
-    "w17_csv_roundtrip" -> stringOracle,
-    "w18_orc_roundtrip" -> entityOracle,
-    "w19_jsonl_roundtrip" -> stringOracle,
-
-    "w6_etl_string" -> stringOracle,
-
-    "w7_etl_entity" -> entityOracle,
-
-    "w8_etl_coordinates" ->
-      s"""$corePrefix
-         |SELECT id, property_id,
-         |  try_cast(v->>'$$.latitude' AS DOUBLE) AS latitude,
-         |  try_cast(v->>'$$.longitude' AS DOUBLE) AS longitude,
-         |  coalesce(try_cast(v->>'$$.precision' AS DOUBLE), 0.0) AS precision,
-         |  coalesce(CAST(regexp_extract(v->>'$$.globe', '[Qq]([0-9]+)$$', 1) AS BIGINT), 0) AS globe_id
-         |FROM core WHERE snaktype = 'value' AND value_type = 'globecoordinate'""".stripMargin,
-
-    "w9_etl_quantity" ->
-      s"""$corePrefix
-         |SELECT id, property_id,
-         |  try_cast(regexp_replace(v->>'$$.amount', '^\\+', '') AS DOUBLE) AS amount,
-         |  try_cast(regexp_replace(v->>'$$.lowerBound', '^\\+', '') AS DOUBLE) AS lower_bound,
-         |  try_cast(regexp_replace(v->>'$$.upperBound', '^\\+', '') AS DOUBLE) AS upper_bound,
-         |  CASE WHEN v->>'$$.unit' = '1' THEN NULL
-         |       ELSE CAST(regexp_extract(v->>'$$.unit', '[QqPpLl]([0-9]+)$$', 1) AS BIGINT)
-         |         + CASE WHEN regexp_matches(v->>'$$.unit', '[Pp][0-9]+$$') THEN 1000000000
-         |                WHEN regexp_matches(v->>'$$.unit', '[Ll][0-9]+$$') THEN 2000000000
-         |                ELSE 0 END
-         |  END AS unit_id
-         |FROM core WHERE snaktype = 'value' AND value_type = 'quantity'""".stripMargin,
-
-    "w10_etl_time" ->
-      s"""$corePrefix
-         |SELECT id, property_id,
-         |  try_strptime(
-         |    regexp_replace(regexp_replace(regexp_replace(v->>'$$.time', '^\\+', ''), '-00-', '-01-'), '-00T', '-01T'),
-         |    '%Y-%m-%dT%H:%M:%SZ') AS time,
-         |  coalesce(try_cast(v->>'$$.precision' AS INTEGER), 0) AS precision
-         |FROM core WHERE snaktype = 'value' AND value_type = 'time'""".stripMargin,
-
-    "w11_etl_none" ->
-      s"""$corePrefix
-         |SELECT id, property_id FROM core
-         |WHERE CASE WHEN snaktype = 'novalue' THEN true
-         |           WHEN snaktype = 'value' AND value_type = 'monolingualtext'
-         |             THEN v->>'$$.text' IS NULL
-         |           ELSE false END""".stripMargin,
-
-    "w11_etl_unknown" ->
-      s"""$corePrefix
-         |SELECT id, property_id FROM core WHERE snaktype = 'somevalue'""".stripMargin
-  )
 
   /** The W52 aliases derivation over any dump file (w54 replays it after
     * the 13-table sink; w55's oracle rebuilds it from the v2 dump). */

@@ -123,4 +123,9 @@ object ColumnBridge {
         }
       case _ => ()
     }
+
+  /** Block until the listener bus has delivered every event posted so far
+    * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`). */
+  def awaitListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

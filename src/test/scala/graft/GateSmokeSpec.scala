@@ -1,30 +1,46 @@
 package graft
 
-/** Every gate query in every gate map must RUN inside `sbt test`, not only
-  * under the driver's Verify: a gate that compiles but fails at runtime
-  * (bad column, unreadable scratch path, broken stream wiring) should be
-  * caught here, before a driver round burns on it. Values stay the DuckDB
-  * oracle's job; this asserts execution. (RelationalSpec carries the same
-  * smoke test for the relational map plus value spot-checks.)
+/** Every gate must RUN inside `sbt test`, not only under the driver's
+  * Verify: a gate that compiles but fails at runtime (bad column,
+  * unreadable scratch path, broken stream wiring) should be caught here,
+  * before a driver round burns on it. Values stay the DuckDB oracle's job;
+  * this asserts execution, through the same runner as Verify and Bench.
   */
 class GateSmokeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  for ((group, qs) <- Seq(
-      "llm" -> graft.operators.LlmOps.queries,
-      "streaming" -> graft.streaming.StreamingGates.queries,
-      "etl" -> graft.wikidata.EtlGates.queries)) {
-    test(s"every $group gate query runs at sf0.001 (${qs.size} gates)") {
-      for ((name, fn) <- qs.toSeq.sortBy(_._1)) {
-        withClue(s"$name: ") {
-          fn(spark, dir).limit(1).count() should be >= 0L
+  for ((group, gates) <- Seq(
+      "relational" -> graft.operators.Relational.gates,
+      "llm" -> graft.operators.LlmOps.gates,
+      "streaming" -> graft.streaming.StreamingGates.gates,
+      "etl" -> graft.wikidata.EtlGates.gates)) {
+    test(s"every $group gate query runs at sf0.001 (${gates.size} gates)") {
+      for (g <- gates.sortBy(_.name)) {
+        withClue(s"${g.name}: ") {
+          Gates.run(spark, g, dir)(_.limit(1).count()) should be >= 0L
         }
-        // gates own persists via Caches/plantedCache; release like Verify
-        graft.operators.LlmOps.clearPlanted()
-        graft.operators.Caches.releaseAll()
-        spark.catalog.clearCache()
       }
     }
+  }
+
+  test("the registry holds 249 distinct gates, each with an oracle") {
+    val gates = SparkEntry.gates
+    gates.map(_.name).distinct should have size 249
+    gates.filter(_.oracle.trim.isEmpty).map(_.name) shouldBe empty
+    SparkEntry.queries.keySet shouldBe gates.map(_.name).toSet
+    SparkEntry.oracleSql.keySet shouldBe gates.map(_.name).toSet
+  }
+
+  test("a repeated gate name or an unknown selection fails, naming it") {
+    val g = SparkEntry.gates.head
+    val dup = intercept[IllegalArgumentException] {
+      Gates.distinct(SparkEntry.gates :+ Gate(g.name, "SELECT 1")((s, _) => s.range(1).toDF()))
+    }
+    dup.getMessage should include(g.name)
+    val unknown = intercept[IllegalArgumentException](Gates.select(Seq("r3_join_agg", "r3_joinagg")))
+    unknown.getMessage should include("r3_joinagg")
+    Gates.select(Seq("r2_agg", "r1_pushdown")).map(_.name) shouldBe Seq("r1_pushdown", "r2_agg")
+    Gates.select(Nil) should have size 249
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Gates, SparkEntry, SparkSpec}
 
 /** Relational gate queries run against sf0.001 inside sbt test: shape and
   * spot-value assertions so the suite catches regressions without the
@@ -11,15 +11,12 @@ class RelationalSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  test("every relational gate query runs and returns rows at sf0.001") {
-    for ((name, fn) <- Relational.queries) {
-      val df = fn(spark, dir)
-      withClue(s"$name: ") { df.limit(1).count() should be >= 0L }
-    }
-  }
+  /** The rows of one gate, through the gate runner. */
+  private def gateRows(name: String) =
+    Gates.run(spark, Gates.select(Seq(name)).head, dir)(_.collect())
 
   test("r2_agg: group count and sums (decimal math, double projection)") {
-    val rows = Relational.queries("r2_agg")(spark, dir).collect()
+    val rows = gateRows("r2_agg")
     rows.length shouldBe 6 // 3 returnflags × 2 linestatus minus absent combos
     rows.foreach { r =>
       r.getDouble(2) should be >= 0.0
@@ -28,21 +25,21 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("r12_topk is ordered and bounded") {
-    val rows = Relational.queries("r12_topk")(spark, dir).collect()
+    val rows = gateRows("r12_topk")
     rows.length shouldBe 15
     val prices = rows.map(_.getDouble(2))
     prices.toSeq shouldBe prices.sortBy(-_).toSeq
   }
 
   test("w1/w2 id codec round-trips through the gate queries") {
-    val enc = Relational.queries("w1_id_encode")(spark, dir).collect()
+    val enc = gateRows("w1_id_encode")
     enc.length shouldBe 25
     enc.foreach { r =>
       r.getLong(1) shouldBe r.getLong(0)                 // q
       r.getLong(2) shouldBe r.getLong(0) + 1000000000L   // p
       r.getLong(3) shouldBe r.getLong(0) + 2000000000L   // l
     }
-    val dec = Relational.queries("w2_id_decode")(spark, dir).collect()
+    val dec = gateRows("w2_id_decode")
     dec.length shouldBe 125
     dec.filter(_.getString(1) == "S").foreach(_.getLong(3) shouldBe 3L)
   }
@@ -58,7 +55,7 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("r10_setops: supplier nations are a subset of customer nations") {
-    val rows = Relational.queries("r10_setops")(spark, dir).collect()
+    val rows = gateRows("r10_setops")
     val byTag = rows.groupBy(_.getString(1)).view.mapValues(_.map(_.getInt(0)).toSet).toMap
     byTag.keySet should contain("both")
     (byTag.getOrElse("both", Set()) intersect byTag.getOrElse("cust_only", Set())) shouldBe empty
@@ -74,7 +71,8 @@ class RelationalSpec extends SparkSpec {
       conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force a shuffle join
-      val df = Relational.queries("r38_bloom_join")(spark, dir)
+      // on the spec session itself: the forced thresholds are its conf
+      val df = SparkEntry.queries("r38_bloom_join")(spark, dir)
       val plan = df.queryExecution.executedPlan.toString.toLowerCase
       withClue(plan.take(800)) { plan should include("bloom") }
       // and the optimization is semantics-preserving
@@ -86,12 +84,12 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("r33_dpp: the fact scan carries a dynamicpruning partition filter (R33)") {
-    val df = Relational.queries("r33_dpp")(spark, dir)
+    val (plan, rows) = Gates.run(spark, Gates.select(Seq("r33_dpp")).head, dir) { df =>
+      (df.queryExecution.executedPlan.toString, df.collect())
+    }
     // the runtime-injected subquery shows up in the scan's PartitionFilters
-    val plan = df.queryExecution.executedPlan.toString
     plan.toLowerCase should include("dynamicpruning")
     // and the result is the single ASIA-mapped year
-    val rows = df.collect()
     rows.length shouldBe 1
     rows.head.getInt(0) shouldBe 1996
     rows.head.getString(1) shouldBe "ASIA"
