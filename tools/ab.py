@@ -71,9 +71,9 @@ def run(root, workload, seed, seconds):
     return None
 
 
-def per_call(detail):
+def per_call(run_):
     """{call: (p50 ms, samples)} of one run."""
-    d = detail["detail"]
+    d = run_["detail"]["detail"]
     p50 = d.get("per_call_p50_ms") or d.get("per_step_p50_ms") or {}
     n = {}
     for kind, _ in d.get("step_ms", []):
