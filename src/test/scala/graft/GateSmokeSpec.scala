@@ -43,4 +43,26 @@ class GateSmokeSpec extends SparkSpec {
     Gates.select(Seq("r2_agg", "r1_pushdown")).map(_.name) shouldBe Seq("r1_pushdown", "r2_agg")
     Gates.select(Nil) should have size 249
   }
+
+  private def optimized(name: String): String =
+    Gates.run(spark, Gates.select(Seq(name)).head, dir)(
+      _.queryExecution.optimizedPlan.toString.replaceAll("#\\d+L?", "#N"))
+
+  // r63 attaches `StatsJoinRule` and sets `graft_c63` catalog confs, r45
+  // attaches `MvRewriteRule` and fills the JVM-wide `MvRegistry`: through
+  // the runner none of it reaches the calling session, and a later gate
+  // plans as it does alone
+  test("r63 then r45 leave no rule, conf or registry entry behind") {
+    val alone = optimized("r3_join_agg")
+    for (name <- Seq("r63_stats_sql_join", "r45_mv_rewrite"))
+      Gates.run(spark, Gates.select(Seq(name)).head, dir)(_.count())
+    withClue("extraOptimizations: ") {
+      spark.experimental.extraOptimizations.map(_.getClass.getSimpleName) shouldBe empty
+    }
+    withClue("graft_c63 catalog conf: ") {
+      spark.conf.getOption("spark.sql.catalog.graft_c63") shouldBe None
+    }
+    withClue("MvRegistry: ") { graft.plans.MvRegistry.isEmpty shouldBe true }
+    optimized("r3_join_agg") shouldBe alone
+  }
 }
