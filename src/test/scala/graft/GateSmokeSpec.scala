@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Every gate must RUN inside `sbt test`, not only under the driver's
   * Verify: a gate that compiles but fails at runtime (bad column,
   * unreadable scratch path, broken stream wiring) should be caught here,
@@ -44,25 +46,29 @@ class GateSmokeSpec extends SparkSpec {
     Gates.select(Nil) should have size 249
   }
 
-  private def optimized(name: String): String =
-    Gates.run(spark, Gates.select(Seq(name)).head, dir)(
+  private def optimized(caller: SparkSession, name: String): String =
+    Gates.run(caller, Gates.select(Seq(name)).head, dir)(
       _.queryExecution.optimizedPlan.toString.replaceAll("#\\d+L?", "#N"))
 
   // r63 attaches `StatsJoinRule` and sets `graft_c63` catalog confs, r45
   // attaches `MvRewriteRule` and fills the JVM-wide `MvRegistry`: through
   // the runner none of it reaches the calling session, and a later gate
-  // plans as it does alone
+  // plans as it does alone. The caller is a fresh session, not the shared
+  // one, which other specs (StatsJoinRuleSpec, MvRewriteSpec) attach these
+  // same rules to directly.
   test("r63 then r45 leave no rule, conf or registry entry behind") {
-    val alone = optimized("r3_join_agg")
+    val caller = spark.newSession()
+    caller.experimental.extraOptimizations shouldBe empty
+    val alone = optimized(caller, "r3_join_agg")
     for (name <- Seq("r63_stats_sql_join", "r45_mv_rewrite"))
-      Gates.run(spark, Gates.select(Seq(name)).head, dir)(_.count())
+      Gates.run(caller, Gates.select(Seq(name)).head, dir)(_.count())
     withClue("extraOptimizations: ") {
-      spark.experimental.extraOptimizations.map(_.getClass.getSimpleName) shouldBe empty
+      caller.experimental.extraOptimizations.map(_.getClass.getSimpleName) shouldBe empty
     }
     withClue("graft_c63 catalog conf: ") {
-      spark.conf.getOption("spark.sql.catalog.graft_c63") shouldBe None
+      caller.conf.getOption("spark.sql.catalog.graft_c63") shouldBe None
     }
     withClue("MvRegistry: ") { graft.plans.MvRegistry.isEmpty shouldBe true }
-    optimized("r3_join_agg") shouldBe alone
+    optimized(caller, "r3_join_agg") shouldBe alone
   }
 }
