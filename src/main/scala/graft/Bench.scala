@@ -31,15 +31,14 @@ object Bench {
     // median is visible instead of needing forensics.
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS")
       .flatMap(_.toIntOption).getOrElse(3).max(1)
-    // deterministic name order: registry order would otherwise decide
-    // which query pays shared-cache warmup (d2's persisted signatures feed
-    // d4), and totals stay comparable with earlier runs
+    // name order, as earlier Bench runs used: JIT and codegen warm up in
+    // the same gate order, so per-gate medians stay comparable with them
     val results = Gates.select(args.toSeq).sortBy(_.name).map { g =>
-      // each rep runs isolated and releases its caches outside the timed
-      // window: reps stay independent, and leaked storage blocks must not
-      // squeeze later queries' execution memory (the round-2 p1/d3
-      // regressions were exactly this accumulation across 51 queries)
-      val runs = (1 to reps).map(_ => Gates.measure(spark, g, sfDir)(_.count()))
+      // the reps release their caches outside the timed windows: reps stay
+      // independent, and leaked storage blocks must not squeeze later
+      // queries' execution memory (the round-2 p1/d3 regressions were
+      // exactly this accumulation across 51 queries)
+      val runs = Gates.measure(spark, g, sfDir, reps)(_.count())
       // a failed query must NOT silently bench as a fast no-op — record it.
       // Median over SUCCESSFUL reps only: a fast failure (e.g. an analysis
       // error thrown before any job runs) would otherwise drag the median

@@ -51,11 +51,15 @@ object Gates {
     try body(session)
     finally {
       prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
-      graft.operators.LlmOps.clearPlanted()
-      graft.operators.Caches.releaseAll()
-      spark.catalog.clearCache()
-      graft.plans.MvRegistry.clear()
+      release(spark)
     }
+  }
+
+  private def release(spark: SparkSession): Unit = {
+    graft.operators.LlmOps.clearPlanted()
+    graft.operators.Caches.releaseAll()
+    spark.catalog.clearCache()
+    graft.plans.MvRegistry.clear()
   }
 
   final case class Job(id: Int, startMs: Long, endMs: Long, desc: String, stages: Seq[Int]) {
@@ -83,12 +87,28 @@ object Gates {
       "task_cpu_s" -> taskCpuS, "driver_gap_s" -> driverGapS)
   }
 
-  /** [[run]] under a SparkListener: the wall of `action` and the jobs and
-    * stages it started. Failures are returned, not thrown, so a caller can
-    * record them. The listener bus is drained before and after, outside the
-    * timed window. */
-  def measure[T](spark: SparkSession, gate: Gate, dir: String)(action: DataFrame => T): Run[T] = {
-    val sc = spark.sparkContext
+  /** [[run]] `reps` times under a SparkListener: per rep, the wall of
+    * `action` and the jobs and stages it started. Failures are returned, not
+    * thrown, so a caller can record them. The reps share one child session,
+    * with the cleanup between them: each session's tasks load generated code
+    * through their own class loader, and Spark's codegen cache is keyed by
+    * class loader, so a session per rep would recompile every rep (36 of d4's
+    * 54 classes at sf0.01, doubling its task CPU). Session setup, cleanup and
+    * the listener-bus drains stay outside the timed windows. */
+  def measure[T](spark: SparkSession, gate: Gate, dir: String, reps: Int = 1)(
+      action: DataFrame => T): Seq[Run[T]] =
+    isolated(spark) { s =>
+      // planning a one-row query builds the child's catalog, analyzer,
+      // optimizer and planner, which the first rep would otherwise pay
+      s.range(1).queryExecution.executedPlan
+      (1 to reps).map { i =>
+        if (i > 1) release(spark)
+        timed(s, gate, dir)(action)
+      }
+    }
+
+  private def timed[T](s: SparkSession, gate: Gate, dir: String)(action: DataFrame => T): Run[T] = {
+    val sc = s.sparkContext
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, Stage]
     val listener = new SparkListener {
@@ -111,13 +131,9 @@ object Gates {
     }
     org.apache.spark.sql.graft.ColumnBridge.awaitListeners(sc)
     sc.addSparkListener(listener)
-    // the session and the cleanup stay outside the timed window
-    val (result, wall) = isolated(spark) { s =>
-      s.conf.get("spark.sql.shuffle.partitions") // builds the child's session state
-      val t0 = System.nanoTime()
-      val r = try Right(action(gate.run(s, dir))) catch { case e: Throwable => Left(e) }
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val t0 = System.nanoTime()
+    val result = try Right(action(gate.run(s, dir))) catch { case e: Throwable => Left(e) }
+    val wall = (System.nanoTime() - t0) / 1e9
     org.apache.spark.sql.graft.ColumnBridge.awaitListeners(sc)
     sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._

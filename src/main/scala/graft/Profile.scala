@@ -34,7 +34,7 @@ object Profile {
         }
       case "jobs" =>
         require(rest.nonEmpty, "usage: Profile jobs <sfDir> gate [gate ...]")
-        Gates.select(rest).foreach(g => jobs(g.name, Gates.measure(spark, g, sfDir)(_.count())))
+        Gates.select(rest).foreach(g => jobs(g.name, Gates.measure(spark, g, sfDir)(_.count()).head))
       case "recall" =>
         (sfDir +: rest).foreach(dir => recall(Tables(spark, dir).embeddings, dir))
       case other => sys.error(s"unknown mode $other: plan|jobs|recall")

@@ -2,14 +2,15 @@
 """Paired A/B of two revisions on one graftbench workload.
 
     python3 tools/ab.py --base REV --change REV --workload W --pairs N \\
-        [--work DIR] [--seconds S] [--seed0 K]
+        [--work DIR] [--seed0 K]
 
 Exports each revision with `git archive` into DIR/<sha>/ (a plain tree, so
 the repository's own checkout and worktree list stay untouched), builds it
-once with a discarded run, then runs `graftbench/run.py --trace 0` N times per
-side, seeds K..K+N-1, one seed per pair, with the first side alternating from
-pair to pair (base first in even pairs). It only reads what the runs print:
-nothing under graftbench/ and nothing in BENCHMARK.json changes.
+once with a discarded run, then runs `graftbench/run.py --trace 0` for
+BENCHMARK.json's run_seconds N times per side, seeds K..K+N-1, one seed per
+pair, with the first side alternating from pair to pair (base first in even
+pairs). It only reads what the runs print: nothing under graftbench/ and
+nothing in BENCHMARK.json changes.
 
 Prints, per end-to-end metric of BENCHMARK.json: each side's median
 [q1, q3], the median of the per-pair change/base ratios [q1, q3], how many
@@ -23,6 +24,7 @@ Every run's two result lines are kept in DIR/ab-<workload>.json.
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -45,11 +47,15 @@ def export(repo, rev, work):
                          check=True, capture_output=True, text=True).stdout.strip()
     root = os.path.join(work, sha[:12])
     if not os.path.isdir(root):
-        os.makedirs(root)
+        # extract beside root and rename only when complete, so an
+        # interrupted export is never taken for a finished tree
+        part = tempfile.mkdtemp(prefix=sha[:12] + ".", dir=work)
         archive = subprocess.Popen(["git", "archive", sha], cwd=repo, stdout=subprocess.PIPE)
-        subprocess.run(["tar", "-x", "-C", root], stdin=archive.stdout, check=True)
-        if archive.wait() != 0:
-            sys.exit(f"ab: git archive {rev} failed")
+        tar = subprocess.run(["tar", "-x", "-C", part], stdin=archive.stdout)
+        if archive.wait() != 0 or tar.returncode != 0:
+            shutil.rmtree(part)
+            sys.exit(f"ab: exporting {rev} failed")
+        os.rename(part, root)
     return sha, root
 
 
@@ -134,8 +140,6 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--work", default=os.path.join(tempfile.gettempdir(), "graft-ab"))
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="per-run seconds (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--seed0", type=int, default=1)
     a = ap.parse_args()
 
@@ -147,7 +151,7 @@ def main():
         spec = json.load(f)
     if a.workload not in [w["name"] for w in spec["workloads"]]:
         sys.exit(f"ab: unknown workload {a.workload}")
-    seconds = a.seconds if a.seconds is not None else spec["run_seconds"]
+    seconds = spec["run_seconds"]
     print(f"ab: base {sides[0][0][:12]} change {sides[1][0][:12]} workload {a.workload} "
           f"pairs {a.pairs} seconds {seconds}", flush=True)
     for _, root in sides:  # build each side once, outside the pairs
