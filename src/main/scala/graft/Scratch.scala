@@ -51,21 +51,37 @@ object Scratch {
     dir.toString
   }
 
-  /** Write `df` as exactly ONE parquet file at `dest` — the shard shape a
-    * one-file-per-trigger streaming test feeds. Stages through a scratch
-    * dir (repartition(1)), then moves the single part file. */
-  def writeSingleParquet(df: org.apache.spark.sql.DataFrame, dest: Path): Unit = {
-    val tmp = fresh(dest.getFileName.toString + "_stage")
-    df.repartition(1).write.mode("overwrite").parquet(tmp)
-    val s = Files.list(Paths.get(tmp))
-    val part = try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.find { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".parquet")
-      }.getOrElse(sys.error(s"no part file written under $tmp"))
-    } finally s.close()
-    Files.move(part, dest): Unit
+  /** A fresh watched directory `name` holding one file per shard, named
+    * `shard-00000.parquet`, `shard-00001.parquet`, … in landing order: read
+    * through [[graft.streaming.BatchTags.start]], shard i is micro-batch i. Each frame is written through `coalesce(1)` to a staging
+    * dir, and its one part file is moved in. Returns the directory. */
+  def shards(name: String, frames: Seq[org.apache.spark.sql.DataFrame]): String = {
+    val dir = fresh(name)
+    frames.zipWithIndex.foreach { case (df, i) =>
+      val stage = fresh(s"${name}_stage")
+      df.coalesce(1).write.mode("overwrite").parquet(stage)
+      val s = Files.list(Paths.get(stage))
+      val part = try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.find { p =>
+          val n = p.getFileName.toString
+          n.startsWith("part-") && n.endsWith(".parquet")
+        }.getOrElse(sys.error(s"no part file written under $stage"))
+      } finally s.close()
+      Files.move(part, Paths.get(dir, f"shard-$i%05d.parquet"))
+    }
+    dir
+  }
+
+  /** [[shards]] for text: `lines` cut into `n` contiguous text shards
+    * (`shard-00000.jsonl`, …) in a fresh directory `name`. */
+  def shards(name: String, lines: Seq[String], n: Int): String = {
+    val dir = fresh(name)
+    lines.grouped(math.max(1, (lines.size + n - 1) / n)).zipWithIndex.foreach {
+      case (chunk, i) => Files.write(Paths.get(dir, f"shard-$i%05d.jsonl"),
+        chunk.mkString("\n").getBytes("UTF-8"))
+    }
+    dir
   }
 
   private def deleteRecursively(p: Path): Unit = if (Files.exists(p)) {

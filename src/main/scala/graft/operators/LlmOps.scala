@@ -614,8 +614,7 @@ object LlmOps {
       // its copy (vec_id + 1e6) at cosine 1 — identical vectors share every
       // hyperplane bucket (s2) and the nearest-centroid cell (s3), and the
       // kernel's cosine(v,v) is 1 to within 1 ulp, far inside the 6dp round.
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      copyTop1OracleSql) { (s, dir) =>
       val vecs = plantedVecsExact(s, dir)
       // knownN from the base parquet footers — no extra pass over the
       // repartitioned corpus just to size the buckets
@@ -644,8 +643,7 @@ object LlmOps {
       // s2_recall: the recall bound is asserted in-plan (the r9_approx
       // construction) — an LSH run recovering < 90% of the exact top-10 flips
       // the boolean and breaks the hash.
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      recallOracleSql) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count() // footer-only count of the base parquet
@@ -667,9 +665,7 @@ object LlmOps {
     // the planted corpus is searched. A query and its exact copy get the
     // identical nearest-centroid assignment, so the copy always sits in the
     // rank-1 probed cell and wins top-1 at cosine 1.
-    Gate("s3_ivf_ann",
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+    Gate("s3_ivf_ann", copyTop1OracleSql) { (s, dir) =>
       val base  = Tables(s, dir).embeddings.repartition(parallelism(s))
       val vecs  = plantedVecsExact(s, dir)
       val cents = IvfAnn.trainCentroids(base, "embedding", k = 8, iters = 3,
@@ -687,9 +683,7 @@ object LlmOps {
     // cells — the gate at >= 0.55 sits above uninformed probing with margin
     // under every measurement, and catches assignment/probe regressions.
     // Clustered-corpus recall >= 0.9 stays spec-gated (IvfAnnSpec).
-    Gate("s3_recall",
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+    Gate("s3_recall", recallOracleSql) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -732,9 +726,7 @@ object LlmOps {
     // ~0.48 selectivity): the 1/selectivity nprobe inflation (3 → 7 of 8
     // cells) holds filtered recall at-or-above the unfiltered s3 bar on
     // the same isotropic worst-case corpus.
-    Gate("s8_recall",
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+    Gate("s8_recall", recallOracleSql) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -760,8 +752,7 @@ object LlmOps {
     // re-rank pins it at top-1. shortlist=∞ ≡ bruteForceTopK is spec'd.
     Gate("s7_int8_rerank",
       // s7: planted-copy top-1 — identical codes, exact re-rank at cosine 1
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      copyTop1OracleSql) { (s, dir) =>
       val vecs = plantedVecsExact(s, dir)
       Similarity.int8TopK(vecs.filter(col("vec_id") < 32), vecs, "vec_id",
           "embedding", k = 1, shortlist = 8)
@@ -775,9 +766,7 @@ object LlmOps {
     // shortlist for a top-10 cut loses nothing measurable — measured 1.0
     // at all three SFs; the 0.9 bound leaves margin for corpus refresh
     // while still catching any scoring/shortlist regression.
-    Gate("s7_recall",
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+    Gate("s7_recall", recallOracleSql) { (s, dir) =>
       val vecs = Tables(s, dir).embeddings.repartition(parallelism(s))
       val queries = vecs.filter(col("vec_id") < 32)
       val exact = Similarity.bruteForceTopK(queries, vecs, "vec_id", "embedding", k = 10)
@@ -802,8 +791,7 @@ object LlmOps {
     Gate("s15_binary_rerank",
       // s15: planted-copy top-1 — identical sign words maximize the
       // asymmetric score, exact re-rank at cosine 1
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      copyTop1OracleSql) { (s, dir) =>
       val vecs = plantedVecsExact(s, dir)
       Similarity.binaryTopK(vecs.filter(col("vec_id") < 32), vecs, "vec_id",
           "embedding", k = 1, shortlist = 8)
@@ -820,9 +808,7 @@ object LlmOps {
     // this gate is what catches anyone "simplifying" it away). Bound 0.8
     // leaves corpus-refresh margin while still failing on any scorer or
     // shortlist regression.
-    Gate("s15_recall",
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+    Gate("s15_recall", recallOracleSql) { (s, dir) =>
       val vecs = Tables(s, dir).embeddings.repartition(parallelism(s))
       val queries = vecs.filter(col("vec_id") < 32)
       val exact = Similarity.bruteForceTopK(queries, vecs, "vec_id", "embedding", k = 10)
@@ -847,8 +833,7 @@ object LlmOps {
     Gate("s6_ivfpq_ann",
       // s6: same planted-copy top-1 construction as s2/s3 — copies share cell
       // AND PQ codes, and the exact re-rank makes the final ranking cosine's
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      copyTop1OracleSql) { (s, dir) =>
       val base = Tables(s, dir).embeddings.repartition(parallelism(s))
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
@@ -867,8 +852,7 @@ object LlmOps {
     // centroid order, codeword layout, codes — breaks top-1 at cosine 1.
     Gate("s9_persisted_ann",
       // s9: planted-copy top-1 from the persisted index — same contract as s6
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      copyTop1OracleSql) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("s9_index")
@@ -937,8 +921,7 @@ object LlmOps {
     // in-plan as a hash-gated boolean.
     Gate("s12_store_recall",
       // s12: the store's filtered recall bound, asserted in-plan
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      recallOracleSql) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -971,8 +954,7 @@ object LlmOps {
     // are IvfAnnSpec's.
     Gate("s14_knn_join",
       // s14: every base row recovers its planted copy through the join
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      s14OracleSql) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       IvfAnn.knnJoin(Tables(s, dir).embeddings.repartition(parallelism(s)),
@@ -993,8 +975,7 @@ object LlmOps {
     Gate("s17_quantized_knn_join",
       // S17: the identical planted-copy law — quantization, the shortlist
       // and the re-rank are all invisible to the top-1
-      """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
-        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      s14OracleSql) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       IvfAnn.knnJoinQuantized(Tables(s, dir).embeddings.repartition(parallelism(s)),
@@ -1114,9 +1095,7 @@ object LlmOps {
     // search output; a tombstone leak or an over-delete breaks the hash.
     Gate("s10_ann_deletes",
       // s10: evenness ≡ live-copy-at-top, tombstones never surface
-      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
-        |       false AS deleted_returned
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+      s10OracleSql) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("s10_index")
@@ -1149,14 +1128,10 @@ object LlmOps {
     // StreamingAnnIngestSpec's.
     Gate("x20_stream_ann_deletes",
       // x20: the s10 contract with the deletes arriving through the stream
-      """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
-        |       false AS deleted_returned
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
-      import java.nio.file.Paths
+      s10OracleSql) { (s, dir) =>
       val n = Tables(s, dir).embeddings.count()
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("x20_index")
-      val in = graft.Scratch.fresh("x20_in")
       val ckpt = graft.Scratch.fresh("x20_ckpt")
       val built = IvfPq.build(Tables(s, dir).embeddings.repartition(parallelism(s)),
         "embedding", cells = 8, m = 8, k = 64, knownN = n)
@@ -1164,13 +1139,10 @@ object LlmOps {
         IvfPq.encode(vecs, "vec_id", "embedding", built))
       val dead = vecs.filter(col("vec_id") < CopyOffset && col("vec_id") % 2 === 1)
         .select((col("vec_id") + CopyOffset).as("id"))
-      (0 until 3).foreach { i =>
-        graft.Scratch.writeSingleParquet(dead.filter(col("id") % 3 === i),
-          Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = graft.streaming.StreamingAnnIngest.startDeletes(s, in, dead.schema,
-        "id", root, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      val in = graft.Scratch.shards("x20_in",
+        (0 until 3).map(i => dead.filter(col("id") % 3 === i)))
+      graft.streaming.StreamingAnnIngest.startDeletes(s, in, dead.schema,
+        "id", root, ckpt).awaitTermination()
       graft.streaming.StreamingAnnIngest.searchLive(s, root,
           vecs.filter(col("vec_id") < 32), vecs, "vec_id", "embedding",
           k = 5, nprobe = 3, shortlist = 64)
@@ -1192,24 +1164,19 @@ object LlmOps {
       """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine,
         |  (SELECT CAST(2 * count(*) AS BIGINT) FROM embeddings) AS n_state
         |FROM embeddings WHERE vec_id < 32 ORDER BY vec_id""".stripMargin) { (s, dir) =>
-      import java.nio.file.Paths
       val n = Tables(s, dir).embeddings.count()
       val base = Tables(s, dir).embeddings.repartition(parallelism(s))
       val vecs = plantedVecsExact(s, dir)
       val root = graft.Scratch.fresh("x18_idx")
-      val in = graft.Scratch.fresh("x18_in")
       val ckpt = graft.Scratch.fresh("x18_ckpt")
       val built = IvfPq.build(base, "embedding", cells = 8, m = 8, k = 64, knownN = n)
       AnnIndexStore.save(s, root, built,
         IvfPq.encode(base, "vec_id", "embedding", built))
       val copies = vecs.filter(col("vec_id") >= CopyOffset)
-      (0 until 3).foreach { i =>
-        graft.Scratch.writeSingleParquet(copies.filter(col("vec_id") % 3 === i),
-          Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = graft.streaming.StreamingAnnIngest.start(s, in, copies.schema,
-        "vec_id", "embedding", root, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      val in = graft.Scratch.shards("x18_in",
+        (0 until 3).map(i => copies.filter(col("vec_id") % 3 === i)))
+      graft.streaming.StreamingAnnIngest.start(s, in, copies.schema,
+        "vec_id", "embedding", root, ckpt).awaitTermination()
       val stateN = SnapshotTable.read(s, s"$root/encoded")
         .agg(count(lit(1)).as("n_state"))
       graft.streaming.StreamingAnnIngest.search(s, root,
@@ -1229,9 +1196,7 @@ object LlmOps {
     // shortlist=128 measured recall is 0.628-0.663 across all three SFs, so
     // the gate reuses S3's >= 0.55 bound (above the 0.375 of probing 3
     // random cells of 8, margin >= 0.078 under every measurement).
-    Gate("s6_recall",
-      """SELECT count(*) AS n_queries, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 32""".stripMargin) { (s, dir) =>
+    Gate("s6_recall", recallOracleSql) { (s, dir) =>
       val base = Tables(s, dir).embeddings
       val vecs = base.repartition(parallelism(s))
       val n = base.count()
@@ -2529,27 +2494,7 @@ object LlmOps {
         .orderBy("doc_id")
     },
 
-    Gate("p14_corpus_refresh",
-      // P14: first-arrival-wins over the identical planted union — batch 1
-      // incumbents (b=0) beat everything; within a batch the min id wins
-      """WITH all_docs AS (
-        |  SELECT doc_id, lang, source, n_chars, text,
-        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
-        |),
-        |ranked AS (
-        |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
-        |  FROM all_docs
-        |)
-        |SELECT doc_id, lang, source, n_chars, content_hash
-        |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    Gate("p14_corpus_refresh", p14OracleSql) { (s, dir) =>
       // P14: the incremental crawl-ingest loop — bootstrap the corpus from
       // batch 1 (doc_id % 3 ≠ 2), then land a second crawl that mixes the
       // genuinely-new batch-2 docs with PLANTED noise a real crawl always
@@ -2564,17 +2509,9 @@ object LlmOps {
       // no-ops, all-dup batches and hash-column pruning are
       // IncrementalCorpusSpec's.
       val t = graft.Scratch.fresh("p14_corpus")
-      val docs = Tables(s, dir).documents
-        .select("doc_id", "lang", "source", "n_chars", "text")
-      val batch1 = docs.filter(col("doc_id") % 3 =!= 2)
-      val recrawl = batch1.filter(col("doc_id") % 7 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      val batch2core = docs.filter(col("doc_id") % 3 === 2)
-      val inBatchDup = batch2core.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 2000000L)
+      val (batch1, crawl2) = plantedCrawl(s, dir)
       IncrementalCorpus.bootstrap(s, t, batch1, "text", "doc_id")
-      IncrementalCorpus.refresh(s, t,
-        batch2core.unionByName(recrawl).unionByName(inBatchDup),
+      IncrementalCorpus.refresh(s, t, crawl2.reduce(_ unionByName _),
         "text", "doc_id", tag = Some("crawl-2"))
       require(SnapshotTable.versions(t) == Seq(1L, 2L),
         "refresh must land as one incremental Append")
@@ -3184,6 +3121,70 @@ object LlmOps {
     * (canonical-URL NOT IN corpus) before content work and the
     * content_hash scrub (md5 of normalized text NOT IN corpus) after -
     * first-arrival-wins end to end. */
+  /** S10 (and X20, its streamed form): evenness ≡ live copy at the top,
+    * tombstoned ids never returned. */
+  private val s10OracleSql: String =
+    """SELECT vec_id AS query_id, vec_id % 2 = 0 AS copy_returned,
+      |       false AS deleted_returned
+      |FROM embeddings WHERE vec_id < 32""".stripMargin
+
+  /** The recall gates (s2, s3, s6, s7, s8, s12, s15): the bound is asserted
+    * in-plan, so the oracle is the query count and a literal true. */
+  private val recallOracleSql: String =
+    """SELECT count(*) AS n_queries, true AS recall_ok
+      |FROM embeddings WHERE vec_id < 32""".stripMargin
+
+  /** The planted-copy top-1 (s2, s3, s6, s7, s9, s15): each query's nearest
+    * neighbour is its copy at vec_id + 1e6, at cosine 1. */
+  private val copyTop1OracleSql: String =
+    """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+      |FROM embeddings WHERE vec_id < 32""".stripMargin
+
+  /** S14 (and S17, its quantized form): every base row joins to its planted
+    * copy at cosine 1. */
+  private val s14OracleSql: String =
+    """SELECT vec_id AS query_id, vec_id + 1000000 AS neighbor_id, 1.0 AS cosine
+      |FROM embeddings ORDER BY vec_id""".stripMargin
+
+  /** P14's planted crawl over `documents`: batch 1 (doc_id % 3 ≠ 2, the
+    * corpus bootstrap) and the second crawl as three parts — the novel
+    * batch-2 docs, re-crawls of batch-1 docs (+1e6 ids, %7) and in-batch dup
+    * copies of novel docs (+2e6 ids, %5). p14, x23 and x25 land it. */
+  private[graft] def plantedCrawl(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
+    val docs = Tables(s, dir).documents
+      .select("doc_id", "lang", "source", "n_chars", "text")
+    val batch1 = docs.filter(col("doc_id") % 3 =!= 2)
+    val batch2core = docs.filter(col("doc_id") % 3 === 2)
+    (batch1, Seq(batch2core,
+      batch1.filter(col("doc_id") % 7 === 0)
+        .withColumn("doc_id", col("doc_id") + 1000000L),
+      batch2core.filter(col("doc_id") % 5 === 0)
+        .withColumn("doc_id", col("doc_id") + 2000000L)))
+  }
+
+  /** P14 (and X23, its streamed form): first-arrival-wins over the planted
+    * union of [[plantedCrawl]] — batch 1 incumbents (b=0) beat everything;
+    * within a batch the min id wins. */
+  private[graft] val p14OracleSql: String =
+    """WITH all_docs AS (
+      |  SELECT doc_id, lang, source, n_chars, text,
+      |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
+      |  FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
+      |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
+      |  UNION ALL
+      |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
+      |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
+      |),
+      |ranked AS (
+      |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
+      |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
+      |  FROM all_docs
+      |)
+      |SELECT doc_id, lang, source, n_chars, content_hash
+      |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin
+
   private def p17OracleSql: String =
     s"""WITH d AS (SELECT doc_id, text FROM documents),
        |pre AS (

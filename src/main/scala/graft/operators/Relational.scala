@@ -100,6 +100,105 @@ object Relational {
 
   // ------------------------------------------------------------------ gates
 
+  /** R40 (and R49, whose clone pins the same content): keys ≡ 0 or 1 mod 3. */
+  private val r40OracleSql: String =
+    """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+      |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin
+
+  /** R46 (and X16, its streamed form): the planted-skew heavy hitters as a
+    * plain GROUP BY/HAVING. */
+  private[graft] val r46OracleSql: String =
+    """WITH k AS (
+      |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
+      |              WHEN o_orderkey % 7 = 0 THEN 7
+      |              ELSE o_custkey END AS item
+      |  FROM orders
+      |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
+      |SELECT item, CAST(count(*) AS BIGINT) AS cnt
+      |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
+      |ORDER BY item""".stripMargin
+
+  /** W32 (and W33, its stored index): the typo term, then a brute-force
+    * levenshtein scan over the part names. */
+  private val w32OracleSql: String =
+    """WITH term AS (
+      |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
+      |  FROM part WHERE p_partkey = 1)
+      |SELECT p_partkey AS id, p_name AS label,
+      |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
+      |FROM part
+      |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
+      |ORDER BY id""".stripMargin
+
+  /** W36 (and X27, its streamed form): the changeset arithmetic in SQL, then
+    * the brute-force scan over the current labels. */
+  private val w36OracleSql: String =
+    """WITH cur AS (
+      |  SELECT p_partkey AS id,
+      |    CASE WHEN p_partkey % 7 = 3
+      |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
+      |         ELSE p_name END AS label
+      |  FROM part WHERE p_partkey % 11 <> 0
+      |  UNION ALL
+      |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
+      |), term AS (
+      |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
+      |  FROM part WHERE p_partkey = 1)
+      |SELECT id, label,
+      |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
+      |FROM cur
+      |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
+      |ORDER BY id""".stripMargin
+
+  /** X14 (and X15, its streamed form): the rollup recomputed over the
+    * post-merge base. */
+  private val x14OracleSql: String =
+    """WITH v2 AS (
+      |  SELECT o_orderkey, o_custkey,
+      |    CASE WHEN o_orderkey BETWEEN 100 AND 200
+      |         THEN CAST(-1.0 AS DECIMAL(18,2))
+      |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
+      |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
+      |  UNION ALL
+      |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
+      |    CAST(5.0 AS DECIMAL(18,2))
+      |  FROM range(5))
+      |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
+      |  CAST(sum(price) AS DOUBLE) AS sum_price
+      |FROM v2 GROUP BY o_custkey""".stripMargin
+
+  /** R60 (and R62, the stats of base + two appends): exact per-column
+    * stats of the planted rows. ndv_ok is the in-plan HLL bound (a literal
+    * true here, the s2_recall pattern). */
+  private val r60OracleSql: String =
+    """WITH src AS (
+      |  SELECT l_orderkey, l_suppkey,
+      |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
+      |         ELSE l_returnflag END AS l_returnflag
+      |  FROM lineitem)
+      |SELECT * FROM (
+      |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
+      |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
+      |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
+      |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
+      |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
+      |  FROM src
+      |  UNION ALL
+      |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
+      |    CAST(count(*) - count(l_returnflag) AS BIGINT),
+      |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
+      |    CAST(min(l_returnflag) AS VARCHAR),
+      |    CAST(max(l_returnflag) AS VARCHAR), true
+      |  FROM src
+      |  UNION ALL
+      |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
+      |    CAST(count(*) - count(l_suppkey) AS BIGINT),
+      |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
+      |    CAST(min(l_suppkey) AS VARCHAR),
+      |    CAST(max(l_suppkey) AS VARCHAR), true
+      |  FROM src)
+      |ORDER BY "column"""".stripMargin
+
   def gates: Seq[Gate] = Seq(
     Gate("r1_pushdown",
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem
@@ -509,8 +608,7 @@ object Relational {
     Gate("r40_snapshot_commit",
       // R40: version 2 = commit 1 (keys ≡0 mod 3) + appended commit 2 (≡1);
       // the v3 overwrite (≡2) is pinned out by the time-travel read
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin) { (s, dir) =>
+      r40OracleSql) { (s, dir) =>
       // atomic manifest-log commits + time travel: three commits (base,
       // append, overwrite), then read pinned at v2 — the overwrite in v3
       // must be invisible, and the returned content is exactly commits
@@ -531,33 +629,7 @@ object Relational {
       // R62: stats of the union, blind to the fold count — the identical
       // derivation as r60's oracle (same planted nulls, same columns), over
       // ALL slices since base+append+append reassembles the whole table.
-      """WITH src AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
-        |         ELSE l_returnflag END AS l_returnflag
-        |  FROM lineitem)
-        |SELECT * FROM (
-        |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
-        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
-        |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
-        |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_returnflag) AS BIGINT),
-        |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
-        |    CAST(min(l_returnflag) AS VARCHAR),
-        |    CAST(max(l_returnflag) AS VARCHAR), true
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_suppkey) AS BIGINT),
-        |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
-        |    CAST(min(l_suppkey) AS VARCHAR),
-        |    CAST(max(l_suppkey) AS VARCHAR), true
-        |  FROM src)
-        |ORDER BY "column"""".stripMargin) { (s, dir) =>
+      r60OracleSql) { (s, dir) =>
       // R62: mergeable ANALYZE — base commit + two appends, each analyze
       // folding ONLY the new files into the persisted sketch state
       // (incremental=true required in-gate). The merged result must equal
@@ -604,33 +676,7 @@ object Relational {
     Gate("r60_analyze",
       // ndv_ok is the in-plan HLL bound (literal true on the oracle side —
       // the s2_recall hash-gated-quality pattern)
-      """WITH src AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |    CASE WHEN l_linenumber % 7 = 0 THEN NULL
-        |         ELSE l_returnflag END AS l_returnflag
-        |  FROM lineitem)
-        |SELECT * FROM (
-        |  SELECT 'l_orderkey' AS "column", CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(count(*) - count(l_orderkey) AS BIGINT) AS n_nulls,
-        |    CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_distinct,
-        |    CAST(min(l_orderkey) AS VARCHAR) AS min_str,
-        |    CAST(max(l_orderkey) AS VARCHAR) AS max_str, true AS ndv_ok
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_returnflag', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_returnflag) AS BIGINT),
-        |    CAST(count(DISTINCT l_returnflag) AS BIGINT),
-        |    CAST(min(l_returnflag) AS VARCHAR),
-        |    CAST(max(l_returnflag) AS VARCHAR), true
-        |  FROM src
-        |  UNION ALL
-        |  SELECT 'l_suppkey', CAST(count(*) AS BIGINT),
-        |    CAST(count(*) - count(l_suppkey) AS BIGINT),
-        |    CAST(count(DISTINCT l_suppkey) AS BIGINT),
-        |    CAST(min(l_suppkey) AS VARCHAR),
-        |    CAST(max(l_suppkey) AS VARCHAR), true
-        |  FROM src)
-        |ORDER BY "column"""".stripMargin) { (s, dir) =>
+      r60OracleSql) { (s, dir) =>
       // R60: ANALYZE on a pinned snapshot version. The gate hashes the
       // EXACT fields (rows/nulls/ndv/min/max per column — DuckDB
       // re-derives them from the same rows) and bounds the HLL sketch
@@ -1069,8 +1115,7 @@ object Relational {
     Gate("r49_shallow_clone",
       // R49: the clone pins the forked content; the source's later
       // overwrite must be invisible through it
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderkey % 3 IN (0, 1)""".stripMargin) { (s, dir) =>
+      r40OracleSql) { (s, dir) =>
       // R49: zero-copy fork. Clone the source, then OVERWRITE the source —
       // the clone must still read the forked content (independence), and
       // the in-gate require proves the clone is metadata-only: no data
@@ -1240,19 +1285,7 @@ object Relational {
     Gate("x14_snapshot_ivm",
       // X14: the maintained rollup must equal a from-scratch aggregate over
       // the post-merge base state (the merge replayed in SQL as in r43)
-      """WITH v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |         THEN CAST(-1.0 AS DECIMAL(18,2))
-        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
-        |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
-        |  UNION ALL
-        |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
-        |    CAST(5.0 AS DECIMAL(18,2))
-        |  FROM range(5))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM v2 GROUP BY o_custkey""".stripMargin) { (s, dir) =>
+      x14OracleSql) { (s, dir) =>
       // X14: incremental MV maintenance over the table format — bootstrap
       // a per-customer (n, sum_price) rollup of a committed orders
       // snapshot, merge r43's changeset into the base, refresh. The
@@ -1339,15 +1372,7 @@ object Relational {
       // R46: the sketch+verify pipeline is semantically a plain
       // GROUP BY/HAVING over the planted-skew key — any candidate the
       // sketch missed or extra the verify pass kept breaks the hash
-      """WITH k AS (
-        |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
-        |              WHEN o_orderkey % 7 = 0 THEN 7
-        |              ELSE o_custkey END AS item
-        |  FROM orders
-        |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
-        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
-        |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
-        |ORDER BY item""".stripMargin) { (s, dir) =>
+      r46OracleSql) { (s, dir) =>
       // R46: exact heavy hitters over a skewed key stream — two hot keys
       // planted into the otherwise-uniform custkey distribution (≡0 mod 3
       // → key 42 at ~33%, else ≡0 mod 7 → key 7 at ~9.5%; capacity 20 ⇒
@@ -1366,27 +1391,13 @@ object Relational {
 
     Gate("x15_stream_ivm",
       // X15: same final state as x14 — the batch split must be invisible
-      """WITH v2 AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |         THEN CAST(-1.0 AS DECIMAL(18,2))
-        |         ELSE CAST(o_totalprice AS DECIMAL(18,2)) END AS price
-        |  FROM orders WHERE o_orderkey NOT BETWEEN 300 AND 350
-        |  UNION ALL
-        |  SELECT CAST(1000000000 + range AS BIGINT), CAST(1 AS BIGINT),
-        |    CAST(5.0 AS DECIMAL(18,2))
-        |  FROM range(5))
-        |SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(price) AS DOUBLE) AS sum_price
-        |FROM v2 GROUP BY o_custkey""".stripMargin) { (s, dir) =>
+      x14OracleSql) { (s, dir) =>
       // X15: the R43×R44×X14 chain driven by a stream — three disjoint CDC
       // shards (U/D/I, one per micro-batch) merge into the snapshot base
       // and the rollup refreshes after each batch; the final MV must equal
       // the same DuckDB replay as x14, whatever the batch split. Replay
       // idempotency, merge-crash repair and order-insensitivity are
       // SnapshotIvmStreamSpec's.
-      import java.nio.file.Paths
-      val in = graft.Scratch.fresh("x15_in")
       val base = graft.Scratch.fresh("x15_base")
       val mv = graft.Scratch.fresh("x15_mv")
       val ckpt = graft.Scratch.fresh("x15_ckpt")
@@ -1402,13 +1413,9 @@ object Relational {
         o.filter(col("o_orderkey").between(300, 350)).withColumn("op", lit("D")),
         s.range(5).select((col("id") + 1000000000L).as("o_orderkey"),
           lit(1L).as("o_custkey"), money(lit(5.0)).as("price"), lit("I").as("op")))
-      shards.zipWithIndex.foreach { case (df, i) =>
-        graft.Scratch.writeSingleParquet(df, Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = graft.streaming.SnapshotIvmStream.start(s, in, base, mv, ckpt,
-        shards.head.schema, Seq("o_orderkey"), Seq("o_custkey"), Seq("price"),
-        maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      graft.streaming.SnapshotIvmStream.start(s, graft.Scratch.shards("x15_in", shards),
+        base, mv, ckpt, shards.head.schema, Seq("o_orderkey"), Seq("o_custkey"),
+        Seq("price")).awaitTermination()
       SnapshotTable.read(s, mv)
         .select(col("o_custkey"), col("n"), emit(col("sum_price")).as("sum_price"))
     },
@@ -1977,14 +1984,7 @@ object Relational {
     Gate("w33_fuzzy_stored",
       // W33: identical brute-force oracle as w32 — the stored index and its
       // pruning are invisible to the answer (that is the point)
-      """WITH term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT p_partkey AS id, p_name AS label,
-        |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM part
-        |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin) { (s, dir) =>
+      w32OracleSql) { (s, dir) =>
       // W33: w32's lookup through the PERSISTED range-clustered variant
       // index — same typo term, same answer (the oracle is the identical
       // brute-force scan), but the probe plans only the files whose __h
@@ -2010,22 +2010,7 @@ object Relational {
       // W36: the changeset arithmetic re-derived in SQL, then the identical
       // brute-force scan over the CURRENT label set — appends, stale
       // variants, pruning and the maintenance fold are all invisible to it.
-      """WITH cur AS (
-        |  SELECT p_partkey AS id,
-        |    CASE WHEN p_partkey % 7 = 3
-        |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
-        |         ELSE p_name END AS label
-        |  FROM part WHERE p_partkey % 11 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
-        |), term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT id, label,
-        |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM cur
-        |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin) { (s, dir) =>
+      w36OracleSql) { (s, dir) =>
       // W36: the W33 store under label churn — build on the v1 labels,
       // then apply one changeset (renames: id % 7 == 3 gets its 3rd char
       // turned to 'x'; deletes: id % 11 == 0; adds: id + 1000000 with a
@@ -2064,22 +2049,7 @@ object Relational {
     Gate("x27_stream_variant_index",
       // X27: the streamed W36 — same oracle verbatim; shard boundaries,
       // batch tags and the replay probe are invisible to the answer.
-      """WITH cur AS (
-        |  SELECT p_partkey AS id,
-        |    CASE WHEN p_partkey % 7 = 3
-        |         THEN substr(p_name, 1, 2) || 'x' || substr(p_name, 4)
-        |         ELSE p_name END AS label
-        |  FROM part WHERE p_partkey % 11 <> 0
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000 AS id, 'nw ' || p_name AS label FROM part
-        |), term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT id, label,
-        |  CAST(levenshtein(label, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM cur
-        |WHERE levenshtein(label, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin) { (s, dir) =>
+      w36OracleSql) { (s, dir) =>
       // X27: the W36 maintenance loop as a STREAM — the same churn
       // arrives as 3 label shards in a watched directory, each
       // micro-batch Appends only its variant delta batch-tagged; a
@@ -2093,21 +2063,17 @@ object Relational {
       val term = fuzzyTerm(v1)
       val t = graft.Scratch.fresh("x27_index")
       EditJoin.saveIndex(s, t, v1, "id", "label", files = 32)
-      val in = graft.Scratch.fresh("x27_in")
+      val in = graft.Scratch.shards("x27_in",
+        (0 until 3).map(k => delta.filter(pmod(col("id"), lit(3)) === k)))
       val ckpt = graft.Scratch.fresh("x27_ckpt")
-      (0 until 3).foreach { k =>
-        delta.filter(pmod(col("id"), lit(3)) === k)
-          .coalesce(1).write.mode("append").parquet(in)
-      }
-      val q = graft.streaming.StreamingVariantIngest.start(
-        s, in, delta.schema, "id", "label", t, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      graft.streaming.StreamingVariantIngest.start(
+        s, in, delta.schema, "id", "label", t, ckpt).awaitTermination()
       // at-least-once redelivery: batch 0 again, by its consumed tag —
       // same checkpoint-derived namespace the stream stamped
       val vBefore = SnapshotTable.latestVersion(t).get
       graft.streaming.StreamingVariantIngest.applyBatch(
         s, delta.filter(pmod(col("id"), lit(3)) === 0), 0L, "id", "label", t,
-        graft.streaming.StreamingVariantIngest.namespaceFor(ckpt))
+        graft.streaming.BatchTags.namespace(ckpt))
       require(SnapshotTable.latestVersion(t).contains(vBefore),
         "replayed batch must commit nothing")
       EditJoin.fuzzyLookupStored(s, t, current, "id", "label", term)
@@ -2118,14 +2084,7 @@ object Relational {
     Gate("w32_fuzzy_label",
       // W32: the same typo derivation, then a full levenshtein scan — the
       // brute-force oracle for the variant-index probe path.
-      """WITH term AS (
-        |  SELECT substr(p_name, 1, 2) || 'z' || substr(p_name, 4) AS t
-        |  FROM part WHERE p_partkey = 1)
-        |SELECT p_partkey AS id, p_name AS label,
-        |  CAST(levenshtein(p_name, (SELECT t FROM term)) AS INTEGER) AS dist
-        |FROM part
-        |WHERE levenshtein(p_name, (SELECT t FROM term)) <= 1
-        |ORDER BY id""".stripMargin) { (s, dir) =>
+      w32OracleSql) { (s, dir) =>
       // W32: typo-tolerant label lookup over the same label surface as
       // w14 — the query term is part 1's name with its 3rd char turned
       // into 'z' (a one-substitution typo both engines derive from the

@@ -15,20 +15,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object EtlStream {
 
+  /** Append every landed dump shard's 8 tables under `outDir`. `trigger` is
+    * stdin mode's cadence (`EtlStdin`); each firing reads every shard landed
+    * since the last one. */
   def start(spark: SparkSession, inDir: String, outDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val entities = DumpReader.entities(spark.readStream.text(inDir))
-    entities.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val tables = WikidataEtl.run(batch.toDF())
-        try tables.byName.foreach { case (name, df) =>
-          df.write.mode("append").parquet(s"$outDir/$name")
-        } finally tables.unpersist() // bounded memory across micro-batches
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    BatchTags.start(spark, inDir, None, checkpointDir, Some(trigger)) { (lines, _, _) =>
+      val tables = WikidataEtl.run(DumpReader.entities(lines))
+      try tables.byName.foreach { case (name, df) =>
+        df.write.mode("append").parquet(s"$outDir/$name")
+      } finally tables.unpersist() // bounded memory across micro-batches
+    }
 
   /** X13: the same ingestion, published EXACTLY-ONCE through R40 snapshot
     * commits. [[start]]'s bare `mode("append")` has two holes at scale: a
@@ -51,22 +48,10 @@ object EtlStream {
     * parse, so the full surface costs five more appends per batch, never a
     * second dump scan. */
   def startSnapshot(spark: SparkSession, inDir: String, tableRoot: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow(),
-      surface: Surface = Surface.Core): StreamingQuery = {
-    val reader = spark.readStream
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val ns = BatchTags.namespace(checkpointDir)
-    val entities = DumpReader.entities(reader.text(inDir), surface)
-    entities.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        commitBatch(spark, batch.toDF(), tableRoot, batchId, ns)
-      }
-      .start()
-  }
+      checkpointDir: String, surface: Surface = Surface.Core): StreamingQuery =
+    BatchTags.start(spark, inDir, None, checkpointDir) { (lines, id, ns) =>
+      commitBatch(spark, DumpReader.entities(lines, surface), tableRoot, id, ns)
+    }
 
   /** One micro-batch of [[startSnapshot]], exposed for direct replay tests:
     * publishes every table of the batch's parsed [[Surface]]. */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Event-stream operators (SURVEY.md §2.3 X1/X2).
   *
@@ -313,28 +313,23 @@ object EventStreams {
       .write.mode("overwrite").partitionBy("__b").parquet(s"$stateDir/v$batchId")
   }
 
-  /** X8: drain a change stream (rows carry `opCol` ∈ I/U/D and a monotone
-    * per-key `seqCol`) into hash-bucketed versioned parquet state via
-    * `foreachBatch` — the streaming form of R25's upsert, one
-    * [[cdcApplyBatch]] per micro-batch. Returns the running query; read the
-    * live table with [[cdcCurrent]].
+  /** X8: drain the change shards landing in `inDir` (parquet of `schema`;
+    * rows carry `opCol` ∈ I/U/D and a monotone per-key `seqCol`) into
+    * hash-bucketed versioned parquet state — the streaming form of R25's
+    * upsert, one [[cdcApplyBatch]] per micro-batch. Returns the running
+    * query; read the live table with [[cdcCurrent]].
     *
     * `afterBatch(id)` runs after the batch's state version is written but
     * BEFORE the checkpoint commits the batch — metrics/listeners hook, and
     * the crash-injection point CrashRecoverySpec uses to prove the
     * write-then-crash-then-replay path rebuilds identical state. */
-  def cdcApplyStream(spark: SparkSession, changes: DataFrame, keyCols: Seq[String],
-      seqCol: String, stateDir: String, nBuckets: Int = 64,
-      afterBatch: Long => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery = {
-    changes.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        cdcApplyBatch(spark, batch.toDF(), id, keyCols, seqCol, stateDir, nBuckets)
-        afterBatch(id)
-      }
-      .option("checkpointLocation", s"$stateDir/_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+  def cdcApplyStream(spark: SparkSession, inDir: String, schema: StructType,
+      keyCols: Seq[String], seqCol: String, stateDir: String, nBuckets: Int = 64,
+      afterBatch: Long => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), s"$stateDir/_ckpt") { (b, id, _) =>
+      cdcApplyBatch(spark, b, id, keyCols, seqCol, stateDir, nBuckets)
+      afterBatch(id)
+    }
 
   /** The live CDC table: newest version of every bucket, tombstones filtered
     * out. */
@@ -401,23 +396,19 @@ object EventStreams {
     versions.filter(_._1 < batchId - 1).foreach(v => deleteDir(v._2))
   }
 
-  /** X9: drain a CDC change stream (op ∈ I/D; updates arrive as D-old +
-    * I-new) into a continuously-maintained grouped (count, sums) rollup —
-    * a streaming materialized view. One [[ivmApplyBatch]] per micro-batch;
+  /** X9: drain the CDC change shards landing in `inDir` (parquet of
+    * `schema`; op ∈ I/D, updates arrive as D-old + I-new) into a
+    * continuously-maintained grouped (count, sums) rollup — a streaming
+    * materialized view. One [[ivmApplyBatch]] per micro-batch;
     * read the live rollup with [[ivmCurrent]]. `afterBatch`: see
     * [[cdcApplyStream]] — the post-write, pre-commit hook. */
-  def ivmApplyStream(spark: SparkSession, changes: DataFrame, keys: Seq[String],
-      opCol: String, sumCols: Seq[String], stateDir: String,
-      afterBatch: Long => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery = {
-    changes.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ivmApplyBatch(spark, batch.toDF(), id, keys, opCol, sumCols, stateDir)
-        afterBatch(id)
-      }
-      .option("checkpointLocation", s"$stateDir/_ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+  def ivmApplyStream(spark: SparkSession, inDir: String, schema: StructType,
+      keys: Seq[String], opCol: String, sumCols: Seq[String], stateDir: String,
+      afterBatch: Long => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), s"$stateDir/_ckpt") { (b, id, _) =>
+      ivmApplyBatch(spark, b, id, keys, opCol, sumCols, stateDir)
+      afterBatch(id)
+    }
 
   /** The live maintained rollup: the newest state version. */
   def ivmCurrent(spark: SparkSession, stateDir: String): DataFrame = {

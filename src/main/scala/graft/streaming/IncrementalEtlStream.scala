@@ -4,7 +4,7 @@ import graft.operators.SnapshotTable
 import graft.wikidata.{IncrementalEtl, Surface, WikidataTables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** X12: continuous incremental ingestion — the production refresh loop the
   * reference cannot run at all (it rebuilds from a full dump every time,
@@ -135,25 +135,12 @@ object IncrementalEtlStream {
   }
 
   /** Watch `inDir` for changeset shards; apply each micro-batch to the
-    * snapshot tables under `tableRoot` (which must be [[bootstrap]]ped).
-    * `maxFilesPerTrigger > 0` caps shards per batch (tests use 1 to force
-    * multi-batch runs; convergence is batch-split-independent regardless). */
+    * snapshot tables under `tableRoot` (which must be [[bootstrap]]ped). */
   def start(spark: SparkSession, inDir: String, tableRoot: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow(),
-      surface: Surface = Surface.Core,
-      anyNameIndex: Option[String] = None): StreamingQuery = {
-    val reader = spark.readStream
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val ns = BatchTags.namespace(checkpointDir)
-    reader.text(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBatch(spark, batch.toDF(), tableRoot, surface, anyNameIndex,
-          Some(BatchTags.tag(ns, batchId.toString)))
-      }
-      .start()
-  }
+      checkpointDir: String, surface: Surface = Surface.Core,
+      anyNameIndex: Option[String] = None): StreamingQuery =
+    BatchTags.start(spark, inDir, None, checkpointDir) { (lines, id, ns) =>
+      applyBatch(spark, lines, tableRoot, surface, anyNameIndex,
+        Some(BatchTags.tag(ns, id.toString)))
+    }
 }

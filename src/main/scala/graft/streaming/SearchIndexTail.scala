@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.SnapshotTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, get_json_object}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** X25: the always-on retrieval loop closed — the SEARCH INDEX follows the
   * corpus table's manifest log. With X23 landing crawl shards as atomic
@@ -48,18 +48,8 @@ object SearchIndexTail {
 
   /** Tail `corpusTable`'s manifest log into the X17 index at `indexRoot`. */
   def start(spark: SparkSession, corpusTable: String, textCol: String,
-      idCol: String, indexRoot: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val reader = spark.readStream
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.text(s"$corpusTable/_log").writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, corpusTable, textCol, idCol, indexRoot)
-      }
-      .start()
-  }
+      idCol: String, indexRoot: String, checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, s"$corpusTable/_log", None, checkpointDir) { (b, id, _) =>
+      applyBatch(spark, b, id, corpusTable, textCol, idCol, indexRoot)
+    }
 }

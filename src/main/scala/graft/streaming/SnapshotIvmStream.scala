@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{SnapshotIvm, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X15: streaming base-table maintenance WITH its rollup — CDC changeset
@@ -52,21 +52,9 @@ object SnapshotIvmStream {
     * .commit]] the bootstrap state first). */
   def start(spark: SparkSession, inDir: String, baseTable: String,
       mvTable: String, checkpointDir: String, schema: StructType,
-      rowKeys: Seq[String], groupKeys: Seq[String], sumCols: Seq[String],
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          applyBatch(spark, batch.toDF(), id, baseTable, mvTable, rowKeys,
-            groupKeys, sumCols, ns)
-      }
-      .start()
-  }
+      rowKeys: Seq[String], groupKeys: Seq[String],
+      sumCols: Seq[String]): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, baseTable, mvTable, rowKeys, groupKeys, sumCols, ns)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.SnapshotIvm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, get_json_object}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** X24: a LIVE materialized view over a snapshot table — X22's log tail
   * driving X14's incremental refresh. X15 maintains base + MV from a
@@ -45,17 +45,8 @@ object SnapshotIvmTail {
   /** Tail `baseTable`'s manifest log and keep `mvTable` current. */
   def start(spark: SparkSession, baseTable: String, mvTable: String,
       rowKeys: Seq[String], groupKeys: Seq[String], sumCols: Seq[String],
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val reader = spark.readStream
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.text(s"$baseTable/_log").writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, baseTable, mvTable, rowKeys, groupKeys, sumCols)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, s"$baseTable/_log", None, checkpointDir) { (b, id, _) =>
+      applyBatch(spark, b, id, baseTable, mvTable, rowKeys, groupKeys, sumCols)
+    }
 }

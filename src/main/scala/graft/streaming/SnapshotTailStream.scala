@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.SnapshotTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, get_json_object, lit}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** X22: a snapshot table AS a streaming SOURCE — tail the manifest log and
   * propagate each newly-committed version downstream (the Delta "table
@@ -85,22 +85,11 @@ object SnapshotTailStream {
     } finally org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(feed)
   }
 
-  /** Tail `table`'s manifest log into `destTable`. `maxFilesPerTrigger = 1`
-    * propagates version-by-version; larger batches fold spans (NET — an
-    * insert-then-delete within a span lands nothing). */
+  /** Tail `table`'s manifest log into `destTable`, one source version per
+    * micro-batch. */
   def start(spark: SparkSession, table: String, keyCols: Seq[String],
-      destTable: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val reader = spark.readStream
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.text(s"$table/_log").writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, table, keyCols, destTable)
-      }
-      .start()
-  }
+      destTable: String, checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, s"$table/_log", None, checkpointDir) { (b, id, _) =>
+      applyBatch(spark, b, id, table, keyCols, destTable)
+    }
 }

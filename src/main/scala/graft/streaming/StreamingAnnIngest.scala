@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{AnnIndexStore, IvfPq, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X18: streaming ANN index maintenance (S9 × X13) — new embedding shards
@@ -49,20 +49,11 @@ object StreamingAnnIngest {
     * triple — the codebooks are loaded ONCE and frozen for the run). */
   def start(spark: SparkSession, inDir: String, schema: StructType,
       idCol: String, vecCol: String, indexRoot: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     val (index, _) = AnnIndexStore.load(spark, indexRoot)
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, id, idCol, vecCol, index, indexRoot, ns)
-      }
-      .start()
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, idCol, vecCol, index, indexRoot, ns)
+    }
   }
 
   /** ADC search over the maintained store — ≡ `IvfPq.search` over a batch
@@ -107,21 +98,10 @@ object StreamingAnnIngest {
 
   /** Watch `inDir` for parquet shards of delete requests (`idCol`). */
   def startDeletes(spark: SparkSession, inDir: String, schema: StructType,
-      idCol: String, indexRoot: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyDeleteBatch(spark, batch, id, idCol, indexRoot, ns)
-      }
-      .start()
-  }
+      idCol: String, indexRoot: String, checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyDeleteBatch(spark, b, id, idCol, indexRoot, ns)
+    }
 
   /** [[search]] with the streamed tombstones honored — candidates
     * anti-joined before the shortlist cut (the S10 rule: full k out,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{IncrementalCorpus, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X23: the P14 crawl-ingest loop as a stream — crawl shards land in a
@@ -39,21 +39,12 @@ object StreamingCorpusRefresh {
 
   /** Watch `inDir` for parquet crawl shards (document schema). */
   def start(spark: SparkSession, inDir: String, schema: StructType,
-      textCol: String, idCol: String, table: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      textCol: String, idCol: String, table: String,
+      checkpointDir: String): StreamingQuery = {
     require(SnapshotTable.latestVersion(table).nonEmpty,
       s"bootstrap $table before tailing crawl shards into it")
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, table, textCol, idCol, ns)
-      }
-      .start()
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, table, textCol, idCol, ns)
+    }
   }
 }

@@ -100,7 +100,6 @@ object StreamingGates {
         |  CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice + 10
         |       ELSE o_totalprice END AS o_totalprice
         |FROM orders WHERE o_orderkey % 9 <> 0""".stripMargin) { (s, dir) =>
-      val watch = graft.Scratch.fresh("x8_in")
       val state = graft.Scratch.fresh("x8_state")
       val o = Tables(s, dir).orders.select("o_orderkey", "o_custkey", "o_totalprice")
       val base = o.withColumn("op", org.apache.spark.sql.functions.lit("I"))
@@ -112,16 +111,11 @@ object StreamingGates {
       val del = o.filter(col("o_orderkey") % 9 === 0)
         .withColumn("op", org.apache.spark.sql.functions.lit("D"))
         .withColumn("seq", org.apache.spark.sql.functions.lit(3L))
-      base.coalesce(1).write.mode("append").parquet(watch)
-      upd.coalesce(1).write.mode("append").parquet(watch)
-      del.coalesce(1).write.mode("append").parquet(watch)
-      val src = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watch)
+      val watch = graft.Scratch.shards("x8_in", Seq(base, upd, del))
       // nBuckets sized to the gate's ~1 MB state (buckets are the rewrite
       // unit — a few hundred MB each at production scale; 64+ there)
-      val q = EventStreams.cdcApplyStream(s, src, Seq("o_orderkey"), "seq", state,
-        nBuckets = 8)
-      q.awaitTermination()
+      EventStreams.cdcApplyStream(s, watch, base.schema, Seq("o_orderkey"), "seq",
+        state, nBuckets = 8).awaitTermination()
       // compact the per-batch version dirs into one and read THAT back:
       // the hash gates that compaction preserves the live state exactly
       EventStreams.cdcCompact(s, state, Seq("o_orderkey"), nBuckets = 8)
@@ -146,7 +140,6 @@ object StreamingGates {
         |SELECT o_orderstatus, count(*) AS n, CAST(sum(price) AS DOUBLE) AS sum_price
         |FROM live GROUP BY o_orderstatus""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.functions.lit
-      val watch = graft.Scratch.fresh("x9_in")
       val state = graft.Scratch.fresh("x9_state")
       val o = Tables(s, dir).orders.select(col("o_orderstatus"),
         col("o_totalprice").cast(org.apache.spark.sql.types.DataTypes
@@ -164,14 +157,9 @@ object StreamingGates {
       val del = o.filter(col("o_orderkey") % 9 === 0)
         .select(col("o_orderstatus"), (col("price") + 10).cast(dec182).as("price"))
         .withColumn("op", lit("D"))
-      base.coalesce(1).write.mode("append").parquet(watch)
-      updD.unionByName(updI).coalesce(1).write.mode("append").parquet(watch)
-      del.coalesce(1).write.mode("append").parquet(watch)
-      val src = s.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", "1").parquet(watch)
-      val q = EventStreams.ivmApplyStream(s, src, Seq("o_orderstatus"), "op",
-        Seq("price"), state)
-      q.awaitTermination()
+      val watch = graft.Scratch.shards("x9_in", Seq(base, updD.unionByName(updI), del))
+      EventStreams.ivmApplyStream(s, watch, base.schema, Seq("o_orderstatus"), "op",
+        Seq("price"), state).awaitTermination()
       EventStreams.ivmCurrent(s, state)
         .select(col("o_orderstatus"), col("n"),
           col("sum_price").cast("double").as("sum_price"))
@@ -187,17 +175,7 @@ object StreamingGates {
     Gate("x16_stream_heavy_hitters",
       // X16: same replay as the batch r46 oracle — the stream's state path
       // must land on the identical exact heavy-hitter set
-      """WITH k AS (
-        |  SELECT CASE WHEN o_orderkey % 3 = 0 THEN 42
-        |              WHEN o_orderkey % 7 = 0 THEN 7
-        |              ELSE o_custkey END AS item
-        |  FROM orders
-        |), t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM k)
-        |SELECT item, CAST(count(*) AS BIGINT) AS cnt
-        |FROM k, t GROUP BY item, n HAVING count(*) * 21 > n
-        |ORDER BY item""".stripMargin) { (s, dir) =>
-      import java.nio.file.Paths
-      val in = graft.Scratch.fresh("x16_in")
+      graft.operators.Relational.r46OracleSql) { (s, dir) =>
       val state = graft.Scratch.fresh("x16_state")
       val ckpt = graft.Scratch.fresh("x16_ckpt")
       val keyed = Tables(s, dir).orders.select(
@@ -209,12 +187,9 @@ object StreamingGates {
         keyed.filter(col("o_orderkey") % 10 < 4),
         keyed.filter(col("o_orderkey") % 10 >= 4 && col("o_orderkey") % 10 < 7),
         keyed.filter(col("o_orderkey") % 10 >= 7)).map(_.select("k"))
-      shards.zipWithIndex.foreach { case (df, i) =>
-        graft.Scratch.writeSingleParquet(df, Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = StreamingHeavyHitters.start(s, in, shards.head.schema, "k",
-        capacity = 20, state, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      val in = graft.Scratch.shards("x16_in", shards)
+      StreamingHeavyHitters.start(s, in, shards.head.schema, "k",
+        capacity = 20, state, ckpt).awaitTermination()
       StreamingHeavyHitters.exactFromState(s, state, s.read.parquet(in), "k",
         capacity = 20)
     },
@@ -229,21 +204,16 @@ object StreamingGates {
       // X21: the MoR read after the streamed deletes ≡ the plain filter
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |WHERE o_orderkey % 7 <> 0""".stripMargin) { (s, dir) =>
-      import java.nio.file.Paths
       val t = graft.Scratch.fresh("x21_table")
-      val in = graft.Scratch.fresh("x21_in")
       val ckpt = graft.Scratch.fresh("x21_ckpt")
       val o = Tables(s, dir).orders.select("o_orderkey", "o_custkey", "o_totalprice")
       graft.operators.SnapshotTable.commit(s, t, o.coalesce(2))
       val filesBefore = graft.operators.SnapshotTable.filesOf(t)
       val dead = o.filter(col("o_orderkey") % 7 === 0).select("o_orderkey")
-      (0 until 3).foreach { i =>
-        graft.Scratch.writeSingleParquet(dead.filter(col("o_orderkey") % 3 === i),
-          Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = StreamingMorDeletes.start(s, in, dead.schema, "o_orderkey", t, ckpt,
-        maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      val in = graft.Scratch.shards("x21_in",
+        (0 until 3).map(i => dead.filter(col("o_orderkey") % 3 === i)))
+      StreamingMorDeletes.start(s, in, dead.schema, "o_orderkey", t, ckpt)
+        .awaitTermination()
       require(graft.operators.SnapshotTable.filesOf(t) == filesBefore,
         "streaming MoR delete must not rewrite data files")
       graft.operators.SnapshotDv.readMor(s, t).orderBy("o_orderkey")
@@ -267,20 +237,13 @@ object StreamingGates {
         |SELECT '__total' AS key, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM events""".stripMargin) { (s, dir) =>
-      import java.nio.file.Paths
-      val in = graft.Scratch.fresh("x19_in")
       val root = graft.Scratch.fresh("x19_txn")
       val ckpt = graft.Scratch.fresh("x19_ckpt")
       val ev = Tables(s, dir).events.select("event_type", "value", "event_id")
-      (0 until 3).foreach { i =>
-        graft.Scratch.writeSingleParquet(
-          ev.filter(col("event_id") % 3 === i).select("event_type", "value"),
-          Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = StreamingTxnIngest.start(s, in,
-        ev.select("event_type", "value").schema, "event_type", "value",
-        root, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      val in = graft.Scratch.shards("x19_in", (0 until 3).map(i =>
+        ev.filter(col("event_id") % 3 === i).select("event_type", "value")))
+      StreamingTxnIngest.start(s, in, ev.select("event_type", "value").schema,
+        "event_type", "value", root, ckpt).awaitTermination()
       StreamingTxnIngest.current(s, root).orderBy("key")
     },
 
@@ -294,18 +257,13 @@ object StreamingGates {
       // X17: scoring from the streamed index ≡ the batch t20 formula
       ("WITH " + graft.operators.LlmOps.bm25OracleSql("documents",
         Seq("dup", "merge", "vector", "spark", "quantum"), 50))) { (s, dir) =>
-      import java.nio.file.Paths
-      val in = graft.Scratch.fresh("x17_in")
       val root = graft.Scratch.fresh("x17_idx")
       val ckpt = graft.Scratch.fresh("x17_ckpt")
       val docs = Tables(s, dir).documents.select(col("doc_id"), col("text"))
-      (0 until 3).foreach { i =>
-        graft.Scratch.writeSingleParquet(docs.filter(col("doc_id") % 3 === i),
-          Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = StreamingSearchIndex.start(s, in, docs.schema, "text", "doc_id",
-        root, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      val in = graft.Scratch.shards("x17_in",
+        (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i)))
+      StreamingSearchIndex.start(s, in, docs.schema, "text", "doc_id", root, ckpt)
+        .awaitTermination()
       StreamingSearchIndex.search(s, root, "doc_id",
         Seq("dup", "merge", "vector", "spark", "quantum"), k = 50)
     },
@@ -344,9 +302,7 @@ object StreamingGates {
       graft.operators.SnapshotTable.merge(s, src, upd.unionByName(del), Seq("o_orderkey"))
       graft.operators.SnapshotTable.commit(s, src,
         o.filter(col("o_orderkey") % 2 === 1), mode = graft.operators.SnapshotTable.Append)
-      val q = SnapshotTailStream.start(s, src, Seq("o_orderkey"), dst, ckpt,
-        maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      SnapshotTailStream.start(s, src, Seq("o_orderkey"), dst, ckpt).awaitTermination()
       require(graft.operators.SnapshotTable.versions(dst).size == 3,
         "tail must fold one destination version per source version")
       graft.operators.SnapshotTable.read(s, dst).orderBy("o_orderkey")
@@ -363,43 +319,8 @@ object StreamingGates {
     Gate("x23_stream_corpus",
       // X23: identical first-arrival replay to the batch p14 oracle — the
       // streaming transport must be invisible in the corpus content
-      """WITH all_docs AS (
-        |  SELECT doc_id, lang, source, n_chars, text,
-        |    CASE WHEN doc_id % 3 <> 2 THEN 0 ELSE 1 END AS b
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 <> 2 AND doc_id % 7 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, lang, source, n_chars, text, 1
-        |  FROM documents WHERE doc_id % 3 = 2 AND doc_id % 5 = 0
-        |),
-        |ranked AS (
-        |  SELECT doc_id, lang, source, n_chars, md5(text) AS content_hash,
-        |    row_number() OVER (PARTITION BY md5(text) ORDER BY b, doc_id) AS rn
-        |  FROM all_docs
-        |)
-        |SELECT doc_id, lang, source, n_chars, content_hash
-        |FROM ranked WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import java.nio.file.Paths
-      val t = graft.Scratch.fresh("x23_corpus")
-      val in = graft.Scratch.fresh("x23_in")
-      val ckpt = graft.Scratch.fresh("x23_ckpt")
-      val docs = Tables(s, dir).documents
-        .select("doc_id", "lang", "source", "n_chars", "text")
-      val batch1 = docs.filter(col("doc_id") % 3 =!= 2)
-      val recrawl = batch1.filter(col("doc_id") % 7 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      val batch2core = docs.filter(col("doc_id") % 3 === 2)
-      val inBatchDup = batch2core.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 2000000L)
-      graft.operators.IncrementalCorpus.bootstrap(s, t, batch1, "text", "doc_id")
-      Seq(batch2core, recrawl, inBatchDup).zipWithIndex.foreach { case (df, i) =>
-        graft.Scratch.writeSingleParquet(df, Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      val q = StreamingCorpusRefresh.start(s, in, batch2core.schema,
-        "text", "doc_id", t, ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      graft.operators.LlmOps.p14OracleSql) { (s, dir) =>
+      val t = streamCrawl(s, dir, "x23")
       require(graft.operators.SnapshotTable.versions(t) == Seq(1L, 2L),
         "only the novel shard may land a corpus version")
       graft.operators.SnapshotTable.read(s, t)
@@ -446,9 +367,8 @@ object StreamingGates {
       graft.operators.SnapshotTable.merge(s, base, upd.unionByName(del), Seq("o_orderkey"))
       graft.operators.SnapshotTable.commit(s, base,
         o.filter(col("o_orderkey") % 2 === 1), mode = graft.operators.SnapshotTable.Append)
-      val q = SnapshotIvmTail.start(s, base, mv, Seq("o_orderkey"),
-        Seq("o_orderstatus"), Seq("price"), ckpt, maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      SnapshotIvmTail.start(s, base, mv, Seq("o_orderkey"),
+        Seq("o_orderstatus"), Seq("price"), ckpt).awaitTermination()
       require(graft.operators.SnapshotTable.versions(mv).size == 3 &&
         graft.operators.SnapshotIvm.reflectedVersion(mv) == 3L,
         "tail must advance the MV one base version per batch to v3")
@@ -490,28 +410,10 @@ object StreamingGates {
         graft.operators.LlmOps.bm25OracleSql("corpus",
           Seq("dup", "merge", "vector", "spark", "quantum"), 50)
     }) { (s, dir) =>
-      import java.nio.file.Paths
-      val t = graft.Scratch.fresh("x25_corpus")
-      val in = graft.Scratch.fresh("x25_in")
-      val ckpt1 = graft.Scratch.fresh("x25_ckpt1")
+      val t = streamCrawl(s, dir, "x25")
       val idx = graft.Scratch.fresh("x25_idx")
-      val ckpt2 = graft.Scratch.fresh("x25_ckpt2")
-      val docs = Tables(s, dir).documents
-        .select("doc_id", "lang", "source", "n_chars", "text")
-      val batch1 = docs.filter(col("doc_id") % 3 =!= 2)
-      val recrawl = batch1.filter(col("doc_id") % 7 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      val batch2core = docs.filter(col("doc_id") % 3 === 2)
-      val inBatchDup = batch2core.filter(col("doc_id") % 5 === 0)
-        .withColumn("doc_id", col("doc_id") + 2000000L)
-      graft.operators.IncrementalCorpus.bootstrap(s, t, batch1, "text", "doc_id")
-      Seq(batch2core, recrawl, inBatchDup).zipWithIndex.foreach { case (df, i) =>
-        graft.Scratch.writeSingleParquet(df, Paths.get(in, f"shard-$i%05d.parquet"))
-      }
-      StreamingCorpusRefresh.start(s, in, batch2core.schema,
-        "text", "doc_id", t, ckpt1, maxFilesPerTrigger = 1).awaitTermination()
-      SearchIndexTail.start(s, t, "text", "doc_id", idx, ckpt2,
-        maxFilesPerTrigger = 1).awaitTermination()
+      SearchIndexTail.start(s, t, "text", "doc_id", idx,
+        graft.Scratch.fresh("x25_tail_ckpt")).awaitTermination()
       StreamingSearchIndex.search(s, idx, "doc_id",
         Seq("dup", "merge", "vector", "spark", "quantum"), k = 50)
     },
@@ -536,4 +438,16 @@ object StreamingGates {
     }
   )
 
+  /** x23/x25's crawl loop: bootstrap the corpus `<name>_corpus` from P14's
+    * batch 1, then stream the second crawl's three parts into it as three
+    * shards, one per micro-batch. Returns the corpus table. */
+  private def streamCrawl(s: SparkSession, dir: String, name: String): String = {
+    val t = graft.Scratch.fresh(s"${name}_corpus")
+    val (batch1, crawl2) = graft.operators.LlmOps.plantedCrawl(s, dir)
+    graft.operators.IncrementalCorpus.bootstrap(s, t, batch1, "text", "doc_id")
+    StreamingCorpusRefresh.start(s, graft.Scratch.shards(s"${name}_in", crawl2),
+      crawl2.head.schema, "text", "doc_id", t,
+      graft.Scratch.fresh(s"${name}_ckpt")).awaitTermination()
+    t
+  }
 }

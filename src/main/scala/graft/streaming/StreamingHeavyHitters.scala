@@ -4,7 +4,7 @@ import graft.functions.{FrequentItems, MisraGries}
 import graft.operators.SnapshotTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X16: streaming heavy hitters — R46's Misra–Gries summary maintained
@@ -77,20 +77,10 @@ object StreamingHeavyHitters {
     * summary state at `stateTable` per micro-batch. */
   def start(spark: SparkSession, inDir: String, schema: StructType,
       keyCol: String, capacity: Int, stateTable: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, id, keyCol, capacity, stateTable, ns)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, keyCol, capacity, stateTable, ns)
+    }
 
   /** R46's deterministic finish over the live state: exact counts of the
     * state's candidates in `corpus`, strictly above n_total/(capacity+1)

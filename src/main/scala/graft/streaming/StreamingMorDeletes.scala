@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.SnapshotDv
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X21: streaming merge-on-read deletes (R53 × X13) — delete requests
@@ -29,19 +29,8 @@ object StreamingMorDeletes {
 
   /** Watch `inDir` for parquet shards of delete keys (`keyCol`). */
   def start(spark: SparkSession, inDir: String, schema: StructType,
-      keyCol: String, table: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, keyCol, table, ns)
-      }
-      .start()
-  }
+      keyCol: String, table: String, checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, keyCol, table, ns)
+    }
 }

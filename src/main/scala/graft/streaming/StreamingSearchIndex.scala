@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.{Search, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X17: streaming full-text index maintenance (T20 × R40 × X13) — document
@@ -52,20 +52,10 @@ object StreamingSearchIndex {
   /** Watch `inDir` for parquet document shards; maintain the index. */
   def start(spark: SparkSession, inDir: String, schema: StructType,
       textCol: String, idCol: String, indexRoot: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, id, textCol, idCol, indexRoot, ns)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, textCol, idCol, indexRoot, ns)
+    }
 
   /** T20 scoring from the maintained state — ≡ `Search.bm25TopK` over the
     * union of every ingested batch, by construction (same scoring tail). */

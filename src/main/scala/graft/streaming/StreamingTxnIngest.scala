@@ -3,7 +3,7 @@ package graft.streaming
 import graft.operators.SnapshotTxn
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataTypes, StructType}
 
 /** X19: exactly-once streaming ingest across MULTIPLE tables — X13's
@@ -66,21 +66,11 @@ object StreamingTxnIngest {
   /** Watch `inDir` for parquet shards; maintain the transactional rollup
     * state under `root` per micro-batch. */
   def start(spark: SparkSession, inDir: String, schema: StructType,
-      keyCol: String, valCol: String, root: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, keyCol, valCol, root, namespace = ns)
-      }
-      .start()
-  }
+      keyCol: String, valCol: String, root: String,
+      checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, keyCol, valCol, root, namespace = ns)
+    }
 
   /** The state at one consistent cut (default: latest txn): per-key rows
     * plus a `__total` summary row, every number from the SAME txn. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{EditJoin, SnapshotTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X27: streaming fuzzy-index maintenance (W36 × X13) — label changesets
@@ -22,17 +22,6 @@ import org.apache.spark.sql.types.StructType
   * so — the X18 training/ingestion split, with re-clustering in the
   * training role. */
 object StreamingVariantIngest {
-
-  /** Idempotency-tag namespace for one streaming query, derived from its
-    * checkpoint location. Bare batch ids collide across queries: two
-    * streams (or one restarted with a FRESH checkpoint, whose batch ids
-    * restart at 0) maintaining the same index table would alias tags and
-    * silently skip legitimate batches. The checkpoint path is exactly the
-    * identity that matches batch-id semantics — same checkpoint ⇒ ids
-    * continue (replay dedup must hold), fresh checkpoint ⇒ new id space
-    * (tags must not collide). */
-  def namespaceFor(checkpointDir: String): String =
-    BatchTags.namespace(checkpointDir)
 
   /** One micro-batch of (id, label) rows: Append the variant delta,
     * tagged `namespace#batchId`. hasTag, not latest-tag: a foreign commit
@@ -54,18 +43,8 @@ object StreamingVariantIngest {
     * [[EditJoin.saveIndex]]). */
   def start(spark: SparkSession, inDir: String, schema: StructType,
       idCol: String, strCol: String, indexTable: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val ns = namespaceFor(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyBatch(spark, batch, id, idCol, strCol, indexTable, ns)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, idCol, strCol, indexTable, ns)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.{SnapshotTable, WebIntake}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** X26: the P17 web-intake chain as a stream — crawl shards (url, text)
@@ -38,21 +38,11 @@ object WebIntakeStream {
   /** Watch `inDir` for parquet crawl shards carrying (url, text). */
   def start(spark: SparkSession, inDir: String, schema: StructType,
       urlCol: String, textCol: String, idCol: String, table: String,
-      checkpointDir: String, minWords: Int = 15,
-      maxFilesPerTrigger: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      checkpointDir: String, minWords: Int = 15): StreamingQuery = {
     require(SnapshotTable.latestVersion(table).nonEmpty,
       s"bootstrap $table before tailing crawl shards into it")
-    val ns = BatchTags.namespace(checkpointDir)
-    val reader = spark.readStream.schema(schema)
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    reader.parquet(inDir).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, b, id, table, urlCol, textCol, idCol, minWords, ns)
-      }
-      .start()
+    BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
+      applyBatch(spark, b, id, table, urlCol, textCol, idCol, minWords, ns)
+    }
   }
 }

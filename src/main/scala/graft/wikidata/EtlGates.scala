@@ -40,16 +40,9 @@ object EtlGates {
   private def tables(s: SparkSession): WikidataTables =
     WikidataEtl.run(DumpReader.read(s, dumpPath), cache = false)
 
-  /** Split the lines of `path` into two shard files in `dir` (the stream
-    * gates drain one per micro-batch); returns the lines. */
-  private def shardInTwo(path: String, dir: String): Seq[String] = {
-    import java.nio.file.{Files, Paths}
+  private def linesOf(path: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val lines = Files.readAllLines(Paths.get(path)).asScala.toSeq
-    lines.grouped((lines.size + 1) / 2).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(Paths.get(dir, f"shard-$i%05d.jsonl"), chunk.mkString("\n").getBytes("UTF-8"))
-    }
-    lines
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala.toSeq
   }
 
   def gates: Seq[Gate] = Seq(
@@ -58,12 +51,7 @@ object EtlGates {
     // database, read `meta` back over JDBC and gate it against the same
     // DuckDB oracle as the direct path (SQLite itself stays waived: no
     // SQLite JDBC driver exists in the zero-egress container).
-    Gate("w13_jdbc_roundtrip",
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
+    Gate("w13_jdbc_roundtrip", metaOracleFor(dumpPath)) { (s, _) =>
       val db  = s"memory:graftgate${java.util.UUID.randomUUID().toString.take(8)}"
       val url = s"jdbc:derby:$db;create=true"
       JdbcSink.writeTables(tables(s), url)
@@ -74,19 +62,10 @@ object EtlGates {
     // mini-dump into a fresh watched dir, drain it with AvailableNow, read
     // the streamed `meta` table back and gate against the same oracle:
     // streaming and batch routing cannot drift without failing the hash.
-    Gate("x3_stream_etl",
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
-      import java.nio.file.{Files, Paths}
-      val in   = graft.Scratch.fresh("x3_in")
-      val out  = graft.Scratch.fresh("x3_out")
-      val ckpt = graft.Scratch.fresh("x3_ckpt")
-      Files.copy(Paths.get(dumpPath), Paths.get(in, "shard-00000.jsonl"))
-      val q = graft.streaming.EtlStream.start(s, in, out, ckpt)
-      q.awaitTermination()
+    Gate("x3_stream_etl", metaOracleFor(dumpPath)) { (s, _) =>
+      val out = graft.Scratch.fresh("x3_out")
+      graft.streaming.EtlStream.start(s, graft.Scratch.shards("x3_in", linesOf(dumpPath), 1),
+        out, graft.Scratch.fresh("x3_ckpt")).awaitTermination()
       s.read.parquet(s"$out/meta")
     },
     // W12: the partitioned parquet sink, driver-visible — ETL the mini-dump,
@@ -158,12 +137,7 @@ object EtlGates {
       next.unpersist() // single-consumer gate: the shared delta cache is idle
       next.string
     },
-    Gate("w22_incremental_meta",
-      s"""${corePrefixMetaFor(dumpV2Path)}
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
+    Gate("w22_incremental_meta", metaOracleFor(dumpV2Path)) { (s, _) =>
       val base = graft.Scratch.fresh("w22m_base")
       WikidataEtl.runFile(s, dumpPath, base)
       val next = IncrementalEtl.applyFile(s, base, changesetPath)
@@ -214,21 +188,14 @@ object EtlGates {
     Gate("x12_stream_incremental",
       // X12 converges to the same state as W22 — same v2 full-rebuild oracle,
       // reached through sharded micro-batches + snapshot commits instead
-      s"""${corePrefixMetaFor(dumpV2Path)}
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
-      val in   = graft.Scratch.fresh("x12_in")
+      metaOracleFor(dumpV2Path)) { (s, _) =>
       val root = graft.Scratch.fresh("x12_tables")
-      val ckpt = graft.Scratch.fresh("x12_ckpt")
       val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath), cache = true)
       graft.streaming.IncrementalEtlStream.bootstrap(s, root, v1)
       v1.unpersist()
-      shardInTwo(changesetPath, in)
-      val q = graft.streaming.IncrementalEtlStream.start(s, in, root, ckpt,
-        maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      graft.streaming.IncrementalEtlStream.start(s,
+        graft.Scratch.shards("x12_in", linesOf(changesetPath), 2), root,
+        graft.Scratch.fresh("x12_ckpt")).awaitTermination()
       graft.operators.SnapshotTable.read(s, s"$root/meta")
     },
     // X29: the X12 refresh loop over the COMPLETE 13-table surface — W55's
@@ -243,16 +210,13 @@ object EtlGates {
       // streaming LWW apply, its batch boundaries and the revision guard
       // are all invisible; only a correct 13-table streamed apply matches.
       aliasesOracleFor(dumpV2Path)) { (s, _) =>
-      val in   = graft.Scratch.fresh("x29_in")
       val root = graft.Scratch.fresh("x29_tables")
-      val ckpt = graft.Scratch.fresh("x29_ckpt")
       val v1 = WikidataEtl.run(DumpReader.read(s, dumpPath, Surface.Full), cache = true)
       graft.streaming.IncrementalEtlStream.bootstrap(s, root, v1)
       v1.unpersist()
-      shardInTwo(changesetPath, in)
-      val q = graft.streaming.IncrementalEtlStream.start(s, in, root, ckpt,
-        maxFilesPerTrigger = 1, surface = Surface.Full)
-      q.awaitTermination()
+      graft.streaming.IncrementalEtlStream.start(s,
+        graft.Scratch.shards("x29_in", linesOf(changesetPath), 2), root,
+        graft.Scratch.fresh("x29_ckpt"), Surface.Full).awaitTermination()
       graft.operators.SnapshotTable.read(s, s"$root/aliases")
     },
     // X30: the W56 fuzzy ANY-name index maintained INSIDE the X29 refresh
@@ -268,7 +232,6 @@ object EtlGates {
       // boundaries, tags and the revision guard are all invisible.
       anyNameFuzzyOracleFor(dumpV2Path)) { (s, _) =>
       import org.apache.spark.sql.functions.min
-      val in   = graft.Scratch.fresh("x30_in")
       val root = graft.Scratch.fresh("x30_tables")
       val ckpt = graft.Scratch.fresh("x30_ckpt")
       val idx  = graft.Scratch.fresh("x30_index")
@@ -277,11 +240,11 @@ object EtlGates {
       graft.operators.EditJoin.saveIndex(s, idx, QueryApi(v1).anyNames,
         "id", "name", files = 32)
       v1.unpersist()
-      val lines = shardInTwo(changesetPath, in)
+      val lines = linesOf(changesetPath)
       val half = (lines.size + 1) / 2
-      val q = graft.streaming.IncrementalEtlStream.start(s, in, root, ckpt,
-        maxFilesPerTrigger = 1, surface = Surface.Full, anyNameIndex = Some(idx))
-      q.awaitTermination()
+      graft.streaming.IncrementalEtlStream.start(s,
+        graft.Scratch.shards("x30_in", lines, 2), root, ckpt, Surface.Full,
+        anyNameIndex = Some(idx)).awaitTermination()
       // replaying a consumed batch moves neither the tables nor the index
       val vIdx = graft.operators.SnapshotTable.latestVersion(idx)
       val vMeta = graft.operators.SnapshotTable.latestVersion(s"$root/meta")
@@ -311,18 +274,11 @@ object EtlGates {
     // repair are EtlSnapshotStreamSpec's.
     Gate("x13_stream_snapshot",
       // X13 publishes the same derivation through tagged snapshot commits
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
-      val in   = graft.Scratch.fresh("x13_in")
+      metaOracleFor(dumpPath)) { (s, _) =>
       val root = graft.Scratch.fresh("x13_tables")
-      val ckpt = graft.Scratch.fresh("x13_ckpt")
-      shardInTwo(dumpPath, in)
-      val q = graft.streaming.EtlStream.startSnapshot(s, in, root, ckpt,
-        maxFilesPerTrigger = 1)
-      q.awaitTermination()
+      graft.streaming.EtlStream.startSnapshot(s,
+        graft.Scratch.shards("x13_in", linesOf(dumpPath), 2), root,
+        graft.Scratch.fresh("x13_ckpt")).awaitTermination()
       graft.operators.SnapshotTable.read(s, s"$root/meta")
     },
     // X28: X13's exactly-once publication over the COMPLETE 13-table
@@ -339,13 +295,10 @@ object EtlGates {
       // X28: the identical w52 derivation — sharding, micro-batch
       // boundaries and the snapshot publication protocol are invisible.
       aliasesOracleFor(dumpPath)) { (s, _) =>
-      val in   = graft.Scratch.fresh("x28_in")
       val root = graft.Scratch.fresh("x28_tables")
-      val ckpt = graft.Scratch.fresh("x28_ckpt")
-      shardInTwo(dumpPath, in)
-      val q = graft.streaming.EtlStream.startSnapshot(s, in, root, ckpt,
-        maxFilesPerTrigger = 1, surface = Surface.Full)
-      q.awaitTermination()
+      graft.streaming.EtlStream.startSnapshot(s,
+        graft.Scratch.shards("x28_in", linesOf(dumpPath), 2), root,
+        graft.Scratch.fresh("x28_ckpt"), Surface.Full).awaitTermination()
       // all 13 surfaces must have been published and batch-tagged
       Surface.Full.tableNames.foreach { n =>
         require(graft.operators.SnapshotTable.tagOf(s"$root/$n").isDefined,
@@ -676,15 +629,10 @@ object EtlGates {
     Gate("w50_compressed_dump",
       // W50: the identical w4 derivation over the UNCOMPRESSED file — the
       // Spark side read gz+bz2 shards; compression must be byte-invisible
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin) { (s, _) =>
+      metaOracleFor(dumpPath)) { (s, _) =>
       import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       val dir = graft.Scratch.fresh("w50_dump")
-      val lines = Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq
+      val lines = linesOf(dumpPath)
       val half = (lines.size + 1) / 2
       def write(name: String, chunk: Seq[String],
           wrap: java.io.OutputStream => java.io.OutputStream): Unit = {
@@ -876,11 +824,7 @@ object EtlGates {
       WikidataEtl.propertyCooccurrence(DumpReader.read(s, dumpPath))
     },
     Gate("w4_etl_meta",
-      s"""$corePrefixMeta
-         |SELECT id,
-         |  e->>'$$.labels.en.value' AS label,
-         |  e->>'$$.descriptions.en.value' AS description
-         |FROM encoded WHERE id IS NOT NULL""".stripMargin)((s, _) => tables(s).meta),
+      metaOracleFor(dumpPath))((s, _) => tables(s).meta),
     Gate("w6_etl_string", stringOracle)((s, _) => tables(s).string),
     Gate("w7_etl_entity", entityOracle)((s, _) => tables(s).entity),
     Gate("w8_etl_coordinates",
@@ -1257,6 +1201,14 @@ object EtlGates {
        |)
        |SELECT id, language, a->>'$$.value' AS alias FROM al
        |WHERE a->>'$$.value' IS NOT NULL""".stripMargin
+
+  /** The `meta` table re-derived from the dump at `path` (W4's oracle). */
+  private def metaOracleFor(path: String): String =
+    s"""${corePrefixMetaFor(path)}
+       |SELECT id,
+       |  e->>'$$.labels.en.value' AS label,
+       |  e->>'$$.descriptions.en.value' AS description
+       |FROM encoded WHERE id IS NOT NULL""".stripMargin
 
   /** Meta needs the entity-level CTEs only (no claim explode). */
   private def corePrefixMetaFor(path: String): String = {

@@ -17,29 +17,23 @@ class CrashRecoverySpec extends SparkSpec {
   import spark.implicits._
 
   /** Three one-file micro-batches of CDC changes: inserts, updates (as U
-    * with a newer seq), deletes. */
-  private def writeCdcFiles(watch: String): org.apache.spark.sql.types.StructType = {
+    * with a newer seq), deletes. Returns the watched dir and their schema. */
+  private def landCdcShards(): (String, org.apache.spark.sql.types.StructType) = {
     val base = (1L to 40L).map(k => (k, k * 10.0, "I", 1L)).toDF("k", "v", "op", "seq")
     val upd = (1L to 40L).filter(_ % 3 == 0).map(k => (k, k * 10.0 + 5, "U", 2L))
       .toDF("k", "v", "op", "seq")
     val del = (1L to 40L).filter(_ % 5 == 0).map(k => (k, 0.0, "D", 3L))
       .toDF("k", "v", "op", "seq")
-    base.coalesce(1).write.mode("append").parquet(watch)
-    upd.coalesce(1).write.mode("append").parquet(watch)
-    del.coalesce(1).write.mode("append").parquet(watch)
-    base.schema
+    (graft.Scratch.shards("crash_cdc_in", Seq(base, upd, del)), base.schema)
   }
 
   test("X8 CDC state survives a crash between state write and checkpoint commit") {
-    val watch = graft.Scratch.fresh("crash_cdc_in")
     val refState = graft.Scratch.fresh("crash_cdc_ref")
     val crashState = graft.Scratch.fresh("crash_cdc_crash")
-    val schema = writeCdcFiles(watch)
-    def src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(watch)
+    val (watch, schema) = landCdcShards()
 
     // reference: the no-crash run
-    EventStreams.cdcApplyStream(spark, src, Seq("k"), "seq", refState, nBuckets = 4)
+    EventStreams.cdcApplyStream(spark, watch, schema, Seq("k"), "seq", refState, nBuckets = 4)
       .awaitTermination()
     val ref = EventStreams.cdcCurrent(spark, refState)
       .orderBy("k").collect().toSeq
@@ -47,7 +41,7 @@ class CrashRecoverySpec extends SparkSpec {
     // crash run: die AFTER batch 1's v1 dir is written, BEFORE its
     // checkpoint commit — the exact window the replay contract covers
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val q = EventStreams.cdcApplyStream(spark, src, Seq("k"), "seq", crashState,
+    val q = EventStreams.cdcApplyStream(spark, watch, schema, Seq("k"), "seq", crashState,
       nBuckets = 4,
       afterBatch = id => if (id == 1 && !crashed.getAndSet(true))
         sys.error("injected crash: state written, checkpoint not committed"))
@@ -57,7 +51,7 @@ class CrashRecoverySpec extends SparkSpec {
 
     // restart from the same checkpoint: batch 1 is redelivered
     // (at-least-once), v1 is rebuilt, batch 2 follows
-    EventStreams.cdcApplyStream(spark, src, Seq("k"), "seq", crashState, nBuckets = 4)
+    EventStreams.cdcApplyStream(spark, watch, schema, Seq("k"), "seq", crashState, nBuckets = 4)
       .awaitTermination()
     val recovered = EventStreams.cdcCurrent(spark, crashState)
       .orderBy("k").collect().toSeq
@@ -65,7 +59,6 @@ class CrashRecoverySpec extends SparkSpec {
   }
 
   test("X9 IVM rollup survives a crash between state write and checkpoint commit") {
-    val watch = graft.Scratch.fresh("crash_ivm_in")
     val refState = graft.Scratch.fresh("crash_ivm_ref")
     val crashState = graft.Scratch.fresh("crash_ivm_crash")
     // X9 changes: I/D only, updates arrive as D-old + I-new
@@ -82,25 +75,22 @@ class CrashRecoverySpec extends SparkSpec {
     val del = dec((1L to 40L).filter(_ % 5 == 0)
       .map(k => (s"g${k % 4}", if (k % 3 == 0) k * 1.0 + 7 else k * 1.0, "D"))
       .toDF("g", "v", "op"))
-    base.coalesce(1).write.mode("append").parquet(watch)
-    updOld.unionByName(updNew).coalesce(1).write.mode("append").parquet(watch)
-    del.coalesce(1).write.mode("append").parquet(watch)
-    def src = spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", "1").parquet(watch)
+    val watch = graft.Scratch.shards("crash_ivm_in",
+      Seq(base, updOld.unionByName(updNew), del))
 
-    EventStreams.ivmApplyStream(spark, src, Seq("g"), "op", Seq("v"), refState)
+    EventStreams.ivmApplyStream(spark, watch, base.schema, Seq("g"), "op", Seq("v"), refState)
       .awaitTermination()
     val ref = EventStreams.ivmCurrent(spark, refState).orderBy("g").collect().toSeq
 
     val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val q = EventStreams.ivmApplyStream(spark, src, Seq("g"), "op", Seq("v"), crashState,
+    val q = EventStreams.ivmApplyStream(spark, watch, base.schema, Seq("g"), "op", Seq("v"), crashState,
       afterBatch = id => if (id == 1 && !crashed.getAndSet(true))
         sys.error("injected crash: state written, checkpoint not committed"))
     intercept[StreamingQueryException] { q.awaitTermination() }
     assert(new java.io.File(s"$crashState/v1").exists(),
       "crash must land after v1 was written")
 
-    EventStreams.ivmApplyStream(spark, src, Seq("g"), "op", Seq("v"), crashState)
+    EventStreams.ivmApplyStream(spark, watch, base.schema, Seq("g"), "op", Seq("v"), crashState)
       .awaitTermination()
     val recovered = EventStreams.ivmCurrent(spark, crashState).orderBy("g").collect().toSeq
     recovered shouldBe ref

@@ -21,16 +21,11 @@ class EtlSnapshotStreamSpec extends SparkSpec {
   test("sharded snapshot stream ≡ batch ETL; every table tagged with its last batch (X13)") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val in   = graft.Scratch.fresh("x13spec_in")
     val root = graft.Scratch.fresh("x13spec_tables")
     val ckpt = graft.Scratch.fresh("x13spec_ckpt")
-    val lines = Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq
-    val third = (lines.size + 2) / 3
-    lines.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-        chunk.mkString("\n").getBytes("UTF-8"))
-    }
-    EtlStream.startSnapshot(spark, in, root, ckpt, maxFilesPerTrigger = 1)
+    val in = graft.Scratch.shards("x13spec_in",
+      Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq, 3)
+    EtlStream.startSnapshot(spark, in, root, ckpt)
       .awaitTermination()
     val full = WikidataEtl.run(DumpReader.read(spark, dumpPath), cache = false)
     for ((name, df) <- full.byName) {
@@ -46,16 +41,11 @@ class EtlSnapshotStreamSpec extends SparkSpec {
   test("full-surface snapshot stream ≡ batch runFull on all 13 tables, each tagged (X28)") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val in   = graft.Scratch.fresh("x28spec_in")
     val root = graft.Scratch.fresh("x28spec_tables")
     val ckpt = graft.Scratch.fresh("x28spec_ckpt")
-    val lines = Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq
-    val third = (lines.size + 2) / 3
-    lines.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-        chunk.mkString("\n").getBytes("UTF-8"))
-    }
-    EtlStream.startSnapshot(spark, in, root, ckpt, maxFilesPerTrigger = 1,
+    val in = graft.Scratch.shards("x28spec_in",
+      Files.readAllLines(Paths.get(dumpPath)).asScala.toSeq, 3)
+    EtlStream.startSnapshot(spark, in, root, ckpt,
       surface = Surface.Full).awaitTermination()
     val full = WikidataEtl.run(DumpReader.read(spark, dumpPath, Surface.Full), cache = false)
     full.byName.keySet shouldBe Surface.Full.tableNames.toSet

@@ -58,19 +58,14 @@ class IncrementalEtlStreamSpec extends SparkSpec {
   test("sharded changeset stream converges to the v2 full rebuild, versions aligned") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val in   = graft.Scratch.fresh("x12spec_in")
     val root = graft.Scratch.fresh("x12spec_tables")
     val ckpt = graft.Scratch.fresh("x12spec_ckpt")
     val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path), cache = true)
     IncrementalEtlStream.bootstrap(spark, root, v1)
     v1.unpersist()
-    val lines = Files.readAllLines(Paths.get(csPath)).asScala.toSeq
-    val quarter = (lines.size + 3) / 4
-    lines.grouped(quarter).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-        chunk.mkString("\n").getBytes("UTF-8"))
-    }
-    IncrementalEtlStream.start(spark, in, root, ckpt, maxFilesPerTrigger = 1)
+    val in = graft.Scratch.shards("x12spec_in",
+      Files.readAllLines(Paths.get(csPath)).asScala.toSeq, 4)
+    IncrementalEtlStream.start(spark, in, root, ckpt)
       .awaitTermination()
     val full = WikidataEtl.run(DumpReader.read(spark, v2Path), cache = false)
     for ((name, df) <- full.byName) {
@@ -140,19 +135,14 @@ class IncrementalEtlStreamSpec extends SparkSpec {
   test("full-surface sharded stream converges to the v2 13-table rebuild (X29)") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val in   = graft.Scratch.fresh("x29spec_in")
     val root = graft.Scratch.fresh("x29spec_tables")
     val ckpt = graft.Scratch.fresh("x29spec_ckpt")
     val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path, Surface.Full), cache = true)
     IncrementalEtlStream.bootstrap(spark, root, v1)
     v1.unpersist()
-    val lines = Files.readAllLines(Paths.get(csPath)).asScala.toSeq
-    val third = (lines.size + 2) / 3
-    lines.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      Files.write(Paths.get(in, f"shard-$i%05d.jsonl"),
-        chunk.mkString("\n").getBytes("UTF-8"))
-    }
-    IncrementalEtlStream.start(spark, in, root, ckpt, maxFilesPerTrigger = 1,
+    val in = graft.Scratch.shards("x29spec_in",
+      Files.readAllLines(Paths.get(csPath)).asScala.toSeq, 3)
+    IncrementalEtlStream.start(spark, in, root, ckpt,
       surface = Surface.Full).awaitTermination()
     val full = WikidataEtl.run(DumpReader.read(spark, v2Path, Surface.Full), cache = false)
     full.byName.keySet shouldBe Surface.Full.tableNames.toSet

@@ -43,19 +43,12 @@ class SnapshotIvmStreamSpec extends SparkSpec {
   private def recompute(base: String): Map[String, Int] =
     content(IncrementalAgg.sumState(SnapshotTable.read(spark, base), groups, sums))
 
-  private def writeShards(in: String, order: Seq[Int]): Unit =
-    order.zipWithIndex.foreach { case (sh, i) =>
-      graft.Scratch.writeSingleParquet(shard(sh),
-        java.nio.file.Paths.get(in, f"shard-$i%05d.parquet"))
-    }
-
   test("3-shard stream ≡ recompute over the merged base; MV tag tracks base (X15)") {
     val (base, mv) = mkBase("x15s_run")
-    val in = graft.Scratch.fresh("x15s_run_in")
+    val in = graft.Scratch.shards("x15s_run_in", Seq(0, 1, 2).map(shard))
     val ckpt = graft.Scratch.fresh("x15s_run_ckpt")
-    writeShards(in, Seq(0, 1, 2))
     SnapshotIvmStream.start(spark, in, base, mv, ckpt, shard(0).schema,
-      keys, groups, sums, maxFilesPerTrigger = 1).awaitTermination()
+      keys, groups, sums).awaitTermination()
     SnapshotTable.latestVersion(base) shouldBe Some(4L) // bootstrap + 3 merges
     content(SnapshotTable.read(spark, mv)) shouldBe recompute(base)
     SnapshotIvm.reflectedVersion(mv) shouldBe 4L

@@ -71,7 +71,7 @@ class SnapshotIvmTailSpec extends SparkSpec {
     val mv = graft.Scratch.fresh("ivmtail_e2e_mv")
     val ckpt = graft.Scratch.fresh("ivmtail_e2e_ckpt")
     SnapshotIvmTail.start(spark, base, mv, Seq("k"), Seq("g"), Seq("v"),
-      ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      ckpt).awaitTermination()
     SnapshotTable.versions(mv) shouldBe Seq(1L, 2L, 3L)
     rollup(mv) shouldBe recompute(base)
   }

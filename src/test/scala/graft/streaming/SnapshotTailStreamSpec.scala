@@ -34,7 +34,7 @@ class SnapshotTailStreamSpec extends SparkSpec {
     val src = history("tail_e2e")
     val dst = graft.Scratch.fresh("tail_e2e_dst")
     val ckpt = graft.Scratch.fresh("tail_e2e_ckpt")
-    SnapshotTailStream.start(spark, src, Seq("k"), dst, ckpt, maxFilesPerTrigger = 1)
+    SnapshotTailStream.start(spark, src, Seq("k"), dst, ckpt)
       .awaitTermination()
     SnapshotTable.versions(dst) shouldBe Seq(1L, 2L, 3L)
     content(dst) shouldBe content(src)

@@ -71,8 +71,8 @@ class StreamingVariantIngestSpec extends SparkSpec {
     // second query's first batch would be silently dropped
     val t = graft.Scratch.fresh("x27spec_ns")
     EditJoin.saveIndex(spark, t, df(base), "id", "lbl", files = 8)
-    val ns1 = StreamingVariantIngest.namespaceFor(graft.Scratch.fresh("x27spec_ck1"))
-    val ns2 = StreamingVariantIngest.namespaceFor(graft.Scratch.fresh("x27spec_ck2"))
+    val ns1 = BatchTags.namespace(graft.Scratch.fresh("x27spec_ck1"))
+    val ns2 = BatchTags.namespace(graft.Scratch.fresh("x27spec_ck2"))
     ns1 should not be ns2
     StreamingVariantIngest.applyBatch(spark, df(incoming.take(30)), 0L, "id", "lbl", t, ns1)
     val v1 = SnapshotTable.latestVersion(t).get
@@ -89,15 +89,29 @@ class StreamingVariantIngestSpec extends SparkSpec {
   test("streamed maintenance through the file source ≡ rebuild (X27)") {
     val t = graft.Scratch.fresh("x27spec_stream")
     EditJoin.saveIndex(spark, t, df(base), "id", "lbl", files = 8)
-    val in = graft.Scratch.fresh("x27spec_in")
+    val in = graft.Scratch.shards("x27spec_in", incoming.grouped(25).map(df).toSeq)
     val ckpt = graft.Scratch.fresh("x27spec_ckpt")
-    incoming.grouped(25).foreach(b =>
-      df(b).coalesce(1).write.mode("append").parquet(in))
-    val q = StreamingVariantIngest.start(spark, in, df(incoming).schema,
-      "id", "lbl", t, ckpt, maxFilesPerTrigger = 1)
-    q.awaitTermination()
+    StreamingVariantIngest.start(spark, in, df(incoming).schema,
+      "id", "lbl", t, ckpt).awaitTermination()
     val t2 = graft.Scratch.fresh("x27spec_rebuilt")
     EditJoin.saveIndex(spark, t2, df(current), "id", "lbl", files = 8)
     for (term <- probes) answers(t, term) shouldBe answers(t2, term)
+  }
+
+  test("two start runs on fresh checkpoints over one table both land (X27)") {
+    // the namespace law through `start`: each run's batch ids restart at
+    // 0 and its shard files are named shard-00000… again, so only the
+    // checkpoint-derived tag namespace keeps the second run's batches from
+    // being skipped as replays of the first run's
+    val t = graft.Scratch.fresh("x27spec_runs")
+    EditJoin.saveIndex(spark, t, df(base), "id", "lbl", files = 8)
+    val v0 = SnapshotTable.latestVersion(t).get
+    for ((rows, run) <- Seq(incoming.take(30), incoming.drop(30)).zipWithIndex) {
+      val in = graft.Scratch.shards(s"x27spec_runs_in$run", rows.grouped(15).map(df).toSeq)
+      StreamingVariantIngest.start(spark, in, df(incoming).schema, "id", "lbl", t,
+        graft.Scratch.fresh(s"x27spec_runs_ckpt$run")).awaitTermination()
+    }
+    SnapshotTable.latestVersion(t) shouldBe Some(v0 + 4) // 2 runs × 2 shards
+    for (term <- probes) answers(t, term) shouldBe expected(term)
   }
 }
