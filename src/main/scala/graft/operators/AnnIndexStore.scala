@@ -22,17 +22,16 @@ import org.apache.spark.sql.functions._
   * cells×dim + m×k×subDim doubles) — [[load]] collects them back into
   * the [[IvfPq.Index]] reference object bit-exactly (doubles round-trip
   * parquet unchanged); the encoded corpus stays distributed. The three
-  * tables commit with a shared tag so a consistent triple is
-  * identifiable cross-table (the X12 equal-version cut discipline).
+  * tables publish as one [[SnapshotTxn]] under `root`, so [[load]] reads
+  * a consistent triple from the latest txn (or from a pinned txn id).
   */
 object AnnIndexStore {
 
   val Tables = Seq("centroids", "codebooks", "encoded")
 
-  /** Publish `index` + its encoded corpus atomically under `root`,
-    * tagged (default: the index geometry, as a human-readable marker). */
+  /** Publish `index` + its encoded corpus as one txn under `root`. */
   def save(spark: SparkSession, root: String, index: IvfPq.Index,
-      encoded: DataFrame, tag: Option[String] = None): Unit = {
+      encoded: DataFrame): Unit = {
     import spark.implicits._
     val cents = index.centroids.zipWithIndex.flatMap { case (v, cid) =>
       v.zipWithIndex.map { case (x, pos) => (cid, pos, x) }
@@ -42,55 +41,29 @@ object AnnIndexStore {
         cw.zipWithIndex.map { case (x, pos) => (sub, code, pos, x) }
       }
     }.toDF("sub", "code", "pos", "x")
-    // unique per save: the tag is what load() pins a CONSISTENT triple by
-    // (commitAll is per-table-atomic, not a cross-table transaction), so
-    // two saves must never share one
-    val t = tag.orElse(Some(
-      s"ivfpq-cells${index.centroids.size}-m${index.cb.m}-k${index.cb.k}" +
-        s"-${java.util.UUID.randomUUID().toString.take(8)}"))
     // file sizing (§6): the codebook tables are KB-sized BY CONSTRUCTION
     // (driver-resident matrices exploded to rows) — one file each, always;
     // a default-parallelism LocalRelation write was emitting 32 near-empty
     // files per table per save. The encoded corpus right-sizes by its own
     // estimate: fixture-sized stores collapse to one file, a real corpus
     // keeps its partitioning.
-    SnapshotTable.commitAll(spark, Seq(
-      s"$root/centroids" -> cents.coalesce(1),
-      s"$root/codebooks" -> books.coalesce(1),
-      s"$root/encoded"   -> SnapshotTable.rightSized(encoded)), tag = t)
-  }
-
-  /** The newest (centroids, codebooks, encoded) version triple sharing one
-    * publication tag — the consistent cut. A save's commitAll is atomic
-    * per table only, so reading three independent "latest"s could tear a
-    * mid-flight re-build (new centroids, old codes — silently garbage
-    * distances; review-caught); requiring one shared tag cannot. */
-  private def pinnedVersions(root: String): (Long, Long, Long) = {
-    val centsT = s"$root/centroids"
-    SnapshotTable.versions(centsT).reverseIterator.flatMap { v =>
-      SnapshotTable.tagOf(centsT, v).flatMap { t =>
-        def find(table: String): Option[Long] =
-          SnapshotTable.versions(table).reverseIterator
-            .find(w => SnapshotTable.tagOf(table, w).contains(t))
-        for (b <- find(s"$root/codebooks"); e <- find(s"$root/encoded"))
-          yield (v, b, e)
-      }
-    }.nextOption().getOrElse(throw new IllegalStateException(
-      s"no consistent index triple published under $root"))
+    SnapshotTxn.commit(spark, root, Seq(
+      "centroids" -> cents.coalesce(1),
+      "codebooks" -> books.coalesce(1),
+      "encoded"   -> SnapshotTable.rightSized(encoded))): Unit
   }
 
   /** Load the index back (driver-side codebooks + the distributed encoded
-    * frame), optionally pinned to a version. */
+    * frame) from the latest txn, or from txn `version` — for a store
+    * written only by saves, txn n is the n-th save. */
   def load(spark: SparkSession, root: String, version: Long = -1L)
       : (IvfPq.Index, DataFrame) = {
-    val (vCents, vBooks, vEnc) =
-      if (version >= 0) (version, version, version) // caller-pinned save #
-      else pinnedVersions(root)
-    val cents = SnapshotTable.read(spark, s"$root/centroids", vCents)
+    val read = SnapshotTxn.cut(spark, root, version)
+    val cents = read("centroids")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
-    val bookRows = SnapshotTable.read(spark, s"$root/codebooks", vBooks)
+    val bookRows = read("codebooks")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
     val books = bookRows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, byBook) =>
       byBook.groupBy(_._2).toSeq.sortBy(_._1).map { case (_, byCode) =>
@@ -102,7 +75,7 @@ object AnnIndexStore {
     val k = books.head.size
     val index = IvfPq.Index(cents.toIndexedSeq,
       ProductQuantizer.Codebooks(m, k, subDim, books.map(_.toSeq)))
-    (index, SnapshotTable.read(spark, s"$root/encoded", vEnc))
+    (index, read("encoded"))
   }
 
   /** Build + encode + publish in one call; returns the loaded pair so the
@@ -161,11 +134,9 @@ object AnnIndexStore {
     * id set (small by design between compactions), so AQE plans it as a
     * broadcast anti-join — no extra shuffle on the candidate stream.
     *
-    * Reads through [[load]]'s PINNED consistent triple — correct for
-    * batch-built stores (S9/S10). A store maintained by streaming Appends
-    * (X18/X20) deliberately does not re-tag the codebook tables, so use
-    * [[graft.streaming.StreamingAnnIngest.searchLive]] there: it reads
-    * `encoded` at its latest version and honors the same tombstones. */
+    * Reads through [[load]]'s consistent triple of the latest txn —
+    * which includes every batch a streaming ingest (X18) appended, and the
+    * tombstones a streaming delete (X20) recorded. */
   def searchWithDeletes(spark: SparkSession, root: String, queries: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String, k: Int = 5,
       nprobe: Int = 2, shortlist: Int = 64): DataFrame = {
@@ -211,14 +182,6 @@ object AnnIndexStore {
     }
   }
 
-  /** Fold the tombstones into the encoded store physically: re-publish the
-    * triple (codebook tables re-committed verbatim — they are KB-sized —
-    * under a fresh shared tag so [[load]]'s consistent-cut pin lands on the
-    * compacted encode), then clear the tombstone table. The clear CASes on
-    * the tombstone version observed BEFORE the rewrite: a delete racing the
-    * compaction bumps that version and surfaces as
-    * [[SnapshotTable.ConcurrentCommitException]] instead of being silently
-    * resurrected by the clear. */
   /** S13: REINDEX — re-train the whole geometry on the store's CURRENT
     * live membership and re-encode it, published as one fresh consistent
     * triple. This is the maintenance operation drift forces on every real
@@ -237,8 +200,7 @@ object AnnIndexStore {
     * training, so a delete racing the rebuild surfaces as
     * [[SnapshotTable.ConcurrentCommitException]] instead of silently
     * resurrecting its id. Readers pinned to the old triple are unaffected
-    * until they re-[[load]]; the publish is the same shared-tag atomic
-    * group as [[save]].
+    * until they re-[[load]]; the publish is [[save]]'s one txn.
     *
     * Cost shape: one training sample pass + one full re-encode of the live
     * set — the honest price of new geometry; schedule it like R41
@@ -246,13 +208,13 @@ object AnnIndexStore {
     * the trigger a production deployment watches). */
   def reindex(spark: SparkSession, root: String, corpus: DataFrame,
       idCol: String, vecCol: String, cells: Int, m: Int, k: Int,
-      knownN: Long = -1L, tag: Option[String] = None): (IvfPq.Index, DataFrame) = {
+      knownN: Long = -1L): (IvfPq.Index, DataFrame) = {
     val tombT = s"$root/$TombstoneTable"
     val tombV = SnapshotTable.latestVersion(tombT).getOrElse(-1L)
     // encoded only — [[load]] would additionally collect the centroid and
     // codebook tables (two driver round-trips) for an index this rebuild
     // immediately discards
-    val encoded = SnapshotTable.read(spark, s"$root/encoded", pinnedVersions(root)._3)
+    val encoded = SnapshotTxn.readAt(spark, root, "encoded")
     val liveIds = encoded.select(idCol).join(
       tombstones(spark, root).withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
     val live = corpus.join(liveIds, Seq(idCol), "left_semi")
@@ -268,8 +230,7 @@ object AnnIndexStore {
       if (extraCols.isEmpty) fresh
       else fresh.join(
         encoded.select(idCol, extraCols: _*), Seq(idCol), "left")
-    save(spark, root, index, withMeta, tag = tag.orElse(Some(
-      s"reindex-${java.util.UUID.randomUUID().toString.take(8)}")))
+    save(spark, root, index, withMeta)
     if (tombV >= 0)
       SnapshotTable.commit(spark, tombT, spark.range(0).toDF("id"),
         mode = SnapshotTable.Overwrite, expectedVersion = tombV): Unit
@@ -298,8 +259,12 @@ object AnnIndexStore {
       growThreshold: Double = 1.5,
       deleteThreshold: Double = 0.2): ReindexAdvice = {
     val encT = s"$root/encoded"
-    val (_, _, pinnedEnc) = pinnedVersions(root)
-    val latest = SnapshotTable.latestVersion(encT).getOrElse(pinnedEnc)
+    val now = SnapshotTxn.tableVersions(root)
+    val latest = now("encoded")
+    // the trained generation: the encode of the first txn that pins the
+    // current centroids (the save that trained them)
+    val pinnedEnc = SnapshotTxn.txns(root).iterator.map(SnapshotTxn.tableVersions(root, _))
+      .find(_.get("centroids") == now.get("centroids")).get("encoded")
     def rowsAt(v: Long): Long = {
       SnapshotAnalyze.analyzeMergeable(spark, encT, Seq(idCol), v)
       SnapshotAnalyze.readMergeableProfile(spark, encT, v).get
@@ -320,20 +285,19 @@ object AnnIndexStore {
       growth >= growThreshold || share >= deleteThreshold)
   }
 
+  /** Fold the tombstones into the encoded store physically: publish the
+    * compacted encode as a one-table txn (the codebook tables carry
+    * forward), then clear the tombstone table. The clear CASes on the
+    * tombstone version observed BEFORE the rewrite: a delete racing the
+    * compaction bumps that version and surfaces as
+    * [[SnapshotTable.ConcurrentCommitException]] instead of being silently
+    * resurrected by the clear. */
   def compactDeletes(spark: SparkSession, root: String, idCol: String): Unit = {
     val tombT = s"$root/$TombstoneTable"
     val tombV = SnapshotTable.latestVersion(tombT).getOrElse(-1L)
-    val dead = tombstones(spark, root)
-    // encoded only — the codebook tables re-commit verbatim below; loading
-    // them into driver objects just to discard them was two extra jobs
-    val (vCents, vBooks, vEnc) = pinnedVersions(root)
-    val encoded = SnapshotTable.read(spark, s"$root/encoded", vEnc)
-    val live = encoded.join(dead.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-    val tag = Some(s"compact-${java.util.UUID.randomUUID().toString.take(8)}")
-    SnapshotTable.commitAll(spark, Seq(
-      s"$root/centroids" -> SnapshotTable.read(spark, s"$root/centroids", vCents).coalesce(1),
-      s"$root/codebooks" -> SnapshotTable.read(spark, s"$root/codebooks", vBooks).coalesce(1),
-      s"$root/encoded"   -> SnapshotTable.rightSized(live)), tag = tag)
+    val live = SnapshotTxn.readAt(spark, root, "encoded")
+      .join(tombstones(spark, root).withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
+    SnapshotTxn.commit(spark, root, Seq("encoded" -> SnapshotTable.rightSized(live)))
     if (tombV >= 0)
       SnapshotTable.commit(spark, tombT, spark.range(0).toDF("id"),
         mode = SnapshotTable.Overwrite, expectedVersion = tombV): Unit

@@ -1121,7 +1121,7 @@ object LlmOps {
 
     // X20: streaming deletes against the persisted store — takedown
     // requests land as 3 id shards, each Append-committed to the
-    // tombstone table with a replay-skip tag; searchLive then reproduces
+    // tombstone table with a replay-skip tag; searchWithDeletes then reproduces
     // the s10 contract (odd copies gone, evenness ≡ copy-at-top, no
     // deleted id ever) with the deletes having arrived THROUGH the
     // stream. Replay no-ops and batch-split independence are
@@ -1143,7 +1143,7 @@ object LlmOps {
         (0 until 3).map(i => dead.filter(col("id") % 3 === i)))
       graft.streaming.StreamingAnnIngest.startDeletes(s, in, dead.schema,
         "id", root, ckpt).awaitTermination()
-      graft.streaming.StreamingAnnIngest.searchLive(s, root,
+      AnnIndexStore.searchWithDeletes(s, root,
           vecs.filter(col("vec_id") < 32), vecs, "vec_id", "embedding",
           k = 5, nprobe = 3, shortlist = 64)
         .join(dead.withColumnRenamed("id", "neighbor_id")
@@ -1177,7 +1177,7 @@ object LlmOps {
         (0 until 3).map(i => copies.filter(col("vec_id") % 3 === i)))
       graft.streaming.StreamingAnnIngest.start(s, in, copies.schema,
         "vec_id", "embedding", root, ckpt).awaitTermination()
-      val stateN = SnapshotTable.read(s, s"$root/encoded")
+      val stateN = SnapshotTxn.readAt(s, root, "encoded")
         .agg(count(lit(1)).as("n_state"))
       graft.streaming.StreamingAnnIngest.search(s, root,
           vecs.filter(col("vec_id") < 32), vecs, "vec_id", "embedding",

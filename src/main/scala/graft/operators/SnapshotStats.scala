@@ -291,10 +291,7 @@ object SnapshotStats {
         } yield rangeContainsAny(st, s.hset)).getOrElse(true)
       case Fn("in", a +: elems) if elems.nonEmpty && elems.forall(_.isInstanceOf[Literal]) =>
         elems.exists(e => leaf(a, e.asInstanceOf[Literal], within))
-      case other =>
-        if (sys.env.contains("GRAFT_STATS_DEBUG"))
-          System.err.println(s"[stats] unmatched ${other.getClass.getName}: $other")
-        true
+      case _ => true // an unmatched predicate never skips a file
     }
   }
 }

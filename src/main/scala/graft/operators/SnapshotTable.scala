@@ -87,23 +87,40 @@ object SnapshotTable {
       tag: Option[String], ts: Option[Long])
 
   /** Bounded LRU memo of parses of immutable files (published manifests,
-    * data-file footers), keyed by path. Each entry is validated against the
-    * file's (size, mtime), so a table directory recreated at the same path
-    * never serves a stale parse. */
-  private final class FileMemo[V](max: Int) {
+    * txn manifests, data-file footers), keyed by path. Each entry is
+    * validated against the file's (size, mtime), so a table directory
+    * recreated at the same path never serves a stale parse. */
+  private[operators] final class FileMemo[V](max: Int) {
     // key → (size, mtime, parse)
     private val entries = new java.util.LinkedHashMap[String, (Long, Long, V)](256, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, (Long, Long, V)]): Boolean =
         size() > max
     }
-    def apply(key: String, size: Long, mtime: Long)(parse: => V): V =
+    // parses actually performed (cache misses), per group — the spec hook
+    // for the bounded-reads contracts (per group, so concurrently-running
+    // suites don't race the assertion)
+    private val parses =
+      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
+    def parsesOf(group: String): Long =
+      Option(parses.get(group)).map(_.get()).getOrElse(0L)
+    def apply(key: String, size: Long, mtime: Long, group: String = "")(parse: => V): V =
       entries.synchronized(Option(entries.get(key))) match {
         case Some((`size`, `mtime`, value)) => value
         case _ =>
           val value = parse
+          parses.computeIfAbsent(group, _ => new java.util.concurrent.atomic.AtomicLong)
+            .incrementAndGet()
           entries.synchronized(entries.put(key, (size, mtime, value)))
           value
       }
+    /** `parse` of the local file `p`, at the cost of one stat on a hit.
+      * Throws (like a raw read) if the file does not exist. */
+    def ofFile(p: Path, group: String)(parse: => V): V = {
+      val attrs = Files.readAttributes(
+        p, classOf[java.nio.file.attribute.BasicFileAttributes])
+      apply(p.toAbsolutePath.normalize().toString, attrs.size(),
+        attrs.lastModifiedTime().toMillis, group)(parse)
+    }
   }
 
   // Without this memo, snapshot RESOLUTION is O(retained versions) JSON
@@ -112,27 +129,18 @@ object SnapshotTable {
   // manifest is read once per process, a stat() per subsequent hit.
   private val manifestMemo = new FileMemo[ManifestInfo](4096)
 
-  /** Manifest JSON parses actually performed (cache misses), per table —
-    * the spec hook for the bounded-manifest-reads contract (per-table so
-    * concurrently-running suites don't race the assertion). */
-  private val manifestParses =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
-  private[operators] def manifestParsesOf(table: String): Long = {
-    val k = Paths.get(table).toAbsolutePath.normalize().toString
-    Option(manifestParses.get(k)).map(_.get()).getOrElse(0L)
-  }
+  private[operators] def dirKey(dir: String): String =
+    Paths.get(dir).toAbsolutePath.normalize().toString
+
+  /** Manifest JSON parses actually performed (cache misses) of `table`. */
+  private[operators] def manifestParsesOf(table: String): Long =
+    manifestMemo.parsesOf(dirKey(table))
 
   /** Read-through-cache manifest parse. Throws (like a raw read) if the
     * manifest does not exist — callers that tolerate absence check first. */
-  private[operators] def manifestInfo(table: String, v: Long): ManifestInfo = {
-    val p = manifestPath(table, v)
-    val attrs = Files.readAttributes(
-      p, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val tableKey = Paths.get(table).toAbsolutePath.normalize().toString
-    manifestMemo(s"$tableKey/$v", attrs.size(), attrs.lastModifiedTime().toMillis) {
-      val json = new String(Files.readAllBytes(p), "UTF-8")
-      manifestParses.computeIfAbsent(tableKey,
-        _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+  private[operators] def manifestInfo(table: String, v: Long): ManifestInfo =
+    manifestMemo.ofFile(manifestPath(table, v), dirKey(table)) {
+      val json = new String(Files.readAllBytes(manifestPath(table, v)), "UTF-8")
       def longField(name: String): Option[Long] =
         ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r.findFirstMatchIn(json)
           .map(_.group(1).toLong)
@@ -147,7 +155,6 @@ object SnapshotTable {
         "\"tag\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)),
         longField("ts"))
     }
-  }
 
   /** The idempotency tag of `version` (default: latest), if that commit
     * recorded one. */
@@ -221,28 +228,6 @@ object SnapshotTable {
     * newest first (the common replay hit is the head). */
   def hasTag(table: String, tag: String): Boolean =
     versions(table).reverseIterator.exists(v => tagOf(table, v).contains(tag))
-
-  /** Commit several (table, frame) pairs CONCURRENTLY — distinct table
-    * directories are independent, and serial submission leaves the cluster
-    * idle between ~scheduling-sized write jobs (the
-    * `WikidataTables.writeParquet` discipline). NOT a cross-table
-    * transaction: each table commits atomically on its own; layer an
-    * idempotency [[commit tag]] + per-table replay checks (X13) or version
-    * alignment (X12) on top for cross-table consistency. Returns the
-    * committed versions, in `pairs` order. */
-  def commitAll(spark: SparkSession, pairs: Seq[(String, DataFrame)],
-      mode: Mode = Overwrite, tag: Option[String] = None): Seq[Long] = {
-    if (pairs.isEmpty) return Nil // fully-replayed batch: nothing pending
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(pairs.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(pairs.map { case (t, df) =>
-      Future(commit(spark, t, df, mode = mode, tag = tag))
-    }), Duration.Inf)
-    finally pool.shutdown()
-  }
 
   /** The data files of one version (relative to the table root). */
   private[operators] def manifestFiles(table: String, v: Long): Seq[String] =

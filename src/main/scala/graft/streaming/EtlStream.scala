@@ -27,24 +27,23 @@ object EtlStream {
       } finally tables.unpersist() // bounded memory across micro-batches
     }
 
-  /** X13: the same ingestion, published EXACTLY-ONCE through R40 snapshot
-    * commits. [[start]]'s bare `mode("append")` has two holes at scale: a
-    * reader racing a batch lists half its files, and foreachBatch's
-    * at-least-once replay appends the whole batch AGAIN after a crash.
-    * Here each batch Append-commits every table tagged with the micro-batch
-    * id: readers only ever see whole published batches (manifest atomicity),
-    * and on replay each table whose LATEST tag already equals this batch id
-    * is skipped — per-table, so a crash that published only some tables is
-    * repaired by the replay committing exactly the missing ones.
+  /** X13: the same ingestion, published EXACTLY-ONCE through one
+    * [[graft.operators.SnapshotTxn]] per batch. [[start]]'s bare
+    * `mode("append")` has two holes at scale: a reader racing a batch lists
+    * half its files, and foreachBatch's at-least-once replay appends the
+    * whole batch AGAIN after a crash. Here each batch Append-commits every
+    * table in one txn tagged with the micro-batch id: readers resolving
+    * through the txn only ever see whole published batches, a replay of a
+    * published batch is skipped by its tag, and a crash that staged only
+    * some tables is repaired by the replay's txn, which appends onto the
+    * last published cut and so never doubles a table.
     * At-least-once delivery + idempotent tagged publication = exactly-once
     * table state, X8's discipline at the table-format layer.
     *
     * X28 (`surface = Surface.Full`): the same exactly-once publication over
     * the COMPLETE 13-table surface — every table the W54 one-pass run
-    * produces, off one cached batch parse, and the per-table tag law covers
-    * all 13: a crash that published only some of them is repaired by the
-    * replay committing exactly the missing ones. The scale shape is
-    * unchanged — the extra tables are explodes of the SAME cached batch
+    * produces, off one cached batch parse, in the same txn. The scale shape
+    * is unchanged — the extra tables are explodes of the SAME cached batch
     * parse, so the full surface costs five more appends per batch, never a
     * second dump scan. */
   def startSnapshot(spark: SparkSession, inDir: String, tableRoot: String,
@@ -57,16 +56,13 @@ object EtlStream {
     * publishes every table of the batch's parsed [[Surface]]. */
   def commitBatch(spark: SparkSession, parsedBatch: org.apache.spark.sql.DataFrame,
       tableRoot: String, batchId: Long, namespace: String = ""): Unit = {
-    import graft.operators.SnapshotTable
+    import graft.operators.{SnapshotTable, SnapshotTxn}
     val tag = BatchTags.tag(namespace, batchId.toString)
-    // tag check FIRST (cheap manifest reads — table names are static): a
-    // fully-replayed batch must not pay the batch ETL for a guaranteed no-op
-    val pendingNames = Surface.of(parsedBatch).tableNames.filter { name =>
-      !SnapshotTable.tagOf(s"$tableRoot/$name").contains(tag)
-    }
-    if (pendingNames.isEmpty) return
+    // tag check FIRST (a stat per retained txn): a replayed batch must not
+    // pay the batch ETL for a guaranteed no-op
+    if (SnapshotTxn.hasTag(tableRoot, tag)) return
     val tables = WikidataEtl.run(parsedBatch)
-    try tables.commitTo(spark, tableRoot, pendingNames, SnapshotTable.Append, Some(tag))
+    try tables.commitTo(spark, tableRoot, mode = SnapshotTable.Append, tag = Some(tag))
     finally tables.unpersist()
   }
 }

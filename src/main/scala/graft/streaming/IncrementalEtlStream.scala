@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.SnapshotTable
+import graft.operators.{SnapshotTable, SnapshotTxn}
 import graft.wikidata.{IncrementalEtl, Surface, WikidataTables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -29,35 +29,30 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * guard is an inner probe of the revisions table against that broadcast
   * plus an anti-join of the winners against the stale matches (both
   * map-only — the table never shuffles), and the eight merges are W22's
-  * broadcast anti-joins. Every non-empty batch commits all nine tables
-  * exactly once, so version numbers stay aligned across tables: "read
-  * every table at version V" is a consistent cross-table cut, which is
-  * how a reader escapes the per-table-only atomicity of the commits.
+  * broadcast anti-joins. The tables live under one
+  * [[graft.operators.SnapshotTxn]] root: each batch reads one cut and
+  * publishes the merged tables as one txn, so a reader resolving through
+  * the latest txn never sees a half-applied batch.
   */
 object IncrementalEtlStream {
 
-  /** Publish initial full-ETL tables as version 1 of each snapshot table,
-    * plus an empty `revisions` mark (full-dump entities carry rev 0: any
-    * changeset revision outranks them). Works unchanged for every
-    * [[Surface]] — `byName` carries whatever the bootstrap run produced
-    * (X29 streams the full surface by bootstrapping with a run over a
-    * [[Surface.Full]] parse). */
+  /** Publish initial full-ETL tables as txn 1, plus an empty `revisions`
+    * mark (full-dump entities carry rev 0: any changeset revision
+    * outranks them). Works unchanged for every [[Surface]] — `byName`
+    * carries whatever the bootstrap run produced (X29 streams the full
+    * surface by bootstrapping with a run over a [[Surface.Full]] parse). */
   def bootstrap(spark: SparkSession, tableRoot: String, tables: WikidataTables): Unit = {
-    tables.core.foreach(_.count()) // materialize the shared cache once
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("lastrevid", org.apache.spark.sql.types.LongType))))
-    SnapshotTable.commitAll(spark,
-      tables.byName.toSeq.map { case (n, df) => s"$tableRoot/$n" -> df } :+
-        (s"$tableRoot/revisions" -> empty))
+    tables.copy(byName = tables.byName + ("revisions" -> empty)).commitTo(spark, tableRoot): Unit
   }
 
   /** One micro-batch: frame the lines, resolve within-batch winners, admit
     * only revisions above the persisted high-water mark, merge + commit.
-    * Empty or fully-stale batches commit nothing (version alignment across
-    * tables is preserved because NO table commits).
+    * Empty or fully-stale batches commit nothing.
     *
     * X29 (`surface = Surface.Full`): the same loop over the COMPLETE
     * 13-table surface — the changeset parses with the full schema (links +
@@ -66,14 +61,15 @@ object IncrementalEtlStream {
     * anti-join covers them with zero extra shuffles of base data.
     *
     * X30 (`anyNameIndex = Some(path)`, requires `Surface.Full`): the W56 fuzzy
-    * ANY-name index maintained IN the refresh loop — after the data tables
-    * commit, ONE batch-tagged Append of the touched entities' current
+    * ANY-name index maintained IN the refresh loop — after the data txn
+    * publishes, ONE batch-tagged Append of the touched entities' current
     * names' variant rows lands on the index (W57's law: stale variants
     * self-neutralize at the exact verify, so appends alone keep lookups
-    * exact). Ordering is the crash contract: data tables → index delta →
-    * revisions mark. A crash before the mark replays the whole batch — the
-    * index append is then skipped by ITS OWN tag, and the mark-guarded
-    * tables by theirs — so every surface converges exactly once. */
+    * exact). Ordering is the crash contract: data txn → index delta →
+    * revisions mark (its own one-table txn). A crash before the mark
+    * replays the whole batch — the index append is then skipped by ITS OWN
+    * tag, and the mark-guarded tables re-merge to the same content — so
+    * every surface converges exactly once. */
   def applyBatch(spark: SparkSession, lines: DataFrame, tableRoot: String,
       surface: Surface = Surface.Core, anyNameIndex: Option[String] = None,
       batchTag: Option[String] = None): Unit = {
@@ -82,8 +78,8 @@ object IncrementalEtlStream {
     // cached: the winners frame feeds the stale probe, the admitted set,
     // the touched-id anti-joins and the revision marks
     val win = IncrementalEtl.winners(IncrementalEtl.changesFrom(lines, surface)).cache()
-    val revPath = s"$tableRoot/revisions"
-    val current = SnapshotTable.read(spark, revPath)
+    val read = SnapshotTxn.cut(spark, tableRoot) // one cut for the whole batch
+    val current = read("revisions")
     // map-only guard, formulated so the broadcast side is always the inner
     // side of a supported BroadcastHashJoin shape (an outer join that KEEPS
     // the broadcast side cannot broadcast): the revisions table probes the
@@ -97,18 +93,17 @@ object IncrementalEtlStream {
     val guarded = win.join(broadcast(stale), Seq("id"), "left_anti").cache()
     try {
       if (!guarded.isEmpty) {
-        val base = surface.tableNames.map(n =>
-          n -> SnapshotTable.read(spark, s"$tableRoot/$n")).toMap
-        val next = IncrementalEtl.applyWinners(base, guarded)
+        val next = IncrementalEtl.applyWinners(
+          surface.tableNames.map(n => n -> read(n)).toMap, guarded)
         val marks = current
           .join(broadcast(guarded.select("id")), Seq("id"), "left_anti")
           .unionByName(guarded.select(col("id"),
             coalesce(col("c.lastrevid"), lit(0L)).as("lastrevid")))
         try {
           next.commitTo(spark, tableRoot)
-          // X30: the index delta lands BETWEEN the data tables and the
-          // mark, guarded by its own batch tag — a replay after a crash
-          // here re-runs the data commits (mark still old) but skips the
+          // X30: the index delta lands BETWEEN the data txn and the mark,
+          // guarded by its own batch tag — a replay after a crash here
+          // re-runs the data txn (mark still old) but skips the
           // already-tagged index append
           anyNameIndex.foreach { idx =>
             val alreadyApplied = batchTag.exists(t =>
@@ -122,13 +117,13 @@ object IncrementalEtlStream {
                 "id", "name", tag = batchTag): Unit
             }
           }
-          // the high-water mark commits STRICTLY AFTER the data tables: a
+          // the high-water mark publishes STRICTLY AFTER the data txn: a
           // crash inside the window replays the batch with the OLD mark, so
-          // the re-apply repairs any table the crash left behind (equal
-          // revids then reject the second replay). Committing the mark
-          // concurrently would let it land first and turn the replay into a
-          // no-op with data tables missing the batch forever.
-          SnapshotTable.commit(spark, revPath, marks): Unit
+          // the re-apply repairs anything the crash left behind (equal
+          // revids then reject the second replay). Publishing the mark
+          // first would turn the replay into a no-op with the data tables
+          // missing the batch forever.
+          SnapshotTxn.commit(spark, tableRoot, Seq("revisions" -> marks)): Unit
         } finally next.unpersist()
       }
     } finally { guarded.unpersist(); win.unpersist(): Unit }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{AnnIndexStore, IvfPq, SnapshotTable}
+import graft.operators.{AnnIndexStore, IvfPq, SnapshotTable, SnapshotTxn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -9,15 +9,16 @@ import org.apache.spark.sql.types.StructType
   * land in a watched directory and each micro-batch is encoded UNDER THE
   * FROZEN published index (cell assignment and PQ codes are pure per-row
   * functions of the vector given the codebooks) and Append-committed to
-  * the index's `encoded` snapshot table, tagged with the batch id so an
-  * at-least-once replay commits nothing twice (the X13 exactly-once
-  * discipline). Searches therefore see whole published batches only, and
+  * the index's `encoded` table as a one-table [[SnapshotTxn]] tagged with
+  * the batch id, so an at-least-once replay commits nothing twice (the
+  * X13 exactly-once discipline) and the txn carries the codebooks forward.
+  * Searches therefore see whole published batches only, and
   * the maintained store is bit-identical to a batch re-encode of the
   * union — the x18 gate asserts exactly that structurally.
   *
   * This is the standard production split: codebook TRAINING is an offline
-  * batch job (S6/S9 — retrain when drift warrants, republish atomically
-  * under a new tag), while ingestion is a cheap streaming append — one
+  * batch job (S6/S9 — retrain when drift warrants, republish as a new
+  * txn), while ingestion is a cheap streaming append — one
   * codegen'd encode projection per batch, no training pass, no shuffle.
   * At 1e9+ vectors that asymmetry is the point: re-building the index per
   * ingest (or buffering for nightly rebuilds) costs training passes and a
@@ -28,19 +29,15 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamingAnnIngest {
 
-  /** One micro-batch: encode under `index`, Append-commit tagged
+  /** One micro-batch: encode under `index`, Append-commit as a tagged txn
     * ([[BatchTags]]-namespaced by the owning query's checkpoint). */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String, index: IvfPq.Index,
       indexRoot: String, namespace: String = ""): Unit = {
     val tag = BatchTags.tag(namespace, batchId.toString)
-    // hasTag, not tagOf-of-latest: a foreign commit (e.g. a concurrent
-    // OPTIMIZE) landing after the tagged Append must not hide it from a
-    // redelivery and double-append the batch (the X16/X17 discipline)
-    if (SnapshotTable.hasTag(s"$indexRoot/encoded", tag) ||
-      batch.isEmpty) return
-    SnapshotTable.commit(spark, s"$indexRoot/encoded",
-      SnapshotTable.rightSized(IvfPq.encode(batch, idCol, vecCol, index)),
+    if (SnapshotTxn.hasTag(indexRoot, tag) || batch.isEmpty) return
+    SnapshotTxn.commit(spark, indexRoot, Seq("encoded" ->
+      SnapshotTable.rightSized(IvfPq.encode(batch, idCol, vecCol, index))),
       mode = SnapshotTable.Append, tag = Some(tag)): Unit
   }
 
@@ -58,24 +55,14 @@ object StreamingAnnIngest {
 
   /** ADC search over the maintained store — ≡ `IvfPq.search` over a batch
     * encode of everything ingested, by construction (same codebooks, same
-    * per-row encode, candidates from the snapshot state). `corpus` supplies
-    * the raw vectors for the exact re-rank, as in S6.
-    *
-    * The codebooks come from S9's pinned consistent triple, but `encoded`
-    * reads at its LATEST version: the stream's tagged Appends deliberately
-    * do not re-tag centroids/codebooks (they are immutable within an index
-    * generation), so the S9 cut — which pins the newest SHARED tag — would
-    * re-surface the pre-stream store and hide every ingested batch. Latest
-    * is consistent with the pinned codebooks either way: an Append froze
-    * them, and a full re-build overwrites `encoded` under its own shared
-    * tag, which then IS the pinned generation. (A re-build racing an
-    * ACTIVE ingest run still requires restarting the stream — the run
-    * froze the previous generation's codebooks at start.) */
+    * per-row encode, candidates from the latest txn's cut). `corpus`
+    * supplies the raw vectors for the exact re-rank, as in S6. (A re-build
+    * racing an ACTIVE ingest run still requires restarting the stream —
+    * the run froze the previous generation's codebooks at start.) */
   def search(spark: SparkSession, indexRoot: String, queries: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String, k: Int = 5,
       nprobe: Int = 2, shortlist: Int = 64): DataFrame = {
-    val (index, _) = AnnIndexStore.load(spark, indexRoot)
-    val encoded = SnapshotTable.read(spark, s"$indexRoot/encoded")
+    val (index, encoded) = AnnIndexStore.load(spark, indexRoot)
     IvfPq.search(queries, encoded, corpus, idCol, vecCol, index,
       k = k, nprobe = nprobe, shortlist = shortlist)
   }
@@ -83,10 +70,11 @@ object StreamingAnnIngest {
   // ---- X20: streaming deletes (S10 × X13) ----
 
   /** One delete micro-batch: Append-commit the ids to the tombstone
-    * table, tagged for replay-skip. Visible to the next [[searchLive]]
-    * with no index rewrite — the takedown/GDPR latency a production
-    * store is actually measured on; [[AnnIndexStore.compactDeletes]]
-    * folds them in physically on whatever cadence the operator runs. */
+    * table, tagged for replay-skip. Visible to the next
+    * [[AnnIndexStore.searchWithDeletes]] with no index rewrite — the
+    * takedown/GDPR latency a production store is actually measured on;
+    * [[AnnIndexStore.compactDeletes]] folds them in physically on
+    * whatever cadence the operator runs. */
   def applyDeleteBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       idCol: String, indexRoot: String, namespace: String = ""): Unit = {
     val tombT = s"$indexRoot/${AnnIndexStore.TombstoneTable}"
@@ -102,18 +90,4 @@ object StreamingAnnIngest {
     BatchTags.start(spark, inDir, Some(schema), checkpointDir) { (b, id, ns) =>
       applyDeleteBatch(spark, b, id, idCol, indexRoot, ns)
     }
-
-  /** [[search]] with the streamed tombstones honored — candidates
-    * anti-joined before the shortlist cut (the S10 rule: full k out,
-    * deleted ids never surface), over the maintained latest store. */
-  def searchLive(spark: SparkSession, indexRoot: String, queries: DataFrame,
-      corpus: DataFrame, idCol: String, vecCol: String, k: Int = 5,
-      nprobe: Int = 2, shortlist: Int = 64): DataFrame = {
-    val (index, _) = AnnIndexStore.load(spark, indexRoot)
-    val live = SnapshotTable.read(spark, s"$indexRoot/encoded")
-      .join(AnnIndexStore.tombstones(spark, indexRoot)
-        .withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-    IvfPq.search(queries, live, corpus, idCol, vecCol, index,
-      k = k, nprobe = nprobe, shortlist = shortlist)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Search, SnapshotTable}
+import graft.operators.{Search, SnapshotTable, SnapshotTxn}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -8,14 +8,14 @@ import org.apache.spark.sql.types.StructType
 
 /** X17: streaming full-text index maintenance (T20 × R40 × X13) — document
   * shards land in a watched directory and each micro-batch Append-commits
-  * the batch's postings (doc, term, tf) and doc lengths (doc, dl) as
-  * snapshot tables TAGGED with the batch id, so queries see whole
-  * published batches (manifest atomicity) and an at-least-once replay
-  * skips per table — a crash between the two commits is repaired by the
-  * replay committing exactly the missing one. INSERT-only corpus
-  * contract: each document arrives whole in exactly one batch, so the
-  * appended postings hold one (doc, term) row per pair and df/avgdl
-  * aggregate correctly over the state.
+  * the batch's postings (doc, term, tf) and doc lengths (doc, dl) as ONE
+  * [[SnapshotTxn]] tagged with the batch id, so queries see whole
+  * published batches and an at-least-once replay of a published batch
+  * commits nothing; a crash that staged only some of the tables is
+  * repaired by the replay's txn, which appends onto the last published cut.
+  * INSERT-only corpus contract: each document arrives whole in exactly one
+  * batch, so the appended postings hold one (doc, term) row per pair and
+  * df/avgdl aggregate correctly over the state.
   *
   * [[search]] then answers T20 queries FROM THE STATE — postings filter
   * to the query's terms (at 100 TB this is the point: the state tables
@@ -29,24 +29,16 @@ object StreamingSearchIndex {
 
   val Tables = Seq("postings", "doclen")
 
-  /** One micro-batch: tokenize once, Append-commit postings + lengths,
-    * tagged per table (replay-skipped per table). */
+  /** One micro-batch: tokenize once, Append-commit postings + lengths as
+    * one tagged txn (replay-skipped by the tag). */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       textCol: String, idCol: String, indexRoot: String,
       namespace: String = ""): Unit = {
     val tag = BatchTags.tag(namespace, batchId.toString)
-    // hasTag, not tagOf: a foreign commit landing between the tagged
-    // Append and an at-least-once redelivery must not hide the published
-    // batch and double-append it (the X16/hasTag discipline)
-    val pending = Tables.filter { n =>
-      !SnapshotTable.hasTag(s"$indexRoot/$n", tag)
-    }
-    if (pending.isEmpty || batch.isEmpty) return
+    if (SnapshotTxn.hasTag(indexRoot, tag) || batch.isEmpty) return
     val (postings, doclen) = Search.indexComponents(batch, textCol, idCol)
-    val byName = Map("postings" -> postings, "doclen" -> doclen)
-    SnapshotTable.commitAll(spark,
-      pending.map(n => s"$indexRoot/$n" -> byName(n)),
-      mode = SnapshotTable.Append, tag = Some(tag))
+    SnapshotTxn.commit(spark, indexRoot, Seq("postings" -> postings, "doclen" -> doclen),
+      mode = SnapshotTable.Append, tag = Some(tag)): Unit
   }
 
   /** Watch `inDir` for parquet document shards; maintain the index. */
@@ -60,9 +52,8 @@ object StreamingSearchIndex {
   /** T20 scoring from the maintained state — ≡ `Search.bm25TopK` over the
     * union of every ingested batch, by construction (same scoring tail). */
   def search(spark: SparkSession, indexRoot: String, idCol: String,
-      queryTerms: Seq[String], k: Int): DataFrame =
-    Search.scoreComponents(
-      SnapshotTable.read(spark, s"$indexRoot/postings"),
-      SnapshotTable.read(spark, s"$indexRoot/doclen"),
-      idCol, queryTerms, k)
+      queryTerms: Seq[String], k: Int): DataFrame = {
+    val read = SnapshotTxn.cut(spark, indexRoot)
+    Search.scoreComponents(read("postings"), read("doclen"), idCol, queryTerms, k)
+  }
 }

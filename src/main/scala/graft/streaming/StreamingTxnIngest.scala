@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.{DataTypes, StructType}
   * maintains a per-key rollup (`by_key`) AND its global summary (`totals`)
   * and publishes both as ONE [[SnapshotTxn]] tagged with the batch id.
   *
-  * Why the txn matters here: with per-table tagged commits (X13), a crash
+  * Why the txn matters here: with per-table tagged commits, a crash
   * between the two publishes exposes `by_key` at batch n while `totals`
   * still reads batch n-1 — every consumer has to reconcile the skew, and
-  * X13's repair pass exists precisely to re-level it. Under the txn log
+  * a per-table repair pass would have to re-level it. Under the txn log
   * that window is gone by construction: member versions staged by a
   * crashed batch stay dark, readers keep the previous consistent cut, and
   * the replayed batch (same tag) either finds the published txn and

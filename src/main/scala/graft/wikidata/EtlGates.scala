@@ -196,7 +196,7 @@ object EtlGates {
       graft.streaming.IncrementalEtlStream.start(s,
         graft.Scratch.shards("x12_in", linesOf(changesetPath), 2), root,
         graft.Scratch.fresh("x12_ckpt")).awaitTermination()
-      graft.operators.SnapshotTable.read(s, s"$root/meta")
+      graft.operators.SnapshotTxn.readAt(s, root, "meta")
     },
     // X29: the X12 refresh loop over the COMPLETE 13-table surface — W55's
     // full LWW apply as a stream: bootstrap = the W54 full run of v1, the
@@ -217,7 +217,7 @@ object EtlGates {
       graft.streaming.IncrementalEtlStream.start(s,
         graft.Scratch.shards("x29_in", linesOf(changesetPath), 2), root,
         graft.Scratch.fresh("x29_ckpt"), Surface.Full).awaitTermination()
-      graft.operators.SnapshotTable.read(s, s"$root/aliases")
+      graft.operators.SnapshotTxn.readAt(s, root, "aliases")
     },
     // X30: the W56 fuzzy ANY-name index maintained INSIDE the X29 refresh
     // loop — every micro-batch lands one batch-tagged Append of the
@@ -247,18 +247,17 @@ object EtlGates {
         anyNameIndex = Some(idx)).awaitTermination()
       // replaying a consumed batch moves neither the tables nor the index
       val vIdx = graft.operators.SnapshotTable.latestVersion(idx)
-      val vMeta = graft.operators.SnapshotTable.latestVersion(s"$root/meta")
+      val vTxn = graft.operators.SnapshotTxn.latestTxn(root)
       import s.implicits._
       graft.streaming.IncrementalEtlStream.applyBatch(s,
         lines.take(half).toDF("value"), root, Surface.Full, Some(idx),
         Some(graft.streaming.BatchTags.tag(
           graft.streaming.BatchTags.namespace(ckpt), "0")))
       require(graft.operators.SnapshotTable.latestVersion(idx) == vIdx &&
-        graft.operators.SnapshotTable.latestVersion(s"$root/meta") == vMeta,
+        graft.operators.SnapshotTxn.latestTxn(root) == vTxn,
         "replayed batch must move neither the tables nor the index")
-      val current = QueryApi.anyNamesOf(
-        graft.operators.SnapshotTable.read(s, s"$root/meta"),
-        graft.operators.SnapshotTable.read(s, s"$root/aliases"))
+      val read = graft.operators.SnapshotTxn.cut(s, root)
+      val current = QueryApi.anyNamesOf(read("meta"), read("aliases"))
       val base = current.agg(min(org.apache.spark.sql.functions.col("name")))
         .head().getString(0)
       val term = base.substring(0, base.length - 1)
@@ -279,7 +278,7 @@ object EtlGates {
       graft.streaming.EtlStream.startSnapshot(s,
         graft.Scratch.shards("x13_in", linesOf(dumpPath), 2), root,
         graft.Scratch.fresh("x13_ckpt")).awaitTermination()
-      graft.operators.SnapshotTable.read(s, s"$root/meta")
+      graft.operators.SnapshotTxn.readAt(s, root, "meta")
     },
     // X28: X13's exactly-once publication over the COMPLETE 13-table
     // surface — the mini-dump split into 2 shards drained one per
@@ -299,12 +298,12 @@ object EtlGates {
       graft.streaming.EtlStream.startSnapshot(s,
         graft.Scratch.shards("x28_in", linesOf(dumpPath), 2), root,
         graft.Scratch.fresh("x28_ckpt"), Surface.Full).awaitTermination()
-      // all 13 surfaces must have been published and batch-tagged
-      Surface.Full.tableNames.foreach { n =>
-        require(graft.operators.SnapshotTable.tagOf(s"$root/$n").isDefined,
-          s"full streaming run must publish and tag $n")
-      }
-      graft.operators.SnapshotTable.read(s, s"$root/aliases")
+      // all 13 surfaces must have been published by one batch-tagged txn
+      val pinned = graft.operators.SnapshotTxn.tableVersions(root).keySet
+      require(graft.operators.SnapshotTxn.tagOf(root).isDefined &&
+        Surface.Full.tableNames.forall(pinned), "full streaming run must publish " +
+          s"all 13 tables in a tagged txn; pinned: ${pinned.toSeq.sorted.mkString(", ")}")
+      graft.operators.SnapshotTxn.readAt(s, root, "aliases")
     },
     // W34: qualifier routing — the reference DROPS qualifiers (its
     // ClaimValueData keeps only the mainsnak), so this table is a strict

@@ -26,12 +26,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the winners frame is changeset-bounded, so every per-table
   * anti-join broadcasts the touched-id set — one map-only pass per base
-  * table, zero shuffles of base data. Pair with
-  * [[graft.operators.SnapshotTable]] (see [[applyCommit]]) for atomic
-  * publication per table: readers of a table see its old version until the
-  * new version's manifest lands. The tables commit independently, so a
-  * crashed apply can leave some at the new version and the rest at the old;
-  * a reader that needs a cross-table cut uses [[graft.operators.SnapshotTxn]].
+  * table, zero shuffles of base data. [[applyCommit]] publishes the result
+  * as one [[graft.operators.SnapshotTxn]] cut: a reader resolving through
+  * the txn sees every table at the old version until the whole new one
+  * lands, even if the apply crashes midway.
   */
 object IncrementalEtl {
 
@@ -109,12 +107,10 @@ object IncrementalEtl {
   }
 
   /** Refresh: apply the changeset and commit every table of its surface as
-    * the next [[graft.operators.SnapshotTable]] version, all at once
-    * ([[WikidataTables.commitTo]]). Each table commits atomically on its
-    * own; a crash mid-apply can leave some tables at the new version and the
-    * rest at the old ([[graft.operators.SnapshotTxn]] gives a cross-table
-    * cut). The winners are resolved once and cached for every table's
-    * anti-join and the delta ETL. Returns the committed version per table. */
+    * one [[graft.operators.SnapshotTxn]] under `tableRoot`
+    * ([[WikidataTables.commitTo]]). The winners are resolved once and
+    * cached for every table's anti-join and the delta ETL. Returns the
+    * committed version per table. */
   def applyCommit(spark: SparkSession, base: Map[String, DataFrame],
       changes: DataFrame, tableRoot: String): Map[String, Long] = {
     val win = winners(changes).cache()

@@ -1,6 +1,6 @@
 package graft.wikidata
 
-import graft.operators.SnapshotTable
+import graft.operators.{SnapshotTable, SnapshotTxn}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,14 +31,14 @@ final case class WikidataTables(byName: Map[String, DataFrame], core: Option[Dat
     * streaming micro-batches — must pair every `run` with this). */
   def unpersist(): Unit = core.foreach(_.unpersist(false))
 
-  /** Commit the tables `names` as the next [[SnapshotTable]] version of
-    * `tableRoot/<name>`, all at once ([[SnapshotTable.commitAll]]), and
-    * return the committed version per name. The cached core is computed
-    * first, so the concurrent writes read it instead of racing to compute
-    * it; releasing it stays with the caller. An Overwrite version is sized
-    * like the one it replaces ([[SnapshotTable.parentSized]]). Each table
-    * commits atomically on its own: this is not a cross-table transaction
-    * (see [[graft.operators.SnapshotTxn]]). */
+  /** Commit the tables `names` under `tableRoot/<name>` as ONE
+    * [[SnapshotTxn]] transaction, and return the committed version per
+    * name: a reader resolving through the txn sees all of them or none.
+    * The cached core is computed first, so the concurrent writes read it
+    * instead of racing to compute it; releasing it stays with the caller.
+    * An Overwrite version is sized like the one it replaces
+    * ([[SnapshotTable.parentSized]]). A `tag` already published makes the
+    * commit a no-op that returns the versions of that txn. */
   def commitTo(spark: SparkSession, tableRoot: String,
       names: Seq[String] = byName.keys.toSeq, mode: SnapshotTable.Mode = SnapshotTable.Overwrite,
       tag: Option[String] = None): Map[String, Long] = {
@@ -46,8 +46,8 @@ final case class WikidataTables(byName: Map[String, DataFrame], core: Option[Dat
     val sized = (n: String) =>
       if (mode == SnapshotTable.Overwrite) SnapshotTable.parentSized(s"$tableRoot/$n", byName(n))
       else byName(n)
-    names.zip(SnapshotTable.commitAll(spark,
-      names.map(n => s"$tableRoot/$n" -> sized(n)), mode, tag)).toMap
+    val txn = SnapshotTxn.commit(spark, tableRoot, names.map(n => n -> sized(n)), mode, tag = tag)
+    SnapshotTxn.tableVersions(tableRoot, txn).filter { case (n, _) => names.contains(n) }
   }
 
   /** Write all tables as parquet under `dir`, one subdirectory each.
@@ -59,34 +59,23 @@ final case class WikidataTables(byName: Map[String, DataFrame], core: Option[Dat
     * lookups by property and id probes — the two index shapes the reference
     * builds.
     *
-    * The writes are submitted CONCURRENTLY: they all read the one cached
-    * parse, and each is small relative to the parse, so serial submission
-    * leaves the cluster idle between write jobs (one job-scheduling + sink
-    * latency per table on the critical path). Spark's scheduler runs
-    * concurrent jobs from separate submitting threads.
+    * The writes are submitted CONCURRENTLY ([[SnapshotTxn.concurrently]]):
+    * they all read the one cached parse, and each is small relative to the
+    * parse, so serial submission leaves the cluster idle between write jobs
+    * (one job-scheduling + sink latency per table on the critical path).
     */
   def writeParquet(dir: String, partitions: Int = 0): Unit = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // materialize the shared cache once, sequentially, before fanning out —
     // otherwise all the jobs race to compute the same uncached partitions
     core.foreach(_.count())
-    val pool = Executors.newFixedThreadPool(byName.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val jobs = byName.toSeq.map { case (name, df) =>
-        Future {
-          val sized = if (partitions > 0) df.repartition(partitions, col("id")) else df
-          val sorted =
-            if (df.columns.contains("property_id"))
-              sized.sortWithinPartitions("property_id", "id")
-            else sized.sortWithinPartitions("id")
-          sorted.write.mode("overwrite").parquet(s"$dir/$name")
-        }
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf)
-    } finally pool.shutdown()
+    SnapshotTxn.concurrently(byName.toSeq.map { case (name, df) => () =>
+      val sized = if (partitions > 0) df.repartition(partitions, col("id")) else df
+      val sorted =
+        if (df.columns.contains("property_id"))
+          sized.sortWithinPartitions("property_id", "id")
+        else sized.sortWithinPartitions("id")
+      sorted.write.mode("overwrite").parquet(s"$dir/$name")
+    }): Unit
   }
 }
 

@@ -61,14 +61,14 @@ class AnnIndexStoreSpec extends SparkSpec {
     eOld.count() shouldBe 200L
   }
 
-  test("all three tables publish under one shared tag (S9)") {
+  test("all three tables publish under one txn (S9)") {
     val vecs = corpus(21, 150)
     val root = graft.Scratch.fresh("s9spec_tag")
     val b = IvfPq.build(vecs, "embedding", cells = 4, m = 4, k = 8, knownN = 150)
     AnnIndexStore.save(spark, root, b, IvfPq.encode(vecs, "vec_id", "embedding", b))
-    val tags = AnnIndexStore.Tables.map(t => SnapshotTable.tagOf(s"$root/$t"))
-    tags.distinct should have size 1 // one shared tag = one consistent cut
-    tags.head.get should startWith("ivfpq-cells4-m4-k8-")
+    // one txn pins the consistent triple: exactly the versions the save wrote
+    SnapshotTxn.txns(root) shouldBe Seq(1L)
+    SnapshotTxn.tableVersions(root) shouldBe AnnIndexStore.Tables.map(_ -> 1L).toMap
   }
 
   test("tombstoned ids never surface and the caller still gets k results (S10)") {

@@ -93,4 +93,17 @@ class SnapshotTxnSpec extends SparkSpec {
     }
     ex.getMessage should include("a, b")
   }
+
+  test("replay checks parse each txn manifest once; a new txn adds only its own parse") {
+    val root = graft.Scratch.fresh("txnspec_memo")
+    (1 to 30).foreach { i =>
+      SnapshotTxn.commit(spark, root, Seq("a" -> frame(i.toLong -> s"a$i")), tag = Some(s"b$i"))
+    }
+    (1 to 10).foreach(i => SnapshotTxn.hasTag(root, s"b${i * 3}") shouldBe true)
+    SnapshotTxn.hasTag(root, "nope") shouldBe false
+    SnapshotTxn.txnParsesOf(root) should be <= 30L
+    SnapshotTxn.commit(spark, root, Seq("a" -> frame(31L -> "a31")), tag = Some("b31"))
+    (1 to 10).foreach(i => SnapshotTxn.hasTag(root, s"b${i * 3 + 1}") shouldBe true)
+    SnapshotTxn.txnParsesOf(root) should be <= 31L
+  }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.SnapshotTable
+import graft.operators.{SnapshotTable, SnapshotTxn}
 import graft.wikidata.{DumpReader, Surface, WikidataEtl}
 import org.apache.spark.sql.DataFrame
 
@@ -91,13 +91,15 @@ class EtlSnapshotStreamSpec extends SparkSpec {
     EtlStream.commitBatch(spark, batch1, root, batchId = 0L)
     SnapshotTable.latestVersion(s"$root/meta") shouldBe v
     multiset(SnapshotTable.read(spark, s"$root/meta")) shouldBe before
-    // partial crash: batch 1 published only to meta (simulated), then the
-    // replay must commit batch 1 to every OTHER table without re-appending
-    // to meta
+    // partial crash: batch 1's txn committed only meta and died before its
+    // txn publish (simulated); the replay must publish batch 1 to every
+    // table without re-appending to meta
     val batch2 = DumpReader.fromLines(spark, Seq("[", ent("Q2", "two"), "]"))
     val t2 = WikidataEtl.run(batch2, cache = false)
-    SnapshotTable.commit(spark, s"$root/meta", t2.meta,
-      mode = SnapshotTable.Append, tag = Some("1"))
+    intercept[RuntimeException](SnapshotTxn.commit(spark, root, Seq("meta" -> t2.meta),
+      mode = SnapshotTable.Append, tag = Some("1"),
+      beforePublish = () => throw new RuntimeException("crash before txn publish")))
+    multiset(SnapshotTxn.readAt(spark, root, "meta")) shouldBe before
     EtlStream.commitBatch(spark, batch2, root, batchId = 1L)
     val metaIds = SnapshotTable.read(spark, s"$root/meta")
       .select("id").collect().map(_.getLong(0)).toSeq.sorted

@@ -92,7 +92,7 @@ class StreamingAnnIngestSpec extends SparkSpec {
     val base = vecs(11, 150)
     val deadIds = (0L until 150L).filter(_ % 4 == 0)
     def searchIds(root: String): Set[(Long, Long)] =
-      StreamingAnnIngest.searchLive(spark, root, df(base).filter(col("vec_id") < 8),
+      AnnIndexStore.searchWithDeletes(spark, root, df(base).filter(col("vec_id") < 8),
           df(base), "vec_id", "v", k = 5, nprobe = 4, shortlist = 150)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     // one-shot batch reference

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.operators.{Search, SnapshotTable}
+import graft.operators.{Search, SnapshotTable, SnapshotTxn}
 import org.apache.spark.sql.DataFrame
 
 /** X17: streaming index maintenance — state scoring ≡ fresh batch BM25,
@@ -58,11 +58,16 @@ class StreamingSearchIndexSpec extends SparkSpec {
     val Seq(b0, b1) = docs.grouped(150).toSeq
     val root = graft.Scratch.fresh("x17spec_c")
     ingest(root, Seq(b0))
-    // simulate the crash: batch 1 published postings, died before doclen
+    // simulate the crash: batch 1's txn committed postings, died before
+    // doclen and before its txn publish
     val (p1, _) = Search.indexComponents(b1.toDF("doc_id", "text"), "text", "doc_id")
-    SnapshotTable.commitAll(spark, Seq(s"$root/postings" -> p1),
-      mode = SnapshotTable.Append, tag = Some("1"))
-    // at-least-once redelivery of batch 1 commits exactly the missing table
+    intercept[RuntimeException](SnapshotTxn.commit(spark, root, Seq("postings" -> p1),
+      mode = SnapshotTable.Append, tag = Some("1"),
+      beforePublish = () => throw new RuntimeException("crash before txn publish")))
+    SnapshotTable.latestVersion(s"$root/postings") shouldBe Some(2L) // dark version
+    fromState(root) shouldBe fresh(b0) // readers still see batch 0 only
+    // at-least-once redelivery of batch 1 publishes both tables once: the
+    // crashed postings rows are not appended twice
     StreamingSearchIndex.applyBatch(spark, b1.toDF("doc_id", "text"), 1,
       "text", "doc_id", root)
     fromState(root) shouldBe fresh(docs)

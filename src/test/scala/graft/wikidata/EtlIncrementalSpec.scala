@@ -1,7 +1,7 @@
 package graft.wikidata
 
 import graft.SparkSpec
-import graft.operators.SnapshotTable
+import graft.operators.{SnapshotTable, SnapshotTxn}
 import org.apache.spark.sql.DataFrame
 
 /** W22: incremental ingestion — applying an entity-revision changeset to the
@@ -108,6 +108,30 @@ class EtlIncrementalSpec extends SparkSpec {
         SnapshotTable.latestVersion(s"$root/$name") shouldBe Some(2L)
         multiset(SnapshotTable.read(spark, s"$root/$name")) shouldBe multiset(df)
       }
+    }
+  }
+
+  test("a refresh whose one table fails mid-commit leaves every table at v1 through the txn") {
+    val root = graft.Scratch.fresh("w22spec_torn")
+    val v1 = WikidataEtl.run(DumpReader.read(spark, v1Path), cache = false)
+    v1.commitTo(spark, root)
+    // `meta` reads a copy of its v1 rows whose files vanish after planning,
+    // so its write fails while the other tables' writes commit
+    val doomed = graft.Scratch.fresh("w22spec_torn_meta")
+    v1.meta.write.mode("overwrite").parquet(doomed)
+    val base = Surface.Core.tableNames.map { n =>
+      n -> (if (n == "meta") spark.read.parquet(doomed) else SnapshotTxn.readAt(spark, root, n))
+    }.toMap
+    java.nio.file.Files.list(java.nio.file.Paths.get(doomed))
+      .forEach(f => java.nio.file.Files.delete(f))
+    intercept[Exception](IncrementalEtl.applyCommit(spark, base,
+      IncrementalEtl.readChangeset(spark, csPath), root))
+    // per table, the latest versions are torn: the others moved, meta did not
+    SnapshotTable.latestVersion(s"$root/string") shouldBe Some(2L)
+    SnapshotTable.latestVersion(s"$root/meta") shouldBe Some(1L)
+    // a reader through the txn sees the whole v1 cut
+    for ((name, df) <- v1.byName) withClue(s"table $name: ") {
+      multiset(SnapshotTxn.readAt(spark, root, name)) shouldBe multiset(df)
     }
   }
 
