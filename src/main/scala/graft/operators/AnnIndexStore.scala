@@ -264,7 +264,7 @@ object AnnIndexStore {
     // the trained generation: the encode of the first txn that pins the
     // current centroids (the save that trained them)
     val pinnedEnc = SnapshotTxn.txns(root).iterator.map(SnapshotTxn.tableVersions(root, _))
-      .find(_.get("centroids") == now.get("centroids")).get("encoded")
+      .collectFirst { case vs if vs.get("centroids") == now.get("centroids") => vs("encoded") }.get
     def rowsAt(v: Long): Long = {
       SnapshotAnalyze.analyzeMergeable(spark, encT, Seq(idCol), v)
       SnapshotAnalyze.readMergeableProfile(spark, encT, v).get
