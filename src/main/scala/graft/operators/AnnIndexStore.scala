@@ -106,13 +106,10 @@ object AnnIndexStore {
     * an already-pinned version triple are unaffected mid-job. */
   def delete(spark: SparkSession, root: String, ids: DataFrame,
       tag: Option[String] = None): Long = {
-    val t = s"$root/$TombstoneTable"
-    val mode = if (SnapshotTable.latestVersion(t).isDefined) SnapshotTable.Append
-               else SnapshotTable.Overwrite
-    SnapshotTable.commit(spark, t,
+    SnapshotTable.commit(spark, s"$root/$TombstoneTable",
       SnapshotTable.rightSized(
         ids.select(col(ids.columns.head).cast("long").as("id"))),
-      mode = mode, tag = tag)
+      mode = SnapshotTable.Append, tag = tag)
   }
 
   /** The live tombstone id set (empty frame before any delete, and after a

@@ -925,22 +925,22 @@ object Relational {
       val t = graft.Scratch.fresh("r54_table")
       val ev = Tables(s, dir).events
         .select("event_id", "ts", "user_id", "event_type", "value")
-      SnapshotPartitions.commit(s, t, ev.filter(col("event_id") % 2 === 0),
-        Seq(SnapshotPartitions.Day("ts")))
-      SnapshotPartitions.commit(s, t, ev.filter(col("event_id") % 2 === 1),
-        Seq(SnapshotPartitions.Bucket("user_id", 8),
-          SnapshotPartitions.Identity("event_type")),
-        mode = SnapshotTable.Append)
+      SnapshotTable.commit(s, t, ev.filter(col("event_id") % 2 === 0),
+        partitionBy = Seq(SnapshotPartitions.Day("ts")))
+      SnapshotTable.commit(s, t, ev.filter(col("event_id") % 2 === 1),
+        mode = SnapshotTable.Append,
+        partitionBy = Seq(SnapshotPartitions.Bucket("user_id", 8),
+          SnapshotPartitions.Identity("event_type")))
       val u = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("user_id")).limit(1).head().getLong(0)
       val ts0 = ev.agg(min("ts")).head().getTimestamp(0)
       val ts1 = new java.sql.Timestamp(ts0.getTime + 7L * 86400000L)
       val pred = col("user_id") === u && col("ts") >= lit(ts0) && col("ts") < lit(ts1)
-      val (kept, skipped) = SnapshotPartitions.prunedFiles(s, t, pred)
+      val (kept, skipped) = SnapshotTable.prunedFiles(s, t, pred)
       val skippedDirs = skipped.map(_.split('/').take(2).mkString("/")).distinct
       require(kept.nonEmpty && skippedDirs.size >= 2,
         s"both specs must prune (kept ${kept.size}, skipped dirs $skippedDirs)")
-      SnapshotPartitions.readPruned(s, t, pred).orderBy("event_id")
+      SnapshotTable.readPruned(s, t, pred).orderBy("event_id")
     },
 
     Gate("r53_deletion_vectors",

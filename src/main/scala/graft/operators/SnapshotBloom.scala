@@ -51,10 +51,7 @@ object SnapshotBloom {
   def attach(spark: SparkSession, table: String, cols: Seq[String],
       version: Long = -1L, bitsPerKey: Int = 16, k: Int = 3): Int = {
     require(cols.nonEmpty && bitsPerKey >= 4)
-    val v = if (version >= 0) version
-      else SnapshotTable.latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-    val files = SnapshotTable.manifestFiles(table, v)
+    val files = SnapshotTable.manifestFiles(table, SnapshotTable.resolve(table, version))
     if (files.isEmpty) return 0
     val paths = files.map(f => s"$table/$f")
     val n = spark.read.parquet(paths: _*).count()
@@ -105,18 +102,14 @@ object SnapshotBloom {
     * by the bloom sidecars; files without a bloom for `colName` are kept. */
   def prunedFiles(spark: SparkSession, table: String, colName: String,
       value: Long, version: Long = -1L): (Seq[String], Seq[String]) = {
-    val v = if (version >= 0) version
-      else SnapshotTable.latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-    val files = SnapshotTable.manifestFiles(table, v)
-    val byDir = files.map(f => f.take(f.lastIndexOf('/'))).distinct.map { d =>
-      val p = Paths.get(table, d, Sidecar)
-      d -> (if (Files.exists(p)) Some(mapper.readTree(Files.readAllBytes(p))) else None)
-    }.toMap
+    val files = SnapshotTable.manifestFiles(table, SnapshotTable.resolve(table, version))
+    val bloomOf = SnapshotTable.byDir(table, files) { d =>
+      val p = d.resolve(Sidecar)
+      if (Files.exists(p)) Some(mapper.readTree(Files.readAllBytes(p))) else None
+    }
     files.partition { f =>
-      val dir = f.take(f.lastIndexOf('/'))
       val name = f.split('/').last
-      byDir(dir).flatMap(r => Option(r.get(name))).flatMap(fn => Option(fn.get(colName))) match {
+      bloomOf(f).flatMap(r => Option(r.get(name))).flatMap(fn => Option(fn.get(colName))) match {
         case Some(cn) =>
           val m = cn.get("m").asInt()
           val k = cn.get("k").asInt()

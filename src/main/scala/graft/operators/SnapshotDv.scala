@@ -46,10 +46,8 @@ object SnapshotDv {
         col("_metadata.row_index").as("pos"), col("*"))
       .filter(pred)
       .select("file", "pos")
-    val t = dvTable(table)
-    val mode = if (SnapshotTable.latestVersion(t).isDefined) SnapshotTable.Append
-               else SnapshotTable.Overwrite
-    SnapshotTable.commit(spark, t, positions, mode = mode, tag = tag)
+    SnapshotTable.commit(spark, dvTable(table), positions, mode = SnapshotTable.Append,
+      tag = tag)
   }
 
   /** [[deleteWhere]] by KEY SET instead of predicate — the streaming /
@@ -66,17 +64,14 @@ object SnapshotDv {
       .join(keys.select(col(keys.columns.head).as(keyCol)).distinct(),
         Seq(keyCol), "left_semi")
       .select("file", "pos")
-    val t = dvTable(table)
-    val mode = if (SnapshotTable.latestVersion(t).isDefined) SnapshotTable.Append
-               else SnapshotTable.Overwrite
-    SnapshotTable.commit(spark, t, positions, mode = mode, tag = tag)
+    SnapshotTable.commit(spark, dvTable(table), positions, mode = SnapshotTable.Append,
+      tag = tag)
   }
 
   /** Whether a delete batch tagged `tag` is already recorded — the
     * streaming replay check (X21). */
   def hasTag(table: String, tag: String): Boolean =
-    SnapshotTable.latestVersion(dvTable(table)).isDefined &&
-      SnapshotTable.hasTag(dvTable(table), tag)
+    SnapshotTable.hasTag(dvTable(table), tag)
 
   /** The live deletion vector (empty before any delete / after a fold). */
   def vectors(spark: SparkSession, table: String, dvVersion: Long = -1L): DataFrame = {

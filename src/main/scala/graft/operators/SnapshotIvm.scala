@@ -54,10 +54,7 @@ object SnapshotIvm {
   def refresh(spark: SparkSession, baseTable: String, mvTable: String,
       rowKeys: Seq[String], groupKeys: Seq[String],
       sumCols: Seq[String], toVersion: Long = -1L): Long = {
-    val baseV =
-      if (toVersion >= 0) toVersion
-      else SnapshotTable.latestVersion(baseTable).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $baseTable"))
+    val baseV = SnapshotTable.resolve(baseTable, toVersion)
     // ONE observation of the MV: version, reflected-base tag, and the state
     // read all pin to the same `mvV`. Reading them separately would let a
     // racing refresher land in between — `from` computed against the OLD

@@ -1,17 +1,21 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.functions.{col, hash, lit, pmod, unix_micros}
 
-/** R54: partition-aware snapshot commits with HIDDEN-partition pruning and
-  * per-commit spec evolution — the Iceberg partitioning model grafted onto
-  * the [[SnapshotTable]] manifest log.
+/** R54: HIDDEN-partition transforms for [[SnapshotTable]] commits and the
+  * pruning they allow — the Iceberg partitioning model grafted onto the
+  * manifest log. This object defines what a transform means, how a commit
+  * directory records its transforms, and how a file's partition tuple
+  * prunes; the commit, the pruned read and OPTIMIZE are
+  * [[SnapshotTable.commit]] (`partitionBy`), [[SnapshotTable.prunedFiles]]/
+  * [[SnapshotTable.readPruned]] and [[SnapshotTable.optimize]].
   *
   * R42's footer stats prune on VALUE RANGES, which only bite when the
   * layout happens to cluster the predicate column. Partitioning makes the
@@ -34,19 +38,14 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod, unix_micros}
   *     literal compares in micros against the day's micro-span);
   *   - [[Bucket]]: murmur3-mod-n — equality/IN prune (hash the literal).
   *
-  * SPEC EVOLUTION is per-commit, Iceberg-style: every commit directory
-  * records ITS transform list in a `pspec.json` sidecar, so re-partitioning
-  * a table is just "future commits use the new spec" — no rewrite of
-  * history, and pruning evaluates each file under the spec it was written
-  * with. Files of a foreign spec (or none) simply never prune — the
-  * conservative polarity R42 established; the residual filter keeps every
-  * read exact.
-  *
-  * Composes with the rest of the format: per-LEAF `stats.json` sidecars are
-  * captured at commit time, so R42 min/max skipping works on partitioned
-  * files too ([[readPruned]] consults BOTH path tuples and footer ranges);
-  * vacuum walks commit dirs recursively; Append/Overwrite/CAS/tags are the
-  * shared commit protocol.
+  * SPEC EVOLUTION is per-commit, Iceberg-style: every partitioned commit
+  * directory records ITS transform list in a `pspec.json` sidecar, so
+  * re-partitioning a table is just "future commits use the new spec" — no
+  * rewrite of history, and pruning evaluates each file under the spec it
+  * was written with. Files of a foreign spec (or none) simply never prune —
+  * the conservative polarity R42 established; the residual filter keeps
+  * every read exact. Per-leaf `stats.json` sidecars make R42 min/max
+  * skipping compose with the path tuple ([[mayContain]]).
   *
   * Scale shape: pruning is a driver-side walk over the manifest's PATHS —
   * zero data I/O, O(files) string work; at 100 TB with daily partitions a
@@ -114,57 +113,10 @@ object SnapshotPartitions {
   private val MicrosPerDay = 86400000000L
   private val HiveNull = "__HIVE_DEFAULT_PARTITION__"
 
-  // ------------------------------------------------------------ commit
+  // ------------------------------------------------------------ spec
 
-  /** Commit `df` partitioned by `transforms` as the table's next version.
-    * Interops freely with [[SnapshotTable.commit]] on the same table (a
-    * flat commit just has no spec to prune by). Same CAS/tag semantics. */
-  def commit(spark: SparkSession, table: String, df: DataFrame,
-      transforms: Seq[Transform], mode: SnapshotTable.Mode = SnapshotTable.Overwrite,
-      expectedVersion: Long = Long.MinValue,
-      beforePublish: () => Unit = () => (), tag: Option[String] = None): Long = {
-    require(transforms.nonEmpty, "partitioned commit needs at least one transform")
-    require(transforms.map(_.partCol).distinct.size == transforms.size,
-      "duplicate transforms on one source column")
-    val (parent, version) = SnapshotTable.nextVersion(table, expectedVersion)
-    val commitDir = f"data/c$version%016d-${java.util.UUID.randomUUID()}"
-    val partCols = transforms.map(_.partCol)
-    val staged = transforms.foldLeft(df) { (d, t) => d.withColumn(t.partCol, t.expr) }
-    staged.write.partitionBy(partCols: _*).parquet(s"$table/$commitDir")
-    val base = Paths.get(table, commitDir)
-    val written = {
-      val walk = Files.walk(base)
-      try walk.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          Files.isRegularFile(p) && n.startsWith("part-") && n.endsWith(".parquet")
-        }
-        .map(p => base.relativize(p).toString).toSeq.sorted
-      finally walk.close()
-    }
-    // per-LEAF stats sidecars: SnapshotTable.prunedFiles resolves a file's
-    // sidecar from its immediate parent dir, so R42 skipping composes
-    try {
-      // leaves are independent — footer opens were a sequential ~10-30 ms
-      // per file on the driver (same fix as SnapshotTable.commit)
-      import scala.collection.parallel.CollectionConverters._
-      written.groupBy(f => f.take(f.lastIndexOf('/').max(0))).par.foreach {
-        case (leaf, fs) =>
-          val leafDir = if (leaf.isEmpty) base else base.resolve(leaf)
-          SnapshotStats.write(leafDir, fs.map { f =>
-            val name = f.split('/').last
-            name -> SnapshotStats.fileStats(s"$table/$commitDir/$f")
-          })
-      }
-    } catch { case e: Exception =>
-      System.err.println(s"[snapshot] stats capture skipped: $e")
-    }
-    writeSpec(base, transforms)
-    SnapshotTable.publishFiles(table, version, parent, mode,
-      written.map(f => s"$commitDir/$f"), beforePublish, tag)
-  }
-
-  private def writeSpec(commitDir: Path, transforms: Seq[Transform]): Unit = {
+  /** Record `transforms` in the commit directory's `pspec.json`. */
+  private[operators] def writeSpec(commitDir: Path, transforms: Seq[Transform]): Unit = {
     val root = new java.util.LinkedHashMap[String, Object]()
     val arr = new java.util.ArrayList[Object]()
     for (t <- transforms) {
@@ -282,7 +234,7 @@ object SnapshotPartitions {
     * buckets provably elsewhere. */
   private def bucketMayContain(spec: Seq[Transform], vals: Map[String, String],
       cond: Expression): Boolean = {
-    val eqs = eqConstraints(cond)
+    lazy val eqs = eqConstraints(cond)
     spec.forall {
       case t @ Bucket(src, n) =>
         vals.get(t.partCol).filter(_ != HiveNull).flatMap(_.toLongOption) match {
@@ -304,82 +256,16 @@ object SnapshotPartitions {
     }
   }
 
-  /** The version's file list split into (kept, skipped) by partition
-    * pruning COMPOSED with R42 footer stats: a file survives only if its
-    * path tuple AND its footer ranges both admit the predicate. Driver-side
-    * metadata only — no data I/O. */
-  def prunedFiles(spark: SparkSession, table: String, pred: Column,
-      version: Long = -1L): (Seq[String], Seq[String]) = {
-    val v = if (version >= 0) version
-      else SnapshotTable.latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-    val files = SnapshotTable.manifestFiles(table, v)
-    // resolve through analyzer + optimizer, as R42 does: typed comparisons
-    // with casts folded, or no Filter at all (predicate folded away)
-    val cond: Option[Expression] =
-      SnapshotTable.read(spark, table, v).filter(pred)
-        .queryExecution.optimizedPlan.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
-    // per-commit-dir spec + per-leaf footer stats, each loaded once
-    val topOf = (f: String) => f.split('/').take(2).mkString("/")
-    val specByTop = files.map(topOf).distinct
-      .map(d => d -> loadSpec(Paths.get(table, d))).toMap
-    val statsByLeaf = files.map(f => f.take(f.lastIndexOf('/'))).distinct
-      .map(d => d -> SnapshotStats.load(Paths.get(table, d, "stats.json"))).toMap
-    files.partition { f =>
-      cond match {
-        case None => true
-        case Some(c) =>
-          val top = topOf(f)
-          val spec = specByTop(top)
-          val vals = partValues(f.stripPrefix(top + "/"))
-          val leaf = f.take(f.lastIndexOf('/'))
-          val name = f.split('/').last
-          val footer = statsByLeaf(leaf).getOrElse(name, Map.empty)
-          // implied tuple ranges take precedence (exact by construction);
-          // footer ranges cover the non-partition columns
-          SnapshotStats.mayContain(c, footer ++ impliedStats(spec, vals)) &&
-            bucketMayContain(spec, vals, c)
-      }
-    }
-  }
-
-  /** R54 × R41: OPTIMIZE that PRESERVES the partition layout — plain
-    * [[SnapshotTable.optimize]] rewrites through a flat commit, which
-    * silently demotes a partitioned table to unprunable on the optimized
-    * version (content identical, pruning gone). This variant re-commits
-    * the pinned read through the partitioned writer under `transforms`
-    * (default: the spec of the LATEST partitioned commit), bin-packing the
-    * scan side, so dribbled ingest compacts INTO the layout instead of out
-    * of it. Also the re-partitioning migration tool: pass a new spec and
-    * the whole table rewrites under it in one atomic, CAS-guarded commit. */
-  def optimize(spark: SparkSession, table: String,
-      transforms: Seq[Transform] = Seq.empty,
-      targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val v = SnapshotTable.latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $table"))
-    val spec =
-      if (transforms.nonEmpty) transforms
-      else SnapshotTable.manifestFiles(table, v)
-        .map(f => f.split('/').take(2).mkString("/")).distinct.reverse
-        .map(d => loadSpec(Paths.get(table, d))).find(_.nonEmpty)
-        .getOrElse(throw new IllegalArgumentException(
-          s"$table has no partitioned commit to take a spec from; pass transforms"))
-    Compaction.withBinPackedScan(spark, targetBytes) {
-      commit(spark, table, SnapshotTable.read(spark, table, v), spec,
-        expectedVersion = v)
-    }
-  }
-
-  /** Read with partition + stats pruning, `pred` re-applied as the exact
-    * residual filter. */
-  def readPruned(spark: SparkSession, table: String, pred: Column,
-      version: Long = -1L): DataFrame = {
-    val (kept, _) = prunedFiles(spark, table, pred, version)
-    val scan =
-      if (kept.isEmpty) SnapshotTable.read(spark, table, version).limit(0)
-      else spark.read.parquet(kept.map(f => s"$table/$f"): _*)
-    scan.filter(pred)
+  /** Could the file at `relToCommit` (its path inside its commit dir),
+    * written under `spec` with footer ranges `footer`, hold a row matching
+    * `cond`? Its path tuple AND its footer ranges must both admit it; a
+    * file without a spec is judged by its footer ranges alone. */
+  private[operators] def mayContain(cond: Expression, spec: Seq[Transform],
+      relToCommit: String, footer: Map[String, SnapshotStats.ColStats]): Boolean = {
+    val vals = partValues(relToCommit)
+    // implied tuple ranges take precedence (exact by construction);
+    // footer ranges cover the non-partition columns
+    SnapshotStats.mayContain(cond, footer ++ impliedStats(spec, vals)) &&
+      bucketMayContain(spec, vals, cond)
   }
 }

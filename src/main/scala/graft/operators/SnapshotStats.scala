@@ -105,7 +105,10 @@ object SnapshotStats {
     } finally reader.close()
   }
 
-  /** Write the `stats.json` sidecar for a commit directory. */
+  /** The sidecar's file name, beside the data files it describes. */
+  val Sidecar = "stats.json"
+
+  /** Write the `stats.json` sidecar for a directory of data files. */
   def write(commitDir: Path, perFile: Seq[(String, Map[String, ColStats])]): Unit = {
     val root = new java.util.LinkedHashMap[String, Object]()
     for ((file, cols) <- perFile) {
@@ -118,7 +121,7 @@ object SnapshotStats {
       }
       root.put(file, fm)
     }
-    new ObjectMapper().writeValue(commitDir.resolve("stats.json").toFile, root)
+    new ObjectMapper().writeValue(commitDir.resolve(Sidecar).toFile, root)
   }
 
   /** Load a sidecar: file name → column ranges. Missing/corrupt → empty

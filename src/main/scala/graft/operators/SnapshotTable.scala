@@ -16,6 +16,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * VERSIONED MANIFEST naming the exact file set of one table version:
   *
   *   table/data/c<version>-<uuid>/part-*.parquet   immutable data files
+  *   table/data/c<version>-<uuid>/stats.json       per-file footer ranges (R42)
+  *   table/data/c<version>-<uuid>/pspec.json       partitioned commits only (R54):
+  *       its transforms; the data files and their stats.json then sit in
+  *       hive-style leaf dirs, data/c<version>-<uuid>/<col>=<value>/...
   *   table/_log/v<%016d>.json                      manifest: files of that version
   *
   * Commit protocol (the X8 version-dir discipline generalized):
@@ -59,23 +63,66 @@ object SnapshotTable {
     override private[operators] def label: String = "Replace"
   }
 
-  private def logDir(table: String): Path = Paths.get(table, "_log")
-  private def manifestPath(table: String, v: Long): Path =
-    logDir(table).resolve(f"v$v%016d.json")
+  /** A numbered JSON log: a table's manifests (`_log/v<%016d>.json`) or a
+    * txn root's txn manifests (`_txnlog/t<%016d>.json`, [[SnapshotTxn]]).
+    * Both list, CAS and publish the same way. */
+  private[operators] final case class NumberedLog(dir: Path, prefix: String, idKey: String) {
+    def path(n: Long): Path = dir.resolve(f"$prefix$n%016d.json")
+
+    /** Published ids, ascending (empty for a nonexistent log). */
+    def ids: Seq[Long] = {
+      if (!Files.isDirectory(dir)) return Seq.empty
+      val s = Files.list(dir)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.map(_.getFileName.toString)
+          .collect { case n if n.startsWith(prefix) && n.endsWith(".json") =>
+            n.stripPrefix(prefix).stripSuffix(".json").toLong
+          }.toSeq.sorted
+      } finally s.close()
+    }
+
+    /** (parent, next id) under the CAS contract: unless `expected` is
+      * `Long.MinValue`, the parent must be exactly `expected` (-1 = an
+      * empty log), else [[ConcurrentCommitException]]. */
+    def next(expected: Long): (Option[Long], Long) = {
+      val parent = ids.lastOption
+      if (expected != Long.MinValue && parent.getOrElse(-1L) != expected)
+        throw new ConcurrentCommitException(parent.getOrElse(-1L))
+      (parent, parent.getOrElse(0L) + 1)
+    }
+
+    /** Publish entry `id` as `{"<idKey>":id,"parent":p,"tag":t,` + `rest`:
+      * write it to a temp name nobody reads, run `beforePublish` (the crash
+      * window), then publish-if-absent by hard link. Losing the race
+      * surfaces as [[ConcurrentCommitException]], with the temp file
+      * removed. */
+    def publish(id: Long, parent: Option[Long], tag: Option[String], rest: String,
+        beforePublish: () => Unit): Long = {
+      // reject rather than strip: silently rewriting a tag would let two
+      // DISTINCT tags alias to one recorded value and false-match the
+      // replay-idempotency check
+      tag.foreach(t => require(!t.contains("\"") && !t.contains("\\"),
+        s"""tag must not contain '"' or '\\': $t"""))
+      val tagField = tag.map(t => s""""tag":"$t",""").getOrElse("")
+      Files.createDirectories(dir)
+      val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
+      Files.write(tmp, s"""{"$idKey":$id,"parent":${parent.getOrElse(-1L)},$tagField$rest"""
+        .getBytes("UTF-8"))
+      beforePublish()
+      try Files.createLink(path(id), tmp)
+      catch { case _: java.nio.file.FileAlreadyExistsException =>
+        throw new ConcurrentCommitException(id)
+      } finally Files.deleteIfExists(tmp)
+      id
+    }
+  }
+
+  private def log(table: String) = NumberedLog(Paths.get(table, "_log"), "v", "version")
+  private def manifestPath(table: String, v: Long): Path = log(table).path(v)
 
   /** Committed versions, ascending (empty for a nonexistent table). */
-  def versions(table: String): Seq[Long] = {
-    val dir = logDir(table)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    val s = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong
-        }.toSeq.sorted
-    } finally s.close()
-  }
+  def versions(table: String): Seq[Long] = log(table).ids
 
   /** Latest committed version, if any. */
   def latestVersion(table: String): Option[Long] = versions(table).lastOption
@@ -167,12 +214,15 @@ object SnapshotTable {
   /** The data-file paths (table-root-qualified) of `version` — default
     * latest. The list a versioned MV registration pins
     * ([[graft.plans.MvRegistry.register]]'s `exactFiles`). */
-  def filesOf(table: String, version: Long = -1L): Seq[String] = {
-    val v = if (version >= 0) version
-      else latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-    manifestFiles(table, v).map(f => s"$table/$f")
-  }
+  def filesOf(table: String, version: Long = -1L): Seq[String] =
+    manifestFiles(table, resolve(table, version)).map(f => s"$table/$f")
+
+  /** `version`, or the latest one when negative; throws if the table has
+    * no committed version. */
+  private[operators] def resolve(table: String, version: Long): Long =
+    if (version >= 0) version
+    else latestVersion(table).getOrElse(
+      throw new IllegalArgumentException(s"no committed version in $table"))
 
   /** R55: the wall-clock commit time recorded in `version`'s manifest
     * (milliseconds; None for manifests predating the field). */
@@ -233,42 +283,6 @@ object SnapshotTable {
   private[operators] def manifestFiles(table: String, v: Long): Seq[String] =
     manifestInfo(table, v).files
 
-  /** Commit `df` as the next version. `expectedVersion` (CAS): fail with
-    * [[ConcurrentCommitException]] unless the parent is exactly that
-    * version (-1 = require a fresh table). `beforePublish` runs after the
-    * data files are durable but before the manifest rename — the crash
-    * window the CrashRecoverySpec-style test injects into. `tag` is an
-    * opaque idempotency marker recorded in the manifest (readable via
-    * [[tagOf]]; must not contain `"` or `\` — the manifest is flat JSON) —
-    * streaming sinks stamp the micro-batch id so a replayed batch can
-    * recognize an already-published commit (X13). Returns the committed
-    * version. */
-  /** Resolve (parent, next version) under the CAS contract — shared by
-    * [[commit]] and the partition-aware writer ([[SnapshotPartitions]]),
-    * which stages its own directory layout before publishing. */
-  private[operators] def nextVersion(table: String,
-      expectedVersion: Long): (Option[Long], Long) = {
-    val parent = latestVersion(table)
-    if (expectedVersion != Long.MinValue &&
-        parent.getOrElse(-1L) != expectedVersion)
-      throw new ConcurrentCommitException(parent.getOrElse(-1L))
-    (parent, parent.getOrElse(0L) + 1)
-  }
-
-  /** Resolve `mode` against the parent's file list and publish `written`
-    * (commit-dir-relative paths already staged on disk) as `version` —
-    * the manifest tail shared by [[commit]] and [[SnapshotPartitions]]. */
-  private[operators] def publishFiles(table: String, version: Long,
-      parent: Option[Long], mode: Mode, written: Seq[String],
-      beforePublish: () => Unit = () => (), tag: Option[String] = None): Long = {
-    val files = mode match {
-      case Overwrite => written
-      case Append => parent.map(manifestFiles(table, _)).getOrElse(Seq.empty) ++ written
-      case Replace(keep) => keep ++ written
-    }
-    publishManifest(table, version, parent, mode.label, tag, files, beforePublish)
-  }
-
   /** Output-file sizing for commits (guide §6: files in the 100 MB–1 GB
     * band, never one near-empty file per upstream partition): coalesce the
     * to-be-committed frame down to ⌈estimated bytes / targetBytes⌉
@@ -327,73 +341,83 @@ object SnapshotTable {
   private def filesFor(bytes: Long, targetBytes: Long): Int =
     math.max(1L, math.min(Int.MaxValue.toLong, (bytes + targetBytes - 1) / targetBytes)).toInt
 
+  /** Commit `df` as the next version. `expectedVersion` (CAS): fail with
+    * [[ConcurrentCommitException]] unless the parent is exactly that
+    * version (-1 = require a fresh table). `beforePublish` runs after the
+    * data files are durable but before the manifest rename — the crash
+    * window the CrashRecoverySpec-style test injects into. `tag` is an
+    * opaque idempotency marker recorded in the manifest (readable via
+    * [[tagOf]]; must not contain `"` or `\` — the manifest is flat JSON) —
+    * streaming sinks stamp the micro-batch id so a replayed batch can
+    * recognize an already-published commit (X13). `partitionBy` (R54)
+    * lays the data files out under hive-style directories of the derived
+    * partition values and records the transforms in the commit dir's
+    * `pspec.json`, so [[prunedFiles]] can prune by path. Returns the
+    * committed version.
+    *
+    * The one writer of a commit directory: its data files, one stats.json
+    * sidecar per leaf directory (R42: per-file column ranges from the
+    * freshly-written footers, atomic with the commit because nothing reads
+    * them before the manifest publishes; best-effort, a failure only
+    * disables skipping for these files) and, when partitioned, its
+    * pspec.json. */
   def commit(spark: SparkSession, table: String, df: DataFrame,
       mode: Mode = Overwrite, expectedVersion: Long = Long.MinValue,
-      beforePublish: () => Unit = () => (), tag: Option[String] = None): Long = {
-    val (parent, version) = nextVersion(table, expectedVersion)
+      beforePublish: () => Unit = () => (), tag: Option[String] = None,
+      partitionBy: Seq[SnapshotPartitions.Transform] = Nil): Long = {
+    require(partitionBy.map(_.partCol).distinct.size == partitionBy.size,
+      "duplicate transforms on one source column")
+    val (parent, version) = log(table).next(expectedVersion)
     // 1. data files, invisible until a manifest names them
     val commitDir = f"data/c$version%016d-${java.util.UUID.randomUUID()}"
-    df.write.parquet(s"$table/$commitDir")
+    partitionBy.foldLeft(df)((d, t) => d.withColumn(t.partCol, t.expr))
+      .write.partitionBy(partitionBy.map(_.partCol): _*).parquet(s"$table/$commitDir")
+    val base = Paths.get(table, commitDir)
+    // commit-dir-relative part files: `part-*` flat, `k=v/.../part-*` when
+    // partitioned (no directory name starts with `part-`)
     val written = {
-      val d = Paths.get(table, commitDir)
-      val s = Files.list(d)
+      val walk = Files.walk(base)
       try {
         import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-          .toSeq.sorted.map(n => s"$commitDir/$n")
-      } finally s.close()
+        walk.iterator().asScala.map(p => base.relativize(p).toString)
+          .filter { f =>
+            val n = nameOf(f)
+            n.startsWith("part-") && n.endsWith(".parquet")
+          }.toSeq.sorted
+      } finally walk.close()
     }
-    // R42: per-file column ranges from the freshly-written footers, into a
-    // stats.json sidecar beside the data files — atomic with the commit
-    // (invisible until the manifest publishes). Best-effort: any failure
-    // just disables skipping for these files, never the commit.
     try {
       // footer reads are independent per file: a multi-file commit was
       // paying a sequential ~10-30 ms footer open per file on the driver
       import scala.collection.parallel.CollectionConverters._
-      SnapshotStats.write(Paths.get(table, commitDir), written.par.map { f =>
-        val name = f.split('/').last
-        name -> SnapshotStats.fileStats(s"$table/$f")
-      }.seq)
+      written.par.map(f => f -> SnapshotStats.fileStats(s"$table/$commitDir/$f")).seq
+        .groupBy { case (f, _) => leafOf(f) }
+        .foreach { case (leaf, stats) =>
+          SnapshotStats.write(base.resolve(leaf), stats.map { case (f, st) => nameOf(f) -> st })
+        }
     } catch { case e: Exception =>
       System.err.println(s"[snapshot] stats capture skipped: $e")
     }
-    publishFiles(table, version, parent, mode, written, beforePublish, tag)
+    if (partitionBy.nonEmpty) SnapshotPartitions.writeSpec(base, partitionBy)
+    // 2. the manifest: Append carries the parent's files, Replace `keep`
+    val files = written.map(f => s"$commitDir/$f")
+    publishManifest(table, version, parent, mode.label, tag, mode match {
+      case Overwrite => files
+      case Append => parent.map(manifestFiles(table, _)).getOrElse(Seq.empty) ++ files
+      case Replace(keep) => keep ++ files
+    }, beforePublish)
   }
 
   /** The shared manifest-publication tail of [[commit]]/[[restore]]/
-    * [[clone]]: write the manifest to a temp name nobody reads, then
-    * atomically publish-if-absent (losing a race surfaces as
-    * [[ConcurrentCommitException]]). */
-  private def publishManifest(table: String, version: Long, parent: Option[Long],
+    * [[clone]]. */
+  private[operators] def publishManifest(table: String, version: Long, parent: Option[Long],
       modeLabel: String, tag: Option[String], files: Seq[String],
-      beforePublish: () => Unit = () => ()): Long = {
-    Files.createDirectories(logDir(table))
-    val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
-    // reject rather than strip: silently rewriting a tag would let two
-    // DISTINCT tags alias to one recorded value and false-match the
-    // replay-idempotency check
-    tag.foreach(t => require(!t.contains("\"") && !t.contains("\\"),
-      s"""tag must not contain '"' or '\\': $t"""))
-    val tagField = tag.map(t => s""""tag":"$t",""").getOrElse("")
+      beforePublish: () => Unit = () => ()): Long =
     // R55: commit wall time — the AS OF TIMESTAMP resolution key
-    val json = files.map(f => "\"" + f + "\"").mkString(
-      s"""{"version":$version,"parent":${parent.getOrElse(-1L)},$tagField""" +
-        s""""ts":${System.currentTimeMillis()},""" +
-        s""""mode":"$modeLabel","files":[""", ",", "]}")
-    Files.write(tmp, json.getBytes("UTF-8"))
-    beforePublish()
-    try {
-      Files.createLink(manifestPath(table, version), tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new ConcurrentCommitException(version)
-    }
-    version
-  }
+    log(table).publish(version, parent, tag,
+      files.map(f => "\"" + f + "\"").mkString(
+        s""""ts":${System.currentTimeMillis()},"mode":"$modeLabel","files":[""", ",", "]}"),
+      beforePublish)
 
   /** R47: RESTORE — the table's next version references exactly
     * `toVersion`'s file list (the Delta RESTORE shape). METADATA-ONLY:
@@ -412,11 +436,7 @@ object SnapshotTable {
       expectedVersion: Long = Long.MinValue, tag: Option[String] = None): Long = {
     require(versions(table).contains(toVersion),
       s"cannot restore $table to uncommitted version $toVersion")
-    val parent = latestVersion(table)
-    if (expectedVersion != Long.MinValue &&
-        parent.getOrElse(-1L) != expectedVersion)
-      throw new ConcurrentCommitException(parent.getOrElse(-1L))
-    val version = parent.getOrElse(0L) + 1
+    val (parent, version) = log(table).next(expectedVersion)
     publishManifest(table, version, parent, "Restore", tag,
       manifestFiles(table, toVersion))
   }
@@ -437,9 +457,7 @@ object SnapshotTable {
     * outlive clones, or re-materialize the clone first. */
   def shallowClone(table: String, dest: String, version: Long = -1L,
       tag: Option[String] = None): Long = {
-    val v = if (version >= 0) version
-      else latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
+    val v = resolve(table, version)
     require(versions(table).contains(v),
       s"cannot clone $table at uncommitted version $v")
     require(latestVersion(dest).isEmpty,
@@ -464,10 +482,7 @@ object SnapshotTable {
     * find, without its Spark job: see [[footerSchema]]. */
   def read(spark: SparkSession, table: String, version: Long = -1L,
       mergeSchema: Boolean = false): DataFrame = {
-    val v = if (version >= 0) version
-      else latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-    val paths = manifestFiles(table, v).map(f => s"$table/$f")
+    val paths = filesOf(table, version)
     if (paths.isEmpty) spark.emptyDataFrame
     else {
       val reader = spark.read.option("mergeSchema", mergeSchema.toString)
@@ -570,18 +585,39 @@ object SnapshotTable {
   private def versionBytes(table: String, v: Long): Long =
     manifestFiles(table, v).map(f => Files.size(Paths.get(table, f))).sum
 
-  /** R42: the version's file list split by `pred` into (kept, skipped)
-    * using each commit directory's stats sidecar — files without stats are
-    * always kept. Exposed so specs and planners can assert skipping. */
+  /** A manifest path's file name, its directory (the leaf its stats.json
+    * sidecar sits in) and its commit directory (`data/c<version>-<uuid>`,
+    * where a partitioned commit keeps its pspec.json). */
+  private def nameOf(f: String): String = f.substring(f.lastIndexOf('/') + 1)
+  private def leafOf(f: String): String = f.take(f.lastIndexOf('/'))
+  private def commitDirOf(f: String): String = f.split('/').take(2).mkString("/")
+
+  /** The one sidecar loader: `load` of the directory `dirOf` picks for each
+    * of `files` (default: its leaf), read once per directory. */
+  private[operators] def byDir[A](table: String, files: Seq[String],
+      dirOf: String => String = leafOf)(load: Path => A): String => A = {
+    val loaded = files.map(dirOf).distinct.map(d => d -> load(Paths.get(table, d))).toMap
+    f => loaded(dirOf(f))
+  }
+
+  /** Each file's R42 footer ranges (empty: no stats). */
+  private def statsOf(table: String,
+      files: Seq[String]): String => Map[String, SnapshotStats.ColStats] = {
+    val sidecar = byDir(table, files)(d => SnapshotStats.load(d.resolve(SnapshotStats.Sidecar)))
+    f => sidecar(f).getOrElse(nameOf(f), Map.empty)
+  }
+
+  /** R42 + R54: the version's file list split by `pred` into (kept,
+    * skipped). A file is skipped only when its footer ranges, or in a
+    * partitioned commit its path's partition tuple under that commit's
+    * spec, prove no row matches; files without either are always kept.
+    * Driver-side metadata only, no data I/O. Exposed so specs and planners
+    * can assert skipping. */
   def prunedFiles(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column,
       version: Long = -1L): (Seq[String], Seq[String]) = {
-    val v = if (version >= 0) version
-      else latestVersion(table).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
+    val v = resolve(table, version)
     val files = manifestFiles(table, v)
-    val statsByDir = files.map(f => f.take(f.lastIndexOf('/'))).distinct
-      .map(d => d -> SnapshotStats.load(Paths.get(table, d, "stats.json"))).toMap
     // resolve the predicate against the table's schema through the
     // analyzer + optimizer: the raw Column converts to a lazy ColumnNode
     // wrapper (unmatchable), while the optimized Filter condition carries
@@ -591,13 +627,11 @@ object SnapshotTable {
       read(spark, table, v).filter(pred).queryExecution.optimizedPlan.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
-    files.partition { f =>
-      val dir = f.take(f.lastIndexOf('/'))
-      val name = f.split('/').last
-      (statsByDir(dir).get(name), cond) match {
-        case (Some(st), Some(c)) => SnapshotStats.mayContain(c, st)
-        case _ => true
-      }
+    cond.fold((files, Seq.empty[String])) { c =>
+      val stats = statsOf(table, files)
+      val spec = byDir(table, files, commitDirOf)(SnapshotPartitions.loadSpec)
+      files.partition(f => SnapshotPartitions.mayContain(
+        c, spec(f), f.stripPrefix(commitDirOf(f) + "/"), stats(f)))
     }
   }
 
@@ -623,8 +657,7 @@ object SnapshotTable {
       keyCols: Seq[String], opCol: String = "op",
       beforePublish: () => Unit = () => (), tag: Option[String] = None,
       evolveSchema: Boolean = false): Long = {
-    val v = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $table"))
+    val v = resolve(table, -1L)
     val files = manifestFiles(table, v)
     val k0 = keyCols.head
     // ONE materialization of the changeset: it feeds the driver-side key
@@ -671,12 +704,9 @@ object SnapshotTable {
         val (lo, hi) = (ext.get(0), ext.get(1))
         st => SnapshotStats.rangeOverlaps(st, lo, hi)
       }
-    val statsByDir = files.map(f => f.take(f.lastIndexOf('/'))).distinct
-      .map(d => d -> SnapshotStats.load(Paths.get(table, d, "stats.json"))).toMap
+    val stats = statsOf(table, files)
     val (touched, untouched) = files.partition { f =>
-      val dir = f.take(f.lastIndexOf('/'))
-      val name = f.split('/').last
-      statsByDir(dir).get(name).flatMap(_.get(k0)) match {
+      stats(f).get(k0) match {
         case Some(st) => prune(st)
         case None => true // no stats for the key column: must rewrite
       }
@@ -821,20 +851,33 @@ object SnapshotTable {
     * and retries later, it can never clobber data. This is the atomicity
     * R26/R21's bare directory rewrites cannot offer: a reader mid-scan
     * during those sees partial state, here it sees exactly one version.
-    * Run [[vacuum]] once old versions age out to reclaim the fragments. */
+    * Run [[vacuum]] once old versions age out to reclaim the fragments.
+    *
+    * R54: bin-packing keeps a partitioned table's layout — it recommits
+    * under the spec of the version's latest partitioned commit, so
+    * dribbled ingest compacts INTO the layout instead of demoting the table
+    * to unprunable — or migrates it to `partitionBy` in one atomic,
+    * CAS-guarded commit. Z-order clusters across the whole table, so it
+    * commits flat. */
   def optimize(spark: SparkSession, table: String,
       targetBytes: Long = 128L * 1024 * 1024, zorderCols: Seq[String] = Nil,
-      bitsPerCol: Int = 12, beforePublish: () => Unit = () => ()): Long = {
-    val v = latestVersion(table).getOrElse(
-      throw new IllegalArgumentException(s"no committed version in $table"))
-    if (zorderCols.isEmpty)
+      bitsPerCol: Int = 12, beforePublish: () => Unit = () => (),
+      partitionBy: Seq[SnapshotPartitions.Transform] = Nil): Long = {
+    require(zorderCols.isEmpty || partitionBy.isEmpty,
+      "z-order clusters the whole table: it takes no partition spec")
+    val v = resolve(table, -1L)
+    if (zorderCols.isEmpty) {
+      val spec = if (partitionBy.nonEmpty) partitionBy
+        else manifestFiles(table, v).map(commitDirOf).distinct.sorted.reverseIterator
+          .map(d => SnapshotPartitions.loadSpec(Paths.get(table, d))).find(_.nonEmpty)
+          .getOrElse(Nil)
       // scan-side bin packing sizes the output files: the commit's write
       // runs inside the conf window, so its input partitions ARE the bins
       Compaction.withBinPackedScan(spark, targetBytes) {
         commit(spark, table, read(spark, table, v),
-          expectedVersion = v, beforePublish = beforePublish)
+          expectedVersion = v, beforePublish = beforePublish, partitionBy = spec)
       }
-    else {
+    } else {
       val parts = filesFor(versionBytes(table, v), targetBytes)
       commit(spark, table,
         ZOrder.clusteredFrame(read(spark, table, v), zorderCols, parts, bitsPerCol),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** R50: atomic CROSS-TABLE transactions over [[SnapshotTable]]s, and the
@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout: member tables live at `root/<name>` as ordinary snapshot
   * tables; txn manifests at `root/_txnlog/t%016d.json` hold
   * `{"txn":n,"parent":p,"tag":...,"tables":{"name":version,...}}` and
-  * publish with the same write-temp + hard-link publish-if-absent protocol
-  * as table manifests (atomic on POSIX local/NFS/HDFS-style semantics).
+  * list, CAS and publish through the same code as table manifests
+  * ([[SnapshotTable.NumberedLog]]: write-temp + hard-link
+  * publish-if-absent, atomic on POSIX local/NFS/HDFS-style semantics).
   *
   * Scale: a txn manifest is O(tables) bytes regardless of data size; the
   * data cost is the member commits themselves, which run concurrently.
@@ -37,23 +38,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SnapshotTxn {
 
-  private def logDir(root: String): Path = Paths.get(root, "_txnlog")
-  private def txnPath(root: String, t: Long): Path =
-    logDir(root).resolve(f"t$t%016d.json")
+  private def log(root: String) =
+    SnapshotTable.NumberedLog(Paths.get(root, "_txnlog"), "t", "txn")
 
   /** All published txn ids, ascending. */
-  def txns(root: String): Seq[Long] = {
-    val d = logDir(root)
-    if (!Files.isDirectory(d)) return Seq.empty
-    val s = Files.list(d)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("t") && n.endsWith(".json") =>
-          n.stripPrefix("t").stripSuffix(".json").toLong }
-        .toSeq.sorted
-    } finally s.close()
-  }
+  def txns(root: String): Seq[Long] = log(root).ids
 
   def latestTxn(root: String): Option[Long] = txns(root).lastOption
 
@@ -65,8 +54,8 @@ object SnapshotTxn {
 
   /** (tag, table → version) of published txn `t`. */
   private def info(root: String, t: Long): (Option[String], Map[String, Long]) =
-    txnMemo.ofFile(txnPath(root, t), SnapshotTable.dirKey(root)) {
-      val json = new String(Files.readAllBytes(txnPath(root, t)), "UTF-8")
+    txnMemo.ofFile(log(root).path(t), SnapshotTable.dirKey(root)) {
+      val json = new String(Files.readAllBytes(log(root).path(t)), "UTF-8")
       val tables = "\"tables\"\\s*:\\s*\\{([^}]*)\\}".r
         .findFirstMatchIn(json).map(_.group(1)).getOrElse("")
       ("\"tag\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(json).map(_.group(1)),
@@ -126,14 +115,9 @@ object SnapshotTxn {
       mode: SnapshotTable.Mode = SnapshotTable.Overwrite,
       expectedTxn: Long = Long.MinValue, tag: Option[String] = None,
       beforePublish: () => Unit = () => ()): Long = {
-    tag.foreach(tg => require(!tg.contains("\"") && !tg.contains("\\"),
-      s"""tag must not contain '"' or '\\': $tg"""))
     val replayed = tag.flatMap(tagged(root, _))
     if (replayed.isDefined) return replayed.get // already fully published
-    val parent = latestTxn(root)
-    if (expectedTxn != Long.MinValue && parent.getOrElse(-1L) != expectedTxn)
-      throw new SnapshotTable.ConcurrentCommitException(parent.getOrElse(-1L))
-    val txn = parent.getOrElse(0L) + 1
+    val (parent, txn) = log(root).next(expectedTxn)
     // carry forward tables the txn does not touch — a reader of txn n must
     // be able to resolve EVERY table the log has ever pinned
     val carried = parent.map(tableVersions(root, _)).getOrElse(Map.empty)
@@ -158,23 +142,9 @@ object SnapshotTxn {
     })
     val all = (carried ++ versions).toSeq.sortBy(_._1)
     // 2. one txn manifest names the whole cut
-    Files.createDirectories(logDir(root))
-    val tmp = logDir(root).resolve(s".tmp-${java.util.UUID.randomUUID()}.json")
-    val tagField = tag.map(t => s""""tag":"$t",""").getOrElse("")
-    val body = all.map { case (n, v) => s""""$n":$v""" }.mkString(
-      s"""{"txn":$txn,"parent":${parent.getOrElse(-1L)},$tagField"tables":{""",
-      ",", "}}")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    beforePublish()
-    try {
-      Files.createLink(txnPath(root, txn), tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new SnapshotTable.ConcurrentCommitException(txn)
-    }
-    txn
+    log(root).publish(txn, parent, tag,
+      all.map { case (n, v) => s""""$n":$v""" }.mkString(""""tables":{""", ",", "}}"),
+      beforePublish)
   }
 
   /** The minimum version of `table` that any published txn still pins.

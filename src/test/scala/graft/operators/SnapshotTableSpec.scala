@@ -197,7 +197,7 @@ class SnapshotTableSpec extends SparkSpec {
     try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(msg)
       .newGroup().append("k", 7L).append("v", "q").append("d", 19000))
     finally writer.close()
-    publishFiles(foreign, 1L, None, Overwrite, Seq(rel))
+    publishManifest(foreign, 1L, None, Overwrite.label, None, Seq(rel))
     val (got, jobs) = jobsOf(read(spark, foreign).schema)
     got shouldBe inferred(filesOf(foreign))
     jobs should be > 0

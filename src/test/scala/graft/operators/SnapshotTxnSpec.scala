@@ -79,6 +79,26 @@ class SnapshotTxnSpec extends SparkSpec {
     }
   }
 
+  test("a txn that loses the publish race throws and leaves the winner's cut intact (R50)") {
+    val root = graft.Scratch.fresh("txnspec_race")
+    SnapshotTxn.commit(spark, root, Seq("a" -> frame(1L -> "a1"), "b" -> frame(1L -> "b1")))
+    // the competing txn publishes txn 2 while this one is between staging
+    // and its own link of txn 2
+    intercept[SnapshotTable.ConcurrentCommitException] {
+      SnapshotTxn.commit(spark, root, Seq("a" -> frame(2L -> "lost")),
+        beforePublish = () => {
+          SnapshotTxn.commit(spark, root,
+            Seq("a" -> frame(3L -> "won"), "b" -> frame(3L -> "b3")))
+          ()
+        })
+    }
+    SnapshotTxn.latestTxn(root) shouldBe Some(2L)
+    new java.io.File(s"$root/_txnlog").list().filter(_.startsWith(".tmp-")) shouldBe empty
+    Seq("a", "b").map { t =>
+      SnapshotTxn.readAt(spark, root, t).as[(Long, String)].collect().toSet
+    } shouldBe Seq(Set(3L -> "won"), Set(3L -> "b3"))
+  }
+
   test("a txn touching one table carries the others forward (R50)") {
     val root = graft.Scratch.fresh("txnspec_carry")
     SnapshotTxn.commit(spark, root, Seq(

@@ -20,10 +20,16 @@ a value has trailing zeros — which is the driver failure mode this tool
 exists to catch. (Gate queries should therefore cast final decimal
 projections to DOUBLE on both sides.)
 
+Every run also writes <verifyOutDir>/output_hashes.json: gate name -> sha256
+of the Spark side's canonical form (sorted column names, rows sorted by all
+columns, each cell rendered as above), for every gate checked whose output
+and oracle both load. Two runs agree on every gate's output when `cmp` finds the two files
+equal.
+
 Usage: check_oracle.py <sfDir> <verifyOutDir> [query ...]
 (Dev-tool only — the shipped library is pure Scala/Spark.)
 """
-import glob, json, sys, math
+import glob, hashlib, json, sys, math
 import duckdb
 import pyarrow.parquet as pq
 import pandas as pd
@@ -68,6 +74,7 @@ def main(sf_dir, out_dir, only=()):
         con.sql(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    hashes = {}
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
@@ -80,6 +87,7 @@ def main(sf_dir, out_dir, only=()):
             continue
         ocols, orows = canon(odf)
         scols, srows = canon(sdf)
+        hashes[name] = hashlib.sha256(json.dumps([scols, srows]).encode()).hexdigest()
         if ocols != scols:
             print(f"FAIL {name}: columns differ spark={scols} oracle={ocols}")
             n_fail += 1
@@ -93,6 +101,9 @@ def main(sf_dir, out_dir, only=()):
         else:
             print(f"PASS {name} ({len(srows)} rows)")
             n_pass += 1
+    with open(f"{out_dir}/output_hashes.json", "w") as f:
+        json.dump(hashes, f, indent=1, sort_keys=True)
+        f.write("\n")
     print(f"== {n_pass} pass, {n_fail} fail ==")
     return 1 if n_fail else 0
 
